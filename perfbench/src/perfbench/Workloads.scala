@@ -304,7 +304,7 @@ final class ServeTyping(ctx: Ctx) extends Workload(ctx) {
 
   def run(): Run = session(targets(0), keep = false)
 
-  def warmSeconds = 1.0
+  def warmSeconds = 15.0
 
   override def warm(): Unit = { measure(warmSeconds); samples.clear() }
 
@@ -447,7 +447,10 @@ final class DedupNames(ctx: Ctx) extends Workload(ctx) {
   import ctx.{span, spark}
   import spark.implicits._
 
-  val baseNames = 5000
+  // large enough that the trie search, not per-job overhead, takes most
+  // of a call: smaller inputs keep speeding up for a minute as the JIT
+  // compiles the driver-side planning code, so their medians wander
+  val baseNames = 20000
   val maxDist = 1
 
   var rows: Seq[String] = _
@@ -477,7 +480,7 @@ final class DedupNames(ctx: Ctx) extends Workload(ctx) {
 
   def inputProps: Map[String, Any] = props
 
-  def warmSeconds = 10.0
+  def warmSeconds = 15.0
 
   def run(): Run = timeRun(rows.size) {
     span("ops.fuzzy_dedup")(ctx.noop(DedupOps.fuzzyDedup(df, "name", maxDist)))
