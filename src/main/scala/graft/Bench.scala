@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line. A small warmup pass on sf0.001 runs first so the
   * timed numbers measure the queries, not session/JIT/codegen-compiler
@@ -38,28 +36,7 @@ object Bench {
     val wanted = SparkEntry.queries.filter { case (name, _) =>
       args.isEmpty || args(0).split(",").contains(name)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCED", cpus))
-      // r18 (guide §2.2 - M x R shuffle blocks): the bypass-merge shuffle
-      // writer opens ONE FILE PER REDUCE PARTITION PER MAP TASK, so every
-      // small shuffle at R = cores cost cores^2 file creations - measured
-      // as the dedup sketch family's 32-core ANTI-scaling (StageProbe
-      // sampling: ~7 s of FileOutputStream.open0 + mmap/unmap +
-      // writeMetadataFileAndCommit [BLOCKED] per query at 32 cores;
-      // dedup_jaccard stage task-time 46.5 s -> 14.2 s with the sort
-      // writer). Threshold 1 = always take the serialized sort writer
-      // (one data file + index per map task) - exactly the writer every
-      // R > 200 shuffle uses anyway, so cluster-scale plans are
-      // unchanged by construction; only small-R shuffles switch.
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_MERGE", "1"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
 
     // warmup (untimed): run every query once at the smallest scale factor
     // so codegen compilation and JIT of each query's generated classes are

@@ -1055,26 +1055,23 @@ object SparkEntry {
     * broadcasts); the only corpus-sized shuffles are the salted
     * schedule windows and the one link-graph edge aggregate.
     *
-    * `pinPages` materializes the url+html shell that feeds the
-    * frontier, the link graph, and the robots domain list (three
-    * scan re-executions without it). Measured sf0.1/32
-    * (tools/FetchPriorityProbe, round 16, interleaved A/B min-of-2):
-    * unpinned 6.40s vs pinned 5.22s (0.82x) - the shell re-execution
-    * is NOT free here because the planted-frontier union and the PSL
-    * host fold ride it, so the registry runs pinPages = true. At
-    * cluster scale the call stays right: the pin is one
-    * corpus-partitioned in-memory materialization consumed by three
-    * column-pruned readers, in place of three full scans of the raw
-    * corpus. Re-run the probe after changing the plan's sharing
-    * structure.
+    * The url+html shell that feeds the frontier, the link graph and
+    * the robots domain list is pinned with one localCheckpoint (three
+    * scan re-executions without it). Round 16 measured sf0.1/32 with
+    * an interleaved A/B, min-of-2: unpinned 6.40s vs pinned 5.22s
+    * (0.82x) - the shell re-execution is NOT free here because the
+    * planted-frontier union and the PSL host fold ride it. At cluster
+    * scale the call stays right: the pin is one corpus-partitioned
+    * in-memory materialization consumed by three column-pruned
+    * readers, in place of three full scans of the raw corpus.
+    * Re-measure both arms after changing the plan's sharing structure.
     */
-  private[graft] def fetchPriorityPlan(
-      s: SparkSession, dir: String, pinPages: Boolean): DataFrame = {
+  private def fetchPriorityPlan(s: SparkSession, dir: String): DataFrame = {
     val id = col("doc_id")
     val docs = tbl(s, dir, "documents")
-    val pages0 = docs
+    val pages = docs
       .withColumn("url", synthUrlCol).withColumn("html", synthLinkHtmlCol)
-    val pages = if (pinPages) pages0.localCheckpoint() else pages0
+      .localCheckpoint()
     // planted frontier slices on top of the shell: a
     // calendar-recursion trap domain (whole domain must drop), a
     // session-id URL per shell domain (per-URL suspect cut), and a
@@ -2605,7 +2602,7 @@ object SparkEntry {
           "doc_id", "url", delays, defaultDelay = 1.0)
         .select(col("doc_id"), col("domain"), col("slot"), col("not_before_s"))
     },
-    "web_fetch_priority" -> ((s, dir) => fetchPriorityPlan(s, dir, pinPages = true)),
+    "web_fetch_priority" -> ((s, dir) => fetchPriorityPlan(s, dir)),
     "web_wet_pipeline" -> { (s, dir) =>
       // the full CommonCrawl-to-clean-text recipe in ONE declarative
       // plan: WARC archive -> charset-aware page decode ->

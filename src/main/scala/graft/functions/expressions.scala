@@ -1931,8 +1931,8 @@ object GraftFunctions {
   }
 }
 
-/** Builder-time extension point: `SparkSession.builder()
-  * .withExtensions(new GraftExtensions)` (or
+/** Builder-time extension point: a session builder's
+  * `.withExtensions(new GraftExtensions)` (or
   * `spark.sql.extensions=graft.functions.GraftExtensions`) installs the
   * native functions cluster-wide.
   */

@@ -1,5 +1,8 @@
 package graft.ptree
 
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -126,20 +129,22 @@ object PrefixTree {
     * (small) frontier side. The Spark analog of the reference's
     * `BUILDINDEX(..., parent_id)` (/root/reference/PrefixTree.ecl:612-613).
     *
-    * Beside the data, a one-row `_graft_stats` SIDECAR (underscore
+    * Beside the data, a one-line `_graft_stats` SIDECAR file (underscore
     * prefix: invisible to the parquet listing, like `_SUCCESS`) records
     * the trie's [[TrieStats]], computed from the JUST-WRITTEN files (a
     * cheap two-column scan - never a second pass over the input plan).
     * [[read]] registers it, so queries against a persisted index run
     * ZERO sizing jobs - the sizing belongs with the index, not with
-    * every query call.
+    * every query call. The sidecar goes through the Hadoop FileSystem
+    * API, not Spark: as a one-row parquet file it cost one Spark job on
+    * every write and two (schema inference, `head`) on every read.
     *
-    * Measured cost of the sidecar (tools.IndexProbe, sf0.01/32 cores):
-    * data write alone 0.45s, with sidecar 0.73s - the ~0.3s delta is
-    * the stats scan (0.20s) plus the one-row write, FIXED job overhead
-    * that dominates nothing beyond toy scale (at 100 TB the sidecar is
-    * two extra jobs against an index write of hours) and repays itself
-    * on the first query served without a sizing job.
+    * Measured cost of the sidecar in round 14 (sf0.01, 32 cores, when it
+    * was still a parquet write): data write alone 0.45s, with sidecar
+    * 0.73s - the stats scan (0.20s) plus the one-row write job. The
+    * stats scan is the one job left: FIXED overhead that dominates
+    * nothing beyond toy scale, repaid on the first query served
+    * without a sizing job.
     */
   def writeIndexed(trie: Dataset[PTNode], path: String, buckets: Int = 32): Unit = {
     trie
@@ -151,25 +156,39 @@ object PrefixTree {
     val spark = trie.sparkSession
     import spark.implicits._
     val st = Query.computeTrieStats(spark.read.parquet(path).as[PTNode])
-    Seq((st.nodes, st.chars, st.maxWordLen, st.minTopEdge))
-      .toDF("nodes", "chars", "max_word_len", "min_top_edge")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(statsPath(path))
+    val (fs, file) = statsFile(spark, path)
+    val out = fs.create(file, true)
+    try out.write(statsLine(st).getBytes(UTF_8))
+    finally out.close()
   }
 
-  private def statsPath(path: String): String =
-    path.stripSuffix("/") + "/_graft_stats"
+  private def statsFile(spark: SparkSession, path: String): (FileSystem, Path) = {
+    val file = new Path(path.stripSuffix("/") + "/_graft_stats")
+    (file.getFileSystem(spark.sessionState.newHadoopConf()), file)
+  }
+
+  /** [[TrieStats]] as persisted beside an index: `nodes,chars,max_word_len,min_top_edge`. */
+  private def statsLine(st: TrieStats): String =
+    s"${st.nodes},${st.chars},${st.maxWordLen},${st.minTopEdge}"
+
+  private def parseStats(line: String): TrieStats = {
+    val p = line.trim.split(",")
+    require(p.length == 4, s"malformed trie stats '$line'")
+    TrieStats(p(0).toLong, p(1).toLong, p(2).toInt, p(3).toInt)
+  }
 
   def read(spark: SparkSession, path: String): Dataset[PTNode] = {
     import spark.implicits._
     val ds = spark.read.parquet(path).as[PTNode]
-    // sidecar stats ride in with the index; absent (an index written by
-    // an older writer, or plain parquet) they compute lazily on first use
-    try {
-      val r = spark.read.parquet(statsPath(path)).head()
-      Query.registerStats(ds,
-        TrieStats(r.getLong(0), r.getLong(1), r.getInt(2), r.getInt(3)))
-    } catch { case scala.util.control.NonFatal(_) => () }
+    // sidecar stats ride in with the index; without a sidecar file (plain
+    // parquet, or an older writer's parquet-directory sidecar) they
+    // compute lazily on first use
+    val (fs, file) = statsFile(spark, path)
+    if (fs.isFile(file)) {
+      val in = fs.open(file)
+      val line = try new String(in.readAllBytes(), UTF_8) finally in.close()
+      Query.registerStats(ds, parseStats(line))
+    }
     ds
   }
 
@@ -206,7 +225,7 @@ object PrefixTree {
     // sizing jobs
     val st = Query.computeTrieStats(readTable(spark, table))
     spark.sql(s"ALTER TABLE `$table` SET TBLPROPERTIES (" +
-      s"'graft.trie.stats' = '${st.nodes},${st.chars},${st.maxWordLen},${st.minTopEdge}')")
+      s"'graft.trie.stats' = '${statsLine(st)}')")
   }
 
   def readTable(spark: SparkSession, table: String): Dataset[PTNode] = {
@@ -216,12 +235,7 @@ object PrefixTree {
       val props = spark.sessionState.catalog
         .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
         .properties
-      props.get("graft.trie.stats").foreach { s =>
-        val p = s.split(",")
-        if (p.length == 4)
-          Query.registerStats(ds,
-            TrieStats(p(0).toLong, p(1).toLong, p(2).toInt, p(3).toInt))
-      }
+      props.get("graft.trie.stats").foreach(s => Query.registerStats(ds, parseStats(s)))
     } catch { case scala.util.control.NonFatal(_) => () }
     ds
   }

@@ -291,12 +291,6 @@ object Query {
     // 64 keys by query hash so the done-stream is not one hot partition).
     // The sentinels' window bounds are maximal and they are not words, so
     // they can never affect a genuine traversal row.
-    val dbgT = sys.env.contains("GRAFT_DEBUG_TIMING")
-    var dbg0 = System.nanoTime()
-    def dbg(tag: String): Unit = if (dbgT) {
-      System.err.println(f"[queryJoin] $tag: ${(System.nanoTime() - dbg0) / 1e6}%.0f ms")
-      dbg0 = System.nanoTime()
-    }
     val parts = spark.sessionState.conf.numShufflePartitions
     val sentinels = spark.range(1, 65).select(
       (-$"id").as("id"), (-$"id").as("parent_id"),
@@ -330,7 +324,6 @@ object Query {
     // the frontier shuffles per level. Same algebra either way - this is
     // strategy selection, exactly what Catalyst does for any other join.
     val useBcast = trieBytes <= 64L * 1024 * 1024
-    dbg(s"trie sizing (partsT=$partsT, bcast=$useBcast, h=$hChain)")
     val t = tIn.toDF().unionByName(sentinels).repartition(partsT, $"parent_id")
       .persist(StorageLevel.MEMORY_AND_DISK)
     // materialize the cache BEFORE the first partitioned join plans
@@ -338,7 +331,7 @@ object Query {
     // and the first level would defensively re-shuffle the whole trie
     // (PrefixTreeSpec pins this down). The broadcast path doesn't consult
     // partitioning, so there the chain's own job populates the cache.
-    if (!useBcast) { t.count(); dbg("cache materialize") }
+    if (!useBcast) t.count()
 
     val frontier0 = queries
       .select(column(col).cast(StringType).as("query_string"))
@@ -450,7 +443,6 @@ object Query {
     // with spark.sql.codegen.fallback=false: a regression back to the
     // 64 KB overflow throws there instead of silently degrading.
     val safeUnroll = 8
-    dbg("chain plan built")
     // The skip must be scoped to THIS plan, not the session: flipping
     // spark.conf would (a) de-codegen any unrelated query planning
     // concurrently on the same session and (b) race two deep queryJoins'
@@ -466,7 +458,6 @@ object Query {
       scoped.setConfString("spark.sql.codegen.wholeStage", "false")
       SQLConf.withExistingConf(scoped) { cur.localCheckpoint() }
     } else cur.localCheckpoint()
-    dbg("chain executed")
     // the chain's job has populated t's cache; the input-side cache (ours
     // only if the caller hadn't persisted) is no longer needed
     if (ownCache) tIn.unpersist()
@@ -477,7 +468,6 @@ object Query {
     var emitted: List[DataFrame] = List(chain.filter($"done").select(emitCols0: _*))
     var frontier = chain.filter(!$"done").select(frontierCols: _*)
     var nFrontier = frontier.count()
-    dbg(s"leftover control (n=$nFrontier)")
 
     // ------------------------------------------------------------------
     // Phase 2 - FALLBACK LOOP for tries deeper than the unroll cap

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerate the checked-in BPE merge table
   * (src/main/resources/graft/bpe_merges.txt): driver-side training
   * ([[graft.ops.TextOps.bpeTrainLocal]] - bit-equal to the distributed
@@ -23,14 +21,7 @@ import org.apache.spark.sql.SparkSession
 object BpeMergesTool {
   def main(args: Array[String]): Unit = {
     val (sfDir, outFile, numMerges) = (args(0), args(1), args(2).toInt)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     import spark.implicits._
     val docs = spark.read.parquet(s"$sfDir/documents.parquet").select($"text")
     val seed = {

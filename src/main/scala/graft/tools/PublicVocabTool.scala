@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerate the checked-in GPT-2-convention byte-level merge table
   * (src/main/resources/graft/vocab.bpe): greedy BPE training under the
   * PUBLISHED conventions - the GPT-2 pre-tokenizer
@@ -20,13 +18,7 @@ import org.apache.spark.sql.SparkSession
 object PublicVocabTool {
   def main(args: Array[String]): Unit = {
     val (sfDir, outFile, numMerges) = (args(0), args(1), args(2).toInt)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     import spark.implicits._
     val corpus = spark.read.parquet(s"$sfDir/documents.parquet")
       .select($"text").as[String].collect().toSeq.filter(_ != null)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Ad-hoc weak-scaling probe: build 10 disjoint copies of an sf table
@@ -21,22 +21,8 @@ import org.apache.spark.sql.functions._
 object ScaleCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // same parallelism floor as graft.Bench (r17): never let AQE
-      // coalesce a compute-bound stage below one task per core
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCED", cpus))
-      // same shuffle-writer choice as graft.Bench (r18): the bypass
-      // writer's R-files-per-map-task cost anti-scales with cores
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_MERGE", "1"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.Session.hostCores
+    val spark = graft.Session.local(cpus)
 
     def timedPair(tag: String, dA: DataFrame, dB: DataFrame,
         labA: String, labB: String)(f: DataFrame => DataFrame): Unit = {
@@ -67,7 +53,7 @@ object ScaleCheck {
     val ev10 = (0 until 10).map { c =>
       ev1.withColumn("event_id", col("event_id") + lit(c.toLong * idStride))
         .withColumn("event_type", concat(col("event_type"), lit(s"_$c")))
-    }.reduce(_ unionByName _).repartition(cpus.toInt).localCheckpoint()
+    }.reduce(_ unionByName _).repartition(cpus).localCheckpoint()
     val n10 = ev10.count()
     println(s"events rows: 1x=$n1 10x=$n10")
 
@@ -103,7 +89,7 @@ object ScaleCheck {
       // 1 over maxDist=2, not the 2*maxDist+1 the fixture claims)
       cust1.select(col("c_custkey"),
         concat(lit(c.toString * 6), col("c_name")).as("c_name"))
-    }.reduce(_ unionByName _).repartition(cpus.toInt).localCheckpoint()
+    }.reduce(_ unionByName _).repartition(cpus).localCheckpoint()
     println(s"dict rows: 1x=${cust1.count()} 10x=${cust10.count()}")
 
     def trieQueries(df: DataFrame): DataFrame = df
@@ -124,7 +110,7 @@ object ScaleCheck {
       .head().getLong(0) + 1L
     val docs10 = (0 until 10).map { c =>
       docs1.select((col("doc_id") + lit(c.toLong * docStride)).as("doc_id"))
-    }.reduce(_ unionByName _).repartition(cpus.toInt).localCheckpoint()
+    }.reduce(_ unionByName _).repartition(cpus).localCheckpoint()
     timed("media_pixel_features", docs1, docs10) { df =>
       import spark.implicits._
       val media = graft.ops.MultimodalOps.asMedia(
@@ -143,7 +129,7 @@ object ScaleCheck {
     val docsT10 = (0 until 10).map { c =>
       docsT1.select((col("doc_id") + lit(c.toLong * docStride)).as("doc_id"),
         regexp_replace(col("text"), "(\\S+)", "$1" + s"zz$c").as("text"))
-    }.reduce(_ unionByName _).repartition(cpus.toInt).localCheckpoint()
+    }.reduce(_ unionByName _).repartition(cpus).localCheckpoint()
     timed("docs_surprisal", docsT1, docsT10) { df =>
       graft.ops.TextOps.bigramSurprisal(df, "doc_id", "text")
     }
@@ -188,7 +174,7 @@ object ScaleCheck {
     val web10 = (0 until 10).map { c =>
       webBase.select((col("doc_id") + lit(c.toLong * docStride)).as("doc_id"),
         concat(col("source"), lit(s"_c$c")).as("source"), col("text"))
-    }.reduce(_ unionByName _).repartition(cpus.toInt).localCheckpoint()
+    }.reduce(_ unionByName _).repartition(cpus).localCheckpoint()
     def webify(df: DataFrame): DataFrame = df
       .withColumn("url", concat(
         lit("https://"),
@@ -432,8 +418,8 @@ object ScaleCheck {
           .select(col("id").as("src"), (col("id") - 2).as("dst")))
       path.union(tri)
     }
-    val gadget1 = gadgetEdges(docs1).repartition(cpus.toInt).localCheckpoint()
-    val gadget10 = gadgetEdges(docs10).repartition(cpus.toInt).localCheckpoint()
+    val gadget1 = gadgetEdges(docs1).repartition(cpus).localCheckpoint()
+    val gadget10 = gadgetEdges(docs10).repartition(cpus).localCheckpoint()
     println(s"gadget edges: 1x=${gadget1.count()} 10x=${gadget10.count()}")
     locally {
       val (_, k1) = graft.ops.GraphOps.kCoreCounted(gadget1, "src", "dst", k = 2)
@@ -465,7 +451,7 @@ object ScaleCheck {
     val docsT100 = (0 until 100).map { c =>
       docsT1.select((col("doc_id") + lit(c.toLong * docStride)).as("doc_id"),
         regexp_replace(col("text"), "(\\S+)", "$1" + s"zz$c").as("text"))
-    }.reduce(_ unionByName _).repartition(cpus.toInt).localCheckpoint()
+    }.reduce(_ unionByName _).repartition(cpus).localCheckpoint()
     println(s"docsT rows: 10x=${docsT10.count()} 100x=${docsT100.count()}")
     timedPair("text_langid", docsT10, docsT100, "10x", "100x") { df =>
       df.select(col("doc_id"), graft.ops.TextOps.langId(col("text")).as("lang"))
@@ -500,7 +486,7 @@ object ScaleCheck {
       docsE1.select((col("doc_id") + lit(c.toLong * docStride)).as("doc_id"),
         concat(col("source"), lit(s"_c$c")).as("source"),
         regexp_replace(col("text"), "(\\S+)", "$1" + s"zz$c").as("text"))
-    }.reduce(_ unionByName _).repartition(cpus.toInt).localCheckpoint()
+    }.reduce(_ unionByName _).repartition(cpus).localCheckpoint()
     timed("docs_pretrain_tail", docsE1, docsE10) { df =>
       val ed = df.join(graft.ops.DedupOps.exactDedup(df, "doc_id", "text")
           .select("doc_id"), "doc_id")
@@ -545,7 +531,7 @@ object ScaleCheck {
       docsE1.select((col("doc_id") + lit(c.toLong * docStride)).as("doc_id"),
         concat(col("source"), lit(s"_c$c")).as("source"),
         regexp_replace(col("text"), "(\\S+)", "$1" + s"zz$c").as("text"))
-    }.reduce(_ unionByName _).repartition(cpus.toInt).localCheckpoint()
+    }.reduce(_ unionByName _).repartition(cpus).localCheckpoint()
     println(s"docsE rows: 10x=${docsE10.count()} 100x=${docsE100.count()}")
     timedPair("docs_pretrain_tail", docsE10, docsE100, "10x", "100x") { df =>
       val ed = df.join(graft.ops.DedupOps.exactDedup(df, "doc_id", "text")

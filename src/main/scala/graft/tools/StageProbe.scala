@@ -14,7 +14,8 @@ import scala.collection.mutable
   * identified empirically instead of guessed.
   *
   * Usage: runMain graft.tools.StageProbe <sfDir> <query>[,<query>...]
-  * Env: SPARK_GRAFT_CPUS (default 4) - same contract as Bench.
+  * Session: [[graft.Session]] (`SPARK_GRAFT_CPUS`, `SPARK_GRAFT_CONF` for
+  * A/B overrides) - the same engine graft.Bench measures.
   */
 object StageProbe {
   private final class Rec {
@@ -33,18 +34,7 @@ object StageProbe {
     val sfDir = args(0)
     val names = args(1).split(",").toSeq
     val reps = if (args.length > 2) args(2).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // ad-hoc conf passthrough for A/B probes: SPARK_GRAFT_CONF="k=v;k=v"
-    val extra = sys.env.getOrElse("SPARK_GRAFT_CONF", "")
-      .split(";").filter(_.contains("=")).map { kv =>
-        val Array(k, v) = kv.split("=", 2); (k, v)
-      }
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    val spark = extra.foldLeft(b0) { case (b, (k, v)) => b.config(k, v) }.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
 
     val stages = mutable.LinkedHashMap.empty[Int, Rec]
     var jobs = 0

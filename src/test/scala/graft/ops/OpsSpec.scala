@@ -6,19 +6,6 @@ import org.apache.spark.sql.functions._
 class OpsSpec extends SparkSpec {
   import spark.implicits._
 
-  /** Deterministic drain of the async SparkListener bus (a fixed sleep
-    * flakes on a loaded host: job-start events from EARLIER actions can
-    * arrive after a counter is zeroed); waitUntilEmpty is
-    * package-private, hence the reflective call.
-    */
-  private def drainListenerBus(): Unit = {
-    val sc = spark.sparkContext
-    val bus = sc.getClass.getMethods.find(_.getName == "listenerBus").get.invoke(sc)
-    bus.getClass.getMethods
-      .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 1).get
-      .invoke(bus, java.lang.Long.valueOf(30000L))
-  }
-
   private lazy val docs = Seq(
     (1L, "the quick brown fox jumps over the lazy dog near the river bank"),
     (2L, "the quick brown fox jumps over the lazy dog near the river bend"), // near-dup of 1
@@ -1784,21 +1771,10 @@ class OpsSpec extends SparkSpec {
       assert(back.halfs(m)(c) == idx.halfs(m)(c), s"half($m)($c)")
     }
     // query construction on the read index launches ZERO jobs
-    @volatile var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs += 1
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      drainListenerBus()
-      jobs = 0
-      val q = SimilarityOps.pqQuery(back, queries, "id", "v", k = 5, rerank = 30)
-      drainListenerBus()
-      assert(jobs == 0, s"pqQuery construction must launch no jobs, saw $jobs")
-      assert(q.collect().map(_.toString).sorted.toSeq == direct,
-        "persisted index must serve identical results")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (q, jobs) = countJobs(SimilarityOps.pqQuery(back, queries, "id", "v", k = 5, rerank = 30))
+    assert(jobs == 0, s"pqQuery construction must launch no jobs, saw $jobs")
+    assert(q.collect().map(_.toString).sorted.toSeq == direct,
+      "persisted index must serve identical results")
   }
 
   test("IVF persisted index: lossless round-trip, job-free query construction, skewed lists") {
@@ -1824,21 +1800,10 @@ class OpsSpec extends SparkSpec {
       "centroids must round-trip bit-exact")
     // plan construction on the read index launches ZERO jobs (the old
     // one-shot ivfTopK relaunched seeding+Lloyd on every call)
-    @volatile var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs += 1
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      drainListenerBus() // in-flight job-start events from prior actions
-      jobs = 0
-      val persisted = SimilarityOps.ivfQuery(back, queries, "id", "v", k = 5, nProbe = 3)
-      drainListenerBus() // listener bus is async; surface any stray job
-      assert(jobs == 0, s"ivfQuery construction must launch no jobs, saw $jobs")
-      // the queried results through the persisted index are identical
-      assert(persisted.collect().map(_.toString).sorted.toSeq == direct)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (persisted, jobs) = countJobs(SimilarityOps.ivfQuery(back, queries, "id", "v", k = 5, nProbe = 3))
+    assert(jobs == 0, s"ivfQuery construction must launch no jobs, saw $jobs")
+    // the queried results through the persisted index are identical
+    assert(persisted.collect().map(_.toString).sorted.toSeq == direct)
     // recall through the persisted skewed index still tracks brute force
     val brute = SimilarityOps.bruteTopK(vecs, "id", "v", queries, "id", "v", 5)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
@@ -3291,20 +3256,9 @@ class OpsSpec extends SparkSpec {
     val path = java.nio.file.Files.createTempDirectory("graft_bm25_spec").toString
     SearchOps.bm25Write(idx, path)
     val back = SearchOps.bm25Read(spark, path)
-    @volatile var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs += 1
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      drainListenerBus()
-      jobs = 0
-      val q = SearchOps.bm25Query(back, queries, "q", k = 3)
-      drainListenerBus()
-      assert(jobs == 0, s"bm25Query construction must launch no jobs, saw $jobs")
-      assert(q.collect().map(_.toString).sorted.toSeq == direct)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (q, jobs) = countJobs(SearchOps.bm25Query(back, queries, "q", k = 3))
+    assert(jobs == 0, s"bm25Query construction must launch no jobs, saw $jobs")
+    assert(q.collect().map(_.toString).sorted.toSeq == direct)
     // the tf probe must keep the index-probe shape (query batch
     // broadcast against the corpus-sized postings) even when the
     // freshly-read parquet carries no stats: threshold -1 turns off

@@ -106,6 +106,17 @@ class PrefixTreeSpec extends SparkSpec {
       rows3(Query.queryBroadcast(q, "q", trie, 1)))
   }
 
+  test("the index's stats sidecar costs no Spark job on read") {
+    // read + trieStats run exactly the jobs of a plain parquet read of the
+    // index: the sidecar lookup and the sizing are both job-free
+    val dir = java.nio.file.Files.createTempDirectory("pt_sidecar").toString
+    PrefixTree.writeIndexed(trie, dir)
+    val (_, plainJobs) = countJobs(spark.read.parquet(dir))
+    val (st, jobs) = countJobs(Query.trieStats(PrefixTree.read(spark, dir)))
+    assert(jobs == plainJobs, s"read + trieStats ran $jobs jobs, a plain read $plainJobs")
+    assert(st == Query.computeTrieStats(PrefixTree.read(spark, dir)))
+  }
+
   test("queryJoin (loop mode) matches broadcast mode") {
     val queries = Seq("dog", "doer", "kaminski", "ab").toDF("q")
     val a = Query.queryBroadcast(queries, "q", trie, 2)
