@@ -1220,7 +1220,7 @@ object DedupOps {
     * comparison rounds to 6dp BEFORE thresholding so a replaying
     * engine lands on the identical edge set. Cluster formation is
     * [[GraphOps.connectedComponents]] (min-id labels, driver off-ramp
-    * under its own edge-count guard).
+    * under the shared `SizeGuard.DriverEdges` guard).
     *
     * Output: one row per input row: (idCol, cluster_id) - singletons
     * keep their own id as cluster id.

@@ -28,12 +28,7 @@ object GraphOps {
     * Output: one row per distinct vertex appearing in `edges`:
     * (id, cluster_id = min vertex id in its component).
     */
-  def connectedComponents(
-      edges: DataFrame,
-      srcCol: String,
-      dstCol: String,
-      driverEdgeLimit: Long = 1L << 20
-  ): DataFrame = {
+  def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
     // materialize the (possibly expensive) edge computation ONCE before
     // symmetrizing: union(sym, sym.swapped) would otherwise execute the
     // upstream pair-generation plan twice
@@ -47,20 +42,16 @@ object GraphOps {
     // small-graph off-ramp (the CC counterpart of Query.queryBatch's
     // broadcast mode): near-dup pair sets are usually tiny relative to
     // the corpus, and min-label propagation costs ~3 jobs PER ROUND.
-    // Under the explicit size guard, a driver union-find gives the
+    // Under the shared driver-edge guard, a driver union-find gives the
     // identical answer in one collect + one parallelize; above it (or
     // for exotic id types) the distributed loop below is the scale path.
-    // The count is free: sym was just materialized by localCheckpoint.
+    // The sizing aggregate reads sym's just-materialized checkpoint.
     // off-ramp only when both endpoint columns share one supported
     // atomic type: mixed int/long columns rely on the distributed
     // union's type widening, and the collected ordering must match
     // Spark's own min semantics for the type
-    val ord =
-      if (sym.schema("a").dataType == sym.schema("b").dataType)
-        orderingFor(sym.schema("a").dataType)
-      else null
-    if (ord != null && sym.count() <= driverEdgeLimit)
-      return driverUnionFind(sym, ord)
+    if (sym.schema("a").dataType == sym.schema("b").dataType && driverSized(sym, "a"))
+      return connectedComponentsLocal(sym)
     val und = sym.union(sym.select(F.col("b").as("a"), F.col("a").as("b")))
       .distinct()
       .localCheckpoint()
@@ -118,39 +109,6 @@ object GraphOps {
     case _ => null
   })
 
-  /** Exact same contract as the distributed loop - one row per distinct
-    * vertex, cluster_id = min id of its component under the column
-    * type's ordering - via union-find with path compression, keeping
-    * the minimum element as each set's root.
-    */
-  private def driverUnionFind(sym: DataFrame, ord: Ordering[Any]): DataFrame = {
-    val spark = sym.sparkSession
-    val dt = sym.schema("a").dataType
-    val parent = new scala.collection.mutable.HashMap[Any, Any]
-    def find(x0: Any): Any = {
-      var x = x0
-      while (parent(x) != x) {
-        val g = parent(parent(x)) // halve the path while walking it
-        parent(x) = g
-        x = g
-      }
-      x
-    }
-    sym.collect().foreach { r =>
-      val (a, b) = (r.get(0), r.get(1))
-      parent.getOrElseUpdate(a, a)
-      parent.getOrElseUpdate(b, b)
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) {
-        if (ord.lt(ra, rb)) parent(rb) = ra else parent(ra) = rb
-      }
-    }
-    val rows = parent.keys.toSeq.map(id => Row(id, find(id)))
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 1),
-      StructType(Seq(StructField("id", dt), StructField("cluster_id", dt))))
-  }
-
   /** PageRank over an undirected edge list in fixed-point INTEGER
     * arithmetic - the corpus-weighting companion to
     * [[connectedComponents]] (rank web-ish sources by link structure
@@ -180,12 +138,9 @@ object GraphOps {
       srcCol: String,
       dstCol: String,
       iterations: Int = 10,
-      unit: Long = 1000000000L,
-      broadcastNodeLimit: Long = 1L << 22,
-      driverEdgeLimit: Long = DriverEdgeLimit
+      unit: Long = 1000000000L
   ): DataFrame =
-    pageRankCounted(edges, srcCol, dstCol, iterations, unit, broadcastNodeLimit,
-      driverEdgeLimit = driverEdgeLimit)._1
+    pageRankCounted(edges, srcCol, dstCol, iterations, unit)._1
 
   /** [[pageRank]] plus the number of rounds actually executed, with an
     * optional convergence stop: `tol >= 0` probes every third round and
@@ -213,9 +168,7 @@ object GraphOps {
       dstCol: String,
       iterations: Int = 10,
       unit: Long = 1000000000L,
-      broadcastNodeLimit: Long = 1L << 22,
-      tol: Long = -1L,
-      driverEdgeLimit: Long = DriverEdgeLimit
+      tol: Long = -1L
   ): (DataFrame, Int) = {
     require(iterations >= 0, s"iterations must be >= 0, got $iterations")
     require(unit > 0, s"unit must be positive, got $unit")
@@ -231,16 +184,12 @@ object GraphOps {
       .repartition(F.col("dst"))
       .distinct()
       .localCheckpoint()
-    // driver off-ramp (the connectedComponents driverUnionFind
-    // discipline - see the off-ramp section at the end of this file):
-    // below the guard the identical integer recurrence runs on collected
-    // arrays, bit-exact, skipping the per-round job-scheduling floor;
-    // the edge derivation above stayed in Spark. The count is one cheap
-    // job over the just-materialized checkpoint.
-    val edgeCnt0 = edgesByDst.count()
-    if (offRampIdType(edgesByDst.schema("src").dataType) &&
-        edgeCnt0 <= driverEdgeLimit &&
-        estBroadcastBytes(edgesByDst, "src", edgeCnt0, carriedW = -1) <= BroadcastByteLimit) {
+    // driver off-ramp (see the off-ramp section at the end of this
+    // file): below the guard the identical integer recurrence runs on
+    // collected arrays, bit-exact, skipping the per-round job-scheduling
+    // floor; the edge derivation above stayed in Spark. The sizing is
+    // one cheap job over the just-materialized checkpoint.
+    if (driverSized(edgesByDst, "src")) {
       val out = pageRankLocal(edgesByDst, iterations, unit, tol)
       OpsUtil.unpersistCheckpoint(sym)
       OpsUtil.unpersistCheckpoint(edgesByDst)
@@ -258,9 +207,7 @@ object GraphOps {
     // fallback path). Graphs whose node table is too big to broadcast -
     // by row count OR by estimated bytes (wide string ids blow past any
     // row-count guard long before 4M rows) - take the shuffled path.
-    val nodeCount = deg.count() // free: deg materialized
-    val smallRanks = nodeCount <= broadcastNodeLimit &&
-      estBroadcastBytes(deg, "node", nodeCount) <= BroadcastByteLimit
+    val smallRanks = SizeGuard.small(SizeGuard.NodeBroadcast, deg, "node")
     val restart = 15L * unit / 100L
     // deg is a checkpointed LogicalRDD: its stats are UNKNOWN, so the
     // planner picked a SortMergeJoin with TWO exchanges + sorts for the
@@ -362,16 +309,14 @@ object GraphOps {
       seeds: DataFrame,
       seedCol: String,
       iterations: Int = 10,
-      unit: Long = 1000000000L,
-      broadcastNodeLimit: Long = 1L << 22,
-      driverEdgeLimit: Long = DriverEdgeLimit
+      unit: Long = 1000000000L
   ): DataFrame = {
     val sd = seeds.select(F.col(seedCol).as("gr_sn"), lit(true).as("gr_seed"))
       .distinct()
     trustRankCore(edges, srcCol, dstCol,
       n => n.join(broadcast(sd), n("node") === F.col("gr_sn"), "left")
         .select(n("node"), coalesce(F.col("gr_seed"), lit(false)).as("gr_is_seed")),
-      iterations, unit, broadcastNodeLimit, driverEdgeLimit)
+      iterations, unit)
   }
 
   /** [[trustRank]] with the seed set given as a PREDICATE over the
@@ -387,13 +332,11 @@ object GraphOps {
       dstCol: String,
       isSeed: Column,
       iterations: Int = 10,
-      unit: Long = 1000000000L,
-      broadcastNodeLimit: Long = 1L << 22,
-      driverEdgeLimit: Long = DriverEdgeLimit
+      unit: Long = 1000000000L
   ): DataFrame =
     trustRankCore(edges, srcCol, dstCol,
       n => n.select(F.col("node"), isSeed.as("gr_is_seed")),
-      iterations, unit, broadcastNodeLimit, driverEdgeLimit)
+      iterations, unit)
 
   private def trustRankCore(
       edges: DataFrame,
@@ -401,9 +344,7 @@ object GraphOps {
       dstCol: String,
       markSeeds: DataFrame => DataFrame,
       iterations: Int,
-      unit: Long,
-      broadcastNodeLimit: Long,
-      driverEdgeLimit: Long = DriverEdgeLimit
+      unit: Long
   ): DataFrame = {
     require(iterations >= 0, s"iterations must be >= 0, got $iterations")
     require(unit > 0, s"unit must be positive, got $unit")
@@ -427,13 +368,9 @@ object GraphOps {
     // driver off-ramp (pageRank discipline): the seed marking already
     // ran in Spark over the materialized node frame - only the rounds
     // collect. Same directed integer map, bit-exact.
-    val edgeCnt0 = e.count()
-    if (offRampIdType(e.schema("src").dataType) && edgeCnt0 <= driverEdgeLimit &&
-        estBroadcastBytes(e, "src", edgeCnt0, carriedW = -1) <= BroadcastByteLimit)
+    if (driverSized(e, "src"))
       return trustRankLocal(e, nodes, iterations, unit)
-    val nodeCount = nodes.count()
-    val smallRanks = nodeCount <= broadcastNodeLimit &&
-      estBroadcastBytes(nodes, "node", nodeCount) <= BroadcastByteLimit
+    val smallRanks = SizeGuard.small(SizeGuard.NodeBroadcast, nodes, "node")
     // rounds iterate over the trust SUPPORT (seeds ∪ reached nodes),
     // never the full node frame: early rounds touch a seed-sized
     // frontier, and at web scale the reputable subgraph trust actually
@@ -526,9 +463,7 @@ object GraphOps {
       srcCol: String,
       dstCol: String,
       iterations: Int = 8,
-      unit: Long = 1000000L,
-      broadcastNodeLimit: Long = 1L << 22,
-      driverEdgeLimit: Long = DriverEdgeLimit
+      unit: Long = 1000000L
   ): DataFrame = {
     require(iterations >= 0, s"iterations must be >= 0, got $iterations")
     require(unit > 0, s"unit must be positive, got $unit")
@@ -539,21 +474,17 @@ object GraphOps {
     // its per-half-step max rescale is the family's worst job-scheduling
     // floor (StageProbe r18: 100 jobs, 0.9 s task time, 5.7 s wall at
     // sf0.1/32); below the guard it runs on collected arrays, bit-exact
-    val edgeCnt0 = eByDst.count()
-    if (offRampIdType(eByDst.schema("src").dataType) &&
-        edgeCnt0 <= driverEdgeLimit &&
-        estBroadcastBytes(eByDst, "src", edgeCnt0, carriedW = -1) <= BroadcastByteLimit)
+    if (driverSized(eByDst, "src"))
       return hitsLocal(eByDst, iterations, unit)
     val eBySrc = eByDst.repartition(F.col("src")).localCheckpoint()
     val nodes = eByDst.select(F.col("src").as("node"))
       .union(eByDst.select(F.col("dst").as("node"))).distinct()
       .localCheckpoint()
-    val nodeCount = nodes.count()
+    val (nodeCount, nodeBytes) = SizeGuard.measure(nodes, "node")
     require(nodeCount <= Long.MaxValue / unit / unit,
       s"$nodeCount nodes at unit=$unit risks Long overflow in the rescale; " +
         "lower unit (it is a resolution knob)")
-    val small = nodeCount <= broadcastNodeLimit &&
-      estBroadcastBytes(nodes, "node", nodeCount) <= BroadcastByteLimit
+    val small = SizeGuard.small(SizeGuard.NodeBroadcast, nodeCount, nodeBytes)
     def bcast(df: DataFrame): DataFrame = if (small) broadcast(df) else df
     // rescale so max == unit; max is a one-row frame cross-joined back
     // (order-exact, no window). The pre-scale frame is shared by two
@@ -613,35 +544,6 @@ object GraphOps {
         coalesce(F.col("h"), lit(0L)).as("hub_int"),
         coalesce(F.col("a"), lit(0L)).as("auth_int"))
   }
-
-  /** Conservative byte estimate of a per-round broadcast of `rows`
-    * (id, value) pairs keyed by `idCol` of `nodeSized` (which callers
-    * have already materialized - this one node-sized agg reads the
-    * checkpoint, never recomputes). The measured id width is doubled
-    * (length() counts characters; non-ASCII ids occupy more UTF-8
-    * bytes, and UnsafeRow pads) before adding the carried value's
-    * width and 16B per-row overhead. `carriedW < 0` means "the carried
-    * value is another id" (labelPropagation's label column is
-    * node-typed) and charges the id width again.
-    */
-  private def estBroadcastBytes(
-      nodeSized: DataFrame,
-      idCol: String,
-      rows: Long,
-      carriedW: Double = 8.0
-  ): Long = {
-    val idW = 2.0 * nodeSized
-      .agg(coalesce(F.avg(F.length(F.col(idCol).cast("string"))), lit(8.0)))
-      .head().getDouble(0)
-    val cw = if (carriedW < 0) idW else carriedW
-    (rows * (idW + cw + 16)).toLong
-  }
-
-  /** Per-round node-table broadcasts stop above this many estimated
-    * bytes regardless of row count (driver + every executor holds the
-    * whole table per round).
-    */
-  private val BroadcastByteLimit: Long = 128L << 20
 
   /** Connected components by alternating large-star / small-star rounds
     * (Kiveris et al., "Connected Components in MapReduce and Beyond",
@@ -817,9 +719,7 @@ object GraphOps {
       edges: DataFrame,
       srcCol: String,
       dstCol: String,
-      rounds: Int,
-      broadcastNodeLimit: Long = 1L << 22,
-      driverEdgeLimit: Long = DriverEdgeLimit
+      rounds: Int
   ): DataFrame = {
     require(rounds >= 0, s"rounds must be non-negative, got $rounds")
     val sym = edges.select(F.col(srcCol).as("src"), F.col(dstCol).as("dst"))
@@ -831,17 +731,13 @@ object GraphOps {
     // driver off-ramp (pageRank discipline): synchronous integer vote
     // rounds with the orderingFor tie-break run bit-exact on collected
     // arrays below the guard
-    val edgeCnt0 = e.count()
-    if (offRampIdType(e.schema("src").dataType) && edgeCnt0 <= driverEdgeLimit &&
-        estBroadcastBytes(e, "src", edgeCnt0, carriedW = -1) <= BroadcastByteLimit)
+    if (driverSized(e, "src"))
       return labelPropagationLocal(e, rounds)
     val nodes = e.select(F.col("src").as("node")).distinct().localCheckpoint()
-    val nodeCount = nodes.count() // free: just materialized
     // row count AND estimated bytes: broadcasting a multi-million-row
     // WIDE label frame every round pressures driver/executor memory
-    // long before the row-count guard trips (same guard as pageRank)
-    val smallLabels = nodeCount <= broadcastNodeLimit &&
-      estBroadcastBytes(nodes, "node", nodeCount, carriedW = -1) <= BroadcastByteLimit
+    // long before the row-count guard trips; the label is node-typed
+    val smallLabels = SizeGuard.small(SizeGuard.NodeBroadcast, nodes, "node", carriedW = -1)
     // NOTE (r17 probe, VERDICT r16 #3): materializing every third round
     // (pageRank's plan-depth discipline) was tried against the fused
     // 5-round plan and measured NO improvement (4.71 s vs 4.21-4.72 s
@@ -929,9 +825,8 @@ object GraphOps {
       srcCol: String,
       dstCol: String,
       k: Int,
-      maxIter: Int = 200,
-      driverEdgeLimit: Long = DriverEdgeLimit
-  ): DataFrame = kCoreCounted(edges, srcCol, dstCol, k, maxIter, driverEdgeLimit)._1
+      maxIter: Int = 200
+  ): DataFrame = kCoreCounted(edges, srcCol, dstCol, k, maxIter)._1
 
   /** [[kCore]] plus the number of peel rounds executed - the measurable
     * form of the "round count = peel depth, never vertex count" claim
@@ -943,8 +838,7 @@ object GraphOps {
       srcCol: String,
       dstCol: String,
       k: Int,
-      maxIter: Int = 200,
-      driverEdgeLimit: Long = DriverEdgeLimit
+      maxIter: Int = 200
   ): (DataFrame, Int) = {
     require(k >= 1, s"k must be positive, got $k")
     val sym = edges.select(F.col(srcCol).as("src"), F.col(dstCol).as("dst"))
@@ -977,19 +871,20 @@ object GraphOps {
     //     separate emptiness job;
     //   - the broadcast guard needs no count of bad: |bad| <= |cur
     //     vertices| <= |cur| rows, and the previous round's count is in
-    //     hand, so `curCnt * 64 <= BroadcastByteLimit` is a sound
-    //     conservative bytes bound. Giant early peels (curCnt over the
-    //     cap) take the materialized-bad shuffled path as before.
+    //     hand, so `curCnt` rows at 64 B each is a sound conservative
+    //     bound for the node-broadcast guard. Giant early peels (curCnt
+    //     over the cap) take the materialized-bad shuffled path as before.
     // Round count semantics unchanged: the round that discovers the
     // fixpoint still increments `it` (ScaleCheck pins 9/9 on the gadget).
-    var curCnt = cur.count()
+    val (cnt0, bytes0) = SizeGuard.measure(cur, "src", carriedW = -1)
+    var curCnt = cnt0
     // driver off-ramp (pageRank discipline): the peel loop's per-round
     // degree-aggregate broadcasts + checkpoint + count cost ~10 jobs per
     // round (StageProbe r18: 93 jobs at sf0.1/32); below the guard the
     // identical peel (same round counting, same non-convergence error)
     // runs on collected arrays
-    if (offRampIdType(cur.schema("src").dataType) && curCnt <= driverEdgeLimit &&
-        estBroadcastBytes(cur, "src", curCnt, carriedW = -1) <= BroadcastByteLimit) {
+    if (orderingFor(cur.schema("src").dataType) != null &&
+        SizeGuard.small(SizeGuard.DriverEdges, cnt0, bytes0)) {
       val out = kCoreLocal(cur, k, maxIter)
       OpsUtil.unpersistCheckpoint(cur)
       return out
@@ -1011,7 +906,7 @@ object GraphOps {
         .agg(count(lit(1)).as("deg"))
         .filter(F.col("deg") < k)
         .select(F.col("src").as("gr_bad"))
-      if (curCnt * 64L <= BroadcastByteLimit) {
+      if (SizeGuard.small(SizeGuard.NodeBroadcast, curCnt, curCnt * 64L)) {
         val badB = broadcast(bad)
         val next = cur
           .join(badB, F.col("src") === F.col("gr_bad"), "left_anti")
@@ -1033,7 +928,9 @@ object GraphOps {
         val nBad = badP.count()
         if (nBad == 0L) done = true
         else {
-          val badJ = if (nBad * 64L <= BroadcastByteLimit) broadcast(badP) else badP
+          val badJ =
+            if (SizeGuard.small(SizeGuard.NodeBroadcast, nBad, nBad * 64L)) broadcast(badP)
+            else badP
           val next = cur
             .join(badJ, F.col("src") === F.col("gr_bad"), "left_anti")
             .join(badJ, F.col("dst") === F.col("gr_bad"), "left_anti")
@@ -1060,7 +957,7 @@ object GraphOps {
   }
 
   // ---------------------------------------------------------------------
-  // Driver off-ramps for tiny graphs (the driverUnionFind discipline,
+  // Driver off-ramps for tiny graphs (connectedComponents' union-find,
   // generalized to the whole iterative family - r18)
   // ---------------------------------------------------------------------
   //
@@ -1076,26 +973,17 @@ object GraphOps {
   // any evaluation order is precisely these ops' determinism contract -
   // while the corpus-scale edge DERIVATION above the loop always stays
   // in Spark, and graphs over the guard (or with exotic id types) take
-  // the distributed loop unchanged. This mirrors the long-standing
-  // [[connectedComponents]] driver union-find off-ramp (same guard
-  // value), extended to the rank/label/peel recurrences.
+  // the distributed loop unchanged. All six ops, connectedComponents
+  // included, share one guard: SizeGuard.DriverEdges.
 
-  /** Edge-count guard for the driver off-ramps. The byte side of the
-    * guard (checked at each call site via [[estBroadcastBytes]]) is the
-    * same 128 MB cap the per-round node-frame broadcasts obey: if the
-    * loop would re-broadcast node-sized frames to every executor EVERY
-    * round, collecting an edge frame of the same byte budget ONCE to
-    * the driver is strictly less data movement.
+  /** The off-ramp guard: an id type whose driver-side equality and
+    * ordering provably match Spark's (the [[orderingFor]] set), and an
+    * edge frame within [[SizeGuard.DriverEdges]], each endpoint charged
+    * as an id.
     */
-  private[graft] val DriverEdgeLimit: Long = 1L << 21
-
-  /** Off-ramps only fire for id types whose driver-side equality and
-    * ordering provably match Spark's (the [[orderingFor]] set).
-    */
-  private def offRampIdType(dt: DataType): Boolean = dt match {
-    case LongType | IntegerType | StringType => true
-    case _ => false
-  }
+  private def driverSized(e: DataFrame, idCol: String): Boolean =
+    orderingFor(e.schema(idCol).dataType) != null &&
+      SizeGuard.small(SizeGuard.DriverEdges, e, idCol, carriedW = -1)
 
   /** A collected edge list re-indexed to dense ints. Symmetrization /
     * dedup / null-filtering happened IN SPARK before the collect - this
@@ -1126,6 +1014,38 @@ object GraphOps {
   private def localResult(df: DataFrame, schema: StructType, rows: Seq[Row]): DataFrame = {
     val spark = df.sparkSession
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+  }
+
+  /** [[connectedComponents]]' contract on collected arrays - one row per
+    * distinct vertex, cluster_id = min id of its component under the
+    * column type's ordering - by union-find with path halving over the
+    * dense ids, keeping the minimum element as each set's root.
+    */
+  private def connectedComponentsLocal(sym: DataFrame): DataFrame = {
+    val g = collectGraph(sym)
+    val ord = orderingFor(sym.schema("a").dataType)
+    val parent = Array.tabulate(g.n)(identity)
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    var k = 0
+    while (k < g.m) {
+      val ra = find(g.src(k))
+      val rb = find(g.dst(k))
+      if (ra != rb) {
+        if (ord.lt(g.ids(ra), g.ids(rb))) parent(rb) = ra else parent(ra) = rb
+      }
+      k += 1
+    }
+    // schema mirrors the distributed loop, nullability included: id is
+    // the union of both endpoint columns, and every label expression
+    // (the id itself, then least/coalesce over ids) keeps its nullability
+    val id = StructField("id", sym.schema("a").dataType,
+      sym.schema("a").nullable || sym.schema("b").nullable)
+    localResult(sym, StructType(Seq(id, id.copy(name = "cluster_id"))),
+      (0 until g.n).map(v => Row(g.ids(v), g.ids(find(v)))))
   }
 
   /** [[pageRankCounted]]'s integer map on collected arrays - the same

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
+import graft.ops.SizeGuard
+
 /** Fuzzy (Levenshtein) trie search.
   *
   * Spark-native equivalent of `QueryThorLevenshtein` / `QueryRoxieLevenshtein`
@@ -43,8 +45,7 @@ object Query {
       queries: DataFrame,
       col: String,
       trie: Dataset[PTNode],
-      maxDist: Int,
-      broadcastThresholdBytes: Long = 512L * 1024 * 1024
+      maxDist: Int
   ): DataFrame = {
     // persist across the mode decision: the sizing agg + collect()/join
     // would otherwise run trie construction twice. Both modes consume the
@@ -52,7 +53,7 @@ object Query {
     // on return is safe.
     val t = trie.persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      if (estimatedIndexBytes(t) <= broadcastThresholdBytes)
+      if (SizeGuard.small(SizeGuard.TrieIndex, trieStats(t).nodes, estimatedIndexBytes(t)))
         queryBroadcast(queries, col, t, maxDist)
       else queryJoin(queries, col, t, maxDist)
     } finally t.unpersist()
@@ -129,8 +130,9 @@ object Query {
     * (≈ 56 B) → 128 B fixed, plus the String payload at 2 B/char (UTF-16
     * worst case; compact strings halve it for ASCII). Served from
     * [[trieStats]] - a persisted index answers with no job at all.
-    * The 512 MB default leaves a multi-GB driver comfortable: ~2 copies
-    * driver-side during collect+broadcast plus serialization scratch.
+    * The [[SizeGuard.TrieIndex]] limit (512 MB) leaves a multi-GB driver
+    * comfortable: ~2 copies driver-side during collect+broadcast plus
+    * serialization scratch.
     */
   private[ptree] def estimatedIndexBytes(trie: Dataset[PTNode]): Long = {
     val st = trieStats(trie)
@@ -323,7 +325,7 @@ object Query {
     // broadcast once. Bigger tries use the partitioned join, where only
     // the frontier shuffles per level. Same algebra either way - this is
     // strategy selection, exactly what Catalyst does for any other join.
-    val useBcast = trieBytes <= 64L * 1024 * 1024
+    val useBcast = SizeGuard.small(SizeGuard.TrieChain, st.nodes, trieBytes)
     val t = tIn.toDF().unionByName(sentinels).repartition(partsT, $"parent_id")
       .persist(StorageLevel.MEMORY_AND_DISK)
     // materialize the cache BEFORE the first partitioned join plans

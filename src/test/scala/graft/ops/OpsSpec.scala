@@ -6,6 +6,10 @@ import org.apache.spark.sql.functions._
 class OpsSpec extends SparkSpec {
   import spark.implicits._
 
+  /** `body` with the graph ops' driver off-ramps forced off. */
+  private def distributed[A](body: => A): A =
+    SizeGuard.forcing(SizeGuard.DriverEdges -> false)(body)
+
   private lazy val docs = Seq(
     (1L, "the quick brown fox jumps over the lazy dog near the river bank"),
     (2L, "the quick brown fox jumps over the lazy dog near the river bend"), // near-dup of 1
@@ -490,39 +494,41 @@ class OpsSpec extends SparkSpec {
   test("connectedComponents: empty edge list yields empty result, no NPE") {
     val empty = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
     assert(GraphOps.connectedComponents(empty, "id_a", "id_b").count() == 0)
-    assert(GraphOps.connectedComponents(empty, "id_a", "id_b", driverEdgeLimit = 0)
-      .count() == 0)
+    assert(distributed(GraphOps.connectedComponents(empty, "id_a", "id_b").count()) == 0)
   }
 
   test("connectedComponents: min-label per component, chains collapse") {
     // components: {1,2,3,9} via chain 1-2, 2-3, 3-9; {5,6}; {7,8}
     val edges = Seq((2L, 1L), (2L, 3L), (9L, 3L), (5L, 6L), (8L, 7L))
       .toDF("id_a", "id_b")
-    // driverEdgeLimit = 0 forces the DISTRIBUTED propagation loop (the
-    // tiny fixture would otherwise take the union-find off-ramp)
-    val got = GraphOps.connectedComponents(edges, "id_a", "id_b", driverEdgeLimit = 0)
-      .as[(Long, Long)].collect().toMap
+    // force the DISTRIBUTED propagation loop (the tiny fixture would
+    // otherwise take the union-find off-ramp)
+    val got = distributed(GraphOps.connectedComponents(edges, "id_a", "id_b")
+      .as[(Long, Long)].collect().toMap)
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 9L -> 1L,
       5L -> 5L, 6L -> 5L, 7L -> 7L, 8L -> 7L))
   }
 
   test("connectedComponents: driver union-find off-ramp == distributed loop") {
-    // random graph, both paths, exact equality (long AND string ids)
+    // random graph, both paths, exact equality of rows AND schema (long
+    // ids, string ids, and nullable columns with null endpoints)
     val rnd = new scala.util.Random(23)
     val edges = (1 to 300).map(_ => (rnd.nextInt(120).toLong, rnd.nextInt(120).toLong))
       .toDF("id_a", "id_b")
-    val dist = GraphOps.connectedComponents(edges, "id_a", "id_b", driverEdgeLimit = 0)
-      .as[(Long, Long)].collect().toSet
-    val drv = GraphOps.connectedComponents(edges, "id_a", "id_b")
-      .as[(Long, Long)].collect().toSet
-    assert(drv == dist, "union-find off-ramp diverged from propagation")
     val sEdges = edges.select(concat(lit("v"), format_string("%03d", $"id_a")).as("id_a"),
       concat(lit("v"), format_string("%03d", $"id_b")).as("id_b"))
-    val sDist = GraphOps.connectedComponents(sEdges, "id_a", "id_b", driverEdgeLimit = 0)
-      .as[(String, String)].collect().toSet
-    val sDrv = GraphOps.connectedComponents(sEdges, "id_a", "id_b")
-      .as[(String, String)].collect().toSet
-    assert(sDrv == sDist, "string-id off-ramp diverged")
+    val nEdges = edges.select(when($"id_a" % 7 =!= 0, $"id_a").as("id_a"), $"id_b")
+    assert(nEdges.schema("id_a").nullable, "spec premise: a nullable column")
+    for ((in, what) <- Seq((edges, "long"), (sEdges, "string"), (nEdges, "nullable"))) {
+      def run() = {
+        val df = GraphOps.connectedComponents(in, "id_a", "id_b")
+        (df.schema, df.collect().toSet)
+      }
+      val (drvSchema, drv) = run()
+      val (distSchema, dist) = distributed(run())
+      assert(drvSchema == distSchema, s"$what-id off-ramp schema diverged")
+      assert(drv == dist, s"$what-id off-ramp diverged from propagation")
+    }
   }
 
   test("fuzzyDedup clusters edit-distance neighbours via the trie") {
@@ -5018,12 +5024,12 @@ class OpsSpec extends SparkSpec {
   }
 
   test("graph driver off-ramps == distributed loops (pageRank/tol, trustRank, hits, labelprop, kCore)") {
-    // r18: below DriverEdgeLimit the iterative ops run their integer
-    // recurrences on collected arrays (the driverUnionFind discipline).
-    // The same pseudo-random graph runs through BOTH paths - the
-    // off-ramp by default, the distributed loop forced with
-    // driverEdgeLimit = 0 - and every op must agree row for row,
-    // including round counts. String ids cover the orderingFor
+    // r18: below the driver-edge guard the iterative ops run their
+    // integer recurrences on collected arrays. The same pseudo-random
+    // graph runs through all three paths - the off-ramp by default, the
+    // distributed loop with its per-round node broadcasts, and the fully
+    // shuffled distributed loop - and every op must agree on rows,
+    // schema and round counts. String ids cover the orderingFor
     // tie-break and the hash-index path.
     val raw = (for {
       i <- 0L until 60L; j <- (i + 1) until 60L
@@ -5031,58 +5037,39 @@ class OpsSpec extends SparkSpec {
     } yield (i, j)) ++ Seq((1L, 1L), (2L, 1L)) // self-loop + reversed dup
     val edges = raw.toDF("a", "b")
     val sEdges = raw.map { case (x, y) => (s"n$x", s"n$y") }.toDF("a", "b")
+    def out(df: org.apache.spark.sql.DataFrame) = (df.schema, df.collect().toSet)
+    def samePaths[A](what: String)(body: => A): Unit = {
+      val Seq(local, bcast, shuffled) = Seq(
+        Seq.empty,
+        Seq(SizeGuard.DriverEdges -> false),
+        Seq(SizeGuard.DriverEdges -> false, SizeGuard.NodeBroadcast -> false)
+      ).map(sides => SizeGuard.forcing(sides: _*)(body))
+      assert(bcast == local, s"$what: broadcast distributed loop != off-ramp")
+      assert(shuffled == local, s"$what: shuffled distributed loop != off-ramp")
+    }
 
-    // pageRank, fixed rounds
-    val prL = GraphOps.pageRank(edges, "a", "b", iterations = 7, unit = 1000L)
-    val prD = GraphOps.pageRank(edges, "a", "b", iterations = 7, unit = 1000L,
-      driverEdgeLimit = 0L)
-    assert(prL.schema == prD.schema)
-    assert(prL.as[(Long, Long)].collect().toSet == prD.as[(Long, Long)].collect().toSet)
-
-    // pageRankCounted with tol: same ranks AND same executed-round count
-    val (ptL, rlL) = GraphOps.pageRankCounted(edges, "a", "b", iterations = 40,
-      unit = 1000L, tol = 0L)
-    val (ptD, rlD) = GraphOps.pageRankCounted(edges, "a", "b", iterations = 40,
-      unit = 1000L, tol = 0L, driverEdgeLimit = 0L)
-    assert(rlL == rlD, s"round counts differ: local $rlL vs distributed $rlD")
-    assert(ptL.as[(Long, Long)].collect().toSet == ptD.as[(Long, Long)].collect().toSet)
-
+    samePaths("pageRank")(out(GraphOps.pageRank(edges, "a", "b", iterations = 7, unit = 1000L)))
+    // tol: same ranks AND same executed-round count
+    samePaths("pageRankCounted tol=0") {
+      val (df, rounds) = GraphOps.pageRankCounted(edges, "a", "b", iterations = 40,
+        unit = 1000L, tol = 0L)
+      (out(df), rounds)
+    }
     // trustRank over string ids (directed; seed predicate)
-    val trL = GraphOps.trustRankSeedBy(sEdges, "a", "b",
-      col("node").isin("n0", "n3", "n5"), iterations = 6, unit = 1000L)
-    val trD = GraphOps.trustRankSeedBy(sEdges, "a", "b",
-      col("node").isin("n0", "n3", "n5"), iterations = 6, unit = 1000L,
-      driverEdgeLimit = 0L)
-    assert(trL.schema == trD.schema)
-    assert(trL.as[(String, Long)].collect().toSet == trD.as[(String, Long)].collect().toSet)
-
+    samePaths("trustRankSeedBy")(out(GraphOps.trustRankSeedBy(sEdges, "a", "b",
+      col("node").isin("n0", "n3", "n5"), iterations = 6, unit = 1000L)))
     // hits (directed, per-half-step max rescale)
-    val hL = GraphOps.hits(sEdges, "a", "b", iterations = 5, unit = 1000L)
-    val hD = GraphOps.hits(sEdges, "a", "b", iterations = 5, unit = 1000L,
-      driverEdgeLimit = 0L)
-    assert(hL.schema == hD.schema)
-    assert(hL.as[(String, Long, Long)].collect().toSet ==
-      hD.as[(String, Long, Long)].collect().toSet)
-
+    samePaths("hits")(out(GraphOps.hits(sEdges, "a", "b", iterations = 5, unit = 1000L)))
     // labelPropagation: long ids (packed argmin path) and string ids
     // (struct-min path + UTF-8 tie-break ordering)
-    val lpL = GraphOps.labelPropagation(edges, "a", "b", rounds = 4)
-    val lpD = GraphOps.labelPropagation(edges, "a", "b", rounds = 4,
-      driverEdgeLimit = 0L)
-    assert(lpL.schema == lpD.schema)
-    assert(lpL.as[(Long, Long)].collect().toSet == lpD.as[(Long, Long)].collect().toSet)
-    val lpsL = GraphOps.labelPropagation(sEdges, "a", "b", rounds = 4)
-    val lpsD = GraphOps.labelPropagation(sEdges, "a", "b", rounds = 4,
-      driverEdgeLimit = 0L)
-    assert(lpsL.as[(String, String)].collect().toSet ==
-      lpsD.as[(String, String)].collect().toSet)
-
-    // kCore: rows AND peel-round count
-    val (kcL, kitL) = GraphOps.kCoreCounted(edges, "a", "b", k = 3)
-    val (kcD, kitD) = GraphOps.kCoreCounted(edges, "a", "b", k = 3,
-      driverEdgeLimit = 0L)
-    assert(kitL == kitD, s"peel round counts differ: local $kitL vs distributed $kitD")
-    assert(kcL.schema == kcD.schema)
-    assert(kcL.as[(Long, Long)].collect().toSet == kcD.as[(Long, Long)].collect().toSet)
+    samePaths("labelPropagation long")(out(GraphOps.labelPropagation(edges, "a", "b", rounds = 4)))
+    samePaths("labelPropagation string")(
+      out(GraphOps.labelPropagation(sEdges, "a", "b", rounds = 4)))
+    // kCore: rows AND peel-round count; the shuffled side runs the
+    // materialized-bad branch
+    samePaths("kCore") {
+      val (df, rounds) = GraphOps.kCoreCounted(edges, "a", "b", k = 3)
+      (out(df), rounds)
+    }
   }
 }

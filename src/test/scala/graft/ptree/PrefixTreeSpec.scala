@@ -1,6 +1,7 @@
 package graft.ptree
 
 import graft.SparkSpec
+import graft.ops.SizeGuard
 import org.apache.spark.sql.functions._
 
 /** End-to-end Spark tests: create + query vs Spark's own levenshtein()
@@ -20,6 +21,13 @@ class PrefixTreeSpec extends SparkSpec {
   private def rows3(df: org.apache.spark.sql.DataFrame): Set[(String, String, Int)] =
     df.select("query_string", "node", "final_distance")
       .as[(String, String, Int)].collect().toSet
+
+  /** `body` once per side of the queryJoin chain guard: broadcast hash
+    * join, then the parent_id-partitioned join (the path of a trie too
+    * big to broadcast).
+    */
+  private def bothChains[A](body: => A): Seq[A] =
+    Seq(true, false).map(side => SizeGuard.forcing(SizeGuard.TrieChain -> side)(body))
 
   private def brute(queries: Seq[String], k: Int): Set[(String, String, Int)] = {
     val words = dictDf
@@ -55,9 +63,13 @@ class PrefixTreeSpec extends SparkSpec {
   test("queryBatch auto mode picks each side of the threshold correctly") {
     val queries = Seq("dog", "kaminski").toDF("q")
     val expect = rows3(Query.queryBroadcast(queries, "q", trie, 1))
-    val viaBroadcast = rows3(Query.queryBatch(queries, "q", trie, 1)) // trie << default threshold
-    val viaJoin = rows3(Query.queryBatch(queries, "q", trie, 1, broadcastThresholdBytes = 1)) // forced join mode
-    assert(viaBroadcast == expect && viaJoin == expect)
+    val viaBroadcast = rows3(Query.queryBatch(queries, "q", trie, 1)) // trie << the index limit
+    // forced join mode, with either chain join (an index over its limit
+    // implies a trie over the chain broadcast's limit in production)
+    val viaJoin = bothChains(SizeGuard.forcing(SizeGuard.TrieIndex -> false) {
+      rows3(Query.queryBatch(queries, "q", trie, 1))
+    })
+    assert(viaBroadcast == expect && viaJoin.forall(_ == expect))
   }
 
   test("broadcast sizing is byte-based: wide payloads route to join mode at equal row count") {
@@ -70,15 +82,17 @@ class PrefixTreeSpec extends SparkSpec {
     val nb = Query.estimatedIndexBytes(narrow)
     val wb = Query.estimatedIndexBytes(wide)
     assert(wb > nb * 4, s"estimate must scale with payload bytes (narrow=$nb wide=$wb)")
-    // a threshold between the two routes narrow -> broadcast, wide -> join,
-    // and BOTH still return the right answer
-    val thr = (nb + wb) / 2
+    // wide routed to join mode and narrow to broadcast mode both still
+    // return the right answer
     val q = Seq("a" * 300).toDF("q")
-    val got = rows3(Query.queryBatch(q, "q", wide, 0, broadcastThresholdBytes = thr))
+    val got = SizeGuard.forcing(SizeGuard.TrieIndex -> false) {
+      rows3(Query.queryBatch(q, "q", wide, 0))
+    }
     assert(got == Set(("a" * 300, "a" * 300, 0)))
     val q2 = Seq("aaa").toDF("q")
-    assert(rows3(Query.queryBatch(q2, "q", narrow, 0, broadcastThresholdBytes = thr)) ==
-      Set(("aaa", "aaa", 0)))
+    assert(SizeGuard.forcing(SizeGuard.TrieIndex -> true) {
+      rows3(Query.queryBatch(q2, "q", narrow, 0))
+    } == Set(("aaa", "aaa", 0)))
   }
 
   test("trieStats: sidecar/table-property stats match a fresh compute; queries run off them") {
@@ -121,9 +135,9 @@ class PrefixTreeSpec extends SparkSpec {
     val queries = Seq("dog", "doer", "kaminski", "ab").toDF("q")
     val a = Query.queryBroadcast(queries, "q", trie, 2)
       .as[(String, String, Int, Long)].collect().toSet
-    val b = Query.queryJoin(queries, "q", trie, 2)
-      .as[(String, String, Int, Long)].collect().toSet
-    assert(a == b) // including the n_occurrences column
+    val b = bothChains(Query.queryJoin(queries, "q", trie, 2)
+      .as[(String, String, Int, Long)].collect().toSet)
+    assert(b.forall(_ == a)) // including the n_occurrences column
   }
 
   test("queryOne (serving path) without Spark jobs") {
@@ -140,8 +154,8 @@ class PrefixTreeSpec extends SparkSpec {
     val q = cust.limit(12)
       .select(expr("concat(substr(c_name,1,length(c_name)-1),'X')").as("q"))
     val a = rows3(Query.queryBroadcast(q, "q", t, 1))
-    val b = rows3(Query.queryJoin(q, "q", t, 1))
-    assert(a == b && a.nonEmpty)
+    val b = bothChains(rows3(Query.queryJoin(q, "q", t, 1)))
+    assert(b.forall(_ == a) && a.nonEmpty)
   }
 
   test("branch-and-bound visits far fewer nodes than brute-force comparisons") {
@@ -200,13 +214,13 @@ class PrefixTreeSpec extends SparkSpec {
     try {
       // queryJoin directly: queryBatch would route this tiny trie to the
       // collected-DFS broadcast path, which has no codegen chain at all
-      val got = rows3(Query.queryJoin(queries, "q", deep, 2))
+      val got = bothChains(rows3(Query.queryJoin(queries, "q", deep, 2)))
       val expect = queries
         .crossJoin(words.toDF("word"))
         .withColumn("d", levenshtein($"q", $"word"))
         .filter($"d" <= 2)
         .as[(String, String, Int)].collect().toSet
-      assert(got == expect)
+      assert(got.forall(_ == expect))
     } finally prev match {
       case Some(v) => spark.conf.set("spark.sql.codegen.fallback", v)
       case None => spark.conf.unset("spark.sql.codegen.fallback")
