@@ -24,7 +24,9 @@ private[graft] object SizeGuard {
   /** A per-round node-frame broadcast in the distributed graph loops. */
   val NodeBroadcast = Site("graph.node_broadcast", 1L << 22, 128L << 20)
   /** `Query.queryBatch`: the children index collected and broadcast
-    * (`Query.estimatedIndexBytes`), else join mode.
+    * (`Query.estimatedIndexBytes`), else join mode. The estimate's
+    * 128 B/node is the transient `PTNode` collect, which peaks above the
+    * flat `graft.ptree.TrieIndex` it compiles to and is broadcast as.
     */
   val TrieIndex = Site("query.children_index", Long.MaxValue, 512L << 20)
   /** `Query.queryJoin`: the chain joins the trie as a broadcast hash join,

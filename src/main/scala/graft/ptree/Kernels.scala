@@ -31,119 +31,72 @@ object Kernels {
     * astral-plane fixture.)
     */
   private[ptree] def codePoints(s: String): Array[Int] = {
-    val n = s.codePointCount(0, s.length)
-    val out = new Array[Int](n)
+    val out = new Array[Int](cpLen(s))
+    codePointsInto(s, out, 0)
+    out
+  }
+
+  /** Write `s`'s code points into `dst` from `off`; returns their count. */
+  private[ptree] def codePointsInto(s: String, dst: Array[Int], off: Int): Int = {
     var ci = 0
-    var i = 0
-    while (i < n) {
+    var i = off
+    while (ci < s.length) {
       val cp = s.codePointAt(ci)
-      out(i) = cp
+      dst(i) = cp
       ci += Character.charCount(cp)
       i += 1
     }
-    out
+    i - off
   }
 
   @inline private[ptree] def cpLen(s: String): Int = s.codePointCount(0, s.length)
 
-  /** Extend a Levenshtein DP row across a multi-character trie edge,
-    * restricted to the Ukkonen band.
+  /** The one banded Levenshtein DP step every kernel runs: rows of the
+    * matrix between a trie path (`d` code points consumed) and the query
+    * (`q`, code points), restricted to the Ukkonen band.
     *
     * `row(j)` = edit distance between the trie path consumed so far and
-    * `query.substring(0, j)`; `consumed` = number of trie-path chars that
-    * produced `row`. Returns `(newRow, newRowMin)` after consuming every
-    * char of `edge`. `newRowMin` is a lower bound on the distance of ANY
-    * word extending this path - the branch-and-bound prune key
-    * (ecl:364-372).
+    * the first `j` query code points. Any cell (i, j) with |i - j| >
+    * maxDist is >= maxDist + 1, so only the 2*maxDist+1 cells around the
+    * diagonal are computed per path code point; everything else is
+    * pinned at the saturation value `maxDist + 1`. All distances are
+    * therefore `min(true distance, maxDist + 1)` - exact whenever they
+    * matter (<= maxDist) and "too far" otherwise. For k << |query| this
+    * cuts the inner loop from O(|query|) to O(k) per code point.
     *
-    * Banding: any DP cell (i, j) with |i - j| > maxDist is >= maxDist + 1,
-    * so only the 2*maxDist+1 cells around the diagonal are computed per
-    * path char; everything else is pinned at the saturation value
-    * `maxDist + 1`. All distances this function returns are therefore
-    * `min(true distance, maxDist + 1)` - exact whenever they matter
-    * (<= maxDist) and "too far" otherwise. For k << |query| this cuts the
-    * inner loop from O(|query|) to O(k) per char.
+    * The row minimum is a lower bound on the distance of ANY word
+    * extending the path (the branch-and-bound prune key, ecl:364-372),
+    * and it never decreases down a path: each cell is at least the
+    * minimum of the three cells it is computed from. So a walk may stop
+    * inside an edge at the first row whose minimum exceeds maxDist.
+    *
+    * `cells` counts the band cells actually computed.
     */
-  def extendRow(
-      query: String,
-      edge: String,
-      row: Array[Int],
-      consumed: Int,
-      maxDist: Int
-  ): (Array[Int], Int) = {
-    val qcp = codePoints(query)
-    val n = qcp.length
-    // never alias the caller's row: the DFS reuses it across sibling edges
-    val src = java.util.Arrays.copyOf(row, n + 1)
-    val (res, mn) = extendRowBuffers(qcp, edge, src, consumed, maxDist,
-      new Array[Int](n + 1), new Array[Int](n + 1))
-    // this row may be stored/serialized (join mode): saturate every
-    // out-of-band cell so no stale garbage escapes
-    val d = consumed + cpLen(edge)
-    val inf = maxDist + 1
-    var j = 0
-    while (j <= n) {
-      if (j < d - maxDist || j > d + maxDist) res(j) = inf
-      j += 1
-    }
-    (res, mn)
-  }
+  private[ptree] final class Dp(q: Array[Int], maxDist: Int) {
+    private val n = q.length
+    private val inf = maxDist + 1
+    var cells = 0L
 
-  /** Allocation-free core of [[extendRow]]: ping-pongs between the two
-    * caller-owned scratch buffers (the hot DFS pools one pair per
-    * recursion level). Only band cells are written per char; the cells
-    * one past each band end are pinned to the saturation value so a
-    * REUSED buffer never leaks stale values into the next char's reads
-    * (band ends shift by at most 1 per char, so those two guards cover
-    * every out-of-band read). Cells further outside the band are
-    * garbage: callers must treat any cell `j` with |consumed' - j| >
-    * maxDist as saturated rather than reading it (see the end-cap check
-    * in [[search]]).
-    */
-  def extendRowBuffers(
-      queryCp: Array[Int],
-      edge: String,
-      src: Array[Int],
-      consumed: Int,
-      maxDist: Int,
-      bufA: Array[Int],
-      bufB: Array[Int]
-  ): (Array[Int], Int) = {
-    val n = queryCp.length
-    val inf = maxDist + 1
-    var prev = src
-    var cur = bufA
-    var spare = bufB
-    if (edge.isEmpty) {
-      var j = 0
-      var mn = Int.MaxValue
-      while (j <= n) { if (prev(j) < mn) mn = prev(j); j += 1 }
-      return (prev, mn)
-    }
-    // edge code points are streamed via codePointAt stepping (ei = char
-    // index, k = code-point ordinal): no per-call allocation on the hot
-    // DFS path; the query side IS materialized (queryCp) because the DP
-    // inner loop random-accesses it by column index
-    var ei = 0
-    var k = 0
-    var rowMin = inf
-    while (ei < edge.length) {
-      val c = edge.codePointAt(ei)
-      val d = consumed + k + 1 // path code points consumed after this one
+    /** Row `d` (path code point `c` appended) from row `d - 1` in `prev`,
+      * written into `cur`; returns its minimum, or `inf` once the band has
+      * moved past the query's end (then every deeper cell is > maxDist).
+      * Only band cells are written; the cells one past each band end are
+      * pinned to `inf` so a reused buffer never leaks stale values into
+      * the next row's reads (band ends move by at most 1 per row). Cells
+      * further out are garbage: read `cur(j)` only for |d - j| <= maxDist.
+      */
+    def row(prev: Array[Int], cur: Array[Int], c: Int, d: Int): Int = {
       val lo = if (d - maxDist > 0) d - maxDist else 0
       val hi = if (d + maxDist < n) d + maxDist else n
-      // band has moved past the query's end: every cell from here on is
-      // > maxDist, for this char and all deeper ones - saturate and bail
-      if (lo > hi) return (prev, inf)
+      if (lo > hi) return inf
       if (lo > 0) cur(lo - 1) = inf // guard below the band
-      rowMin = inf
+      var rowMin = inf
       var j = lo
       while (j <= hi) {
         var v =
           if (j == 0) d
           else {
-            val cost = if (queryCp(j - 1) == c) 0 else 1
-            var m = prev(j - 1) + cost // substitute / match
+            var m = prev(j - 1) + (if (q(j - 1) == c) 0 else 1) // substitute / match
             val del = cur(j - 1) + 1 // delete from query
             val ins = prev(j) + 1 // insert into query
             if (del < m) m = del
@@ -156,47 +109,152 @@ object Kernels {
         j += 1
       }
       if (hi < n) cur(hi + 1) = inf // guard above the band
-      if (k == 0) { // src is read-only: rotate through the two scratch bufs
-        prev = cur; cur = spare; spare = null
-      } else {
-        val tmp = prev; prev = cur; cur = tmp
-      }
-      ei += Character.charCount(c)
-      k += 1
+      cells += hi - lo + 1
+      rowMin
     }
-    (prev, rowMin)
+
+    /** Extend row `src` (after `consumed` path code points) across the
+      * edge code points `es[from, until)`, alternating between the
+      * scratch rows `out` and `tmp` so the last row lands in `out`; `src`
+      * is only read. Returns the last row's minimum, or stops at the
+      * first row whose minimum exceeds `bound` and returns that. An empty
+      * edge copies `src` and returns its minimum over every cell.
+      */
+    def edge(src: Array[Int], es: Array[Int], from: Int, until: Int, consumed: Int,
+        bound: Int, out: Array[Int], tmp: Array[Int]): Int = {
+      val m = until - from
+      if (m == 0) {
+        System.arraycopy(src, 0, out, 0, n + 1)
+        var mn = Int.MaxValue
+        var j = 0
+        while (j <= n) { if (src(j) < mn) mn = src(j); j += 1 }
+        return mn
+      }
+      var prev = src
+      var mn = inf
+      var k = 0
+      while (k < m) {
+        val cur = if (((m - 1 - k) & 1) == 0) out else tmp
+        mn = row(prev, cur, es(from + k), consumed + k + 1)
+        if (mn > bound) return mn
+        prev = cur
+        k += 1
+      }
+      mn
+    }
+  }
+
+  /** One DP row across a whole multi-character trie edge: `row` after
+    * `consumed` path code points in, `(newRow, newRowMin)` out. The row
+    * may be stored and serialized (join mode's `pt_lev_extend`), so every
+    * out-of-band cell comes back saturated at `maxDist + 1`; the walk
+    * never stops inside the edge.
+    */
+  def extendRow(
+      query: String,
+      edge: String,
+      row: Array[Int],
+      consumed: Int,
+      maxDist: Int
+  ): (Array[Int], Int) = {
+    val qcp = codePoints(query)
+    val n = qcp.length
+    val es = codePoints(edge)
+    val res = new Array[Int](n + 1)
+    val inf = maxDist + 1
+    // never alias the caller's row: the caller may reuse it
+    val mn = new Dp(qcp, maxDist).edge(java.util.Arrays.copyOf(row, n + 1), es, 0, es.length,
+      consumed, inf, res, new Array[Int](n + 1))
+    val d = consumed + es.length
+    var j = 0
+    while (j <= n) {
+      if (j < d - maxDist || j > d + maxDist) res(j) = inf
+      j += 1
+    }
+    (res, mn)
   }
 
   /** Exact distance(query, path-so-far): the last DP cell. */
   @inline def finalDistance(row: Array[Int]): Int = row(row.length - 1)
 
-  /** Depth-first pruned traversal of a trie held as a children index,
-    * emitting every dictionary word within `maxDist` edits of `query`.
+  /** Pruned depth-first traversal of a compiled [[TrieIndex]], emitting
+    * every dictionary word within `maxDist` edits of `query` as (word,
+    * distance, `n_occurrences`), plus the work it did.
     *
-    * This is the broadcast-mode ("Roxie-style",
+    * This is the broadcast-mode and serving ("Roxie-style",
     * /root/reference/PrefixTree.ecl:459-588) query kernel: the whole LOOP
-    * of ecl:572-584 runs locally against an in-memory `Map[parentId ->
-    * children]`, so a batch of queries is a single `mapPartitions` with no
-    * per-iteration Spark jobs.
+    * of ecl:572-584 runs locally, so a batch of queries is a single
+    * `mapPartitions` with no per-iteration Spark jobs.
     *
     * Prunes (same two as the reference's join predicates, ecl:434,
     * 440-441, kept deliberately un-combined - see SURVEY.md B.q3):
-    *   1. branch-and-bound: expand a child only if the row-min after its
-    *      edge is <= maxDist;
+    *   1. branch-and-bound: descend an edge only while the DP row-min
+    *      stays <= maxDist, leaving the edge at the first row above it;
     *   2. subtree length window: `len(query) <= _max + maxDist` and
     *      `len(query) >= _min - maxDist`.
+    * `SearchStats.nodes` counts the children examined, `cells` the band
+    * cells computed: branch-and-bound should keep both far below brute
+    * force, which examines every word.
     */
-  def search(
+  def searchIndex(
+      index: TrieIndex,
       query: String,
-      maxDist: Int,
-      children: Long => Array[PTNode]
-  ): ArrayBuffer[(String, Int)] =
-    searchCounted(query, maxDist, children)._1.map { case (w, d, _) => (w, d) }
+      maxDist: Int
+  ): (ArrayBuffer[(String, Int, Long)], SearchStats) = {
+    val s = new IndexSearch(index.flat, codePoints(query), maxDist)
+    s.go(0, index.flat.nodes, initRow(s.n), 0, 0)
+    (s.out, SearchStats(s.visited, s.dp.cells))
+  }
 
-  /** [[search]] plus the number of trie nodes examined - the measurable
-    * form of the branch-and-bound claim: examined nodes should be far
-    * fewer than |dictionary| per query (brute force examines every word).
-    * Hits carry the end-cap's `n_occurrences` (corpus multiplicity).
+  /** Scratch rows for a walk: two per recursion level (rows live only
+    * along the current path, so a query allocates O(depth) rows).
+    */
+  private final class Rows(n: Int) {
+    private val pool = new ArrayBuffer[Array[Int]]()
+    def apply(i: Int): Array[Int] = {
+      while (pool.length <= i) pool += new Array[Int](n + 1)
+      pool(i)
+    }
+  }
+
+  private final class IndexSearch(ix: TrieIndex.Flat, q: Array[Int], maxDist: Int) {
+    val n: Int = q.length
+    val dp = new Dp(q, maxDist)
+    val out = new ArrayBuffer[(String, Int, Long)]()
+    var visited = 0L
+    private val rows = new Rows(n)
+
+    /** The children `[first, until)` of a node whose path is `consumed`
+      * code points long, with DP row `row`.
+      */
+    def go(first: Int, until: Int, row: Array[Int], consumed: Int, level: Int): Unit = {
+      var c = first
+      while (c < until) {
+        visited += 1
+        if (ix.isWord(c)) {
+          // row(n) is only valid inside the band; outside it the true
+          // distance exceeds maxDist by the banding argument
+          if (consumed - n <= maxDist && n - consumed <= maxDist) {
+            val d = row(n)
+            if (d <= maxDist) out += ((ix.words(c), d, ix.occ(c)))
+          }
+        } else if (n <= ix.maxLen(c) + maxDist && n >= ix.minLen(c) - maxDist) {
+          val from = ix.edgeOff(c)
+          val until = ix.edgeOff(c + 1)
+          val next = rows(2 * level)
+          val rowMin = dp.edge(row, ix.edgeCp, from, until, consumed, maxDist, next, rows(2 * level + 1))
+          if (rowMin <= maxDist) go(c + 1, ix.end(c), next, consumed + until - from, level + 1)
+        }
+        c = ix.end(c)
+      }
+    }
+  }
+
+  /** [[searchIndex]] over a trie given as a children lookup (`parent id
+    * -> children`, null when none): the same DP step, prunes, counters
+    * and answer order, for callers that hold only a lookup function.
+    * Each edge label is decoded to code points on the way down; serving
+    * and broadcast mode use the compiled index instead.
     */
   def searchCounted(
       query: String,
@@ -205,18 +263,11 @@ object Kernels {
   ): (ArrayBuffer[(String, Int, Long)], SearchStats) = {
     val qcp = codePoints(query)
     val n = qcp.length
-    var visited = 0L
-    var cells = 0L
-    val band = 2L * maxDist + 1
+    val dp = new Dp(qcp, maxDist)
     val out = new ArrayBuffer[(String, Int, Long)]()
-    // two pooled scratch rows per recursion level: zero allocation on the
-    // hot path (a query visits thousands of nodes; rows live only along
-    // the current DFS path)
-    val pool = new ArrayBuffer[Array[Int]]()
-    def buf(i: Int): Array[Int] = {
-      while (pool.length <= i) pool += new Array[Int](n + 1)
-      pool(i)
-    }
+    val rows = new Rows(n)
+    var visited = 0L
+    var edge = new Array[Int](16) // decoded label; free again before the descent
     def go(nodeId: Long, row: Array[Int], consumed: Int, level: Int): Unit = {
       val kids = children(nodeId)
       if (kids == null) return
@@ -225,77 +276,81 @@ object Kernels {
         val child = kids(i)
         visited += 1
         if (child.is_word) {
-          // row(n) is only valid inside the band; outside it the true
-          // distance exceeds maxDist by the banding argument
           if (consumed - n <= maxDist && n - consumed <= maxDist) {
             val d = row(n)
             if (d <= maxDist) out += ((child.node, d, child.n_occurrences))
           }
         } else if (n <= child._max + maxDist && n >= child._min - maxDist) {
-          val edgeLen = cpLen(child.node)
-          cells += edgeLen * band // banded DP work for this edge
-          val (newRow, rowMin) = extendRowBuffers(
-            qcp, child.node, row, consumed, maxDist,
-            buf(2 * level), buf(2 * level + 1))
-          if (rowMin <= maxDist)
-            go(child.id, newRow, consumed + edgeLen, level + 1)
+          if (edge.length < child.node.length) edge = new Array[Int](child.node.length)
+          val m = codePointsInto(child.node, edge, 0)
+          val next = rows(2 * level)
+          if (dp.edge(row, edge, 0, m, consumed, maxDist, next, rows(2 * level + 1)) <= maxDist)
+            go(child.id, next, consumed + m, level + 1)
         }
         i += 1
       }
     }
     go(0L, initRow(n), 0, 0)
-    (out, SearchStats(visited, cells))
+    (out, SearchStats(visited, dp.cells))
   }
 
-  /** All dictionary words extending `prefix`, via trie descent: follow
-    * the unique edge path matching the prefix (path compression: an edge
-    * may consume part of the prefix or extend past its end), then
-    * enumerate every end-cap in the matched subtree. O(|prefix| +
-    * |answer|) node visits - the classic trie autocomplete; a flat scan
-    * is O(|dictionary|). Because the trie is a per-partition forest with
-    * shared shallow paths duplicated, the descent naturally fans out
-    * over each partition's root children; identical words colocate, so
-    * no result is ever duplicated.
-    *
-    * Output: (word, n_occurrences) per matching dictionary word.
+  /** All dictionary words extending `prefix`, as (word, n_occurrences),
+    * by trie descent over a compiled [[TrieIndex]]: follow the edges
+    * matching the prefix (path compression: an edge may consume part of
+    * the prefix or extend past its end), then emit every end-cap of each
+    * matched subtree - a contiguous pre-order range. O(|prefix| +
+    * |answer|) node visits, where a flat scan is O(|dictionary|).
+    * Because the trie is a per-partition forest with shared shallow
+    * paths duplicated, the descent fans out over each partition's root
+    * children; identical words colocate, so no result is ever duplicated.
+    * Matching is by UTF-16 unit, exactly `word.startsWith(prefix)`.
     */
-  def prefixSearch(
-      prefix: String,
-      children: Long => Array[PTNode]
-  ): ArrayBuffer[(String, Long)] = {
+  def prefixIndex(index: TrieIndex, prefix: String): ArrayBuffer[(String, Long)] = {
+    val f = index.flat
     val out = new ArrayBuffer[(String, Long)]()
-    def collect(nodeId: Long): Unit = {
-      val kids = children(nodeId)
-      if (kids == null) return
-      var i = 0
-      while (i < kids.length) {
-        val k = kids(i)
-        if (k.is_word) out += ((k.node, k.n_occurrences)) else collect(k.id)
-        i += 1
+    def collect(from: Int, until: Int): Unit = {
+      var i = from
+      while (i < until) {
+        // an end-cap ends its path: anything under it is not a word here
+        if (f.isWord(i)) { out += ((f.words(i), f.occ(i))); i = f.end(i) }
+        else i += 1
       }
     }
-    def go(nodeId: Long, consumed: Int): Unit = {
-      val kids = children(nodeId)
-      if (kids == null) return
-      val rest = prefix.substring(consumed)
-      var i = 0
-      while (i < kids.length) {
-        val k = kids(i)
-        // end-caps during descent spell words of length == consumed <
-        // |prefix|, which can never extend the prefix - only internal
-        // edges participate until the prefix is fully consumed
-        if (!k.is_word) {
-          val edge = k.node
-          if (rest.length <= edge.length) {
-            if (edge.startsWith(rest)) collect(k.id) // subtree fully matches
-          } else if (rest.startsWith(edge)) {
-            go(k.id, consumed + edge.length)
-          }
+    // prefix chars consumed after edge c from `pos`: -1 on a mismatch,
+    // Int.MaxValue once the prefix ends inside (or at the end of) the edge
+    def matchEdge(c: Int, start: Int): Int = {
+      var pos = start
+      var k = f.edgeOff(c)
+      val until = f.edgeOff(c + 1)
+      while (k < until) {
+        val cp = f.edgeCp(k)
+        val units = Character.charCount(cp)
+        var u = 0
+        while (u < units) {
+          if (pos == prefix.length) return Int.MaxValue
+          val ch = if (units == 1) cp.toChar
+            else if (u == 0) Character.highSurrogate(cp) else Character.lowSurrogate(cp)
+          if (prefix.charAt(pos) != ch) return -1
+          pos += 1
+          u += 1
         }
-        i += 1
+        k += 1
+      }
+      if (pos == prefix.length) Int.MaxValue else pos
+    }
+    def go(first: Int, until: Int, pos: Int): Unit = {
+      var c = first
+      while (c < until) {
+        // end-caps during descent spell words shorter than the prefix
+        if (!f.isWord(c)) {
+          val r = matchEdge(c, pos)
+          if (r == Int.MaxValue) collect(c, f.end(c))
+          else if (r >= 0) go(c + 1, f.end(c), r)
+        }
+        c = f.end(c)
       }
     }
-    if (prefix.isEmpty) collect(0L) else go(0L, 0)
+    if (prefix.isEmpty) collect(0, f.nodes) else go(0, f.nodes, 0)
     out
   }
 

@@ -47,7 +47,9 @@ object PTNode {
 }
 
 /** Work counters from one pruned traversal: `nodes` = trie nodes
-  * examined, `cells` = banded DP cells computed (upper bound). The
+  * examined, `cells` = banded DP cells computed (exact: a walk that
+  * leaves an edge early, or whose band is clipped at the query's ends,
+  * counts only the cells it filled). The
   * apples-to-apples comparison against brute force is `cells` vs
   * sum over (query, word) pairs of (|q|+1)*(|w|+1) full-matrix cells.
   */

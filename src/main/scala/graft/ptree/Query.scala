@@ -14,9 +14,9 @@ import graft.ops.SizeGuard
   * mirroring the reference's Thor/Roxie split:
   *
   *   - '''broadcast mode''' (default when the trie fits): the trie is
-  *     collected once into a `Map[parentId -> children]`, broadcast, and a
+  *     collected once into a flat [[TrieIndex]], broadcast, and a
   *     SINGLE `mapPartitions` over the query dataset runs the whole pruned
-  *     traversal per query (Kernels.search). Zero per-iteration Spark jobs,
+  *     traversal per query (Kernels.searchIndex). Zero per-iteration Spark jobs,
   *     zero shuffles - the honest analog of Roxie's indexed point lookups
   *     (ecl:655), and the fast path at any query-set size. A distinct-word
   *     dictionary trie is tiny relative to a 100 TB corpus (dedup happens at
@@ -63,19 +63,33 @@ object Query {
   // trie sizing: computed ONCE per trie, never per query call
   // -------------------------------------------------------------------
 
-  /** Session-lifetime stats cache, keyed on the trie's analyzed-plan
-    * semantic hash: a trie READ back from a persisted index
-    * ([[PrefixTree.read]] / [[PrefixTree.readTable]]) registers its
-    * sidecar/table-property stats here, and a trie built in-session
-    * computes them at most once - so [[queryJoin]]'s strategy selection
-    * costs ZERO extra jobs on the paths that used to pay a per-call
-    * sizing aggregate (the round-12 pt_* bench regressions). Entries
-    * are 4 numbers each; staleness (same plan, changed underlying
+  /** Stats cache, keyed on the trie's analyzed-plan semantic hash: a
+    * trie READ back from a persisted index ([[PrefixTree.read]] /
+    * [[PrefixTree.readTable]]) registers its sidecar/table-property stats
+    * here, and a trie built in-session computes them at most once - so
+    * [[queryJoin]]'s strategy selection costs ZERO extra jobs on the
+    * paths that used to pay a per-call sizing aggregate (the round-12
+    * pt_* bench regressions). Staleness (same plan, changed underlying
     * files) only mis-sizes a strategy choice - [[queryJoin]]'s phase-2
     * loop makes any chain-height guess correct.
+    *
+    * Least-recently-used, [[StatsCacheEntries]] entries: a trie over a
+    * `localCheckpoint` (every `fuzzyDedup` call) is a new plan each
+    * time, so an unbounded cache grew by one entry per call. A miss
+    * costs one aggregate.
     */
-  private val statsCache =
-    new java.util.concurrent.ConcurrentHashMap[Int, TrieStats]()
+  private[ptree] final val StatsCacheEntries = 32
+
+  private val statsCache = new java.util.LinkedHashMap[Int, TrieStats](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[Int, TrieStats]): Boolean =
+      size > StatsCacheEntries
+  }
+
+  private def cached(k: Int): TrieStats = statsCache.synchronized(statsCache.get(k))
+
+  private def cache(k: Int, st: TrieStats): Unit = statsCache.synchronized(statsCache.put(k, st))
+
+  private[ptree] def statsCacheSize: Int = statsCache.synchronized(statsCache.size)
 
   private def cacheKey(trie: Dataset[PTNode]): Int =
     trie.queryExecution.analyzed.semanticHash()
@@ -84,7 +98,7 @@ object Query {
     * a trie plan. Called by [[PrefixTree.read]]/[[PrefixTree.readTable]].
     */
   private[ptree] def registerStats(trie: Dataset[PTNode], st: TrieStats): Unit =
-    statsCache.put(cacheKey(trie), st)
+    cache(cacheKey(trie), st)
 
   /** The trie's [[TrieStats]]: cache hit, or ONE single-pass aggregate
     * (count, total edge chars, longest word, shortest root edge)
@@ -93,11 +107,11 @@ object Query {
     */
   def trieStats(trie: Dataset[PTNode]): TrieStats = {
     val k = cacheKey(trie)
-    val hit = statsCache.get(k)
+    val hit = cached(k)
     if (hit != null) hit
     else {
       val st = computeTrieStats(trie)
-      statsCache.put(k, st)
+      cache(k, st)
       st
     }
   }
@@ -118,21 +132,21 @@ object Query {
     TrieStats(r.getLong(0), r.getLong(1), maxWord, minTop)
   }
 
-  /** Estimated JVM heap for the collected children index
-    * (`Map[parent_id -> Array[PTNode]]`) - the quantity the broadcast
-    * decision must bound. A row COUNT is the wrong guard: 20M nodes with
-    * 8-char edges is ~3 GB, with 200-char document-shard payloads it is
-    * ~10 GB, and both the driver (one copy at collect + one serialized in
-    * the broadcast) and EVERY executor (a full deserialized copy each on
-    * a 1000-node cluster) pay it. Model: per node, the PTNode object
-    * (header 16 + 3 longs + 3 ints + bool + padding + String ref ≈ 72 B)
-    * plus its slot in a children array and amortized map-entry overhead
-    * (≈ 56 B) → 128 B fixed, plus the String payload at 2 B/char (UTF-16
-    * worst case; compact strings halve it for ASCII). Served from
-    * [[trieStats]] - a persisted index answers with no job at all.
-    * The [[SizeGuard.TrieIndex]] limit (512 MB) leaves a multi-GB driver
-    * comfortable: ~2 copies driver-side during collect+broadcast plus
-    * serialization scratch.
+  /** Estimated JVM heap for collecting the children index - the
+    * quantity the broadcast decision must bound. The peak is the
+    * transient `Array[PTNode]` of [[childrenIndex]]'s collect, before it
+    * compiles to the flat [[TrieIndex]] (~41 B/node + 4 B per edge code
+    * point) that is broadcast and searched. A row COUNT is the wrong
+    * guard: 20M nodes with 8-char edges is ~3 GB, with 200-char
+    * document-shard payloads it is ~10 GB. Model: per collected node, the
+    * PTNode object (header 16 + 3 longs + 3 ints + bool + padding +
+    * String ref ≈ 72 B) plus its array slot, the String header and
+    * collect scratch (≈ 56 B) → 128 B fixed, plus the String payload at
+    * 2 B/char (UTF-16 worst case; compact strings halve it for ASCII).
+    * Served from [[trieStats]] - a persisted index answers with no job at
+    * all. The [[SizeGuard.TrieIndex]] limit (512 MB) leaves a multi-GB
+    * driver comfortable: the collect, the compiled index and its
+    * serialized broadcast blocks.
     */
   private[ptree] def estimatedIndexBytes(trie: Dataset[PTNode]): Long = {
     val st = trieStats(trie)
@@ -171,34 +185,43 @@ object Query {
 
   /** Single-string query (reference's Roxie macro, ecl:459-588): pure
     * driver-side traversal over a prebuilt children index - no Spark jobs
-    * at all once the index is built (see [[childrenIndex]]).
+    * at all once the index is built (see [[childrenIndex]]). The index is
+    * searched compiled: a [[TrieIndex]] as is, any other children Map
+    * compiled on every call.
     */
   def queryOne(
       query: String,
       children: Map[Long, Array[PTNode]],
       maxDist: Int
   ): Seq[(String, Int)] =
-    Kernels.search(query, maxDist, children.getOrElse(_, null)).toSeq
+    Kernels.searchIndex(TrieIndex.of(children), query, maxDist)._1
+      .map { case (w, d, _) => (w, d) }.toSeq
 
-  /** Collect a trie into the serving-side index: parent_id -> children. */
-  def childrenIndex(trie: Dataset[PTNode]): Map[Long, Array[PTNode]] =
-    trie.collect().groupBy(_.parent_id)
+  /** Collect a trie into the serving-side index, compiled: a
+    * `Map[parent_id -> children]` held as flat arrays ([[TrieIndex]]).
+    */
+  def childrenIndex(trie: Dataset[PTNode]): TrieIndex = TrieIndex(trie.collect())
 
   /** Serving-side autocomplete: all dictionary words extending `prefix`,
     * with their corpus multiplicity, by O(|prefix| + |answer|) trie
-    * descent over the collected children index (Kernels.prefixSearch) -
-    * no Spark jobs. The batch-shaped equivalent is an honest codegen'd
-    * scan: `trie.filter(_.is_word).filter(startswith(col("node"),
-    * lit(prefix)))` - at batch granularity Spark's scan beats pointer
-    * chasing, so the trie descent is reserved for the serving path where
-    * per-call latency matters.
+    * descent over the compiled children index (Kernels.prefixIndex;
+    * compiled per call unless it is a [[TrieIndex]]) - no Spark jobs.
+    * The batch-shaped equivalent is an honest codegen'd scan:
+    * `trie.filter(_.is_word).filter(startswith(col("node"), lit(prefix)))`
+    * - at batch granularity Spark's scan beats pointer chasing, so the
+    * trie descent is reserved for the serving path where per-call latency
+    * matters.
     */
   def prefixOne(
       prefix: String,
       children: Map[Long, Array[PTNode]]
   ): Seq[(String, Long)] =
-    Kernels.prefixSearch(prefix, children.getOrElse(_, null)).toSeq
+    Kernels.prefixIndex(TrieIndex.of(children), prefix).toSeq
 
+  /** Broadcast mode: the trie's compiled [[TrieIndex]] arrays broadcast once and
+    * searched per query in ONE `mapPartitions`; the optional accumulators
+    * sum the kernel's [[SearchStats]] (nodes examined, DP cells).
+    */
   def queryBroadcast(
       queries: DataFrame,
       col: String,
@@ -209,8 +232,7 @@ object Query {
   ): DataFrame = {
     val spark = queries.sparkSession
     import spark.implicits._
-    val index = childrenIndex(trie)
-    val bc = spark.sparkContext.broadcast(index)
+    val bc = spark.sparkContext.broadcast(childrenIndex(trie).flat)
     queries
       .select(column(col).cast(StringType).as("query_string"))
       // spread the query set over every core: the input's file partitioning
@@ -218,10 +240,9 @@ object Query {
       .repartition(spark.sparkContext.defaultParallelism)
       .as[String]
       .mapPartitions { it =>
-        val idx = bc.value
-        val lookup: Long => Array[PTNode] = idx.getOrElse(_, null)
+        val idx = new TrieIndex(bc.value)
         it.flatMap { q =>
-          val (hits, stats) = Kernels.searchCounted(q, maxDist, lookup)
+          val (hits, stats) = Kernels.searchIndex(idx, q, maxDist)
           visitCounter.foreach(_.add(stats.nodes))
           cellCounter.foreach(_.add(stats.cells))
           hits.map { case (w, d, c) => (q, w, d, c) }

@@ -1202,7 +1202,8 @@ object StreamOps {
 
   /** Streaming fuzzy-match: a stream of query strings against a static
     * broadcast trie (stream-static pattern). `trieIndex` is the collected
-    * children map from `graft.ptree.Query.childrenIndex`.
+    * children map from `graft.ptree.Query.childrenIndex` (any other
+    * children Map is compiled to a `TrieIndex` once, here).
     */
   def streamFuzzyMatch(
       queryStream: DataFrame,
@@ -1212,15 +1213,14 @@ object StreamOps {
   ): DataFrame = {
     val spark = queryStream.sparkSession
     import spark.implicits._
-    val bc = spark.sparkContext.broadcast(trieIndex)
+    val bc = spark.sparkContext.broadcast(graft.ptree.TrieIndex.of(trieIndex).flat)
     queryStream
       .select(F.col(queryCol).cast(StringType).as("query_string"))
       .as[String]
       .mapPartitions { it =>
-        val idx = bc.value
-        val lookup: Long => Array[graft.ptree.PTNode] = idx.getOrElse(_, null)
+        val idx = new graft.ptree.TrieIndex(bc.value)
         it.flatMap { q =>
-          graft.ptree.Kernels.search(q, maxDist, lookup).map { case (w, d) => (q, w, d) }
+          graft.ptree.Kernels.searchIndex(idx, q, maxDist)._1.map { case (w, d, _) => (q, w, d) }
         }
       }
       .toDF("query_string", "node", "final_distance")

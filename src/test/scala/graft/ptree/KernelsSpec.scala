@@ -1,24 +1,29 @@
 package graft.ptree
 
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, ObjectInputStream, ObjectOutputStream}
+
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalacheck.rng.Seed
 
 /** Pure-kernel tests: no Spark. Oracle = textbook full-matrix Levenshtein. */
 object BruteLev {
+  /** Full-matrix Levenshtein over code points (the kernels' unit). */
   def lev(a: String, b: String): Int = {
-    val prev = new Array[Int](b.length + 1)
-    val cur = new Array[Int](b.length + 1)
-    for (j <- 0 to b.length) prev(j) = j
-    for (i <- 1 to a.length) {
+    val x = a.codePoints().toArray
+    val y = b.codePoints().toArray
+    val prev = new Array[Int](y.length + 1)
+    val cur = new Array[Int](y.length + 1)
+    for (j <- 0 to y.length) prev(j) = j
+    for (i <- 1 to x.length) {
       cur(0) = i
-      for (j <- 1 to b.length) {
-        val cost = if (a.charAt(i - 1) == b.charAt(j - 1)) 0 else 1
+      for (j <- 1 to y.length) {
+        val cost = if (x(i - 1) == y(j - 1)) 0 else 1
         cur(j) = math.min(math.min(cur(j - 1) + 1, prev(j) + 1), prev(j - 1) + cost)
       }
       Array.copy(cur, 0, prev, 0, cur.length)
     }
-    prev(b.length)
+    prev(y.length)
   }
 
   def bruteSearch(dict: Set[String], q: String, k: Int): Set[(String, Int)] =
@@ -30,10 +35,8 @@ object BruteLev {
       .toArray
       .groupBy(_.parent_id)
 
-  def trieSearch(dict: Set[String], q: String, k: Int): Set[(String, Int)] = {
-    val idx = trieOf(dict)
-    Kernels.search(q, k, idx.getOrElse(_, null)).toSet
-  }
+  def trieSearch(dict: Set[String], q: String, k: Int): Set[(String, Int)] =
+    Kernels.searchIndex(TrieIndex.of(trieOf(dict)), q, k)._1.map { case (w, d, _) => (w, d) }.toSet
 }
 
 class KernelsSpec extends AnyFunSuite {
@@ -148,5 +151,95 @@ class KernelsSpec extends AnyFunSuite {
       prop
     )
     assert(res.passed, res.status.toString)
+  }
+
+  test("property: TrieIndex walk == lambda walk == brute force, with prefixes, Map view and serialization") {
+    // shared stems over ASCII, a BMP accent and two astral code points,
+    // so edges split, words nest and UTF-16 length != code points
+    val unit = Gen.oneOf("a", "b", "c", "\u00e9", "\ud83d\ude00", "\ud835\udc9c")
+    val stem = Gen.choose(0, 4).flatMap(n => Gen.listOfN(n, unit).map(_.mkString))
+    val dictGen = for {
+      stems <- Gen.listOfN(3, stem)
+      tails <- Gen.listOfN(14, Gen.zip(Gen.oneOf(stems), Gen.choose(0, 5).flatMap(n =>
+        Gen.listOfN(n, unit).map(_.mkString)), Gen.choose(1L, 3L)))
+    } yield tails.map { case (s, t, c) => (s + t, c) }.filter(_._1.nonEmpty).toMap
+    val caseGen = for {
+      dict <- dictGen
+      queries <- Gen.listOfN(4, Gen.oneOf(Gen.choose(0, 7).flatMap(n =>
+        Gen.listOfN(n, unit).map(_.mkString)), Gen.oneOf(dict.keys.toSeq :+ "")))
+      cuts <- Gen.listOfN(4, Gen.choose(0, 12))
+      k <- Gen.choose(0, 3)
+      seed <- Gen.choose(0L, 1L << 40)
+    } yield (dict, queries, cuts, k, seed)
+    def roundTrip(t: TrieIndex): TrieIndex = {
+      val bytes = new ByteArrayOutputStream()
+      val out = new ObjectOutputStream(bytes)
+      out.writeObject(t)
+      out.close()
+      new ObjectInputStream(new ByteArrayInputStream(bytes.toByteArray)).readObject().asInstanceOf[TrieIndex]
+    }
+    // the broadcast payload through both Spark serializers (Kryo's Scala
+    // registrations rebuild any Map subclass as a plain HashMap)
+    val conf = new org.apache.spark.SparkConf()
+    val serializers = Seq(new org.apache.spark.serializer.JavaSerializer(conf).newInstance(),
+      new org.apache.spark.serializer.KryoSerializer(conf).newInstance())
+    def shipped(t: TrieIndex): Seq[TrieIndex] =
+      serializers.map(s => new TrieIndex(s.deserialize[TrieIndex.Flat](s.serialize(t.flat))))
+    val prop = Prop.forAll(caseGen) { case (dict, queries, cuts, k, seed) =>
+      // two partitions' forests (root edges may share a first code point)
+      // in a shuffled collect order: compile must not depend on either
+      val (p0, p1) = dict.toSeq.sortBy(_._1).partition(_._1.hashCode % 2 == 0)
+      val rows = new scala.util.Random(seed).shuffle(
+        Kernels.buildTrieCounted(0, p0.iterator).toSeq ++ Kernels.buildTrieCounted(1, p1.iterator).toSeq).toArray
+      val groups = rows.groupBy(_.parent_id)
+      val index = TrieIndex(rows)
+      val back = roundTrip(index)
+      val remote = shipped(index)
+      def view(m: Map[Long, Array[PTNode]]) = m.map { case (p, kids) => p -> kids.toSeq }
+      val mapOk = Seq(index, back).forall { ix =>
+        view(ix) == view(groups) && ix.size == groups.size && !ix.contains(-1L) &&
+          groups.keys.forall(p => ix.get(p).map(_.toSeq) == groups.get(p).map(_.toSeq))
+      } && TrieIndex.of(index).eq(index)
+      val searchOk = queries.forall { q =>
+        val flat = Kernels.searchIndex(index, q, k)
+        val lambda = Kernels.searchCounted(q, k, groups.getOrElse(_, null))
+        val brute = dict.toSeq.map { case (w, c) => (w, lev(q, w), c) }.filter(_._2 <= k).sortBy(_._1)
+        flat._1 == lambda._1 && flat._2 == lambda._2 && flat._1.sortBy(_._1) == brute &&
+          (back +: remote).forall(ix => Kernels.searchIndex(ix, q, k) == flat) &&
+          Query.queryOne(q, groups, k) == Query.queryOne(q, index, k)
+      }
+      val prefixes = "" +: (queries ++ dict.keys.toSeq.zip(cuts).map { case (w, c) =>
+        w.substring(0, math.min(c, w.length)) }) // may cut a surrogate pair in half
+      val prefixOk = prefixes.forall { p =>
+        val want = dict.toSeq.filter(_._1.startsWith(p)).sortBy(_._1)
+        Query.prefixOne(p, index).sortBy(_._1) == want &&
+          (back +: remote).forall(ix => Query.prefixOne(p, ix) == Query.prefixOne(p, index)) &&
+          Query.prefixOne(p, groups) == Query.prefixOne(p, index)
+      }
+      mapOk && searchOk && prefixOk
+    }
+    val res = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(300).withInitialSeed(Seed(7L)), prop)
+    assert(res.passed, res.status.toString)
+  }
+
+  test("TrieIndex refuses rows the root cannot reach") {
+    val rows = Kernels.buildTrie(0, Seq("cat", "dog").iterator).toArray
+    val orphan = rows.filterNot(r => !r.is_word && r.node == "cat")
+    assert(intercept[IllegalArgumentException](TrieIndex(orphan)).getMessage.contains("not in the index"))
+    val cycle = Array(PTNode(5L, 6L, 1, 1, is_word = false, 0, "a"), PTNode(6L, 5L, 1, 1, is_word = false, 0, "b"))
+    assert(intercept[IllegalArgumentException](TrieIndex(cycle)).getMessage.contains("not reachable"))
+  }
+
+  test("SearchStats.cells counts only the band cells computed") {
+    // query "ab", maxDist 1: row d fills the band [d-1, d+1] clipped to
+    // the query's [0, 2] - 3 cells for d=1, 2 for d=2 (a flat charge of
+    // edge length x 3 would say 6)
+    val idx = TrieIndex(Kernels.buildTrie(0, Iterator("ab")).toArray)
+    assert(Kernels.searchIndex(idx, "ab", 1)._2 == SearchStats(2, 5))
+    // edge "zzz": row 2's minimum is 2 > 1, so the walk leaves the edge
+    // after 2 of its 3 rows (9 cells charged up front before)
+    val far = TrieIndex(Kernels.buildTrie(0, Iterator("zzz")).toArray)
+    assert(Kernels.searchIndex(far, "ab", 1)._2 == SearchStats(1, 5))
   }
 }

@@ -131,6 +131,22 @@ class PrefixTreeSpec extends SparkSpec {
     assert(st == Query.computeTrieStats(PrefixTree.read(spark, dir)))
   }
 
+  test("trieStats cache is a bounded LRU: more tries than the bound, and a read index still hits") {
+    // every fuzzyDedup call sizes a trie over a fresh localCheckpoint, a
+    // new plan each time: the cache must stop at its bound
+    val n = Query.StatsCacheEntries + 8
+    for (i <- 1 to n)
+      Query.trieStats(PrefixTree.create(Seq(s"w$i", s"v$i").toDF("w"), "w", numPartitions = 1))
+    assert(Query.statsCacheSize == Query.StatsCacheEntries)
+    val dir = java.nio.file.Files.createTempDirectory("pt_lru").toString
+    PrefixTree.writeIndexed(trie, dir)
+    val back = PrefixTree.read(spark, dir)
+    val (st, jobs) = countJobs(Query.trieStats(back))
+    assert(jobs == 0, s"trieStats after read ran $jobs jobs: the registered sidecar was evicted")
+    assert(st == Query.computeTrieStats(back))
+    assert(Query.statsCacheSize == Query.StatsCacheEntries)
+  }
+
   test("queryJoin (loop mode) matches broadcast mode") {
     val queries = Seq("dog", "doer", "kaminski", "ab").toDF("q")
     val a = Query.queryBroadcast(queries, "q", trie, 2)
