@@ -1162,8 +1162,8 @@ object SparkEntry {
       .filter(col("c_custkey") % 7 === 0)
       .select(expr("concat(substr(c_name, 1, length(c_name)-1), 'X')").as("query_string"))
     // queryBatch, not queryBroadcast: it sizes the trie first and falls
-    // back to the join-mode loop when a driver collect would not fit -
-    // every entry path keeps the 100x off-ramp
+    // back to the partition-local search when a driver collect would not
+    // fit - every entry path keeps the 100x off-ramp
     Query
       .queryBatch(queries, "query_string", trie, maxDist = 2)
       .select(
@@ -1194,19 +1194,20 @@ object SparkEntry {
           col("final_distance").cast(IntegerType).as("final_distance"))
     },
     "pt_fuzzy_joinmode" -> { (s, dir) =>
-      // the LOOP path (reference ecl:430-442) against the oracle: the
-      // literal iterate-to-fixpoint driver loop of inner joins, for
-      // tries too large to broadcast. Same math as broadcast mode -
-      // this query pins that equivalence to DuckDB, not just to specs.
+      // the partition-local path against the oracle: the search for
+      // tries too large to broadcast (each compute_node group compiled
+      // in its task, every query searched in every group). Same kernel
+      // as broadcast mode - this query pins that equivalence to DuckDB,
+      // not just to specs.
       val cust = tbl(s, dir, "customer")
       val trie = PrefixTree.create(cust, "c_name", prefixLen = 12)
       val queries = cust
         .filter(col("c_custkey") % 35 === 0)
         .select(expr("concat(substr(c_name, 1, length(c_name)-1), 'X')").as("query_string"))
-      // withPath threads the reference's cumulative_nodes debug column
-      // (ecl:405-406) through the loop; at an end-cap the traversed path
-      // spells the matched word, which the oracle checks independently
-      // (path = node) rather than trusting the spec alone
+      // withPath adds the reference's cumulative_nodes debug column
+      // (ecl:405-406); at an end-cap the traversed path spells the
+      // matched word, which the oracle checks independently (path =
+      // node) rather than trusting the spec alone
       Query.queryJoin(queries, "query_string", trie, maxDist = 2, withPath = true)
         .select(col("query_string"), col("node"),
           col("final_distance").cast(IntegerType).as("final_distance"),
@@ -1228,7 +1229,7 @@ object SparkEntry {
     },
     "pt_index_roundtrip" -> { (s, dir) =>
       // the reference's full lifecycle (ecl:611-640): build trie, OUTPUT
-      // to storage, BUILDINDEX on parent_id, query through the index.
+      // to storage, BUILDINDEX on compute_node, query through the index.
       // Same query set and oracle as pt_fuzzy_words - what's exercised
       // here is that persistence+read-back preserves the trie exactly.
       val dict = PrefixTree.create(docWords(s, dir), "word", prefixLen = 2)
@@ -1244,11 +1245,11 @@ object SparkEntry {
     },
     "pt_bucketed_roundtrip" -> { (s, dir) =>
       // the BUILDINDEX analog that KEEPS its organization (ecl:612-613):
-      // persist the trie as a catalog table bucketed on parent_id, read
-      // it back, query through it. Unlike pt_index_roundtrip (plain
+      // persist the trie as a catalog table bucketed on compute_node,
+      // read it back, query through it. Unlike pt_index_roundtrip (plain
       // parquet - partitioning lost on read), the bucketing metadata
-      // survives, so join-mode frontier joins read the buckets directly;
-      // the no-trie-side-shuffle plan property is pinned by
+      // survives, so the partition-local search reads the buckets
+      // directly; the no-trie-side-shuffle plan property is pinned by
       // PrefixTreeSpec. Oracle = same brute force as pt_index_roundtrip:
       // the table round-trip must be lossless.
       val dict = PrefixTree.create(docWords(s, dir), "word", prefixLen = 2)

@@ -494,33 +494,6 @@ object ExprKernels {
     0.6 * jaroUb + 0.4
   }
 
-  /** Banded Levenshtein DP step for the join-mode trie traversal:
-    * state = DP row ++ [rowMin]; returns the state after consuming
-    * `edge`. See graft.ptree.Kernels.extendRow. An EMPTY state array
-    * initializes the DP row to 0..n (the reference's first-call
-    * semantics, /root/reference/PrefixTree.ecl:343-347) - the engine's
-    * own traversal always seeds the row explicitly, but the function is
-    * SQL-registered and a bare first call must not crash.
-    */
-  def levExtend(
-      query: UTF8String,
-      edge: UTF8String,
-      state: ArrayData,
-      depth: Int,
-      maxDist: Int
-  ): ArrayData = {
-    val st = state.toIntArray()
-    val row =
-      if (st.length == 0) {
-        val q = query.toString
-        Array.tabulate(q.codePointCount(0, q.length) + 1)(identity)
-      } else java.util.Arrays.copyOf(st, st.length - 1)
-    val (nr, mn) = graft.ptree.Kernels.extendRow(query.toString, edge.toString, row, depth, maxDist)
-    val out = java.util.Arrays.copyOf(nr, nr.length + 1)
-    out(nr.length) = mn
-    new GenericArrayData(out)
-  }
-
   // ---- merge-table BPE token counting -------------------------------
 
   /** The checked-in merge table (public GPT-2 merges.txt format: one
@@ -1472,41 +1445,6 @@ case class JwUpper(left: Expression, right: Expression) extends BinaryExpression
   override def prettyName: String = "jw_upper"
 }
 
-/** `pt_lev_extend(query, edge, state, depth)` - banded incremental
-  * Levenshtein DP over a trie edge (join-mode traversal step).
-  */
-case class PtLevExtend(
-    first: Expression,
-    second: Expression,
-    third: Expression,
-    fourth: Expression,
-    maxDist: Int
-) extends QuaternaryExpression {
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val ok = first.dataType.isInstanceOf[StringType] &&
-      second.dataType.isInstanceOf[StringType] &&
-      third.dataType.isInstanceOf[ArrayType] &&
-      fourth.dataType == IntegerType
-    if (ok) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName(query string, edge string, state array<int>, depth int)")
-  }
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean =
-    first.nullable || second.nullable || third.nullable || fourth.nullable
-  override def nullSafeEval(q: Any, e: Any, s: Any, d: Any): Any =
-    ExprKernels.levExtend(
-      q.asInstanceOf[UTF8String], e.asInstanceOf[UTF8String],
-      s.asInstanceOf[ArrayData], d.asInstanceOf[Int], maxDist)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (q, e, s, d) =>
-      s"graft.functions.ExprKernels.levExtend($q, $e, $s, $d, $maxDist)")
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression, fo: Expression): PtLevExtend =
-    copy(first = f, second = s, third = t, fourth = fo)
-  override def prettyName: String = "pt_lev_extend"
-}
-
 /** `bpe_count(loweredText)` - total merge-table BPE token count (int).
   * The merge table is the checked-in public-format merges file (see
   * ExprKernels.bpeRanks); the count a training pipeline budgets by.
@@ -1882,11 +1820,6 @@ object GraftFunctions {
       halfs: Array[Array[Double]]): Column =
     Bridge.column(PqEncode(Bridge.expression(vn), codebooks, halfs))
 
-  def pt_lev_extend(q: Column, e: Column, s: Column, d: Column, maxDist: Int): Column =
-    Bridge.column(PtLevExtend(
-      Bridge.expression(q), Bridge.expression(e),
-      Bridge.expression(s), Bridge.expression(d), maxDist))
-
 
   /** Runtime registration: makes the functions callable from SQL text in
     * an existing session (`SELECT simhash64(text) FROM docs`).
@@ -1922,11 +1855,6 @@ object GraftFunctions {
           Literal(s: Int, IntegerType)) => RhBucket(v, d, b, s.toLong)
       case es => throw new IllegalArgumentException(
         s"rh_bucket(vec, dimLiteral, bitsLiteral, seedLiteral); got ${es.length} args")
-    }, "built-in")
-    reg.createOrReplaceTempFunction("pt_lev_extend", {
-      case Seq(q, e, s, d, Literal(k: Int, IntegerType)) => PtLevExtend(q, e, s, d, k)
-      case es => throw new IllegalArgumentException(
-        s"pt_lev_extend(query, edge, state, depth, maxDistLiteral); got ${es.length} args")
     }, "built-in")
   }
 }

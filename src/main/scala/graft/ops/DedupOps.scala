@@ -138,8 +138,8 @@ object DedupOps {
       .localCheckpoint() // consumed three times: trie build, query, join-back
     val trie = graft.ptree.PrefixTree.create(vals, "value", prefixLen)
     // queryBatch, not queryBroadcast: it sizes the trie and falls back to
-    // the join-mode loop when a collect would not fit - fuzzyDedup's
-    // whole point is the corpus-scale path
+    // the partition-local search when a collect would not fit -
+    // fuzzyDedup's whole point is the corpus-scale path
     val pairs = graft.ptree.Query.queryBatch(vals, "value", trie, maxDist)
       .filter(F.col("query_string") < F.col("node")) // each undirected edge once
       .select(F.col("query_string").as("a"), F.col("node").as("b"))

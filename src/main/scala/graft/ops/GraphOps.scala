@@ -19,8 +19,7 @@ object GraphOps {
     *
     * Scale notes: converges in O(component diameter) rounds, each round
     * one equi-join + one aggregation + one vertex-sized convergence
-    * probe; `localCheckpoint` truncates lineage per round (the same
-    * driver-loop discipline as the trie traversal's join mode). Near-dup graphs are overwhelmingly many tiny components,
+    * probe; `localCheckpoint` truncates lineage per round. Near-dup graphs are overwhelmingly many tiny components,
     * where diameter is small and this loop beats the O(log n)-round
     * large-star/small-star algorithm on constant factors; a giant-
     * component graph would want the latter behind the same edge-list API.

@@ -24,15 +24,13 @@ private[graft] object SizeGuard {
   /** A per-round node-frame broadcast in the distributed graph loops. */
   val NodeBroadcast = Site("graph.node_broadcast", 1L << 22, 128L << 20)
   /** `Query.queryBatch`: the children index collected and broadcast
-    * (`Query.estimatedIndexBytes`), else join mode. The estimate's
-    * 128 B/node is the transient `PTNode` collect, which peaks above the
-    * flat `graft.ptree.TrieIndex` it compiles to and is broadcast as.
+    * (`Query.estimatedIndexBytes`), else the partition-local search. The
+    * estimate's 128 B/node is the transient `PTNode` collect, which peaks
+    * above the flat `graft.ptree.TrieIndex` it compiles to and is
+    * broadcast as. The partition-local search bounds each of its groups by
+    * the same byte limit.
     */
   val TrieIndex = Site("query.children_index", Long.MaxValue, 512L << 20)
-  /** `Query.queryJoin`: the chain joins the trie as a broadcast hash join,
-    * else as the parent_id-partitioned join.
-    */
-  val TrieChain = Site("query.chain_broadcast", Long.MaxValue, 64L << 20)
 
   private val forced = new DynamicVariable[Map[Site, Boolean]](Map.empty)
 

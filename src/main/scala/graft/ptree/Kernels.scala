@@ -144,47 +144,14 @@ object Kernels {
     }
   }
 
-  /** One DP row across a whole multi-character trie edge: `row` after
-    * `consumed` path code points in, `(newRow, newRowMin)` out. The row
-    * may be stored and serialized (join mode's `pt_lev_extend`), so every
-    * out-of-band cell comes back saturated at `maxDist + 1`; the walk
-    * never stops inside the edge.
-    */
-  def extendRow(
-      query: String,
-      edge: String,
-      row: Array[Int],
-      consumed: Int,
-      maxDist: Int
-  ): (Array[Int], Int) = {
-    val qcp = codePoints(query)
-    val n = qcp.length
-    val es = codePoints(edge)
-    val res = new Array[Int](n + 1)
-    val inf = maxDist + 1
-    // never alias the caller's row: the caller may reuse it
-    val mn = new Dp(qcp, maxDist).edge(java.util.Arrays.copyOf(row, n + 1), es, 0, es.length,
-      consumed, inf, res, new Array[Int](n + 1))
-    val d = consumed + es.length
-    var j = 0
-    while (j <= n) {
-      if (j < d - maxDist || j > d + maxDist) res(j) = inf
-      j += 1
-    }
-    (res, mn)
-  }
-
-  /** Exact distance(query, path-so-far): the last DP cell. */
-  @inline def finalDistance(row: Array[Int]): Int = row(row.length - 1)
-
   /** Pruned depth-first traversal of a compiled [[TrieIndex]], emitting
     * every dictionary word within `maxDist` edits of `query` as (word,
     * distance, `n_occurrences`), plus the work it did.
     *
-    * This is the broadcast-mode and serving ("Roxie-style",
-    * /root/reference/PrefixTree.ecl:459-588) query kernel: the whole LOOP
-    * of ecl:572-584 runs locally, so a batch of queries is a single
-    * `mapPartitions` with no per-iteration Spark jobs.
+    * This is the query kernel of every path - serving ("Roxie-style",
+    * reference PrefixTree.ecl:459-588), broadcast and partition-local
+    * batch, streaming: the whole LOOP of ecl:572-584 runs locally, so a
+    * batch of queries runs with no per-iteration Spark jobs.
     *
     * Prunes (same two as the reference's join predicates, ecl:434,
     * 440-441, kept deliberately un-combined - see SURVEY.md B.q3):

@@ -55,20 +55,13 @@ object PTNode {
   */
 final case class SearchStats(nodes: Long, cells: Long)
 
-/** One-pass sizing statistics of a trie - everything the query planner
-  * needs to pick its physical strategy WITHOUT re-scanning the trie per
-  * call: `nodes`/`chars` drive the broadcast-vs-partitioned decision and
-  * the cached-partition count, `maxWordLen`/`minTopEdge` bound the
-  * unrolled chain height. Computed once at create/read time (persisted
-  * indexes carry them as a sidecar / table property - see
-  * `PrefixTree.writeIndexed` / `writeIndexedTable`) and cached per trie
-  * plan, so a query against a built index runs ZERO sizing jobs. Stale
-  * stats are a performance matter only: an under-estimated chain height
-  * falls through to the fixpoint loop (correct at any depth), and the
-  * strategy choice is strategy, not semantics.
+/** One-pass sizing statistics of a trie - what `Query.queryBatch` needs
+  * to pick broadcast or partition-local mode WITHOUT re-scanning the trie
+  * per call: the node count and the total edge-label characters.
+  * Computed once at create/read time (persisted indexes carry them as a
+  * sidecar / table property - see `PrefixTree.writeIndexed` /
+  * `writeIndexedTable`) and cached per trie plan, so a query against a
+  * built index runs ZERO sizing jobs. Stale stats are a performance
+  * matter only: both modes answer identically.
   */
-final case class TrieStats(
-    nodes: Long,
-    chars: Long,
-    maxWordLen: Int,
-    minTopEdge: Int)
+final case class TrieStats(nodes: Long, chars: Long)

@@ -124,10 +124,10 @@ object PrefixTree {
     createCounted(caps.unionByName(fresh), "word", "cnt", prefixLen, numPartitions)
   }
 
-  /** Persist a trie pre-organized for the query join: repartitioned by
-    * `parent_id` so the per-iteration frontier join shuffles only the
-    * (small) frontier side. The Spark analog of the reference's
-    * `BUILDINDEX(..., parent_id)` (/root/reference/PrefixTree.ecl:612-613).
+  /** Persist a trie organized by `compute_node`: each file holds whole
+    * per-partition subtrees, sorted by group, the unit the partition-local
+    * search ([[Query.queryJoin]]) compiles. The Spark analog of the
+    * reference's `BUILDINDEX` (PrefixTree.ecl:612-613).
     *
     * Beside the data, a one-line `_graft_stats` SIDECAR file (underscore
     * prefix: invisible to the parquet listing, like `_SUCCESS`) records
@@ -148,8 +148,8 @@ object PrefixTree {
     */
   def writeIndexed(trie: Dataset[PTNode], path: String, buckets: Int = 32): Unit = {
     trie
-      .repartition(buckets, trie("parent_id"))
-      .sortWithinPartitions("parent_id")
+      .repartition(buckets, trie("compute_node"))
+      .sortWithinPartitions("compute_node")
       .write
       .mode("overwrite")
       .parquet(path)
@@ -167,14 +167,17 @@ object PrefixTree {
     (file.getFileSystem(spark.sessionState.newHadoopConf()), file)
   }
 
-  /** [[TrieStats]] as persisted beside an index: `nodes,chars,max_word_len,min_top_edge`. */
-  private def statsLine(st: TrieStats): String =
-    s"${st.nodes},${st.chars},${st.maxWordLen},${st.minTopEdge}"
+  /** [[TrieStats]] as persisted beside an index: `nodes,chars`. */
+  private def statsLine(st: TrieStats): String = s"${st.nodes},${st.chars}"
 
+  /** A `nodes,chars` line, or an earlier writer's
+    * `nodes,chars,max_word_len,min_top_edge` with its last two fields
+    * ignored, so an index written before still reads with no sizing job.
+    */
   private def parseStats(line: String): TrieStats = {
     val p = line.trim.split(",")
-    require(p.length == 4, s"malformed trie stats '$line'")
-    TrieStats(p(0).toLong, p(1).toLong, p(2).toInt, p(3).toInt)
+    require(p.length == 2 || p.length == 4, s"malformed trie stats '$line'")
+    TrieStats(p(0).toLong, p(1).toLong)
   }
 
   def read(spark: SparkSession, path: String): Dataset[PTNode] = {
@@ -192,14 +195,13 @@ object PrefixTree {
     ds
   }
 
-  /** Persist a trie as a BUCKETED table on `parent_id` - the closest
+  /** Persist a trie as a BUCKETED table on `compute_node` - the closest
     * Spark analog of the reference's `BUILDINDEX` (ecl:612-613): the
-    * bucketing metadata survives in the catalog, so every later
-    * equi-join on `parent_id` (each frontier-expansion step of join-mode
-    * query) reads the buckets directly and shuffles ONLY the frontier
-    * side. `writeIndexed` (plain parquet) loses the partitioning on
-    * read; this keeps it - the difference is one trie-sized exchange
-    * per query on a 100 TB trie.
+    * bucketing metadata survives in the catalog, so the partition-local
+    * search ([[Query.queryJoin]]) groups the trie by reading the buckets
+    * directly and shuffles ONLY the query side. `writeIndexed` (plain
+    * parquet) loses the partitioning on read; this keeps it - the
+    * difference is one trie-sized exchange per query on a 100 TB trie.
     */
   def writeIndexedTable(trie: Dataset[PTNode], table: String, buckets: Int = 32): Unit = {
     val spark = trie.sparkSession
@@ -216,8 +218,8 @@ object PrefixTree {
     trie.write
       .mode("overwrite")
       .format("parquet")
-      .bucketBy(buckets, "parent_id")
-      .sortBy("parent_id")
+      .bucketBy(buckets, "compute_node")
+      .sortBy("compute_node")
       .saveAsTable(table) // managed table in the session warehouse
     // sizing stats ride the catalog entry as a table property (the
     // bucketed sibling of writeIndexed's sidecar): computed once from
@@ -231,12 +233,14 @@ object PrefixTree {
   def readTable(spark: SparkSession, table: String): Dataset[PTNode] = {
     import spark.implicits._
     val ds = spark.table(table).as[PTNode]
-    try {
-      val props = spark.sessionState.catalog
+    // a temp view has no catalog entry, hence no stats: they compute
+    // lazily on first use; a malformed property fails here
+    val props =
+      try spark.sessionState.catalog
         .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
         .properties
-      props.get("graft.trie.stats").foreach(s => Query.registerStats(ds, parseStats(s)))
-    } catch { case scala.util.control.NonFatal(_) => () }
+      catch { case _: org.apache.spark.sql.AnalysisException => Map.empty[String, String] }
+    props.get("graft.trie.stats").foreach(s => Query.registerStats(ds, parseStats(s)))
     ds
   }
 }

@@ -1,6 +1,6 @@
 package graft.ptree
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
@@ -22,15 +22,15 @@ import graft.ops.SizeGuard
   *     dictionary trie is tiny relative to a 100 TB corpus (dedup happens at
   *     build), so this covers most real corpora.
   *
-  *   - '''join mode''' (tries larger than executor memory): the literal
-  *     iterate-to-fixpoint of the reference's LOOP (ecl:430-442) as a
-  *     driver-side loop of inner joins `frontier.node_id = trie.parent_id`
-  *     with the same two prune predicates attached (branch-and-bound on the
-  *     DP row-min, ecl:434; subtree length window, ecl:440-441 - kept
-  *     separate per the author's double-count warning, SURVEY.md B.q3).
-  *     Rows reaching an end-cap exit the loop into the result (ECL LOOP
-  *     emission semantics, ecl:431). `localCheckpoint` truncates lineage
-  *     each iteration so plans don't grow with trie depth.
+  *   - '''partition-local mode''' (tries too large to collect, see
+  *     [[queryJoin]]): each `compute_node` group of the trie compiles into
+  *     its own [[TrieIndex]] in its task, and every query is searched in
+  *     every group with the same walk.
+  *
+  * Both modes run the same kernel with the same two prunes as the
+  * reference's LOOP (branch-and-bound on the DP row-min, ecl:434; subtree
+  * length window, ecl:440-441 - kept separate per the author's
+  * double-count warning, SURVEY.md B.q3).
   */
 object Query {
 
@@ -47,15 +47,15 @@ object Query {
       trie: Dataset[PTNode],
       maxDist: Int
   ): DataFrame = {
-    // persist across the mode decision: the sizing agg + collect()/join
-    // would otherwise run trie construction twice. Both modes consume the
-    // trie eagerly (collect, or the checkpointing loop), so unpersisting
-    // on return is safe.
+    // persist across the mode decision: the sizing agg + the search would
+    // otherwise run trie construction twice. Both modes consume the trie
+    // before returning (the collect, or the checkpointed partition-local
+    // search), so unpersisting on return is safe.
     val t = trie.persist(StorageLevel.MEMORY_AND_DISK)
     try {
       if (SizeGuard.small(SizeGuard.TrieIndex, trieStats(t).nodes, estimatedIndexBytes(t)))
         queryBroadcast(queries, col, t, maxDist)
-      else queryJoin(queries, col, t, maxDist)
+      else queryJoin(queries, col, t, maxDist).localCheckpoint()
     } finally t.unpersist()
   }
 
@@ -67,11 +67,10 @@ object Query {
     * trie READ back from a persisted index ([[PrefixTree.read]] /
     * [[PrefixTree.readTable]]) registers its sidecar/table-property stats
     * here, and a trie built in-session computes them at most once - so
-    * [[queryJoin]]'s strategy selection costs ZERO extra jobs on the
-    * paths that used to pay a per-call sizing aggregate (the round-12
-    * pt_* bench regressions). Staleness (same plan, changed underlying
-    * files) only mis-sizes a strategy choice - [[queryJoin]]'s phase-2
-    * loop makes any chain-height guess correct.
+    * [[queryBatch]]'s mode selection costs ZERO extra jobs on the paths
+    * that used to pay a per-call sizing aggregate (the round-12 pt_*
+    * bench regressions). Staleness (same plan, changed underlying files)
+    * only mis-sizes a mode choice: both modes answer identically.
     *
     * Least-recently-used, [[StatsCacheEntries]] entries: a trie over a
     * `localCheckpoint` (every `fuzzyDedup` call) is a new plan each
@@ -101,9 +100,9 @@ object Query {
     cache(cacheKey(trie), st)
 
   /** The trie's [[TrieStats]]: cache hit, or ONE single-pass aggregate
-    * (count, total edge chars, longest word, shortest root edge)
-    * computed and cached. On a trie the caller just persisted, the agg
-    * doubles as the cache materialization - no wasted pass either way.
+    * (count, total edge chars) computed and cached. On a trie the caller
+    * just persisted, the agg doubles as the cache materialization - no
+    * wasted pass either way.
     */
   def trieStats(trie: Dataset[PTNode]): TrieStats = {
     val k = cacheKey(trie)
@@ -121,15 +120,9 @@ object Query {
     * build the sidecar.
     */
   private[ptree] def computeTrieStats(trie: Dataset[PTNode]): TrieStats = {
-    val r = trie.toDF().agg(
-      count(lit(1)),
-      coalesce(sum(length(column("node"))), lit(0L)),
-      max(when(column("is_word"), length(column("node")))),
-      min(when(!column("is_word") && column("parent_id") === 0L,
-        length(column("node"))))).head()
-    val maxWord = if (r.isNullAt(2)) 0 else r.getInt(2)
-    val minTop = if (r.isNullAt(3)) math.max(maxWord, 1) else r.getInt(3)
-    TrieStats(r.getLong(0), r.getLong(1), maxWord, minTop)
+    val r = trie.toDF()
+      .agg(count(lit(1)), coalesce(sum(length(column("node"))), lit(0L))).head()
+    TrieStats(r.getLong(0), r.getLong(1))
   }
 
   /** Estimated JVM heap for collecting the children index - the
@@ -146,12 +139,15 @@ object Query {
     * Served from [[trieStats]] - a persisted index answers with no job at
     * all. The [[SizeGuard.TrieIndex]] limit (512 MB) leaves a multi-GB
     * driver comfortable: the collect, the compiled index and its
-    * serialized broadcast blocks.
+    * serialized broadcast blocks. Above it, the same model bounds each
+    * partition-local group ([[compileGroup]]).
     */
   private[ptree] def estimatedIndexBytes(trie: Dataset[PTNode]): Long = {
     val st = trieStats(trie)
-    st.nodes * 128L + 2L * st.chars
+    indexBytes(st.nodes, st.chars)
   }
+
+  private def indexBytes(nodes: Long, chars: Long): Long = nodes * 128L + 2L * chars
 
   /** Best-`k` matches per query within `maxDist`: the reference's
     * fixed-threshold query composed with a rank window - composition,
@@ -220,7 +216,8 @@ object Query {
 
   /** Broadcast mode: the trie's compiled [[TrieIndex]] arrays broadcast once and
     * searched per query in ONE `mapPartitions`; the optional accumulators
-    * sum the kernel's [[SearchStats]] (nodes examined, DP cells).
+    * sum the kernel's [[SearchStats]] (nodes examined, DP cells). Null
+    * query strings match nothing.
     */
   def queryBroadcast(
       queries: DataFrame,
@@ -233,8 +230,7 @@ object Query {
     val spark = queries.sparkSession
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(childrenIndex(trie).flat)
-    queries
-      .select(column(col).cast(StringType).as("query_string"))
+    queryStrings(queries, col)
       // spread the query set over every core: the input's file partitioning
       // (often 1 block) would otherwise serialize the whole batch
       .repartition(spark.sparkContext.defaultParallelism)
@@ -251,38 +247,26 @@ object Query {
       .toDF("query_string", "node", "final_distance", "n_occurrences")
   }
 
-  /** One frontier-expansion step of the join-mode loop: inner join
-    * `frontier.node_id = trie.parent_id` with the branch-and-bound and
-    * length-window prunes attached (reference ecl:434, 440-441).
-    * `private[ptree]` so the plan spec can assert the 100 TB property
-    * directly: with the trie pre-partitioned on parent_id, this join
-    * must shuffle ONLY the frontier side.
-    *
-    * The frontier must carry `qlen` = length(query_string), computed
-    * ONCE at frontier construction: the window prune evaluates per
-    * candidate pair per level, and re-deriving the length there would
-    * re-walk the query string hChain x fan-out times per row.
-    */
-  private[ptree] def frontierJoin(frontier: DataFrame, t: DataFrame, maxDist: Int): DataFrame =
-    frontier.join(
-      t,
-      frontier("node_id") === t("parent_id") &&
-        // null state = a settled (done) row riding the phase-1 chain via
-        // its sentinel key; genuine frontier rows always carry state
-        (frontier("state").isNull ||
-          element_at(frontier("state"), -1) <= lit(maxDist)) &&
-        frontier("qlen") <= t("_max") + lit(maxDist) &&
-        frontier("qlen") >= t("_min") - lit(maxDist),
-      "inner"
-    )
+  /** `queries`' `col` as the non-null strings both modes search. */
+  private def queryStrings(queries: DataFrame, col: String): DataFrame =
+    queries.select(column(col).cast(StringType).as("query_string"))
+      .filter(column("query_string").isNotNull)
 
-  /** @param withPath thread the reference's `cumulative_nodes` debug
-    *   column (ecl:405-406, 424-425) through the loop: the concatenation
-    *   of edge labels consumed so far, emitted as `path` on every result
-    *   row. For an end-cap emission the parent path spells exactly the
-    *   matched word (`path == node` - spec'd), which is the traversal-
-    *   debugging property the reference kept the column for. Off by
-    *   default: it widens every frontier shuffle row by the path length.
+  /** Partition-local mode: [[PrefixTree.create]] builds each partition's
+    * subtree closed under its own `compute_node` (the reference's per-node
+    * tries, ecl:172-181, 273), so the trie groups on that column, each group
+    * compiles in its task into a [[TrieIndex]] ([[compileGroup]]), every
+    * query is sent to every group and searched with broadcast mode's walk,
+    * and the groups' answers union (REPOSE's shape, PAPERS.md). Identical
+    * words share a group, so a query row gets each match once, as in
+    * broadcast mode. A trie bucketed on `compute_node`
+    * ([[PrefixTree.writeIndexedTable]]) is read with no trie-side exchange:
+    * only the (query x group) rows shuffle. Null query strings match
+    * nothing.
+    *
+    * @param withPath add the reference's `cumulative_nodes` debug column
+    *   (ecl:405-406, 424-425) as `path`: at an end-cap the edge labels
+    *   walked spell the matched word, so `path` is `node`.
     */
   def queryJoin(
       queries: DataFrame,
@@ -293,266 +277,42 @@ object Query {
   ): DataFrame = {
     val spark = queries.sparkSession
     import spark.implicits._
+    // the alias gives the query side's key its own attribute: cogroup
+    // needs both keys of one name and type, not one attribute
+    val groups = trie.select($"compute_node".as("compute_node")).distinct()
+    val perGroup = queryStrings(queries, col).crossJoin(broadcast(groups))
+      .groupBy(groups("compute_node")).as[Int, (String, Int)]
+    val out = trie.groupBy($"compute_node").as[Int, PTNode]
+      .cogroup(perGroup) { (group, rows, qs) =>
+        if (qs.isEmpty) Iterator.empty
+        else {
+          val idx = compileGroup(group, rows, SizeGuard.TrieIndex.maxBytes)
+          qs.flatMap { case (q, _) =>
+            Kernels.searchIndex(idx, q, maxDist)._1.map { case (w, d, c) => (q, w, d, c) }
+          }
+        }
+      }
+      .toDF("query_string", "node", "final_distance", "n_occurrences")
+    if (withPath) out.withColumn("path", $"node") else out
+  }
 
-    // DP state = row ++ [rowMin]; element_at(state, len(q)+1) is the exact
-    // distance cell, state[last] the branch-and-bound lower bound - same
-    // packing idea as the reference's byte-string state (ecl:332-372) but
-    // as a native array<int> column.
-    // `depth` (trie chars consumed) is threaded as its own column: the
-    // banded DP saturates row(0) at maxDist+1, so the all-insertions cell
-    // can no longer double as the consumed counter. The DP step itself is
-    // a native codegen expression (graft.functions.PtLevExtend), not a UDF.
-    def extend(q: Column, e: Column, s: Column, d: Column): Column =
-      graft.functions.GraftFunctions.pt_lev_extend(q, e, s, d, maxDist)
-
-    // Trie side: pre-partition ONCE by parent_id and cache - every loop
-    // iteration reuses the same exchange instead of re-shuffling 100 TB of
-    // trie. Only the (shrinking) frontier moves per iteration.
-    // 64 SENTINEL rows (negative ids, parent_id = id) are appended for the
-    // phase-1 chain: rows that have already produced their result keep
-    // flowing through subsequent joins by matching a sentinel (spread over
-    // 64 keys by query hash so the done-stream is not one hot partition).
-    // The sentinels' window bounds are maximal and they are not words, so
-    // they can never affect a genuine traversal row.
-    val parts = spark.sessionState.conf.numShufflePartitions
-    val sentinels = spark.range(1, 65).select(
-      (-$"id").as("id"), (-$"id").as("parent_id"),
-      lit(1 << 29).as("_max"), lit(0).as("_min"),
-      lit(false).as("is_word"), lit(0).as("compute_node"),
-      lit("").as("node"), lit(0L).as("n_occurrences"))
-    // SIZE the trie cache's partition count by bytes, not by the session
-    // shuffle-partition default: every chain level (and loop iteration)
-    // runs one join task per cached trie partition, so a megabyte-scale
-    // dictionary trie sliced into 32 partitions pays ~32x the task-
-    // scheduling it needs, while a TB-scale trie gets as many partitions
-    // as the session allows. 32 MB per partition keeps a partition's
-    // build side comfortably in a task's memory.
-    val ownCache = trie.storageLevel == StorageLevel.NONE
-    val tIn = if (ownCache) trie.persist(StorageLevel.MEMORY_AND_DISK) else trie
-    // sizing AND height come from trieStats - a cache hit (persisted
-    // index sidecar, or any earlier query over the same trie plan) costs
-    // zero jobs here; a miss runs the one-pass aggregate exactly once
-    // per trie per session instead of once per queryJoin call
-    val st = trieStats(tIn)
-    val trieBytes = st.nodes * 48L + 2L * st.chars
-    val partsT = math.max(1L, math.min(parts.toLong, trieBytes / (32L * 1024 * 1024) + 1)).toInt
-    val maxWord = st.maxWordLen
-    val minTop = st.minTopEdge
-    val hChain = math.min(1 + math.max(0, maxWord - minTop) + 1, 24)
-    // physical strategy for the chain levels: a trie that fits a task's
-    // memory comfortably joins as a BROADCAST hash join - all hChain
-    // levels then fuse into ONE shuffle-free codegen'd stage at the full
-    // parallelism of the query set, and ReuseExchange ships the (single)
-    // broadcast once. Bigger tries use the partitioned join, where only
-    // the frontier shuffles per level. Same algebra either way - this is
-    // strategy selection, exactly what Catalyst does for any other join.
-    val useBcast = SizeGuard.small(SizeGuard.TrieChain, st.nodes, trieBytes)
-    val t = tIn.toDF().unionByName(sentinels).repartition(partsT, $"parent_id")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // materialize the cache BEFORE the first partitioned join plans
-    // against it: an unexecuted AQE cache plan reports UnknownPartitioning
-    // and the first level would defensively re-shuffle the whole trie
-    // (PrefixTreeSpec pins this down). The broadcast path doesn't consult
-    // partitioning, so there the chain's own job populates the cache.
-    if (!useBcast) t.count()
-
-    val frontier0 = queries
-      .select(column(col).cast(StringType).as("query_string"))
-      // computed ONCE here; frontierJoin's length-window prune reads it
-      // per candidate pair per level (see frontierJoin's contract)
-      .withColumn("qlen", length($"query_string"))
-      // root key 0 as a NON-FOLDABLE expression, deliberately: a literal
-      // node_id would be constant-propagated into the level-1 join
-      // condition, erasing the equi-key and planning the first level as
-      // a BroadcastNestedLoopJoin - every query row then evaluates the
-      // window predicates against EVERY root edge (queries x roots pairs
-      // at 10x dictionary scale), where the hash join probes one bucket.
-      // pmod(qlen, 1) is always 0 but data-dependent, so the equi-key
-      // survives and level 1 plans as the same hash join as every other
-      // level (plan-pinned in PrefixTreeSpec).
-      .withColumn("node_id", pmod($"qlen", lit(1)).cast(LongType))
-      .withColumn(
-        "state",
-        concat(sequence(lit(0), length($"query_string")), array(lit(0)))
-      )
-      .withColumn("depth", lit(0))
-
-    // ------------------------------------------------------------------
-    // Phase 1 - UNROLLED CHAIN: the trie's height is knowable upfront
-    // (first edge >= minTopEdge chars, every deeper edge >= 1 char, plus
-    // the end-cap level), so instead of a driver loop of
-    // materialize-count-join round trips, unroll `hChain` levels into ONE
-    // lazy LINEAR plan and let Spark run the whole traversal as a single
-    // job: no per-level localCheckpoint serialization, no per-level
-    // control job, one Catalyst/AQE pass, stages pipelined back to back.
-    // Rows that reach their result are NOT split into a separate branch
-    // (a second reference of the level plan would double the logical tree
-    // per level - exponential planning): they flip to done=true, retarget
-    // their join key to a sentinel trie row, and ride the remaining
-    // levels as inert fan-out-1 rows. Extra shuffle volume is
-    // |result| x residual-depth narrow rows - the price of one job.
-    // hChain is capped: a pathologically deep trie (document-length
-    // strings) falls through to the phase-2 loop, which handles
-    // arbitrary depth with bounded lineage.
-    val nullStr = lit(null).cast(StringType)
-    var cur = frontier0
-      .withColumn("done", lit(false))
-      .withColumn("r_node", nullStr)
-      .withColumn("r_dist", lit(null).cast(IntegerType))
-      .withColumn("r_occ", lit(null).cast(LongType))
-    if (withPath) cur = cur.withColumn("path", lit(""))
-    // broadcast-mode chain: the whole traversal is one pipelined stage,
-    // so parallelism is fixed by the INPUT partitioning - spread the
-    // query set over every core upfront (file layout often delivers a
-    // single split)
-    if (useBcast) cur = cur.repartition(spark.sparkContext.defaultParallelism)
-
-    val frontierCols = Seq($"query_string", $"qlen", $"node_id", $"state", $"depth") ++
-      (if (withPath) Seq($"path") else Nil)
-
-    for (_ <- 1 to hChain) {
-      // fresh expression IDs for the trie side each level: `cur` already
-      // contains the previous level's trie attributes, and re-joining the
-      // SAME cached Dataset would be an ambiguous self-join. Aliasing is
-      // a no-op projection; alias-aware output partitioning still lets
-      // the join reuse the cached parent_id exchange.
-      val tl = t.select(t.columns.map(n => t(n).as(n)): _*)
-      // done rows pass the join via their sentinel key: a null state
-      // takes frontierJoin's null-state escape, and the sentinel's
-      // maximal length window is always satisfied.
-      val settled = $"done" || $"is_word"
-      cur = frontierJoin(cur, if (useBcast) broadcast(tl) else tl, maxDist)
-        .select((Seq(
-          $"query_string",
-          $"qlen",
-          when(settled, -(pmod(xxhash64($"query_string"), lit(64L)) + lit(1L)))
-            .otherwise(tl("id")).as("node_id"),
-          // settled rows drop their state entirely (frontierJoin's prune
-          // has a null-state escape): the done-stream rides the remaining
-          // levels as narrow rows
-          when(settled, lit(null).cast(ArrayType(IntegerType)))
-            .otherwise(extend($"query_string", $"node", $"state", $"depth")).as("state"),
-          when(settled, $"depth")
-            .otherwise($"depth" + length($"node")).cast(IntegerType).as("depth"),
-          settled.as("done"),
-          when($"done", $"r_node").otherwise(when($"is_word", $"node")).as("r_node"),
-          when($"done", $"r_dist")
-            .otherwise(when($"is_word", element_at($"state", length($"query_string") + 1)))
-            .cast(IntegerType).as("r_dist"),
-          when($"done", $"r_occ").otherwise(when($"is_word", $"n_occurrences")).as("r_occ")
-        ) ++ (if (withPath)
-          Seq(when(settled, $"path").otherwise(concat($"path", $"node")).as("path"))
-        else Nil)): _*)
-        .filter(
-          ($"done" && $"r_dist" <= lit(maxDist)) ||
-            (!$"done" && element_at($"state", -1) <= lit(maxDist)))
+  /** One `compute_node` group's rows compiled into a [[TrieIndex]]. A group
+    * whose [[indexBytes]] estimate exceeds `maxBytes` fails with its size
+    * instead: a task cannot hold it, and skipping it would answer partially.
+    * Rows past the limit are counted, not kept.
+    */
+  private[ptree] def compileGroup(group: Int, rows: Iterator[PTNode], maxBytes: Long): TrieIndex = {
+    val kept = scala.collection.mutable.ArrayBuffer.empty[PTNode]
+    var nodes, chars = 0L
+    rows.foreach { r =>
+      nodes += 1
+      chars += r.node.length
+      if (indexBytes(nodes, chars) <= maxBytes) kept += r
     }
-
-    // ONE materialization + ONE control job for the whole chain.
-    //
-    // Whole-stage codegen policy: in broadcast mode all hChain levels
-    // fuse into ONE generated doConsume chain, which crosses the JVM's
-    // 64 KB method limit somewhere past ~8 levels - Janino then refuses
-    // (three wasted compile attempts of a 10k-line class) and Spark
-    // falls back to per-operator execution anyway. For deep chains,
-    // skip the doomed fusion UP FRONT: per-operator execution still
-    // runs every projection/join through small per-expression codegen
-    // (each level's UnsafeProjection compiles on its own), and was
-    // measured 2.6x FASTER than fencing the chain into compilable
-    // whole-stage blocks with CodegenFallback barriers (the barrier
-    // Project drops the whole row through an interpreted row-writer -
-    // fused local variables are exactly what made the chain fast).
-    // Shallow chains keep full fusion. The deep-trie spec pins this
-    // with spark.sql.codegen.fallback=false: a regression back to the
-    // 64 KB overflow throws there instead of silently degrading.
-    val safeUnroll = 8
-    // The skip must be scoped to THIS plan, not the session: flipping
-    // spark.conf would (a) de-codegen any unrelated query planning
-    // concurrently on the same session and (b) race two deep queryJoins'
-    // save/restore into leaving the flag permanently false. A THREAD-
-    // LOCAL conf clone (SQLConf.withExistingConf) scopes the override to
-    // this planning call: Catalyst's preparation rules read SQLConf.get,
-    // which consults the thread-local before the session conf. The
-    // deep-trie spec pins the effect (codegen.fallback=false would throw
-    // on a 64 KB overflow if the override ever stopped taking).
-    val chain = if (hChain > safeUnroll) {
-      import org.apache.spark.sql.internal.SQLConf
-      val scoped = SQLConf.get.clone()
-      scoped.setConfString("spark.sql.codegen.wholeStage", "false")
-      SQLConf.withExistingConf(scoped) { cur.localCheckpoint() }
-    } else cur.localCheckpoint()
-    // the chain's job has populated t's cache; the input-side cache (ours
-    // only if the caller hadn't persisted) is no longer needed
-    if (ownCache) tIn.unpersist()
-    val emitCols0 = Seq(
-      $"query_string", $"r_node".as("node"), $"r_dist".as("final_distance"),
-      $"r_occ".as("n_occurrences")
-    ) ++ (if (withPath) Seq($"path") else Nil)
-    var emitted: List[DataFrame] = List(chain.filter($"done").select(emitCols0: _*))
-    var frontier = chain.filter(!$"done").select(frontierCols: _*)
-    var nFrontier = frontier.count()
-
-    // ------------------------------------------------------------------
-    // Phase 2 - FALLBACK LOOP for tries deeper than the unroll cap
-    // (normally nFrontier == 0 here and this is skipped entirely)
-    try {
-    while (nFrontier > 0) {
-      // ONE join execution + ONE materialization per iteration: project
-      // down to the surviving columns, advance the DP for non-end-caps,
-      // filter both branch conditions, THEN checkpoint - emitted rows and
-      // the next frontier are cheap filters over the cached result.
-      // (Checkpointing the raw full-width join was measured slower than
-      // running the join per branch; the projected+filtered form is
-      // narrower than either.)
-      val surviveCols = Seq(
-        $"query_string",
-        $"qlen",
-        $"is_word",
-        $"node",
-        $"n_occurrences",
-        t("id").as("next_id"),
-        // end-caps exit the loop into the result set (ecl:431): the exact
-        // distance is the parent row's cell [len(q)], computed WITHOUT
-        // advancing the DP (end-caps carry the full word, not an edge)
-        element_at($"state", length($"query_string") + 1).as("final_distance"),
-        when(!$"is_word", extend($"query_string", $"node", $"state", $"depth"))
-          .as("state2"),
-        $"depth"
-      ) ++ (if (withPath) Seq($"path") else Nil)
-      val step = frontierJoin(frontier, t, maxDist)
-        .select(surviveCols: _*)
-        .filter(
-          ($"is_word" && $"final_distance" <= lit(maxDist)) ||
-            (!$"is_word" && element_at($"state2", -1) <= lit(maxDist)))
-        .localCheckpoint()
-
-      // ONE control-flow job per iteration: both branch counts from the
-      // cached step (separate isEmpty probes would each schedule a job)
-      val cnts = step.agg(
-        count(when($"is_word", 1)).as("n_emit"),
-        count(when(!$"is_word", 1)).as("n_frontier")).head()
-      nFrontier = cnts.getLong(1)
-
-      val emitCols = Seq(
-        $"query_string", $"node", $"final_distance", $"n_occurrences"
-      ) ++ (if (withPath) Seq($"path") else Nil)
-      if (cnts.getLong(0) > 0) emitted ::= step.filter($"is_word").select(emitCols: _*)
-
-      val stepCols = Seq(
-        $"query_string",
-        $"qlen",
-        $"next_id".as("node_id"),
-        $"state2".as("state"),
-        ($"depth" + length($"node")).cast(IntegerType).as("depth")
-      ) ++ (if (withPath) Seq(concat($"path", $"node").as("path")) else Nil)
-      frontier = step.filter(!$"is_word").select(stepCols: _*)
-    }
-    // finally (not success-path only): an exception mid-loop must not
-    // leak the cached trie partitioning
-    } finally t.unpersist()
-    // emitted is never empty: the chain contributes its (possibly empty)
-    // done-slice with the full output schema
-    emitted.reduce(_ union _)
-      .withColumn("final_distance", $"final_distance".cast(IntegerType))
+    val bytes = indexBytes(nodes, chars)
+    if (bytes > maxBytes) throw new IllegalStateException(
+      s"trie group compute_node=$group has $nodes nodes, an estimated $bytes B index over " +
+        s"the $maxBytes B limit: build the trie with a longer prefixLen or more numPartitions")
+    TrieIndex(kept.toArray)
   }
 }

@@ -342,7 +342,7 @@ object StreamOps {
     * [[graft.ptree.PrefixTree.merge]] (per-batch rebuild input =
     * vocabulary-sized weighted end-caps + the batch, never the raw
     * corpus the index has accumulated), each fold lands as a fresh
-    * `writeIndexed` image (parent_id-organized + `_graft_stats`
+    * `writeIndexed` image (compute_node-organized + `_graft_stats`
     * sidecar), and `onUpdate` hands out the index READ BACK from disk -
     * so serving between batches runs zero sizing jobs and survives this
     * process dying (the next process resumes from `basePath`).

@@ -96,7 +96,7 @@ object ScaleCheck {
       .filter(col("c_custkey") % 35 === 0)
       .select(expr("concat(substr(c_name, 1, length(c_name)-1), 'X')").as("query_string"))
     timed("pt_fuzzy_joinmode", cust1, cust10) { df =>
-      // forced LOOP path (the 100-TB shape: trie too large to broadcast)
+      // forced partition-local path (the 100-TB shape: trie too large to broadcast)
       val trie = graft.ptree.PrefixTree.create(df, "c_name", prefixLen = 12)
       graft.ptree.Query.queryJoin(trieQueries(df), "query_string", trie, maxDist = 2)
     }

@@ -130,7 +130,7 @@ class FunctionsSpec extends SparkSpec {
     assert(r(0)._2 == DedupOps.simhashKernel("the quick brown fox jumps over the lazy dog"))
   }
 
-  test("SQL registration: literal-argument builders (shingles, rh_bucket, pt_lev_extend, sig_agree)") {
+  test("SQL registration: literal-argument builders (shingles, rh_bucket, sig_agree)") {
     GraftFunctions.register(spark)
     docs.createOrReplaceTempView("fdocs2")
     // shingles(text, nLiteral) + sig_agree over two signatures
@@ -147,12 +147,6 @@ class FunctionsSpec extends SparkSpec {
       "SELECT rh_bucket(array(CAST(0.5 AS DOUBLE), CAST(-1.5 AS DOUBLE)), 2, 4, 7) AS b")
       .as[Long].head()
     assert(b >= 0L && b < 16L)
-    // pt_lev_extend(query, edge, state, depth, maxDistLiteral): empty
-    // state + exact-match edge ends with final distance 0
-    val st = spark.sql(
-      """SELECT pt_lev_extend('dog', 'dog', array(), 0, 2) AS st""")
-      .as[Seq[Int]].head()
-    assert(st(st.length - 2) == 0, s"exact match should have distance 0: $st")
     // non-literal n must be rejected, not silently misregistered
     val err = intercept[Exception] {
       spark.sql("SELECT shingles(text, id) FROM fdocs2").collect()
@@ -403,16 +397,6 @@ class FunctionsSpec extends SparkSpec {
     val withNull = Seq(Tuple1(Seq[java.lang.Float](1.0f, null))).toDF("v")
     assert(withNull.select(GraftFunctions.nearest_lists($"v", cents, 2))
       .as[Option[Seq[Int]]].collect()(0).isEmpty)
-  }
-
-  test("pt_lev_extend expression == pure kernel") {
-    import graft.ptree.Kernels
-    val df = Seq(("dogma", "drops", Seq(0, 1, 2, 3, 4, 5) :+ 0, 0)).toDF("q", "e", "st", "d")
-    val out = df.select(
-      GraftFunctions.pt_lev_extend($"q", $"e", $"st", $"d", 3).as("r")
-    ).as[Seq[Int]].collect()(0)
-    val (row, mn) = Kernels.extendRow("dogma", "drops", Array(0, 1, 2, 3, 4, 5), 0, 3)
-    assert(out == (row.toSeq :+ mn))
   }
 
   test("bpe_count == independent merge-loop reference on every corpus unit") {

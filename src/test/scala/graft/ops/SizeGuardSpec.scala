@@ -9,14 +9,13 @@ import org.apache.spark.sql.functions._
 
 class SizeGuardSpec extends SparkSpec {
   import spark.implicits._
-  import SizeGuard.{DriverEdges, NodeBroadcast, Site, TrieChain, TrieIndex}
+  import SizeGuard.{DriverEdges, NodeBroadcast, Site, TrieIndex}
 
   test("each site's limits, inclusive at the boundary") {
     assert(DriverEdges == Site("graph.driver_edges", 1L << 21, 128L << 20))
     assert(NodeBroadcast == Site("graph.node_broadcast", 1L << 22, 128L << 20))
     assert(TrieIndex == Site("query.children_index", Long.MaxValue, 512L << 20))
-    assert(TrieChain == Site("query.chain_broadcast", Long.MaxValue, 64L << 20))
-    for (site <- Seq(DriverEdges, NodeBroadcast, TrieIndex, TrieChain)) {
+    for (site <- Seq(DriverEdges, NodeBroadcast, TrieIndex)) {
       assert(SizeGuard.small(site, site.maxRows, site.maxBytes), site.name)
       assert(!SizeGuard.small(site, 0L, site.maxBytes + 1), site.name)
       if (site.maxRows < Long.MaxValue)
@@ -54,12 +53,12 @@ class SizeGuardSpec extends SparkSpec {
     assert(SizeGuard.small(site, 0L, 0L))
     SizeGuard.forcing(site -> false) {
       assert(!SizeGuard.small(site, 0L, 0L))
-      SizeGuard.forcing(site -> true, TrieChain -> false) {
+      SizeGuard.forcing(site -> true, TrieIndex -> false) {
         assert(SizeGuard.small(site, Long.MaxValue, Long.MaxValue))
-        assert(!SizeGuard.small(TrieChain, 0L, 0L))
+        assert(!SizeGuard.small(TrieIndex, 0L, 0L))
       }
       assert(!SizeGuard.small(site, 0L, 0L))
-      assert(SizeGuard.small(TrieChain, 0L, 0L))
+      assert(SizeGuard.small(TrieIndex, 0L, 0L))
       intercept[IllegalStateException] {
         SizeGuard.forcing(site -> true)(throw new IllegalStateException("boom"))
       }

@@ -42,35 +42,57 @@ object BruteLev {
 class KernelsSpec extends AnyFunSuite {
   import BruteLev._
 
-  test("extendRow matches full-matrix levenshtein char by char") {
+  /** `w`'s code points run through [[Kernels.Dp]] against `q` one
+    * [[Kernels.Dp.row]] per code point: the last row.
+    */
+  private def rowsOf(q: String, w: String, maxDist: Int): Array[Int] = {
+    val qc = Kernels.codePoints(q)
+    val dp = new Kernels.Dp(qc, maxDist)
+    var row = Kernels.initRow(qc.length)
+    for ((c, i) <- Kernels.codePoints(w).zipWithIndex) {
+      val next = new Array[Int](qc.length + 1)
+      dp.row(row, next, c, i + 1)
+      row = next
+    }
+    row
+  }
+
+  /** `w` as ONE multi-code-point edge through [[Kernels.Dp.edge]] from the
+    * initial row, never stopping inside it: (last row, its minimum).
+    */
+  private def edgeOf(q: String, w: String, maxDist: Int): (Array[Int], Int) = {
+    val qc = Kernels.codePoints(q)
+    val es = Kernels.codePoints(w)
+    val out, tmp = new Array[Int](qc.length + 1)
+    val mn = new Kernels.Dp(qc, maxDist)
+      .edge(Kernels.initRow(qc.length), es, 0, es.length, 0, maxDist + 1, out, tmp)
+    (out, mn)
+  }
+
+  test("Dp.row matches full-matrix levenshtein char by char") {
     val cases = Seq(("kitten", "sitting"), ("dog", "drop"), ("", "abc"), ("abc", ""), ("abc", "abc"))
     for ((q, w) <- cases) {
-      var row = Kernels.initRow(q.length)
-      var consumed = 0
-      for (c <- w) {
-        val (r2, _) = Kernels.extendRow(q, c.toString, row, consumed, 100)
-        row = r2; consumed += 1
-      }
-      assert(Kernels.finalDistance(row) == lev(w, q), s"q=$q w=$w")
+      val row = rowsOf(q, w, 100)
+      assert(row(row.length - 1) == lev(w, q), s"q=$q w=$w")
     }
   }
 
-  test("extendRow over a multi-char edge == char-by-char") {
+  test("Dp.edge over a multi-char edge == char-by-char") {
     val q = "dogma"
-    val whole = Kernels.extendRow(q, "drops", Kernels.initRow(q.length), 0, 100)
-    var row = Kernels.initRow(q.length); var c = 0
-    for (ch <- "drops") { row = Kernels.extendRow(q, ch.toString, row, c, 100)._1; c += 1 }
+    val whole = edgeOf(q, "drops", 100)
+    val row = rowsOf(q, "drops", 100)
     assert(whole._1.toSeq == row.toSeq)
     assert(whole._2 == row.min)
   }
 
-  test("banded extendRow: saturated cells never hide a true match") {
+  test("banded Dp.edge: saturated cells never hide a true match") {
     // band k=1 over a long query: exact distances <= k survive; cells
-    // outside the band report k+1 (saturation), never an undercount
+    // outside the band read as k+1 (saturation), never an undercount
     val q = "abcdefgh"
     for (k <- 0 to 3; w <- Seq("abcdefgh", "abcdefg", "abcdefghx", "abxdefgh", "zzzzzzzz")) {
-      val (row, mn) = Kernels.extendRow(q, w, Kernels.initRow(q.length), 0, k)
-      val d = Kernels.finalDistance(row)
+      val (row, mn) = edgeOf(q, w, k)
+      // the last cell is only written inside the band (searchIndex's rule)
+      val d = if (math.abs(w.length - q.length) <= k) row(q.length) else k + 1
       val truth = lev(w, q)
       if (truth <= k) assert(d == truth, s"k=$k w=$w")
       else assert(d > k, s"k=$k w=$w")

@@ -22,12 +22,15 @@ class PrefixTreeSpec extends SparkSpec {
     df.select("query_string", "node", "final_distance")
       .as[(String, String, Int)].collect().toSet
 
-  /** `body` once per side of the queryJoin chain guard: broadcast hash
-    * join, then the parent_id-partitioned join (the path of a trie too
-    * big to broadcast).
+  /** A query result as its row multiset, `n_occurrences` included. */
+  private def rows4(df: org.apache.spark.sql.DataFrame): Seq[(String, String, Int, Long)] =
+    df.as[(String, String, Int, Long)].collect().toSeq.sorted
+
+  /** `e` and its causes' messages: a task's error reaches the driver
+    * wrapped in a SparkException.
     */
-  private def bothChains[A](body: => A): Seq[A] =
-    Seq(true, false).map(side => SizeGuard.forcing(SizeGuard.TrieChain -> side)(body))
+  private def messages(e: Throwable): Seq[String] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(x => String.valueOf(x.getMessage)).toSeq
 
   private def brute(queries: Seq[String], k: Int): Set[(String, String, Int)] = {
     val words = dictDf
@@ -64,12 +67,11 @@ class PrefixTreeSpec extends SparkSpec {
     val queries = Seq("dog", "kaminski").toDF("q")
     val expect = rows3(Query.queryBroadcast(queries, "q", trie, 1))
     val viaBroadcast = rows3(Query.queryBatch(queries, "q", trie, 1)) // trie << the index limit
-    // forced join mode, with either chain join (an index over its limit
-    // implies a trie over the chain broadcast's limit in production)
-    val viaJoin = bothChains(SizeGuard.forcing(SizeGuard.TrieIndex -> false) {
+    // forced partition-local mode: the path of an index over its limit
+    val viaJoin = SizeGuard.forcing(SizeGuard.TrieIndex -> false) {
       rows3(Query.queryBatch(queries, "q", trie, 1))
-    })
-    assert(viaBroadcast == expect && viaJoin.forall(_ == expect))
+    }
+    assert(viaBroadcast == expect && viaJoin == expect)
   }
 
   test("broadcast sizing is byte-based: wide payloads route to join mode at equal row count") {
@@ -151,9 +153,9 @@ class PrefixTreeSpec extends SparkSpec {
     val queries = Seq("dog", "doer", "kaminski", "ab").toDF("q")
     val a = Query.queryBroadcast(queries, "q", trie, 2)
       .as[(String, String, Int, Long)].collect().toSet
-    val b = bothChains(Query.queryJoin(queries, "q", trie, 2)
-      .as[(String, String, Int, Long)].collect().toSet)
-    assert(b.forall(_ == a)) // including the n_occurrences column
+    val b = Query.queryJoin(queries, "q", trie, 2)
+      .as[(String, String, Int, Long)].collect().toSet
+    assert(b == a) // including the n_occurrences column
   }
 
   test("queryOne (serving path) without Spark jobs") {
@@ -164,14 +166,14 @@ class PrefixTreeSpec extends SparkSpec {
 
   test("join mode matches broadcast mode on the real name corpus") {
     // the 100 TB path (trie too big to collect) on realistic data: deep
-    // shared prefixes, multi-iteration driver loop
+    // shared prefixes, one group per create partition
     val cust = spark.read.parquet("/root/testdata/sf0.001/customer.parquet")
     val t = PrefixTree.create(cust, "c_name", prefixLen = 12)
     val q = cust.limit(12)
       .select(expr("concat(substr(c_name,1,length(c_name)-1),'X')").as("q"))
     val a = rows3(Query.queryBroadcast(q, "q", t, 1))
-    val b = bothChains(rows3(Query.queryJoin(q, "q", t, 1)))
-    assert(b.forall(_ == a) && a.nonEmpty)
+    val b = rows3(Query.queryJoin(q, "q", t, 1))
+    assert(b == a && a.nonEmpty)
   }
 
   test("branch-and-bound visits far fewer nodes than brute-force comparisons") {
@@ -194,34 +196,11 @@ class PrefixTreeSpec extends SparkSpec {
       s"trie ${cellsAcc.value} cells vs brute $bruteCells - pruned DP should cut work substantially")
   }
 
-  test("level-1 frontier join keeps its equi-key: hash join, never nested-loop") {
-    // a foldable root node_id would be constant-propagated out of the
-    // join condition, downgrading level 1 to a BroadcastNestedLoopJoin
-    // that evaluates the window predicates against EVERY root edge -
-    // build the init frontier the way queryJoin does and pin the plan
-    val frontier0 = Seq("dog", "doors").toDF("q")
-      .select($"q".cast("string").as("query_string"))
-      .withColumn("qlen", length($"query_string"))
-      .withColumn("node_id", pmod($"qlen", lit(1)).cast("long"))
-      .withColumn("state", concat(sequence(lit(0), length($"query_string")), array(lit(0))))
-      .withColumn("depth", lit(0))
-    val joined = Query.frontierJoin(frontier0, broadcast(trie.toDF()), maxDist = 1)
-    joined.collect()
-    val plan = joined.queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"),
-      s"level-1 must plan as a hash join:\n${plan.take(1500)}")
-    assert(!plan.contains("BroadcastNestedLoopJoin"),
-      s"level-1 must not fall back to a nested loop:\n${plan.take(1500)}")
-  }
-
   test("deep-trie chain compiles: no 64KB codegen overflow (fallback disabled)") {
-    // long words with an early branch force the maximum unrolled chain;
-    // with spark.sql.codegen.fallback=false a Janino "code grows beyond
-    // 64 KB" failure THROWS instead of silently running the whole
-    // traversal interpreted - which is exactly what an unfenced chain
-    // did at ~8 fused levels
-    // a branch at EVERY depth defeats path compression, so each level
-    // is its own 1-char edge and the chain unrolls to the 24-level cap
+    // a branch at EVERY depth defeats path compression, so each level is
+    // its own 1-char edge: a trie deeper than 24 levels. With
+    // spark.sql.codegen.fallback=false a Janino "code grows beyond 64 KB"
+    // failure THROWS instead of silently running interpreted
     val words = (2 to 28).flatMap(l => Seq("x" * l, "x" * (l - 1) + "y")).distinct
     val deep = PrefixTree.create(words.toDF("w"), "w", prefixLen = 1, numPartitions = 2)
     val queries = Seq("x" * 24 + "Z", "x" * 9 + "yy").toDF("q")
@@ -229,14 +208,14 @@ class PrefixTreeSpec extends SparkSpec {
     spark.conf.set("spark.sql.codegen.fallback", "false")
     try {
       // queryJoin directly: queryBatch would route this tiny trie to the
-      // collected-DFS broadcast path, which has no codegen chain at all
-      val got = bothChains(rows3(Query.queryJoin(queries, "q", deep, 2)))
+      // broadcast path
+      val got = rows3(Query.queryJoin(queries, "q", deep, 2))
       val expect = queries
         .crossJoin(words.toDF("word"))
         .withColumn("d", levenshtein($"q", $"word"))
         .filter($"d" <= 2)
         .as[(String, String, Int)].collect().toSet
-      assert(got.forall(_ == expect))
+      assert(got == expect)
     } finally prev match {
       case Some(v) => spark.conf.set("spark.sql.codegen.fallback", v)
       case None => spark.conf.unset("spark.sql.codegen.fallback")
@@ -254,7 +233,11 @@ class PrefixTreeSpec extends SparkSpec {
     assert(a == b && a == c)
   }
 
-  test("writeIndexedTable: bucketed trie joins on parent_id with no trie-side shuffle") {
+  test("writeIndexedTable: bucketed trie groups on compute_node with no trie-side shuffle") {
+    import org.apache.spark.sql.execution.{CoGroupExec, FileSourceScanExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    object plans extends AdaptiveSparkPlanHelper
     PrefixTree.writeIndexedTable(trie, "pt_spec_bucketed", buckets = 4)
     try {
       val back = PrefixTree.readTable(spark, "pt_spec_bucketed")
@@ -262,17 +245,18 @@ class PrefixTreeSpec extends SparkSpec {
       val queries = Seq("dog", "kaminski", "ab").toDF("q")
       val a = rows3(Query.queryBroadcast(queries, "q", trie, 2))
       val b = rows3(Query.queryBroadcast(queries, "q", back, 2))
-      assert(a == b)
-      // the BUILDINDEX point: an equi-join on parent_id reads buckets
-      // directly - only the probe side shuffles (disable broadcast so
-      // the join strategy is partitioning-sensitive)
-      withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-        val frontier = Seq(0L, 1L).toDF("node_id")
-        val plan = frontier.join(back.toDF(), $"node_id" === $"parent_id")
-          .queryExecution.executedPlan.toString
-        val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).length
-        assert(exchanges == 1, s"bucketed side must not re-shuffle; plan:\n$plan")
-      }
+      val local = Query.queryJoin(queries, "q", back, 2)
+      assert(a == b && rows3(local) == a)
+      // the BUILDINDEX point: the partition-local search groups the trie
+      // by reading its buckets - no exchange above the trie-side scan
+      val plan = local.queryExecution.executedPlan
+      val cogroup = plans.collect(plan) { case c: CoGroupExec => c }
+      assert(cogroup.length == 1, s"one cogroup expected; plan:\n$plan")
+      val trieSide = cogroup.head.left
+      assert(plans.collect(trieSide) { case s: FileSourceScanExec if s.bucketedScan => s }.length == 1,
+        s"trie side must scan the buckets; plan:\n$plan")
+      assert(plans.collect(trieSide) { case e: ShuffleExchangeLike => e }.isEmpty,
+        s"trie side must not re-shuffle; plan:\n$plan")
     } finally spark.sql("DROP TABLE IF EXISTS pt_spec_bucketed")
   }
 
@@ -281,34 +265,6 @@ class PrefixTreeSpec extends SparkSpec {
     val queries = Seq("dog", "doer", "kaminski", "ab")
     val got = rows3(Query.queryBroadcast(queries.toDF("q"), "q", t, 2))
     assert(got == brute(queries, 2))
-  }
-
-  test("join mode: per-iteration join shuffles only the frontier side") {
-    // the 100 TB property behind queryJoin's one-time trie repartition:
-    // each loop iteration's equi-join must reuse the trie's cached
-    // hash partitioning on parent_id and exchange ONLY the frontier
-    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-      val parts = spark.sessionState.conf.numShufflePartitions
-      val t = trie.toDF().repartition(parts, $"parent_id")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        t.count() // materialize: an unexecuted AQE cache plan reports
-        // UnknownPartitioning and would force a defensive re-shuffle
-        val frontier = Seq(("dog", 0L)).toDF("query_string", "node_id")
-          .withColumn("qlen", length($"query_string"))
-          .withColumn("state",
-            concat(sequence(lit(0), length($"query_string")), array(lit(0))))
-          .withColumn("depth", lit(0))
-        val plan = Query.frontierJoin(frontier, t, 2)
-          .queryExecution.executedPlan.toString
-        // count only exchanges ABOVE the cache scan: the cached subtree's
-        // exchanges ran once at materialization, not per iteration
-        val perIteration = plan.split("InMemoryRelation")(0)
-        val exchanges = "Exchange hashpartitioning".r.findAllIn(perIteration).length
-        assert(exchanges == 1,
-          s"trie side must not re-shuffle per iteration; plan:\n$plan")
-      } finally t.unpersist()
-    }
   }
 
   test("withPath: the traversal path spells the matched word exactly") {
@@ -414,5 +370,135 @@ class PrefixTreeSpec extends SparkSpec {
       .as[(String, String, Int, Long)].collect().toSet
     assert(bc == Set(("dog", "dog", 0, 3L), ("dog", "dot", 1, 1L)))
     assert(jm == bc)
+  }
+
+  test("parity: brute force == queryBroadcast == queryJoin == queryBatch above the guard (generated)") {
+    // forests of 2-6 partitions at prefixLen 0-3 over shared stems and
+    // astral code points, duplicate words and query rows, null queries;
+    // case 0 is an empty trie, case 1 a trie deeper than 24 levels,
+    // case 2 an empty query set
+    val rnd = new scala.util.Random(6)
+    val g = new String(Character.toChars(0x1F600))
+    val letters = Vector("a", "b", "c", "o", "s", "\u00e9", g)
+    val stems = Vector("", "do", "kamin", "bay", "co", g + "x")
+    def word(): String =
+      stems(rnd.nextInt(stems.length)) + Seq.fill(1 + rnd.nextInt(4))(letters(rnd.nextInt(letters.length))).mkString
+    def edit(w: String): String = {
+      val cps = w.codePoints().toArray.map(c => new String(Character.toChars(c))).toBuffer
+      for (_ <- 0 until rnd.nextInt(3)) {
+        val i = rnd.nextInt(cps.length + 1)
+        val l = letters(rnd.nextInt(letters.length))
+        rnd.nextInt(3) match {
+          case 0 => cps.insert(i, l)
+          case 1 if i < cps.length => cps.remove(i)
+          case _ => if (i < cps.length) cps(i) = l else cps += l
+        }
+      }
+      cps.mkString
+    }
+    val deepWords = (2 to 28).flatMap(l => Seq("x" * l, "x" * (l - 1) + "y"))
+    for (c <- 0 until 22) {
+      val corpus: Seq[String] = c match {
+        case 0 => Nil
+        case 1 => deepWords ++ deepWords.take(5)
+        case _ =>
+          val ws = Seq.fill(20 + rnd.nextInt(30))(word())
+          ws ++ Seq.fill(8)(ws(rnd.nextInt(ws.length)))
+      }
+      val queries: Seq[Option[String]] = c match {
+        case 2 => Nil
+        case 1 => Seq(Some("x" * 24 + "Z"), Some("x" * 9 + "yy"), Some("x" * 27 + "y"), None)
+        case _ =>
+          val pool = if (corpus.isEmpty) Seq(word()) else corpus
+          val qs = pool(rnd.nextInt(pool.length)) +:
+            Seq.fill(7)(if (rnd.nextBoolean()) edit(pool(rnd.nextInt(pool.length))) else word())
+          (qs ++ qs.take(2)).map(Some(_)) ++ Seq(None, None)
+      }
+      val parts = 2 + c % 5
+      val prefixLen = c % 4
+      val k = c % 3 + (if (c == 1) 2 else 0)
+      val t = PrefixTree.create(corpus.toDF("w"), "w", prefixLen, parts)
+      val qdf = queries.toDF("q")
+      val counts = corpus.groupBy(identity).map { case (w, ws) => w -> ws.length.toLong }
+      val brute = queries.flatten.flatMap { q =>
+        counts.toSeq.map { case (w, n) => (q, w, BruteLev.lev(q, w), n) }.filter(_._3 <= k)
+      }.sorted
+      val ctx = s"case $c (parts=$parts prefixLen=$prefixLen k=$k)"
+      assert(rows4(Query.queryBroadcast(qdf, "q", t, k)) == brute, ctx)
+      assert(rows4(Query.queryJoin(qdf, "q", t, k)) == brute, ctx)
+      assert(SizeGuard.forcing(SizeGuard.TrieIndex -> false) {
+        rows4(Query.queryBatch(qdf, "q", t, k))
+      } == brute, ctx)
+      if (c > 2) assert(brute.nonEmpty, s"$ctx: a generated case should match something")
+    }
+  }
+
+  test("partition-local search: a group over the byte limit fails, naming its size") {
+    val rows = trie.collect()
+    val group = rows.filter(_.compute_node == rows.head.compute_node)
+    val g = group.head.compute_node
+    val bytes = group.length * 128L + 2L * group.map(_.node.length.toLong).sum
+    // at exactly its estimate the group compiles
+    assert(Query.compileGroup(g, group.iterator, bytes).flat.nodes == group.length)
+    val e = intercept[IllegalStateException](Query.compileGroup(g, group.iterator, bytes - 1))
+    for (part <- Seq(s"compute_node=$g", s"${group.length} nodes", s"$bytes B", "prefixLen", "numPartitions"))
+      assert(e.getMessage.contains(part), e.getMessage)
+  }
+
+  test("partition-local search: a subtree crossing compute_node values fails, never answers partially") {
+    // one internal node moved to another group: its children's parent is
+    // then missing from theirs (and its own parent from its new group)
+    val rows = trie.collect()
+    val moved = rows.find(n => !n.is_word && n.parent_id != 0L).get
+    val other = rows.map(_.compute_node).find(_ != moved.compute_node).get
+    val broken = rows.map(n => if (n.id == moved.id) n.copy(compute_node = other) else n).toSeq.toDS()
+    val e = intercept[Exception](Query.queryJoin(Seq("dog").toDF("q"), "q", broken, 2).collect())
+    assert(messages(e).exists(_.contains("is not in the index")), messages(e).mkString("\n"))
+  }
+
+  test("null query strings match nothing on both sides of the index guard and through fuzzyTopK") {
+    val q = Seq(Some("dog"), None, Some("kaminski"), None).toDF("q")
+    val nonNull = Seq("dog", "kaminski").toDF("q")
+    val expect = rows4(Query.queryBroadcast(nonNull, "q", trie, 1))
+    val topK = Query.fuzzyTopK(nonNull, "q", trie, 1, 2).as[(String, String, Int, Int)].collect().toSet
+    assert(expect.nonEmpty && topK.nonEmpty)
+    for (small <- Seq(true, false)) SizeGuard.forcing(SizeGuard.TrieIndex -> small) {
+      assert(rows4(Query.queryBatch(q, "q", trie, 1)) == expect, s"small=$small")
+      assert(Query.fuzzyTopK(q, "q", trie, 1, 2).as[(String, String, Int, Int)].collect().toSet == topK,
+        s"small=$small")
+    }
+    assert(rows4(Query.queryBroadcast(q, "q", trie, 1)) == expect)
+    assert(rows4(Query.queryJoin(q, "q", trie, 1)) == expect)
+  }
+
+  test("readTable: a malformed stats property fails; a temp view reads without stats") {
+    PrefixTree.writeIndexedTable(trie, "pt_spec_badstats", buckets = 2)
+    try {
+      spark.sql("ALTER TABLE pt_spec_badstats SET TBLPROPERTIES ('graft.trie.stats' = '1,2,3')")
+      val e = intercept[IllegalArgumentException](PrefixTree.readTable(spark, "pt_spec_badstats"))
+      assert(e.getMessage.contains("malformed trie stats"), e.getMessage)
+      // no catalog entry at all is not an error: stats compute on first use
+      trie.toDF().createOrReplaceTempView("pt_spec_view")
+      val v = PrefixTree.readTable(spark, "pt_spec_view")
+      assert(Query.trieStats(v) == Query.computeTrieStats(trie))
+    } finally {
+      spark.sql("DROP TABLE IF EXISTS pt_spec_badstats")
+      spark.catalog.dropTempView("pt_spec_view")
+    }
+  }
+
+  test("an older writer's 4-field stats sidecar reads with zero sizing jobs") {
+    import org.apache.hadoop.fs.Path
+    val dir = java.nio.file.Files.createTempDirectory("pt_sidecar4").toString
+    PrefixTree.writeIndexed(trie, dir)
+    val st = Query.computeTrieStats(spark.read.parquet(dir).as[PTNode])
+    // the previous sidecar format: nodes,chars,max_word_len,min_top_edge
+    val file = new Path(dir, "_graft_stats")
+    val out = file.getFileSystem(spark.sessionState.newHadoopConf()).create(file, true)
+    try out.write(s"${st.nodes},${st.chars},9,1".getBytes("UTF-8")) finally out.close()
+    val (_, plainJobs) = countJobs(spark.read.parquet(dir))
+    val (got, jobs) = countJobs(Query.trieStats(PrefixTree.read(spark, dir)))
+    assert(jobs == plainJobs, s"read + trieStats ran $jobs jobs, a plain read $plainJobs")
+    assert(got == TrieStats(st.nodes, st.chars))
   }
 }
