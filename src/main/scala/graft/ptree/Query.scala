@@ -247,8 +247,10 @@ object Query {
       .toDF("query_string", "node", "final_distance", "n_occurrences")
   }
 
-  /** `queries`' `col` as the non-null strings both modes search. */
-  private def queryStrings(queries: DataFrame, col: String): DataFrame =
+  /** `queries`' `col` as the non-null strings both batch modes and
+    * `StreamOps.streamFuzzyMatch` search.
+    */
+  private[graft] def queryStrings(queries: DataFrame, col: String): DataFrame =
     queries.select(column(col).cast(StringType).as("query_string"))
       .filter(column("query_string").isNotNull)
 

@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import graft.ops.OpsUtil
 
 /** Structured-Streaming operators over the `events` shape
   * (event_id, ts, user_id, event_type, value, props).
@@ -290,8 +291,44 @@ object StreamOps {
       .orderBy(F.col("est").desc, F.col("token").asc)
       .limit(k)
 
+  /** The one micro-batch loop every maintenance operator below runs. For
+    * each non-empty batch, `step(state, batch)` lands the next state, calls
+    * the operator's callback, and returns the next state with the frames
+    * this batch retires (the superseded state, and any scratch handed out
+    * beside the new one); then the frames the PREVIOUS batch retired are
+    * released through [[graft.ops.OpsUtil.unpersistCheckpoint]].
+    *
+    * That one-batch grace is the release contract. Releasing a
+    * `localCheckpoint` destroys its only copy (its lineage is cut), so a
+    * state handed out at batch N stays readable through batch N+1 and is
+    * released after batch N+2's callback: a serving reader gets a full
+    * batch interval to finish or re-resolve through the callback, and
+    * executor storage holds at most 3 state snapshots. Scratch handed out
+    * beside the state is released after batch N+1's callback, so the
+    * callback must consume it - or copy the rows out (collect, write, its
+    * own persist) - before it returns; an async consumer is handed the
+    * copy, never the frame. Scratch used only inside a batch is released
+    * by the step before it returns.
+    */
+  private def maintain[S](stream: DataFrame, initial: S)(
+      step: (S, DataFrame) => (S, Seq[Dataset[_]])): StreamingQuery = {
+    @volatile var state = initial
+    @volatile var graveyard: Seq[Dataset[_]] = Nil
+    stream.writeStream
+      .outputMode("append")
+      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
+        if (!batch.isEmpty) {
+          val (next, retired) = step(state, batch.toDF())
+          state = next
+          graveyard.foreach(OpsUtil.unpersistCheckpoint)
+          graveyard = retired
+        }
+      }
+      .start()
+  }
+
   /** Continuously maintain a prefix-tree index over a stream of strings
-    * (`foreachBatch` + `graft.ptree.PrefixTree.merge`): each micro-batch
+    * (`graft.ptree.PrefixTree.merge` per micro-batch): each micro-batch
     * folds into the running trie via a VOCABULARY-sized rebuild - the
     * trie decomposes losslessly into weighted end-caps, so per-batch
     * cost is O(|vocab| + |batch|) regardless of how much raw corpus the
@@ -310,30 +347,14 @@ object StreamOps {
       initial: Dataset[graft.ptree.PTNode],
       prefixLen: Int = 2,
       numPartitions: Int = 0
-  )(onUpdate: Dataset[graft.ptree.PTNode] => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    @volatile var state = initial.localCheckpoint()
-    // one-batch grace before freeing a superseded trie: unpersisting a
-    // localCheckpoint destroys the ONLY copy (lineage is truncated), so
-    // an eager unpersist would crash serving jobs still reading the trie
-    // handed out by the previous onUpdate. Deferring one batch bounds
-    // executor storage at <= 3 trie snapshots while giving readers a
-    // full batch interval to finish or re-resolve via onUpdate.
-    @volatile var graveyard: Option[Dataset[graft.ptree.PTNode]] = None
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          val prev = state
-          state = graft.ptree.PrefixTree
-            .merge(state, batch.toDF(), col, prefixLen, numPartitions)
-            .localCheckpoint() // eager: materialized before prev is freed
-          onUpdate(state)
-          graveyard.foreach(unpersistCheckpoint)
-          graveyard = Some(prev)
-        }
-      }
-      .start()
-  }
+  )(onUpdate: Dataset[graft.ptree.PTNode] => Unit): StreamingQuery =
+    maintain(stream, initial.localCheckpoint()) { (prev, batch) =>
+      val next = graft.ptree.PrefixTree
+        .merge(prev, batch, col, prefixLen, numPartitions)
+        .localCheckpoint() // eager: never reads prev once prev is released
+      onUpdate(next)
+      (next, Seq(prev))
+    }
 
   /** Streaming maintenance of a PERSISTED prefix-tree index - the
     * reference's full INDEX lifecycle (BUILDINDEX on Thor, serve on
@@ -351,7 +372,8 @@ object StreamOps {
     * `basePath/pong`, so the image handed out by the PREVIOUS onUpdate
     * is never touched by the CURRENT batch's write - readers get a full
     * batch interval to drain before their files are overwritten (the
-    * disk form of [[trieMaintenance]]'s one-batch graveyard grace).
+    * disk form of the one-batch grace `maintain` gives checkpoints; here
+    * the state is the current image's name and nothing is retired).
     *
     * Cold start: seed `basePath/ping` with
     * `PrefixTree.writeIndexed(PrefixTree.create(...), basePath + "/ping")`
@@ -363,23 +385,17 @@ object StreamOps {
       basePath: String,
       prefixLen: Int = 2,
       buckets: Int = 32
-  )(onUpdate: Dataset[graft.ptree.PTNode] => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
+  )(onUpdate: Dataset[graft.ptree.PTNode] => Unit): StreamingQuery = {
     val spark = stream.sparkSession
-    @volatile var cur = "ping"
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          val served = graft.ptree.PrefixTree.read(spark, s"$basePath/$cur")
-          val next = if (cur == "ping") "pong" else "ping"
-          graft.ptree.PrefixTree.writeIndexed(
-            graft.ptree.PrefixTree.merge(served, batch.toDF(), col, prefixLen),
-            s"$basePath/$next", buckets)
-          cur = next
-          onUpdate(graft.ptree.PrefixTree.read(spark, s"$basePath/$cur"))
-        }
-      }
-      .start()
+    maintain(stream, "ping") { (cur, batch) =>
+      val served = graft.ptree.PrefixTree.read(spark, s"$basePath/$cur")
+      val next = if (cur == "ping") "pong" else "ping"
+      graft.ptree.PrefixTree.writeIndexed(
+        graft.ptree.PrefixTree.merge(served, batch, col, prefixLen),
+        s"$basePath/$next", buckets)
+      onUpdate(graft.ptree.PrefixTree.read(spark, s"$basePath/$next"))
+      (next, Nil)
+    }
   }
 
   /** Streaming BM25 index maintenance: fold a stream of documents into
@@ -398,158 +414,125 @@ object StreamOps {
     * joins), so only touched rows re-aggregate and the accumulated
     * state never re-shuffles - its per-batch cost is the sequential
     * localCheckpoint rewrite plus map-side scans for the three derived
-    * aggregates (vocabulary-/doc-sized outputs). Superseded
-    * checkpoints free under the one-batch grace of [[trieMaintenance]]
-    * (readers of the previously-served index get a full batch interval
-    * to drain before its blocks drop).
+    * aggregates (vocabulary-/doc-sized outputs).
     */
   def bm25Maintenance(
       stream: DataFrame,
       idCol: String,
       textCol: String,
       initial: graft.ops.SearchOps.Bm25Index
-  )(onUpdate: graft.ops.SearchOps.Bm25Index => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
+  )(onUpdate: graft.ops.SearchOps.Bm25Index => Unit): StreamingQuery = {
     import graft.ops.SearchOps.Bm25Index
-    import org.apache.spark.sql.functions._
-    def pin(i: Bm25Index): Bm25Index =
-      Bm25Index(i.tf.localCheckpoint(), i.dl.localCheckpoint(),
-        i.dfT.localCheckpoint(), i.stats.localCheckpoint())
-    @volatile var state = pin(initial)
-    @volatile var graveyard: Option[Bm25Index] = None
-    def free(i: Bm25Index): Unit =
-      Seq(i.tf, i.dl, i.dfT, i.stats).foreach(unpersistCheckpoint)
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          val delta = graft.ops.SearchOps.bm25Build(batch.toDF(), idCol, textCol)
-          val prev = state
-          // tf is the ground truth; dl/df/stats derive from the MERGED
-          // tf (an additive df merge would count a re-appearing doc
-          // twice for terms it already contained). The merge splits on
-          // the delta's keys so only TOUCHED rows re-aggregate: the
-          // untouched bulk of the state streams through a map-side
-          // broadcast anti join, never a state-wide shuffle. Checkpoint
-          // before deriving so the three aggregates read the
-          // materialized table; the result equals bm25Build over the
-          // union-of-all-batches corpus exactly.
-          val dtf = delta.tf.localCheckpoint() // batch-sized; read 3x below
-          val dKeys = dtf.select("did", "term")
-          val mergedTf = prev.tf
-            .join(broadcast(dKeys), Seq("did", "term"), "left_anti")
+    val pinned = Bm25Index(initial.tf.localCheckpoint(), initial.dl.localCheckpoint(),
+      initial.dfT.localCheckpoint(), initial.stats.localCheckpoint())
+    maintain(stream, pinned) { (prev, batch) =>
+      val delta = graft.ops.SearchOps.bm25Build(batch, idCol, textCol)
+      // tf is the ground truth; dl/df/stats derive from the MERGED
+      // tf (an additive df merge would count a re-appearing doc
+      // twice for terms it already contained). The merge splits on
+      // the delta's keys so only TOUCHED rows re-aggregate: the
+      // untouched bulk of the state streams through a map-side
+      // broadcast anti join, never a state-wide shuffle. Checkpoint
+      // before deriving so the three aggregates read the
+      // materialized table; the result equals bm25Build over the
+      // union-of-all-batches corpus exactly.
+      val dtf = delta.tf.localCheckpoint() // batch-sized; read 3x below
+      val dKeys = dtf.select("did", "term")
+      val mergedTf = prev.tf
+        .join(broadcast(dKeys), Seq("did", "term"), "left_anti")
+        .select("did", "term", "tf")
+        .union(
+          prev.tf.join(broadcast(dKeys), Seq("did", "term"), "left_semi")
             .select("did", "term", "tf")
-            .union(
-              prev.tf.join(broadcast(dKeys), Seq("did", "term"), "left_semi")
-                .select("did", "term", "tf")
-                .union(dtf.select("did", "term", "tf"))
-                .groupBy("did", "term").agg(sum("tf").as("tf")))
-            .localCheckpoint()
-          val derived = graft.ops.SearchOps.statsFromTf(mergedTf)
-          state = Bm25Index(mergedTf, derived.dl.localCheckpoint(),
-            derived.dfT.localCheckpoint(), derived.stats.localCheckpoint())
-          unpersistCheckpoint(dtf) // scratch: fully folded into mergedTf
-          onUpdate(state)
-          graveyard.foreach(free)
-          graveyard = Some(prev)
-        }
-      }
-      .start()
+            .union(dtf.select("did", "term", "tf"))
+            .groupBy("did", "term").agg(sum("tf").as("tf")))
+        .localCheckpoint()
+      val derived = graft.ops.SearchOps.statsFromTf(mergedTf)
+      val next = Bm25Index(mergedTf, derived.dl.localCheckpoint(),
+        derived.dfT.localCheckpoint(), derived.stats.localCheckpoint())
+      OpsUtil.unpersistCheckpoint(dtf) // scratch: fully folded into mergedTf
+      onUpdate(next)
+      (next, Seq(prev.tf, prev.dl, prev.dfT, prev.stats))
+    }
   }
 
   /** Streaming trigram-index maintenance: fold a stream of documents
     * into the inverted posting table served to
-    * [[graft.ops.SearchOps.substringSearch]] - the third index
-    * lifecycle beside [[trieMaintenance]] and [[bm25Maintenance]].
-    * Postings are DISTINCT (gram, id) pairs, so the merge is a
-    * union + distinct: appends add their postings, and a re-appearing
-    * doc id contributes the UNION of its texts' gram sets (not the
-    * grams spanning a concatenation boundary - posting tables are
-    * sets over fragments, and the distinct also protects
-    * substringSearch's hit-count intersection, which requires one
-    * posting per (gram, id)). Same checkpoint/graveyard discipline as
-    * the other two index lifecycles.
+    * [[graft.ops.SearchOps.substringSearch]]. Postings are DISTINCT
+    * (gram, id) pairs, so the merge is a union + distinct: appends add
+    * their postings, and a re-appearing doc id contributes the UNION of
+    * its texts' gram sets (not the grams spanning a concatenation
+    * boundary - posting tables are sets over fragments, and the distinct
+    * also protects substringSearch's hit-count intersection, which
+    * requires one posting per (gram, id)).
     */
   def trigramMaintenance(
       stream: DataFrame,
       idCol: String,
       textCol: String,
       initial: DataFrame // (gram, id) as produced by SearchOps.trigramIndex
-  )(onUpdate: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    @volatile var state = initial.localCheckpoint()
-    @volatile var graveyard: Option[DataFrame] = None
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          // delta dedup is batch-sized; the state-vs-delta dedup is a
-          // broadcast anti join on the posting pair, so the accumulated
-          // state STREAMS map-side every batch instead of re-shuffling
-          // for a batch-sized delta (result is exactly prev UNION delta)
-          val delta = graft.ops.SearchOps
-            .trigramIndex(batch.toDF(), idCol, textCol).distinct()
-          val prev = state
-          state = prev
-            .join(broadcast(delta), Seq("gram", "id"), "left_anti")
-            .select("id", "gram") // pin position-based union alignment
-            .union(delta.select("id", "gram"))
-            .localCheckpoint()
-          onUpdate(state)
-          graveyard.foreach(unpersistCheckpoint)
-          graveyard = Some(prev)
-        }
-      }
-      .start()
-  }
+  )(onUpdate: DataFrame => Unit): StreamingQuery =
+    maintain(stream, initial.localCheckpoint()) { (prev, batch) =>
+      // delta dedup is batch-sized; the state-vs-delta dedup is a
+      // broadcast anti join on the posting pair, so the accumulated
+      // state STREAMS map-side every batch instead of re-shuffling
+      // for a batch-sized delta (result is exactly prev UNION delta)
+      val delta = graft.ops.SearchOps.trigramIndex(batch, idCol, textCol).distinct()
+      val next = prev
+        .join(broadcast(delta), Seq("gram", "id"), "left_anti")
+        .select("id", "gram") // pin position-based union alignment
+        .union(delta.select("id", "gram"))
+        .localCheckpoint()
+      onUpdate(next)
+      (next, Seq(prev))
+    }
 
   /** Streaming IVF maintenance: fold a stream of (id, vector) rows into
-    * the served inverted-lists table - continuous embedding ingestion,
-    * the fourth index lifecycle beside trie / BM25 / trigram. The
-    * centroid matrix is FROZEN at the initial index (the persisted-IVF
-    * contract: centroids define an index version; re-clustering is a
-    * rebuild, not maintenance), so each batch's assignment is the same
-    * pure per-row expression the batch build uses and the maintained
-    * lists are bit-identical to assigning the merged corpus once.
-    * Re-appearing ids are UPSERTS: the new vector replaces the old
-    * (anti-join on the batch's ids, then append - a vector is one
-    * entity's current embedding, not an accumulating count). Duplicate
-    * ids WITHIN one batch resolve deterministically to the greatest
-    * vector in array order before assignment - micro-batches carry no
-    * row order, so "latest in batch" does not exist; callers that need
-    * true latest-wins order their stream upstream (e.g.
-    * dropDuplicatesWithinWatermark on a version column).
+    * the served inverted lists - continuous embedding ingestion. The
+    * centroid quantizer is FROZEN at the initial index (trained offline
+    * by [[graft.ops.SimilarityOps.ivfBuild]]; re-clustering is a rebuild,
+    * not maintenance - the standard IVF serving contract), so each
+    * batch's assignment is the same pure per-row expression the batch
+    * build uses. Re-appearing ids are UPSERTS: the new vector replaces
+    * the old (prior rows for the batch's ids are anti-joined out, then
+    * the batch is appended - a vector is one entity's current embedding,
+    * not an accumulating count), so redelivery cannot double-insert.
+    * Duplicate ids WITHIN one batch resolve deterministically to the
+    * greatest vector in array order before assignment - micro-batches
+    * carry no row order, so "latest in batch" does not exist; callers
+    * that need true latest-wins order their stream upstream (e.g.
+    * dropDuplicatesWithinWatermark on a version column). The maintained
+    * lists therefore equal [[graft.ops.SimilarityOps.ivfAssign]] over
+    * the latest version of every id exactly, and
+    * [[graft.ops.SimilarityOps.ivfQuery]] serves top-k off the snapshot
+    * with no corpus access.
+    *
+    * Scale shape: per batch, one scan-speed nearest-centroid projection
+    * (codegen kernel) over batch rows only; the upsert moves batch-id
+    * keys via a BROADCAST anti-join against the (corpus-sized but
+    * narrow) posting frame - the corpus is never re-assigned, never
+    * shuffled.
     */
   def ivfMaintenance(
       stream: DataFrame,
       idCol: String,
       vecCol: String,
       initial: graft.ops.SimilarityOps.IvfIndex
-  )(onUpdate: graft.ops.SimilarityOps.IvfIndex => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.ops.SimilarityOps.IvfIndex
-    @volatile var state = IvfIndex(initial.centroids, initial.lists.localCheckpoint())
-    @volatile var graveyard: Option[DataFrame] = None
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          val one = batch.toDF()
-            .groupBy(idCol).agg(max(F.col(vecCol)).as(vecCol))
-          val delta = graft.ops.SimilarityOps
-            .ivfAssign(one, idCol, vecCol, state.centroids)
-          val prev = state
-          // batch-sized build side broadcast: the state never shuffles,
-          // it streams through a map-side anti join per batch
-          val merged = prev.lists
-            .join(broadcast(delta.select("neighbor_id")), Seq("neighbor_id"), "left_anti")
-            .union(delta)
-            .localCheckpoint()
-          state = IvfIndex(prev.centroids, merged)
-          onUpdate(state)
-          graveyard.foreach(unpersistCheckpoint)
-          graveyard = Some(prev.lists)
-        }
-      }
-      .start()
-  }
+  )(onUpdate: graft.ops.SimilarityOps.IvfIndex => Unit): StreamingQuery =
+    maintain(stream, initial.copy(lists = initial.lists.localCheckpoint())) { (prev, batch) =>
+      val deduped = batch.groupBy(F.col(idCol)).agg(max(F.col(vecCol)).as(vecCol))
+      // assigned once: the anti join's keys and the union read the checkpoint
+      val delta = graft.ops.SimilarityOps
+        .ivfAssign(deduped, idCol, vecCol, prev.centroids)
+        .localCheckpoint()
+      val next = prev.copy(lists = prev.lists
+        .join(broadcast(delta.select("neighbor_id")), Seq("neighbor_id"), "left_anti")
+        .unionByName(delta)
+        .localCheckpoint())
+      OpsUtil.unpersistCheckpoint(delta)
+      onUpdate(next)
+      (next, Seq(prev.lists))
+    }
 
   /** Streaming PQ maintenance: fold a stream of (id, vector) rows into
     * the served codes table. Codebooks are FROZEN at the initial index
@@ -568,73 +551,52 @@ object StreamOps {
       idCol: String,
       vecCol: String,
       initial: graft.ops.SimilarityOps.PqIndex
-  )(onUpdate: graft.ops.SimilarityOps.PqIndex => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.ops.SimilarityOps.PqIndex
-    @volatile var state =
-      PqIndex(initial.codebooks, initial.halfs, initial.codes.localCheckpoint())
-    @volatile var graveyard: Option[DataFrame] = None
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          val one = batch.toDF()
-            .groupBy(idCol).agg(max(F.col(vecCol)).as(vecCol))
-          val delta = graft.ops.SimilarityOps
-            .pqEncodeRows(one, idCol, vecCol, state.codebooks, state.halfs)
-          val prev = state
-          val merged = prev.codes
-            .join(broadcast(delta.select("neighbor_id")), Seq("neighbor_id"), "left_anti")
-            .union(delta)
-            .localCheckpoint()
-          state = PqIndex(prev.codebooks, prev.halfs, merged)
-          onUpdate(state)
-          graveyard.foreach(unpersistCheckpoint)
-          graveyard = Some(prev.codes)
-        }
-      }
-      .start()
-  }
+  )(onUpdate: graft.ops.SimilarityOps.PqIndex => Unit): StreamingQuery =
+    maintain(stream, initial.copy(codes = initial.codes.localCheckpoint())) { (prev, batch) =>
+      val one = batch.groupBy(idCol).agg(max(F.col(vecCol)).as(vecCol))
+      val delta = graft.ops.SimilarityOps
+        .pqEncodeRows(one, idCol, vecCol, prev.codebooks, prev.halfs)
+      val next = prev.copy(codes = prev.codes
+        .join(broadcast(delta.select("neighbor_id")), Seq("neighbor_id"), "left_anti")
+        .union(delta)
+        .localCheckpoint())
+      onUpdate(next)
+      (next, Seq(prev.codes))
+    }
 
   /** Streaming Bloom-filter maintenance: fold a stream of eval-set
-    * documents into the served decontamination filter - the fifth index
-    * lifecycle beside trie / BM25 / trigram / IVF, and the simplest:
-    * Bloom filters are mergeable sketches, so each batch builds its own
-    * bitset (one bounded aggregate job, mBits/8 bytes) and OR-merges
-    * into the state DRIVER-side - `merge(build(A), build(B)) ==
-    * build(A union B)` bit-for-bit, so the maintained filter is
-    * byte-identical to one build over all batches (StreamOpsSpec
-    * parity). No checkpoints or graveyard: the state is a plain byte
-    * array with no lineage, and a corpus probe holds its own immutable
-    * copy of the bits (plan reference object), so superseding the
-    * filter never invalidates an in-flight scan.
+    * documents into the served decontamination filter - the simplest
+    * lifecycle: Bloom filters are mergeable sketches, so each batch
+    * builds its own bitset (one bounded aggregate job, mBits/8 bytes)
+    * and OR-merges into the state DRIVER-side - `merge(build(A),
+    * build(B)) == build(A union B)` bit-for-bit, so the maintained
+    * filter is byte-identical to one build over all batches
+    * (StreamOpsSpec parity). Nothing is checkpointed or retired: the
+    * state is a plain byte array with no lineage, and a corpus probe
+    * holds its own immutable copy of the bits (plan reference object),
+    * so superseding the filter never invalidates an in-flight scan.
     */
   def bloomMaintenance(
       stream: DataFrame,
       textCol: String,
       initial: graft.ops.TextOps.BloomFilter
-  )(onUpdate: graft.ops.TextOps.BloomFilter => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    @volatile var state = initial
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          state = state.merge(graft.ops.TextOps.bloomBuild(
-            batch.toDF(), textCol, state.shingleLen, state.mBits, state.kHashes))
-          onUpdate(state)
-        }
-      }
-      .start()
-  }
+  )(onUpdate: graft.ops.TextOps.BloomFilter => Unit): StreamingQuery =
+    maintain(stream, initial) { (prev, batch) =>
+      val next = prev.merge(graft.ops.TextOps.bloomBuild(
+        batch, textCol, prev.shingleLen, prev.mBits, prev.kHashes))
+      onUpdate(next)
+      (next, Nil)
+    }
 
   /** Streaming maintenance of a persisted MinHash-LSH dedup index
-    * ([[graft.ops.DedupOps.LshIndex]]) - the eighth maintained
-    * lifecycle: fold a document stream into the signature and band
-    * tables served to [[graft.ops.DedupOps.lshProbe]], so every new
-    * crawl batch can be deduped against everything that ever streamed
-    * in. Re-appearing ids UPSERT (their signature and all band
-    * memberships are replaced) - the maintained index equals a
-    * one-shot [[graft.ops.DedupOps.lshBuild]] over the
-    * last-write-wins union of all batches (StreamOpsSpec parity).
+    * ([[graft.ops.DedupOps.LshIndex]]): fold a document stream into the
+    * signature and band tables served to
+    * [[graft.ops.DedupOps.lshProbe]], so every new crawl batch can be
+    * deduped against everything that ever streamed in. Re-appearing ids
+    * UPSERT (their signature and all band memberships are replaced) -
+    * the maintained index equals a one-shot
+    * [[graft.ops.DedupOps.lshBuild]] over the last-write-wins union of
+    * all batches (StreamOpsSpec parity).
     *
     * Scale shape: per batch, one batch-sized signature pass; both
     * merges split on the (broadcast) batch ids, so the untouched bulk
@@ -645,53 +607,37 @@ object StreamOps {
       idCol: String,
       textCol: String,
       initial: graft.ops.DedupOps.LshIndex
-  )(onUpdate: graft.ops.DedupOps.LshIndex => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.ops.DedupOps.LshIndex
-    import org.apache.spark.sql.functions._
-    def pin(i: LshIndex): LshIndex =
-      i.copy(sigs = i.sigs.localCheckpoint(), banded = i.banded.localCheckpoint())
-    @volatile var state = pin(initial)
-    @volatile var graveyard: Option[LshIndex] = None
-    def free(i: LshIndex): Unit =
-      Seq(i.sigs, i.banded).foreach(unpersistCheckpoint)
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          val prev = state
-          // one row per id WITHIN the batch too (an id repeated in a
-          // single micro-batch would otherwise survive twice, breaking
-          // the one-signature-per-id invariant); max(text) is the
-          // deterministic pick - micro-batch rows carry no order
-          val deduped = batch.toDF()
-            .groupBy(col(idCol))
-            .agg(max(col(textCol)).as(textCol))
-          // sign the batch ONCE (checkpoint), then band the checkpointed
-          // signatures - the kernel never runs twice per batch
-          val dSigs = graft.ops.DedupOps.minhashSignatures(deduped, idCol, textCol,
-            prev.numHashes, prev.shingleLen, prev.seed).localCheckpoint()
-          val dBanded = graft.ops.DedupOps.bandSignatures(dSigs, prev.numHashes, prev.bands)
-          val dIds = dSigs.select("id")
-          state = prev.copy(
-            sigs = prev.sigs.join(broadcast(dIds), Seq("id"), "left_anti")
-              .union(dSigs).localCheckpoint(),
-            banded = prev.banded.join(broadcast(dIds), Seq("id"), "left_anti")
-              .union(dBanded).localCheckpoint())
-          unpersistCheckpoint(dSigs)
-          onUpdate(state)
-          graveyard.foreach(free)
-          graveyard = Some(prev)
-        }
-      }
-      .start()
+  )(onUpdate: graft.ops.DedupOps.LshIndex => Unit): StreamingQuery = {
+    val pinned = initial.copy(
+      sigs = initial.sigs.localCheckpoint(), banded = initial.banded.localCheckpoint())
+    maintain(stream, pinned) { (prev, batch) =>
+      // one row per id WITHIN the batch too (an id repeated in a
+      // single micro-batch would otherwise survive twice, breaking
+      // the one-signature-per-id invariant); max(text) is the
+      // deterministic pick - micro-batch rows carry no order
+      val deduped = batch.groupBy(F.col(idCol)).agg(max(F.col(textCol)).as(textCol))
+      // sign the batch ONCE (checkpoint), then band the checkpointed
+      // signatures - the kernel never runs twice per batch
+      val dSigs = graft.ops.DedupOps.minhashSignatures(deduped, idCol, textCol,
+        prev.numHashes, prev.shingleLen, prev.seed).localCheckpoint()
+      val dBanded = graft.ops.DedupOps.bandSignatures(dSigs, prev.numHashes, prev.bands)
+      val dIds = dSigs.select("id")
+      val next = prev.copy(
+        sigs = prev.sigs.join(broadcast(dIds), Seq("id"), "left_anti")
+          .union(dSigs).localCheckpoint(),
+        banded = prev.banded.join(broadcast(dIds), Seq("id"), "left_anti")
+          .union(dBanded).localCheckpoint())
+      OpsUtil.unpersistCheckpoint(dSigs)
+      onUpdate(next)
+      (next, Seq(prev.sigs, prev.banded))
+    }
   }
 
   /** Streaming maintenance of a [[graft.ops.SketchOps.fixedHistogram]]
-    * quantile sketch: fold a value stream into the served counter table
-    * - the seventh maintained index/sketch lifecycle. The cells merge
-    * by PLAIN ADDITION (the bin edges were fixed before any counting),
-    * so the maintained table equals one `fixedHistogram` over the
-    * union of all batches exactly, and
+    * quantile sketch: fold a value stream into the served counter table.
+    * The cells merge by PLAIN ADDITION (the bin edges were fixed before
+    * any counting), so the maintained table equals one `fixedHistogram`
+    * over the union of all batches exactly, and
     * [[graft.ops.SketchOps.histogramQuantiles]] serves percentiles off
     * the latest snapshot with no corpus access at all.
     *
@@ -699,8 +645,7 @@ object StreamOps {
     * cells; the merge re-aggregates state + delta, which is bounded by
     * groups x (bins + 2) CELLS - sketch-sized, not corpus-sized - so
     * unlike the tf/posting merges there is nothing to anti-join-split:
-    * the whole state is smaller than one shuffle block. Superseded
-    * checkpoints free under the one-batch grace of [[trieMaintenance]].
+    * the whole state is smaller than one shuffle block.
     */
   def histogramMaintenance(
       stream: DataFrame,
@@ -710,40 +655,27 @@ object StreamOps {
       hi: Double,
       bins: Int,
       initial: DataFrame
-  )(onUpdate: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.functions._
-    @volatile var state = initial.localCheckpoint()
-    @volatile var graveyard: Option[DataFrame] = None
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          val delta = graft.ops.SketchOps.fixedHistogram(
-            batch.toDF(), valueCol, groupCols, lo, hi, bins)
-          val prev = state
-          // unionByName for the same column-order-robustness reason as
-          // the cms/hll/sample lifecycles: `initial` is caller-supplied,
-          // and a positional union would silently misalign a frame with
-          // the right columns in a different order
-          state = prev.unionByName(delta)
-            .groupBy(groupCols.map(col) :+ col("bin"): _*)
-            .agg(sum("c").as("c"))
-            .localCheckpoint()
-          onUpdate(state)
-          graveyard.foreach(unpersistCheckpoint)
-          graveyard = Some(prev)
-        }
-      }
-      .start()
-  }
+  )(onUpdate: DataFrame => Unit): StreamingQuery =
+    maintain(stream, initial.localCheckpoint()) { (prev, batch) =>
+      val delta = graft.ops.SketchOps.fixedHistogram(batch, valueCol, groupCols, lo, hi, bins)
+      // unionByName, not positional union: `initial` is caller-supplied,
+      // and a frame with the right columns in a different order must
+      // merge by name, not silently misalign the maintained cells (the
+      // same rule holds for every sketch lifecycle below)
+      val next = prev.unionByName(delta)
+        .groupBy(groupCols.map(F.col) :+ F.col("bin"): _*)
+        .agg(sum("c").as("c"))
+        .localCheckpoint()
+      onUpdate(next)
+      (next, Seq(prev))
+    }
 
   /** Streaming maintenance of a [[graft.ops.SketchOps.sampleState]]
-    * rank sketch - the ninth maintained lifecycle: fold a row stream
-    * into the per-group md5 bottom-k sample served to
-    * [[graft.ops.SketchOps.sampleQuantiles]] (via `sampleStateToSketch`),
-    * so an unknown-range, unbounded-domain column has live quantiles
-    * with NO range fixed up front (the histogram lifecycle's one
-    * requirement) and NO corpus retention.
+    * rank sketch: fold a row stream into the per-group md5 bottom-k
+    * sample served to [[graft.ops.SketchOps.sampleQuantiles]] (via
+    * `sampleStateToSketch`), so an unknown-range, unbounded-domain column
+    * has live quantiles with NO range fixed up front (the histogram
+    * lifecycle's one requirement) and NO corpus retention.
     *
     * Min-k-by-hash is associative, so the maintained state equals one
     * `sampleState` over the union of all batches exactly
@@ -752,8 +684,7 @@ object StreamOps {
     *
     * Scale shape: per batch, one batch-sized aggregation to delta
     * entries; the merge re-ranks state + delta, bounded by
-    * groups x k + batch rows - sketch-sized. Superseded checkpoints
-    * free under the one-batch grace of [[trieMaintenance]].
+    * groups x k + batch rows - sketch-sized.
     */
   def sampleMaintenance(
       stream: DataFrame,
@@ -762,40 +693,26 @@ object StreamOps {
       groupCols: Seq[String],
       k: Int,
       initial: DataFrame
-  )(onUpdate: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.expressions.Window
-    @volatile var state = initial.localCheckpoint()
-    @volatile var graveyard: Option[DataFrame] = None
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          val delta = graft.ops.SketchOps.sampleState(
-            batch.toDF(), idCol, valueCol, groupCols, k)
-          val prev = state
-          val g = groupCols.map(col)
-          state = prev.unionByName(delta)
-            .groupBy(g :+ col("h"): _*)
-            .agg(min("v").as("v"))
-            .withColumn("rk",
-              row_number().over(Window.partitionBy(g: _*).orderBy("h")))
-            .filter(col("rk") <= k)
-            .drop("rk")
-            .localCheckpoint()
-          onUpdate(state)
-          graveyard.foreach(unpersistCheckpoint)
-          graveyard = Some(prev)
-        }
-      }
-      .start()
+  )(onUpdate: DataFrame => Unit): StreamingQuery = {
+    val g = groupCols.map(F.col)
+    maintain(stream, initial.localCheckpoint()) { (prev, batch) =>
+      val delta = graft.ops.SketchOps.sampleState(batch, idCol, valueCol, groupCols, k)
+      val next = prev.unionByName(delta)
+        .groupBy(g :+ F.col("h"): _*)
+        .agg(min("v").as("v"))
+        .withColumn("rk", row_number().over(Window.partitionBy(g: _*).orderBy("h")))
+        .filter(F.col("rk") <= k)
+        .drop("rk")
+        .localCheckpoint()
+      onUpdate(next)
+      (next, Seq(prev))
+    }
   }
 
   /** Streaming maintenance of a [[graft.ops.SketchOps.countMinSketch]]
-    * frequency table - the tenth maintained lifecycle: CMS cells merge
-    * by plain addition (fixed hash rows/buckets, like the histogram's
-    * fixed edges), so the maintained table equals one sketch over the
-    * union of all batches exactly and
+    * frequency table: CMS cells merge by plain addition (fixed hash
+    * rows/buckets, like the histogram's fixed edges), so the maintained
+    * table equals one sketch over the union of all batches exactly and
     * [[graft.ops.SketchOps.countMinEstimate]] serves point queries off
     * the latest snapshot. State bounded by depth x width cells.
     */
@@ -805,38 +722,21 @@ object StreamOps {
       depth: Int,
       width: Int,
       initial: DataFrame
-  )(onUpdate: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.functions._
-    @volatile var state = initial.localCheckpoint()
-    @volatile var graveyard: Option[DataFrame] = None
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          val delta = graft.ops.SketchOps.countMinSketch(
-            batch.toDF(), itemCol, depth, width)
-          val prev = state
-          // unionByName, not positional union: a caller-supplied initial
-          // frame with the right columns in a different order must merge
-          // by name, not silently corrupt the maintained cells (same
-          // rule as sampleMaintenance)
-          state = prev.unionByName(delta)
-            .groupBy("row", "bucket")
-            .agg(sum("c").as("c"))
-            .localCheckpoint()
-          onUpdate(state)
-          graveyard.foreach(unpersistCheckpoint)
-          graveyard = Some(prev)
-        }
-      }
-      .start()
-  }
+  )(onUpdate: DataFrame => Unit): StreamingQuery =
+    maintain(stream, initial.localCheckpoint()) { (prev, batch) =>
+      val delta = graft.ops.SketchOps.countMinSketch(batch, itemCol, depth, width)
+      val next = prev.unionByName(delta)
+        .groupBy("row", "bucket")
+        .agg(sum("c").as("c"))
+        .localCheckpoint()
+      onUpdate(next)
+      (next, Seq(prev))
+    }
 
   /** Streaming maintenance of a [[graft.ops.SketchOps.hllRegisters]]
-    * file - the eleventh maintained lifecycle: registers merge by MAX
-    * (associative AND idempotent, so re-delivered rows cannot inflate
-    * the count - the property that makes HLL the distinct-counter for
-    * at-least-once streams), and
+    * file: registers merge by MAX (associative AND idempotent, so
+    * re-delivered rows cannot inflate the count - the property that
+    * makes HLL the distinct-counter for at-least-once streams), and
     * [[graft.ops.SketchOps.hllEstimate]] serves the estimate off the
     * latest file. State bounded by groups x m registers.
     */
@@ -846,79 +746,50 @@ object StreamOps {
       groupCols: Seq[String],
       m: Int,
       initial: DataFrame
-  )(onUpdate: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.functions._
-    @volatile var state = initial.localCheckpoint()
-    @volatile var graveyard: Option[DataFrame] = None
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          val delta = graft.ops.SketchOps.hllRegisters(
-            batch.toDF(), keyCol, groupCols, m)
-          val prev = state
-          // unionByName for the same column-order-robustness reason as
-          // cmsMaintenance/sampleMaintenance
-          state = prev.unionByName(delta)
-            .groupBy(groupCols.map(col) :+ col("reg"): _*)
-            .agg(max("mj").as("mj"))
-            .localCheckpoint()
-          onUpdate(state)
-          graveyard.foreach(unpersistCheckpoint)
-          graveyard = Some(prev)
-        }
-      }
-      .start()
-  }
+  )(onUpdate: DataFrame => Unit): StreamingQuery =
+    maintain(stream, initial.localCheckpoint()) { (prev, batch) =>
+      val delta = graft.ops.SketchOps.hllRegisters(batch, keyCol, groupCols, m)
+      val next = prev.unionByName(delta)
+        .groupBy(groupCols.map(F.col) :+ F.col("reg"): _*)
+        .agg(max("mj").as("mj"))
+        .localCheckpoint()
+      onUpdate(next)
+      (next, Seq(prev))
+    }
 
   /** Streaming maintenance of a [[graft.ops.SketchOps.hdrSketch]]
-    * quantile table - the twelfth maintained lifecycle: log-bucket
-    * cells merge by plain ADDITION (like the CMS counters - fixed
-    * bucket identity, no compaction randomness), so the maintained
-    * table equals one sketch over the union of all batches exactly and
-    * [[graft.ops.SketchOps.hdrQuantiles]] serves tail quantiles off the
-    * latest snapshot. State bounded by groups x (octaves x 32) cells.
+    * quantile table: log-bucket cells merge by plain ADDITION (like the
+    * CMS counters - fixed bucket identity, no compaction randomness), so
+    * the maintained table equals one sketch over the union of all
+    * batches exactly and [[graft.ops.SketchOps.hdrQuantiles]] serves
+    * tail quantiles off the latest snapshot. State bounded by
+    * groups x (octaves x 32) cells.
     */
   def hdrMaintenance(
       stream: DataFrame,
       valueCol: String,
       groupCols: Seq[String],
       initial: DataFrame
-  )(onUpdate: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.functions._
-    @volatile var state = initial.localCheckpoint()
-    @volatile var graveyard: Option[DataFrame] = None
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          val delta = graft.ops.SketchOps.hdrSketch(
-            batch.toDF(), valueCol, groupCols)
-          val prev = state
-          // unionByName for the same column-order-robustness reason as
-          // the other maintenance lifecycles
-          state = prev.unionByName(delta)
-            .groupBy(groupCols.map(col) ++ Seq(col("sgn"), col("code")): _*)
-            .agg(sum("c").as("c"))
-            .localCheckpoint()
-          onUpdate(state)
-          graveyard.foreach(unpersistCheckpoint)
-          graveyard = Some(prev)
-        }
-      }
-      .start()
-  }
+  )(onUpdate: DataFrame => Unit): StreamingQuery =
+    maintain(stream, initial.localCheckpoint()) { (prev, batch) =>
+      val delta = graft.ops.SketchOps.hdrSketch(batch, valueCol, groupCols)
+      val next = prev.unionByName(delta)
+        .groupBy(groupCols.map(F.col) ++ Seq(F.col("sgn"), F.col("code")): _*)
+        .agg(sum("c").as("c"))
+        .localCheckpoint()
+      onUpdate(next)
+      (next, Seq(prev))
+    }
 
   /** Streaming maintenance of a [[graft.ops.WebOps.hostProfile]] crawl
-    * profile - the thirteenth maintained lifecycle, and the one a live
-    * crawler actually needs (domain caps and blocklists are enforced
-    * WHILE pages arrive, not after): host-level partials (page count,
-    * text volume per (domain, host)) merge by plain addition, so the
-    * maintained table equals the one-shot profile of the union of all
-    * batches exactly; the distinct-host fan-out - NOT mergeable as
-    * per-batch distinct counts - is recovered at serve time by
-    * [[graft.ops.WebOps.domainStatsFromProfile]] counting host rows.
-    * State bounded by the crawl frontier (distinct (domain, host)
+    * profile - the one a live crawler actually needs (domain caps and
+    * blocklists are enforced WHILE pages arrive, not after): host-level
+    * partials (page count, text volume per (domain, host)) merge by
+    * plain addition, so the maintained table equals the one-shot profile
+    * of the union of all batches exactly; the distinct-host fan-out -
+    * NOT mergeable as per-batch distinct counts - is recovered at serve
+    * time by [[graft.ops.WebOps.domainStatsFromProfile]] counting host
+    * rows. State bounded by the crawl frontier (distinct (domain, host)
     * pairs), never the page count.
     */
   def domainMaintenance(
@@ -926,35 +797,21 @@ object StreamOps {
       urlCol: String,
       sizeCol: String,
       initial: DataFrame
-  )(onUpdate: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.functions._
-    @volatile var state = initial.localCheckpoint()
-    @volatile var graveyard: Option[DataFrame] = None
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          val delta = graft.ops.WebOps.hostProfile(batch.toDF(), urlCol, sizeCol)
-          val prev = state
-          // unionByName for the same column-order-robustness reason as
-          // cmsMaintenance/sampleMaintenance
-          state = prev.unionByName(delta)
-            .groupBy(col("domain"), col("host"))
-            .agg(sum("n_docs").as("n_docs"), sum("sum_chars").as("sum_chars"))
-            .localCheckpoint()
-          onUpdate(state)
-          graveyard.foreach(unpersistCheckpoint)
-          graveyard = Some(prev)
-        }
-      }
-      .start()
-  }
+  )(onUpdate: DataFrame => Unit): StreamingQuery =
+    maintain(stream, initial.localCheckpoint()) { (prev, batch) =>
+      val delta = graft.ops.WebOps.hostProfile(batch, urlCol, sizeCol)
+      val next = prev.unionByName(delta)
+        .groupBy(F.col("domain"), F.col("host"))
+        .agg(sum("n_docs").as("n_docs"), sum("sum_chars").as("sum_chars"))
+        .localCheckpoint()
+      onUpdate(next)
+      (next, Seq(prev))
+    }
 
-  /** Streaming crawl-frontier maintenance - the fifteenth maintained
-    * lifecycle, closing the web tier's loop: each micro-batch of
-    * DISCOVERED pages has its hrefs resolved against the page URL
-    * ([[graft.ops.WebOps.resolveLinks]] - relative links included),
-    * canonicalized to fetch keys
+  /** Streaming crawl-frontier maintenance, closing the web tier's loop:
+    * each micro-batch of DISCOVERED pages has its hrefs resolved against
+    * the page URL ([[graft.ops.WebOps.resolveLinks]] - relative links
+    * included), canonicalized to fetch keys
     * ([[graft.ops.WebOps.canonicalizeUrl]]), and anti-joined against
     * the maintained SEEN set; only never-seen canonical keys surface
     * as the batch's frontier, and the seen set advances by exactly
@@ -965,67 +822,47 @@ object StreamOps {
     * State is the canonical-URL vocabulary (one string column), never
     * page text; the per-batch work is the resolve/canonicalize
     * projection (scan-shaped) plus one key-equality anti-join against
-    * the state. Same checkpoint-graveyard release discipline as
-    * [[domainMaintenance]].
+    * the state.
     *
     * `onBatch(fresh, seen)` gets the batch's new frontier and the
-    * advanced seen set; both are self-contained checkpoints whose
-    * storage is RELEASED when the next batch lands. The callback must
-    * therefore finish consuming them - or copy the rows out (collect,
-    * write, or its own persist) - BEFORE returning: an async consumer
-    * still reading a handed-off frame after the next batch fails,
-    * because a released LogicalRDD checkpoint cannot recompute its
-    * dropped blocks. An async fetcher should be handed the COPY, not
-    * the frame.
+    * advanced seen set. `fresh` is scratch released when the next batch
+    * lands (`maintain`'s contract): consume or copy it out before
+    * returning.
     */
   def frontierMaintenance(
       stream: DataFrame,
       urlCol: String,
       htmlCol: String,
       initialSeen: DataFrame
-  )(onBatch: (DataFrame, DataFrame) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.functions._
-    @volatile var seen = initialSeen.select(F.col("canonical")).localCheckpoint()
-    @volatile var graveyard: Seq[DataFrame] = Nil
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          val cand = graft.ops.WebOps
-            .resolveLinks(batch.toDF(), urlCol, htmlCol)
-            .select(graft.ops.WebOps.canonicalizeUrl(col("resolved")).as("canonical"))
-            .filter(col("canonical").isNotNull)
-            .distinct()
-          val prev = seen
-          val fresh = cand.join(prev, Seq("canonical"), "left_anti")
-            .localCheckpoint()
-          seen = prev.unionByName(fresh).localCheckpoint()
-          onBatch(fresh, seen)
-          graveyard.foreach(unpersistCheckpoint)
-          graveyard = Seq(prev, fresh)
-        }
-      }
-      .start()
-  }
+  )(onBatch: (DataFrame, DataFrame) => Unit): StreamingQuery =
+    maintain(stream, initialSeen.select(F.col("canonical")).localCheckpoint()) { (prev, batch) =>
+      val cand = graft.ops.WebOps
+        .resolveLinks(batch, urlCol, htmlCol)
+        .select(graft.ops.WebOps.canonicalizeUrl(F.col("resolved")).as("canonical"))
+        .filter(F.col("canonical").isNotNull)
+        .distinct()
+      val fresh = cand.join(prev, Seq("canonical"), "left_anti").localCheckpoint()
+      val seen = prev.unionByName(fresh).localCheckpoint()
+      onBatch(fresh, seen)
+      (seen, Seq(prev, fresh))
+    }
 
-  /** Streaming cross-document LINE dedup - the sixteenth maintained
-    * lifecycle, C4's boilerplate-line cut kept live over a document
-    * stream: each micro-batch's lines compete against the maintained
-    * SEEN-line vocabulary (already-claimed lines lose outright) and
-    * against each other (batch-local first occurrence - smallest
-    * (id, line_no) - wins), short lines never dedup, and the seen set
-    * advances by exactly the batch's newly-claimed winners. Arrival
-    * order IS precedence: streamed over id-ordered batches, the
-    * concatenated cleaned output equals ONE batch
-    * [[graft.ops.TextOps.dedupLines]] over the union (the parity the
-    * spec pins).
+  /** Streaming cross-document LINE dedup - C4's boilerplate-line cut
+    * kept live over a document stream: each micro-batch's lines compete
+    * against the maintained SEEN-line vocabulary (already-claimed lines
+    * lose outright) and against each other (batch-local first
+    * occurrence - smallest (id, line_no) - wins), short lines never
+    * dedup, and the seen set advances by exactly the batch's
+    * newly-claimed winners. Arrival order IS precedence: streamed over
+    * id-ordered batches, the concatenated cleaned output equals ONE
+    * batch [[graft.ops.TextOps.dedupLines]] over the union (the parity
+    * the spec pins).
     *
     * State is the line vocabulary of lines >= minLen chars (never the
     * documents); per-batch work is one line-keyed min aggregate + two
-    * key-equality joins. Same checkpoint-graveyard release discipline
-    * as [[domainMaintenance]]: `onBatch(cleaned, seen)` gets frames
-    * whose storage is released when the NEXT batch lands - consume or
-    * copy out before returning.
+    * key-equality joins. `onBatch(cleaned, seen)`: `cleaned` is scratch
+    * released when the next batch lands (`maintain`'s contract) -
+    * consume or copy it out before returning.
     */
   def lineDedupMaintenance(
       stream: DataFrame,
@@ -1033,28 +870,17 @@ object StreamOps {
       textCol: String,
       initialSeen: DataFrame,
       minLen: Int = 10
-  )(onBatch: (DataFrame, DataFrame) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    @volatile var seen = initialSeen.select(F.col("line")).localCheckpoint()
-    @volatile var graveyard: Seq[DataFrame] = Nil
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          val prev = seen
-          val (cleaned0, fresh) = graft.ops.TextOps.dedupLinesAgainst(
-            batch.toDF(), idCol, textCol, minLen, Some(prev))
-          val cleaned = cleaned0.localCheckpoint()
-          seen = prev.unionByName(fresh).localCheckpoint()
-          onBatch(cleaned, seen)
-          graveyard.foreach(unpersistCheckpoint)
-          graveyard = Seq(prev, cleaned)
-        }
-      }
-      .start()
-  }
+  )(onBatch: (DataFrame, DataFrame) => Unit): StreamingQuery =
+    maintain(stream, initialSeen.select(F.col("line")).localCheckpoint()) { (prev, batch) =>
+      val (cleaned0, fresh) = graft.ops.TextOps.dedupLinesAgainst(
+        batch, idCol, textCol, minLen, Some(prev))
+      val cleaned = cleaned0.localCheckpoint()
+      val seen = prev.unionByName(fresh).localCheckpoint()
+      onBatch(cleaned, seen)
+      (seen, Seq(prev, cleaned))
+    }
 
-  /** Streaming CDX-index maintenance - the seventeenth maintained
-    * lifecycle: the latest-capture-per-SURT view
+  /** Streaming CDX-index maintenance: the latest-capture-per-SURT view
     * ([[graft.sources.Cdx.latestCaptures]]) kept live as new crawl
     * captures stream in, so fetch-list / recrawl decisions
     * ([[graft.ops.WebOps.fetchList]] / `recrawlSchedule`) always join
@@ -1064,37 +890,21 @@ object StreamOps {
     * max-struct aggregate is associative, so streamed batches in any
     * arrival order equal ONE batch latestCaptures over the union (the
     * parity the spec pins). State is one row per surt (frontier-sized,
-    * never capture-history-sized); same checkpoint-graveyard release
-    * discipline as [[lineDedupMaintenance]]: `onBatch(index)` frames
-    * release when the NEXT batch lands - consume or copy out before
-    * returning.
+    * never capture-history-sized).
     */
   def cdxMaintenance(
       stream: DataFrame,
       initialIndex: DataFrame
-  )(onBatch: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    @volatile var index =
-      graft.sources.Cdx.latestCaptures(initialIndex).localCheckpoint()
-    @volatile var graveyard: Seq[DataFrame] = Nil
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          val prev = index
-          index = graft.sources.Cdx
-            .latestCaptures(prev.unionByName(batch.toDF()))
-            .localCheckpoint()
-          onBatch(index)
-          graveyard.foreach(unpersistCheckpoint)
-          graveyard = Seq(prev)
-        }
-      }
-      .start()
-  }
+  )(onBatch: DataFrame => Unit): StreamingQuery =
+    maintain(stream, graft.sources.Cdx.latestCaptures(initialIndex).localCheckpoint()) {
+      (prev, batch) =>
+        val index = graft.sources.Cdx.latestCaptures(prev.unionByName(batch)).localCheckpoint()
+        onBatch(index)
+        (index, Seq(prev))
+    }
 
-  /** Streaming language-mix drift monitoring - the eighteenth
-    * maintained lifecycle, closing the multilingual loop: as document
-    * micro-batches stream in, the TRAINED classifier
+  /** Streaming language-mix drift monitoring, closing the multilingual
+    * loop: as document micro-batches stream in, the TRAINED classifier
     * ([[graft.ops.TextOps.langBin]], one codegen kernel call per row)
     * folds each batch to its 42-cell language histogram, the running
     * histogram accumulates, and every batch emits the PSI of the
@@ -1104,50 +914,34 @@ object StreamOps {
     * trained the mixture weights on". Count sums are associative, so
     * batches in any arrival order equal ONE batch over the union (the
     * parity the spec pins). State is the <= 43-row cell frame, never
-    * document-sized; same checkpoint-graveyard release discipline as
-    * [[lineDedupMaintenance]]: `onBatch(psi, counts)` frames release
-    * when the NEXT batch lands - consume or copy out before returning.
+    * document-sized. `onBatch(psi, counts)`: `psi` is scratch released
+    * when the next batch lands (`maintain`'s contract) - consume or copy
+    * it out before returning.
     */
   def langMixMaintenance(
       stream: DataFrame,
       textCol: String,
       referenceHist: DataFrame
-  )(onBatch: (DataFrame, DataFrame) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
+  )(onBatch: (DataFrame, DataFrame) => Unit): StreamingQuery = {
     val nLangs = graft.ops.TextOps.langProfiles._1.size
     val frozen = referenceHist.select(F.col("bin"), F.col("c")).localCheckpoint()
-    @volatile var counts = frozen.sparkSession
+    val empty = frozen.sparkSession
       .createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
         StructType(Seq(StructField("bin", IntegerType, nullable = false),
           StructField("c", LongType, nullable = false))))
       .localCheckpoint()
-    @volatile var graveyard: Seq[DataFrame] = Nil
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          val prev = counts
-          counts = prev
-            .unionByName(batch.toDF()
-              .select(graft.ops.TextOps.langBin(F.col(textCol)).as("bin"))
-              .groupBy("bin").agg(count(lit(1)).as("c")))
-            .groupBy("bin").agg(sum(F.col("c")).as("c"))
-            .localCheckpoint()
-          val psi = graft.ops.StatOps
-            .psiFromHistograms(frozen, counts, bins = nLangs)
-            .localCheckpoint()
-          onBatch(psi, counts)
-          graveyard.foreach(unpersistCheckpoint)
-          graveyard = Seq(prev, psi)
-        }
-      }
-      .start()
+    maintain(stream, empty) { (prev, batch) =>
+      val counts = prev
+        .unionByName(batch
+          .select(graft.ops.TextOps.langBin(F.col(textCol)).as("bin"))
+          .groupBy("bin").agg(count(lit(1)).as("c")))
+        .groupBy("bin").agg(sum(F.col("c")).as("c"))
+        .localCheckpoint()
+      val psi = graft.ops.StatOps.psiFromHistograms(frozen, counts, bins = nLangs).localCheckpoint()
+      onBatch(psi, counts)
+      (counts, Seq(prev, psi))
+    }
   }
-
-  /** See [[graft.ops.OpsUtil.unpersistCheckpoint]] - shared with the
-    * batch-side audits that also pin localCheckpoint snapshots.
-    */
-  private def unpersistCheckpoint(ds: Dataset[_]): Unit =
-    graft.ops.OpsUtil.unpersistCheckpoint(ds)
 
   /** Stream-stream interval join: pair each right-stream event with the
     * left-stream events of the same key whose timestamp falls in
@@ -1203,7 +997,8 @@ object StreamOps {
   /** Streaming fuzzy-match: a stream of query strings against a static
     * broadcast trie (stream-static pattern). `trieIndex` is the collected
     * children map from `graft.ptree.Query.childrenIndex` (any other
-    * children Map is compiled to a `TrieIndex` once, here).
+    * children Map is compiled to a `TrieIndex` once, here). Null query
+    * strings match nothing, as in both batch modes.
     */
   def streamFuzzyMatch(
       queryStream: DataFrame,
@@ -1214,8 +1009,7 @@ object StreamOps {
     val spark = queryStream.sparkSession
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(graft.ptree.TrieIndex.of(trieIndex).flat)
-    queryStream
-      .select(F.col(queryCol).cast(StringType).as("query_string"))
+    graft.ptree.Query.queryStrings(queryStream, queryCol)
       .as[String]
       .mapPartitions { it =>
         val idx = new graft.ptree.TrieIndex(bc.value)
@@ -1273,63 +1067,5 @@ object StreamOps {
           }
       }
       .toDF(keyCol, "ts_us", tieCol, valueCol, "_rn", "ver")
-  }
-
-  /** Streaming maintenance of an IVF ANN index's posting lists - the
-    * fourteenth maintained lifecycle. The centroid quantizer is FROZEN
-    * (trained offline by [[graft.ops.SimilarityOps.ivfBuild]]; retraining
-    * is a rebuild, not maintenance - the standard IVF serving contract),
-    * and each micro-batch of vectors is assigned to its nearest list and
-    * upserted: prior rows for re-seen ids are anti-joined out first, and
-    * the batch itself is deduped per id, so redelivery and in-batch
-    * duplicates cannot double-insert. The maintained frame therefore
-    * equals [[graft.ops.SimilarityOps.ivfAssign]] over the latest
-    * version of every id exactly, and
-    * [[graft.ops.SimilarityOps.ivfQuery]] serves top-k off the snapshot
-    * (`IvfIndex(centroids, snapshot)`) with no corpus access.
-    *
-    * Scale shape: per batch, one scan-speed nearest-centroid projection
-    * (codegen kernel) over batch rows only; the upsert moves batch-id
-    * keys via a BROADCAST anti-join against the (corpus-sized but
-    * narrow) posting frame - the corpus is never re-assigned, never
-    * shuffled. Superseded checkpoints free under the one-batch grace of
-    * `trieMaintenance`.
-    */
-  def ivfMaintenance(
-      stream: DataFrame,
-      idCol: String,
-      vecCol: String,
-      centroids: Array[Array[Double]],
-      initial: DataFrame
-  )(onUpdate: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.functions._
-    @volatile var state = initial.localCheckpoint()
-    @volatile var graveyard: Option[DataFrame] = None
-    stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          val prev = state
-          // one row per id within the batch (the lshMaintenance
-          // invariant): max() is the deterministic pick over the
-          // array's lexicographic ordering - batch rows carry no order
-          val deduped = batch.toDF()
-            .groupBy(col(idCol))
-            .agg(max(col(vecCol)).as(vecCol))
-          val delta = graft.ops.SimilarityOps
-            .ivfAssign(deduped, idCol, vecCol, centroids)
-            .localCheckpoint()
-          val dIds = delta.select("neighbor_id")
-          state = prev
-            .join(broadcast(dIds), Seq("neighbor_id"), "left_anti")
-            .unionByName(delta)
-            .localCheckpoint()
-          unpersistCheckpoint(delta)
-          onUpdate(state)
-          graveyard.foreach(unpersistCheckpoint)
-          graveyard = Some(prev)
-        }
-      }
-      .start()
   }
 }

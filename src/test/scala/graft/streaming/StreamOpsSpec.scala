@@ -4,8 +4,13 @@ import graft.SparkSpec
 import graft.ops.SimilarityOps
 import graft.ptree.{PrefixTree, Query}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
+import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
+
+import scala.jdk.CollectionConverters._
 
 class StreamOpsSpec extends SparkSpec {
   import spark.implicits._
@@ -575,7 +580,7 @@ class StreamOpsSpec extends SparkSpec {
     val trie = PrefixTree.create(Seq("dog", "drop", "cat").toDF("w"), "w", 2, 2)
     val idx = Query.childrenIndex(trie)
     val mem = MemoryStream[String]
-    mem.addData("dog", "cap", "zzz")
+    mem.addData("dog", "cap", "zzz", null) // a null query matches nothing
     val sq = StreamOps
       .streamFuzzyMatch(mem.toDF().toDF("q"), "q", idx, maxDist = 1)
       .writeStream.format("memory").queryName("fm").outputMode("append").start()
@@ -1154,12 +1159,12 @@ class StreamOpsSpec extends SparkSpec {
     val b2 = Seq(
       (3L, Array(0.1f, 0.9f)), (7L, Array(0.6f, 0.6f)), (7L, Array(0.2f, 0.9f)),
       (8L, Array(0.8f, 0.3f)))
-    @volatile var latest: org.apache.spark.sql.DataFrame = null
+    @volatile var latest: graft.ops.SimilarityOps.IvfIndex = null
     val mem = MemoryStream[(Long, Array[Float])]
     val initial = graft.ops.SimilarityOps.ivfAssign(
       Seq.empty[(Long, Array[Float])].toDF("id", "vec"), "id", "vec", cents)
-    val sq = StreamOps.ivfMaintenance(
-      mem.toDF().toDF("id", "vec"), "id", "vec", cents, initial)(latest = _)
+    val sq = StreamOps.ivfMaintenance(mem.toDF().toDF("id", "vec"), "id", "vec",
+      graft.ops.SimilarityOps.IvfIndex(cents, initial))(latest = _)
     mem.addData(b1: _*); sq.processAllAvailable()
     mem.addData(b2: _*); sq.processAllAvailable()
     sq.stop()
@@ -1174,14 +1179,109 @@ class StreamOpsSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select(col("list_id").cast("long"), col("neighbor_id").cast("long"))
         .as[(Long, Long)].collect().toSet
-    assert(latest.count() == 5)
-    assert(rows(latest) === rows(direct))
+    assert(latest.lists.count() == 5)
+    assert(rows(latest.lists) === rows(direct))
     // served top-k off the maintained snapshot == off the batch-built one
     val qs = Seq((100L, Array(1.0f, 0.05f))).toDF("qid", "qv")
     def top(lists: org.apache.spark.sql.DataFrame) =
       graft.ops.SimilarityOps.ivfQuery(
         graft.ops.SimilarityOps.IvfIndex(cents, lists), qs, "qid", "qv", k = 3, nProbe = 2)
         .as[(Long, Long, Int, Double)].collect().toSet
-    assert(top(latest) === top(direct))
+    assert(top(latest.lists) === top(direct))
+  }
+
+  /** The checkpoint RDD behind a frame a maintenance operator handed out. */
+  private def checkpointId(ds: Dataset[_]): Int = {
+    val ids = ds.queryExecution.analyzed.collectLeaves().collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+    }
+    assert(ids.size == 1, s"not one checkpoint leaf: ${ds.queryExecution.analyzed}")
+    ids.head
+  }
+
+  /** Feeds 4 batches (`feed(n)`) through the query `start` builds; its
+    * callback reports each batch's handed-out (state, scratch) frames.
+    * Nothing is released before the callback returns, and after batch n
+    * the checkpoints alive beyond those present before the operator
+    * started are exactly: batch n's state and scratch, plus the previous
+    * state (batch n-1's, or the initial one after batch 0). So a state is
+    * released after batch n+2's callback, handed-out scratch after batch
+    * n+1's, and in-batch scratch within its own batch.
+    */
+  private def assertReleaseContract(feed: Int => Unit)(
+      start: ((Seq[Dataset[_]], Seq[Dataset[_]]) => Unit) => StreamingQuery): Unit = {
+    // per batch: state ids, scratch ids, ids alive in the callback, frames
+    val handed =
+      scala.collection.mutable.ArrayBuffer[(Set[Int], Set[Int], Set[Int], Seq[Dataset[_]])]()
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = persisted
+    val sq = start { (state, scratch) =>
+      handed += ((state.map(checkpointId).toSet, scratch.map(checkpointId).toSet,
+        persisted -- before, state ++ scratch))
+    }
+    try {
+      var lastLive = Set.empty[Int]
+      for (n <- 0 until 4) {
+        feed(n)
+        sq.processAllAvailable()
+        assert(handed.size == n + 1)
+        val (state, scratch, atCallback, frames) = handed(n)
+        val live = persisted -- before
+        val prevState = if (n == 0) live -- state -- scratch else handed(n - 1)._1
+        assert(prevState.size == state.size, s"batch $n: live $live")
+        assert(live == state ++ scratch ++ prevState, s"batch $n: handed $handed")
+        val beforeRelease = if (n == 0) live else lastLive ++ state ++ scratch
+        assert(atCallback == beforeRelease, s"batch $n: released before the callback")
+        frames.foreach(_.collect())
+        lastLive = live
+      }
+    } finally sq.stop()
+  }
+
+  test("maintenance release contract: one-batch grace for state, none for scratch") {
+    implicit val sqlCtx = spark.sqlContext
+    val trieIn = MemoryStream[String]
+    val emptyTrie = PrefixTree.create(spark.emptyDataset[String].toDF("w"), "w", 2, 2)
+    assertReleaseContract(n => trieIn.addData(s"w$n", "dog")) { hand =>
+      StreamOps.trieMaintenance(trieIn.toDF().toDF("w"), "w", emptyTrie, 2, 2)(t => hand(Seq(t), Nil))
+    }
+    // a 4-frame state plus in-batch scratch (the batch's tf)
+    val docs = MemoryStream[(Long, String)]
+    val emptyBm25 = graft.ops.SearchOps.bm25Build(
+      Seq.empty[(Long, String)].toDF("doc_id", "text"), "doc_id", "text")
+    assertReleaseContract(n => docs.addData((n.toLong, s"quick text $n"), (0L, "again"))) { hand =>
+      StreamOps.bm25Maintenance(docs.toDF().toDF("doc_id", "text"), "doc_id", "text", emptyBm25) { i =>
+        hand(Seq(i.tf, i.dl, i.dfT, i.stats), Nil)
+      }
+    }
+    // state (seen) plus handed-out scratch (the batch's fresh frontier)
+    val pages = MemoryStream[(String, String)]
+    assertReleaseContract(n => pages.addData(
+      (s"https://a.com/p$n", s"""<a href="x$n">new</a><a href="/top">old</a>"""))) { hand =>
+      StreamOps.frontierMaintenance(pages.toDF().toDF("url", "html"), "url", "html",
+        Seq.empty[String].toDF("canonical")) { (fresh, seen) => hand(Seq(seen), Seq(fresh)) }
+    }
+  }
+
+  test("one fold owns the micro-batch loop: no foreachBatch or graveyard outside it") {
+    // the spec forks with the project root as working directory
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"$root not found")
+    val streamOps = Paths.get("src/main/scala/graft/streaming/StreamOps.scala")
+    val folds = """(?s)  private def maintain\[.*?\n  }\n""".r
+      .findAllIn(Files.readString(streamOps)).toList
+    assert(folds.size == 1, "StreamOps.maintain not found")
+    val loop = """\.foreachBatch\b|\bgraveyard\b""".r
+    assert(loop.findAllIn(folds.head).count(_ == ".foreachBatch") == 1)
+    val files = Files.walk(root)
+    val sources =
+      try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally files.close()
+    val hits = sources.flatMap { f =>
+      val text = Files.readString(f)
+      loop.findAllIn(if (f == streamOps) text.replace(folds.head, "") else text)
+        .map(m => s"$f: $m")
+    }
+    assert(hits.isEmpty, s"micro-batch maintenance runs through StreamOps.maintain: $hits")
   }
 }
