@@ -116,10 +116,20 @@ object DedupOps {
   // ---------------------------------------------------------------------
 
   /** Cluster values whose Levenshtein distance is <= `maxDist`: build a
-    * prefix tree over the distinct trimmed values, SELF-QUERY it with the
+    * prefix tree over the trimmed values, SELF-JOIN it with the
     * branch-and-bound traversal (the reference's own algorithm - this is
     * the operator the trie exists for), take matched pairs as edges, and
     * collapse them into clusters with [[GraphOps.connectedComponents]].
+    *
+    * The trie is built straight from the raw column: `PrefixTree.create`
+    * already trims, drops empties and collapses duplicates into one
+    * end-cap, so there is no `distinct()` shuffle, and its end-caps are
+    * both the queries and the output rows. `Query.selfJoin` finds each
+    * pair once: an end-cap searches only the end-caps after it in the
+    * index's pre-order, which skips every subtree ending at or before it
+    * and needs no `a < b` filter over doubled pairs. The cut keys on that
+    * position, not on `String` order, because the build's pre-order is
+    * not sorted across its hash-partitioned forests.
     *
     * Output: (value, cluster_id = min value in the cluster), one row per
     * distinct non-empty value; singletons are their own cluster. At
@@ -132,19 +142,16 @@ object DedupOps {
       maxDist: Int,
       prefixLen: Int = 2
   ): DataFrame = {
-    val vals = df.select(trim(F.col(textCol)).as("value"))
-      .filter(F.col("value") =!= "")
-      .distinct()
-      .localCheckpoint() // consumed three times: trie build, query, join-back
-    val trie = graft.ptree.PrefixTree.create(vals, "value", prefixLen)
-    // queryBatch, not queryBroadcast: it sizes the trie and falls back to
-    // the partition-local search when a collect would not fit -
-    // fuzzyDedup's whole point is the corpus-scale path
-    val pairs = graft.ptree.Query.queryBatch(vals, "value", trie, maxDist)
-      .filter(F.col("query_string") < F.col("node")) // each undirected edge once
-      .select(F.col("query_string").as("a"), F.col("node").as("b"))
-    val clustered = GraphOps.connectedComponents(pairs, "a", "b")
-    // CC only covers values with >= 1 near-match; singletons join back
+    val raw = df.select(F.col(textCol).as("value"))
+    // consumed three times: sizing, the search, the output rows
+    val trie = graft.ptree.PrefixTree.create(raw, "value", prefixLen).localCheckpoint()
+    val pairs = graft.ptree.Query.selfJoin(trie, maxDist)
+    val clustered = GraphOps.connectedComponents(pairs, "query_string", "node")
+    // CC only covers values with >= 1 near-match; singletons join back.
+    // An end-cap's word is never null: `value` is declared as nullable as
+    // the input column, as trim(textCol) would be
+    val word = if (raw.schema.head.nullable) F.col("node") else coalesce(F.col("node"), lit(""))
+    val vals = trie.filter(F.col("is_word")).select(word.as("value"))
     vals
       .join(clustered, vals("value") === clustered("id"), "left")
       .select(F.col("value"),

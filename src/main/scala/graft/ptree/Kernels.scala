@@ -162,13 +162,24 @@ object Kernels {
     * `SearchStats.nodes` counts the children examined, `cells` the band
     * cells computed: branch-and-bound should keep both far below brute
     * force, which examines every word.
+    *
+    * `cut` is the self-join cut: the pre-order position of the query's
+    * own end-cap when the query is a word of this index. The walk then
+    * emits only end-caps after `cut` and skips whole (neither examined
+    * nor counted) every child subtree `[c, end(c))` that ends at or
+    * before it, so searching every end-cap from its own position finds
+    * each unordered pair of distinct words once (Trie-Join's shape). The
+    * cut keys on position, not on word order: a forest is numbered in
+    * collect order, which is not `String` order. `-1` (the default)
+    * cuts nothing: every child is examined, as without the parameter.
     */
   def searchIndex(
       index: TrieIndex,
       query: String,
-      maxDist: Int
+      maxDist: Int,
+      cut: Int = -1
   ): (ArrayBuffer[(String, Int, Long)], SearchStats) = {
-    val s = new IndexSearch(index.flat, codePoints(query), maxDist)
+    val s = new IndexSearch(index.flat, codePoints(query), maxDist, cut + 1)
     s.go(0, index.flat.nodes, initRow(s.n), 0, 0)
     (s.out, SearchStats(s.visited, s.dp.cells))
   }
@@ -184,7 +195,13 @@ object Kernels {
     }
   }
 
-  private final class IndexSearch(ix: TrieIndex.Flat, q: Array[Int], maxDist: Int) {
+  /** One [[searchIndex]] walk. A child `c` is examined only when
+    * `end(c) > live`: `live` = cut + 1 is the first position after the
+    * query's own end-cap, so an end-cap at or before the cut and a subtree
+    * holding nothing after it are both skipped, and `live` = 0 (no cut)
+    * passes every child.
+    */
+  private final class IndexSearch(ix: TrieIndex.Flat, q: Array[Int], maxDist: Int, live: Int) {
     val n: Int = q.length
     val dp = new Dp(q, maxDist)
     val out = new ArrayBuffer[(String, Int, Long)]()
@@ -197,20 +214,22 @@ object Kernels {
     def go(first: Int, until: Int, row: Array[Int], consumed: Int, level: Int): Unit = {
       var c = first
       while (c < until) {
-        visited += 1
-        if (ix.isWord(c)) {
-          // row(n) is only valid inside the band; outside it the true
-          // distance exceeds maxDist by the banding argument
-          if (consumed - n <= maxDist && n - consumed <= maxDist) {
-            val d = row(n)
-            if (d <= maxDist) out += ((ix.words(c), d, ix.occ(c)))
+        if (ix.end(c) > live) {
+          visited += 1
+          if (ix.isWord(c)) {
+            // row(n) is only valid inside the band; outside it the true
+            // distance exceeds maxDist by the banding argument
+            if (consumed - n <= maxDist && n - consumed <= maxDist) {
+              val d = row(n)
+              if (d <= maxDist) out += ((ix.words(c), d, ix.occ(c)))
+            }
+          } else if (n <= ix.maxLen(c) + maxDist && n >= ix.minLen(c) - maxDist) {
+            val from = ix.edgeOff(c)
+            val until = ix.edgeOff(c + 1)
+            val next = rows(2 * level)
+            val rowMin = dp.edge(row, ix.edgeCp, from, until, consumed, maxDist, next, rows(2 * level + 1))
+            if (rowMin <= maxDist) go(c + 1, ix.end(c), next, consumed + until - from, level + 1)
           }
-        } else if (n <= ix.maxLen(c) + maxDist && n >= ix.minLen(c) - maxDist) {
-          val from = ix.edgeOff(c)
-          val until = ix.edgeOff(c + 1)
-          val next = rows(2 * level)
-          val rowMin = dp.edge(row, ix.edgeCp, from, until, consumed, maxDist, next, rows(2 * level + 1))
-          if (rowMin <= maxDist) go(c + 1, ix.end(c), next, consumed + until - from, level + 1)
         }
         c = ix.end(c)
       }

@@ -27,6 +27,9 @@ import graft.ops.SizeGuard
   *     its own [[TrieIndex]] in its task, and every query is searched in
   *     every group with the same walk.
   *
+  * [[selfJoin]] searches a dictionary against itself in either mode, its
+  * own end-caps being the queries.
+  *
   * Both modes run the same kernel with the same two prunes as the
   * reference's LOOP (branch-and-bound on the DP row-min, ecl:434; subtree
   * length window, ecl:440-441 - kept separate per the author's
@@ -57,6 +60,79 @@ object Query {
         queryBroadcast(queries, col, t, maxDist)
       else queryJoin(queries, col, t, maxDist).localCheckpoint()
     } finally t.unpersist()
+  }
+
+  /** The trie searched against itself: every unordered pair of distinct
+    * end-cap words within `maxDist` edits, exactly once, as
+    * (query_string, node, final_distance). Which word of a pair lands in
+    * which column is unspecified. This is the self-join cut of
+    * [[Kernels.searchIndex]]: each end-cap searches only the end-caps
+    * after its own pre-order position, so no pair is found twice and no
+    * word matches itself. The queries are the trie's own end-caps, so
+    * there is no query frame and no query-side shuffle.
+    *
+    * The same [[SizeGuard.TrieIndex]] site as [[queryBatch]] picks the
+    * side:
+    *   - '''small''': the compiled arrays are broadcast and
+    *     `defaultParallelism` tasks each take the end-caps dealt
+    *     round-robin in pre-order (early end-caps search more of the
+    *     trie), with no shuffle at all;
+    *   - '''large''': the partition-local cogroup of [[queryJoin]] with
+    *     the end-caps as queries. An end-cap goes only to the groups whose
+    *     `compute_node` is at least its own: in a higher group it searches
+    *     uncut, in its own group it cuts at its own position, so a pair
+    *     across two groups is found from the lower one only.
+    *
+    * The trie is read by the size check and by the search: pass a
+    * persisted or checkpointed one.
+    */
+  def selfJoin(trie: Dataset[PTNode], maxDist: Int): DataFrame =
+    if (SizeGuard.small(SizeGuard.TrieIndex, trieStats(trie).nodes, estimatedIndexBytes(trie)))
+      selfJoinBroadcast(trie, maxDist)
+    else selfJoinLocal(trie, maxDist)
+
+  /** [[selfJoin]]'s small side: one broadcast, one `mapPartitions`. */
+  private[ptree] def selfJoinBroadcast(trie: Dataset[PTNode], maxDist: Int): DataFrame = {
+    val spark = trie.sparkSession
+    import spark.implicits._
+    val slices = spark.sparkContext.defaultParallelism
+    val bc = spark.sparkContext.broadcast(childrenIndex(trie).flat)
+    spark.range(0, slices, 1, slices).as[Long]
+      .mapPartitions { it =>
+        val idx = new TrieIndex(bc.value)
+        val f = idx.flat
+        it.flatMap { slice =>
+          Iterator.range(0, f.nodes).filter(f.isWord(_)).zipWithIndex
+            .collect { case (i, k) if k % slices == slice => i }
+            .flatMap { i =>
+              val q = f.words(i)
+              Kernels.searchIndex(idx, q, maxDist, i)._1.map { case (w, d, _) => (q, w, d) }
+            }
+        }
+      }
+      .toDF("query_string", "node", "final_distance")
+  }
+
+  /** [[selfJoin]]'s large side: each group compiles once in its task. */
+  private[ptree] def selfJoinLocal(trie: Dataset[PTNode], maxDist: Int): DataFrame = {
+    val spark = trie.sparkSession
+    import spark.implicits._
+    val groups = trie.select($"compute_node".as("compute_node")).distinct()
+    val caps = trie.filter($"is_word").select($"node", $"id", $"compute_node".as("own"))
+    val perGroup = caps.join(broadcast(groups), groups("compute_node") >= caps("own"))
+      .groupBy(groups("compute_node")).as[Int, (String, Long, Int, Int)]
+    trie.groupBy($"compute_node").as[Int, PTNode]
+      .cogroup(perGroup) { (group, rows, qs) =>
+        if (qs.isEmpty) Iterator.empty
+        else {
+          val idx = compileGroup(group, rows, SizeGuard.TrieIndex.maxBytes)
+          qs.flatMap { case (q, id, own, _) =>
+            val cut = if (own == group) idx.positionOf(id) else -1
+            Kernels.searchIndex(idx, q, maxDist, cut)._1.map { case (w, d, _) => (q, w, d) }
+          }
+        }
+      }
+      .toDF("query_string", "node", "final_distance")
   }
 
   // -------------------------------------------------------------------

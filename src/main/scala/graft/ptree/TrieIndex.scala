@@ -62,13 +62,16 @@ final class TrieIndex private[graft] (private[graft] val flat: TrieIndex.Flat)
     out
   }
 
-  /** id -> node position, built on the first Map-view lookup only. */
+  /** id -> node position, built on the first lookup by id only. */
   @transient private lazy val byId: TrieIndex.LongIntTable = {
     val t = new TrieIndex.LongIntTable(nodes)
     var i = 0
     while (i < nodes) { t.put(ids(i), i); i += 1 }
     t
   }
+
+  /** Pre-order position of the node with id `id`, or -1. */
+  private[ptree] def positionOf(id: Long): Int = byId.indexOf(id)
 
   def get(key: Long): Option[Array[PTNode]] = childSpan(key) match {
     case null => None

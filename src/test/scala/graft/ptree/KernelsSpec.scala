@@ -175,16 +175,26 @@ class KernelsSpec extends AnyFunSuite {
     assert(res.passed, res.status.toString)
   }
 
+  // shared stems over ASCII, a BMP accent and two astral code points,
+  // so edges split, words nest and UTF-16 length != code points
+  private val unit = Gen.oneOf("a", "b", "c", "\u00e9", "\ud83d\ude00", "\ud835\udc9c")
+  private val stem = Gen.choose(0, 4).flatMap(n => Gen.listOfN(n, unit).map(_.mkString))
+  private val dictGen = for {
+    stems <- Gen.listOfN(3, stem)
+    tails <- Gen.listOfN(14, Gen.zip(Gen.oneOf(stems), Gen.choose(0, 5).flatMap(n =>
+      Gen.listOfN(n, unit).map(_.mkString)), Gen.choose(1L, 3L)))
+  } yield tails.map { case (s, t, c) => (s + t, c) }.filter(_._1.nonEmpty).toMap
+
+  /** Two partitions' forests (root edges may share a first code point)
+    * in a shuffled collect order: compile must not depend on either.
+    */
+  private def forest(dict: Map[String, Long], seed: Long): Array[PTNode] = {
+    val (p0, p1) = dict.toSeq.sortBy(_._1).partition(_._1.hashCode % 2 == 0)
+    new scala.util.Random(seed).shuffle(
+      Kernels.buildTrieCounted(0, p0.iterator).toSeq ++ Kernels.buildTrieCounted(1, p1.iterator).toSeq).toArray
+  }
+
   test("property: TrieIndex walk == lambda walk == brute force, with prefixes, Map view and serialization") {
-    // shared stems over ASCII, a BMP accent and two astral code points,
-    // so edges split, words nest and UTF-16 length != code points
-    val unit = Gen.oneOf("a", "b", "c", "\u00e9", "\ud83d\ude00", "\ud835\udc9c")
-    val stem = Gen.choose(0, 4).flatMap(n => Gen.listOfN(n, unit).map(_.mkString))
-    val dictGen = for {
-      stems <- Gen.listOfN(3, stem)
-      tails <- Gen.listOfN(14, Gen.zip(Gen.oneOf(stems), Gen.choose(0, 5).flatMap(n =>
-        Gen.listOfN(n, unit).map(_.mkString)), Gen.choose(1L, 3L)))
-    } yield tails.map { case (s, t, c) => (s + t, c) }.filter(_._1.nonEmpty).toMap
     val caseGen = for {
       dict <- dictGen
       queries <- Gen.listOfN(4, Gen.oneOf(Gen.choose(0, 7).flatMap(n =>
@@ -208,11 +218,7 @@ class KernelsSpec extends AnyFunSuite {
     def shipped(t: TrieIndex): Seq[TrieIndex] =
       serializers.map(s => new TrieIndex(s.deserialize[TrieIndex.Flat](s.serialize(t.flat))))
     val prop = Prop.forAll(caseGen) { case (dict, queries, cuts, k, seed) =>
-      // two partitions' forests (root edges may share a first code point)
-      // in a shuffled collect order: compile must not depend on either
-      val (p0, p1) = dict.toSeq.sortBy(_._1).partition(_._1.hashCode % 2 == 0)
-      val rows = new scala.util.Random(seed).shuffle(
-        Kernels.buildTrieCounted(0, p0.iterator).toSeq ++ Kernels.buildTrieCounted(1, p1.iterator).toSeq).toArray
+      val rows = forest(dict, seed)
       val groups = rows.groupBy(_.parent_id)
       val index = TrieIndex(rows)
       val back = roundTrip(index)
@@ -242,6 +248,40 @@ class KernelsSpec extends AnyFunSuite {
     }
     val res = SCTest.check(
       SCTest.Parameters.default.withMinSuccessfulTests(300).withInitialSeed(Seed(7L)), prop)
+    assert(res.passed, res.status.toString)
+  }
+
+  test("property: the self-join cut finds each within-maxDist pair once, in fewer cells") {
+    val caseGen = for {
+      dict <- dictGen
+      k <- Gen.choose(0, 3)
+      seed <- Gen.choose(0L, 1L << 40)
+    } yield (dict, k, seed)
+    val prop = Prop.forAll(caseGen) { case (dict, k, seed) =>
+      val rows = forest(dict, seed)
+      val groups = rows.groupBy(_.parent_id)
+      val index = TrieIndex(rows)
+      val f = index.flat
+      val caps = (0 until f.nodes).filter(f.isWord(_))
+      val cut = caps.map(i => i -> Kernels.searchIndex(index, f.words(i), k, i))
+      val uncut = caps.map(i => Kernels.searchIndex(index, f.words(i), k, -1))
+      // each unordered pair once, never a self pair, distances exact
+      val pairs = cut.flatMap { case (i, (hits, _)) => hits.map { case (w, d, _) => (f.words(i), w, d) } }
+      val unordered = pairs.map { case (a, b, _) => Set(a, b) }
+      val words = dict.keys.toSeq
+      val brute = (for (a <- words; b <- words if a < b && lev(a, b) <= k) yield Set(a, b)).toSet
+      val pairsOk = pairs.forall { case (a, b, d) => a != b && d == lev(a, b) } &&
+        unordered.distinct.size == unordered.size && unordered.toSet == brute
+      // never more cells than the uncut walks, and -1 is the uncut walk:
+      // the same answers and counters as the independent lambda walk
+      val cellsOk = cut.map(_._2._2.cells).sum <= uncut.map(_._2.cells).sum
+      val uncutOk = caps.zip(uncut).forall { case (i, u) =>
+        u == Kernels.searchCounted(f.words(i), k, groups.getOrElse(_, null))
+      }
+      pairsOk && cellsOk && uncutOk
+    }
+    val res = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(300).withInitialSeed(Seed(11L)), prop)
     assert(res.passed, res.status.toString)
   }
 
