@@ -21,7 +21,7 @@ object ExprKernels {
 
   // universal-hash coefficients are deterministic in (numHashes, seed):
   // computed once per JVM, not per row. private[graft]: the DuckDB oracle
-  // SQL is generated from the SAME arrays (SparkEntry interpolates them),
+  // SQL is generated from the SAME arrays (the registry interpolates them),
   // so the independent reimplementation uses identical constants.
   private val coefCache =
     new java.util.concurrent.ConcurrentHashMap[Long, (Array[Long], Array[Long])]()
@@ -900,7 +900,7 @@ object ExprKernels {
     * checked-in classpath resource (same single-parse stance as
     * [[bpeRanks]]): language codes in alphabetical order (the argmax
     * tie-break order) and gram -> per-language integer weight vector.
-    * TextOps.langProfiles derives its Seq/Map view (which SparkEntry
+    * TextOps.langProfiles derives its Seq/Map view (which the registry
     * interpolates into the DuckDB oracle) from THIS parse, so kernel
     * and oracle score from one table by construction.
     */
@@ -1718,29 +1718,6 @@ case class BloomFlagCount(child: Expression, bits: Array[Byte], mBits: Int, kHas
 /** Column-API and SQL-registration surface for the native expressions. */
 object GraftFunctions {
 
-  // literal-argument builders shared by runtime registration and the
-  // SparkSessionExtensions path (one definition, no drift between them)
-  private[functions] val shinglesBuilder: Seq[Expression] => Expression = {
-    case Seq(c, Literal(n: Int, IntegerType)) => Shingles(c, n)
-    case es => throw new IllegalArgumentException(
-      s"shingles(text, nLiteral); got ${es.length} args")
-  }
-
-  private[functions] val charGramsBuilder: Seq[Expression] => Expression = {
-    case Seq(c, Literal(n: Int, IntegerType)) => CharGrams(c, n)
-    case es => throw new IllegalArgumentException(
-      s"char_grams(text, nLiteral); got ${es.length} args")
-  }
-
-  private[functions] val greedyPackBuilder: Seq[Expression] => Expression = {
-    case Seq(sizes, Literal(b: Int, IntegerType)) => GreedyPack(sizes, b)
-    // two args but a non-literal / non-int budget: say so, not "got 2 args"
-    case Seq(_, budget) => throw new IllegalArgumentException(
-      s"greedy_pack(sizes, budgetLiteral): budget must be an INT literal, got ${budget.sql}")
-    case es => throw new IllegalArgumentException(
-      s"greedy_pack(sizes, budgetLiteral); got ${es.length} args")
-  }
-
   def minhash_sig(c: Column, numHashes: Int = 64, shingleLen: Int = 3, seed: Int = 42): Column =
     Bridge.column(MinHashSig(Bridge.expression(c), numHashes, shingleLen, seed))
 
@@ -1821,41 +1798,65 @@ object GraftFunctions {
     Bridge.column(PqEncode(Bridge.expression(vn), codebooks, halfs))
 
 
-  /** Runtime registration: makes the functions callable from SQL text in
-    * an existing session (`SELECT simhash64(text) FROM docs`).
+  /** Every SQL-callable native function: name, expression class (the
+    * extension path's ExpressionInfo) and builder. Runtime registration
+    * and [[GraftExtensions]] both read this one table.
     */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("minhash_sig", es => MinHashSig(es.head), "built-in")
-    reg.createOrReplaceTempFunction("simhash64", es => SimHash64(es.head), "built-in")
-    reg.createOrReplaceTempFunction("char_entropy", es => CharEntropy(es.head), "built-in")
-    reg.createOrReplaceTempFunction("nfc_normalize", es => NfcNormalize(es.head), "built-in")
-    reg.createOrReplaceTempFunction("sig_agree", es => SigAgree(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("jaro_winkler", es => JaroWinkler(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("jw_upper", es => JwUpper(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("greedy_pack", greedyPackBuilder, "built-in")
-    reg.createOrReplaceTempFunction("bpe_count", es => BpeCount(es.head), "built-in")
-    reg.createOrReplaceTempFunction("lang_id_score", es => LangIdScore(es.head), "built-in")
-    reg.createOrReplaceTempFunction("bpe_count_public", es => BpeCountPublic(es.head), "built-in")
-    reg.createOrReplaceTempFunction("decode_num_refs", es => DecodeNumRefs(es.head), "built-in")
-    reg.createOrReplaceTempFunction("winnow_fps", {
+  private[functions] val sqlFunctions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("minhash_sig", classOf[MinHashSig], es => MinHashSig(es.head)),
+    ("simhash64", classOf[SimHash64], es => SimHash64(es.head)),
+    ("char_entropy", classOf[CharEntropy], es => CharEntropy(es.head)),
+    ("nfc_normalize", classOf[NfcNormalize], es => NfcNormalize(es.head)),
+    ("sig_agree", classOf[SigAgree], es => SigAgree(es(0), es(1))),
+    ("jaro_winkler", classOf[JaroWinkler], es => JaroWinkler(es(0), es(1))),
+    ("jw_upper", classOf[JwUpper], es => JwUpper(es(0), es(1))),
+    ("greedy_pack", classOf[GreedyPack], {
+      case Seq(sizes, Literal(b: Int, IntegerType)) => GreedyPack(sizes, b)
+      // two args but a non-literal / non-int budget: say so, not "got 2 args"
+      case Seq(_, budget) => throw new IllegalArgumentException(
+        s"greedy_pack(sizes, budgetLiteral): budget must be an INT literal, got ${budget.sql}")
+      case es => throw new IllegalArgumentException(
+        s"greedy_pack(sizes, budgetLiteral); got ${es.length} args")
+    }),
+    ("bpe_count", classOf[BpeCount], es => BpeCount(es.head)),
+    ("lang_id_score", classOf[LangIdScore], es => LangIdScore(es.head)),
+    ("bpe_count_public", classOf[BpeCountPublic], es => BpeCountPublic(es.head)),
+    ("decode_num_refs", classOf[DecodeNumRefs], es => DecodeNumRefs(es.head)),
+    ("winnow_fps", classOf[WinnowFps], {
       case Seq(t, Literal(k: Int, IntegerType), Literal(w: Int, IntegerType)) =>
         WinnowFps(t, k, w)
       case es => throw new IllegalArgumentException(
         s"winnow_fps(text, kLiteral, wLiteral); got ${es.length} args")
-    }, "built-in")
-    reg.createOrReplaceTempFunction("shingles", shinglesBuilder, "built-in")
-    reg.createOrReplaceTempFunction("char_grams", charGramsBuilder, "built-in")
-    reg.createOrReplaceTempFunction("vec_dot", es => VecDot(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("vec_norm", es => VecNorm(es.head), "built-in")
-    reg.createOrReplaceTempFunction("rh_bucket", {
+    }),
+    ("shingles", classOf[Shingles], {
+      case Seq(c, Literal(n: Int, IntegerType)) => Shingles(c, n)
+      case es => throw new IllegalArgumentException(
+        s"shingles(text, nLiteral); got ${es.length} args")
+    }),
+    ("char_grams", classOf[CharGrams], {
+      case Seq(c, Literal(n: Int, IntegerType)) => CharGrams(c, n)
+      case es => throw new IllegalArgumentException(
+        s"char_grams(text, nLiteral); got ${es.length} args")
+    }),
+    ("vec_dot", classOf[VecDot], es => VecDot(es(0), es(1))),
+    ("vec_norm", classOf[VecNorm], es => VecNorm(es.head)),
+    ("rh_bucket", classOf[RhBucket], {
       case Seq(v, Literal(d: Int, IntegerType), Literal(b: Int, IntegerType),
           Literal(s: Long, LongType)) => RhBucket(v, d, b, s)
       case Seq(v, Literal(d: Int, IntegerType), Literal(b: Int, IntegerType),
           Literal(s: Int, IntegerType)) => RhBucket(v, d, b, s.toLong)
       case es => throw new IllegalArgumentException(
         s"rh_bucket(vec, dimLiteral, bitsLiteral, seedLiteral); got ${es.length} args")
-    }, "built-in")
+    }))
+
+  /** Runtime registration: makes the functions callable from SQL text in
+    * an existing session (`SELECT simhash64(text) FROM docs`).
+    */
+  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
+    val reg = spark.sessionState.functionRegistry
+    sqlFunctions.foreach { case (name, _, builder) =>
+      reg.createOrReplaceTempFunction(name, builder, "built-in")
+    }
   }
 }
 
@@ -1865,71 +1866,9 @@ object GraftFunctions {
   * native functions cluster-wide.
   */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    e.injectFunction((
-      FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "minhash_sig"),
-      (es: Seq[Expression]) => MinHashSig(es.head)))
-    e.injectFunction((
-      FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
-      (es: Seq[Expression]) => SimHash64(es.head)))
-    e.injectFunction((
-      FunctionIdentifier("char_entropy"),
-      new ExpressionInfo(classOf[CharEntropy].getName, "char_entropy"),
-      (es: Seq[Expression]) => CharEntropy(es.head)))
-    e.injectFunction((
-      FunctionIdentifier("nfc_normalize"),
-      new ExpressionInfo(classOf[NfcNormalize].getName, "nfc_normalize"),
-      (es: Seq[Expression]) => NfcNormalize(es.head)))
-    e.injectFunction((
-      FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[VecDot].getName, "vec_dot"),
-      (es: Seq[Expression]) => VecDot(es(0), es(1))))
-    e.injectFunction((
-      FunctionIdentifier("vec_norm"),
-      new ExpressionInfo(classOf[VecNorm].getName, "vec_norm"),
-      (es: Seq[Expression]) => VecNorm(es.head)))
-    e.injectFunction((
-      FunctionIdentifier("sig_agree"),
-      new ExpressionInfo(classOf[SigAgree].getName, "sig_agree"),
-      (es: Seq[Expression]) => SigAgree(es(0), es(1))))
-    e.injectFunction((
-      FunctionIdentifier("jaro_winkler"),
-      new ExpressionInfo(classOf[JaroWinkler].getName, "jaro_winkler"),
-      (es: Seq[Expression]) => JaroWinkler(es(0), es(1))))
-    e.injectFunction((
-      FunctionIdentifier("shingles"),
-      new ExpressionInfo(classOf[Shingles].getName, "shingles"),
-      GraftFunctions.shinglesBuilder))
-    e.injectFunction((
-      FunctionIdentifier("char_grams"),
-      new ExpressionInfo(classOf[CharGrams].getName, "char_grams"),
-      GraftFunctions.charGramsBuilder))
-    e.injectFunction((
-      FunctionIdentifier("jw_upper"),
-      new ExpressionInfo(classOf[JwUpper].getName, "jw_upper"),
-      (es: Seq[Expression]) => JwUpper(es(0), es(1))))
-    e.injectFunction((
-      FunctionIdentifier("greedy_pack"),
-      new ExpressionInfo(classOf[GreedyPack].getName, "greedy_pack"),
-      GraftFunctions.greedyPackBuilder))
-    e.injectFunction((
-      FunctionIdentifier("bpe_count"),
-      new ExpressionInfo(classOf[BpeCount].getName, "bpe_count"),
-      (es: Seq[Expression]) => BpeCount(es.head)))
-    e.injectFunction((
-      FunctionIdentifier("lang_id_score"),
-      new ExpressionInfo(classOf[LangIdScore].getName, "lang_id_score"),
-      (es: Seq[Expression]) => LangIdScore(es.head)))
-    e.injectFunction((
-      FunctionIdentifier("bpe_count_public"),
-      new ExpressionInfo(classOf[BpeCountPublic].getName, "bpe_count_public"),
-      (es: Seq[Expression]) => BpeCountPublic(es.head)))
-    e.injectFunction((
-      FunctionIdentifier("decode_num_refs"),
-      new ExpressionInfo(classOf[DecodeNumRefs].getName, "decode_num_refs"),
-      (es: Seq[Expression]) => DecodeNumRefs(es.head)))
-  }
+  override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit =
+    GraftFunctions.sqlFunctions.foreach { case (name, cls, builder) =>
+      e.injectFunction((org.apache.spark.sql.catalyst.FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), builder))
+    }
 }

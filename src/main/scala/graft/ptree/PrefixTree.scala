@@ -46,7 +46,7 @@ import org.apache.spark.sql.functions._
   * sorted partition scan - free to compute, no extra shuffle): the same
   * observable multiplicity without letting duplicate-heavy corpora bloat
   * the trie, and query results expose it as a column
-  * (SparkEntry.pt_fuzzy_dups oracles it against a non-DISTINCT
+  * (the pt_fuzzy_dups query oracles it against a non-DISTINCT
   * brute-force join).
   */
 object PrefixTree {

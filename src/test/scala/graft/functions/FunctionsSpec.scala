@@ -205,8 +205,15 @@ class FunctionsSpec extends SparkSpec {
     new GraftExtensions().apply(exts)
     val reg = org.apache.spark.sql.graftbridge.Bridge
       .registerFunctions(exts, new SimpleFunctionRegistry)
-    assert(reg.functionExists(FunctionIdentifier("minhash_sig")))
-    assert(reg.functionExists(FunctionIdentifier("simhash64")))
+    // the extension path injects exactly what runtime registration adds
+    // to a fresh session's registry
+    val session = spark.newSession()
+    val before = session.sessionState.functionRegistry.listFunction().toSet
+    GraftFunctions.register(session)
+    val registered =
+      (session.sessionState.functionRegistry.listFunction().toSet -- before).map(_.funcName)
+    assert(registered.size == 18)
+    assert(reg.listFunction().map(_.funcName).toSet == registered)
     val e = reg.lookupFunction(FunctionIdentifier("simhash64"),
       Seq(org.apache.spark.sql.catalyst.expressions.Literal("a b c")))
     assert(e.isInstanceOf[SimHash64])
