@@ -88,13 +88,11 @@ object Bench {
     // persistent RDD (safe: no query holds frames across entries -
     // the only process-level caches are POJO stats/merge tables), and
     // GC so reference-queue cleanup (broadcasts) drains off the clock.
-    val settleMs = sys.env.getOrElse("SPARK_GRAFT_BENCH_SETTLE", "0").toLong
     def isolate(): Unit = {
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = true))
       System.gc()
-      if (settleMs > 0) Thread.sleep(settleMs)
     }
     val results = wanted.toSeq.sortBy(_._1).map { case (name, fn) =>
       isolate()

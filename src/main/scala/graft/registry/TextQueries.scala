@@ -1,6 +1,6 @@
 package graft.registry
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -732,44 +732,22 @@ object TextQueries extends Family {
     // per-script char counts + dominant class at scan speed. The
     // oracle replays transliteration AND the range-count chain (the
     // class table is interpolated from ONE definition).
-    val mapped =
-      when(col("doc_id") % 5 === 1,
-        translate(col("text"), scriptLatinAbc, scriptCyrAbc))
-        .when(col("doc_id") % 5 === 2,
-          translate(col("text"), scriptLatinAbc, scriptGreekAbc))
-        .when(col("doc_id") % 5 === 3,
-          translate(col("text"), "aeiou", "01234"))
-        .otherwise(col("text"))
     TextOps.scriptProfile(
-      tbl(s, dir, "documents").withColumn("stext", mapped),
+      tbl(s, dir, "documents").withColumn("stext", translitShell(mixed = false)),
       "doc_id", "stext")
   } {
     // transliteration shell + the range-count chain, both
     // interpolated from the same definitions the Spark side uses
     // (scriptClasses, scriptLatinAbc/CyrAbc/GreekAbc)
-    val classes = TextOps.scriptClasses
-    val counts = classes.map { case (n, pat) =>
-      s"CAST(length(t) - length(regexp_replace(t, '$pat', '', 'g')) AS BIGINT) AS n_$n"
-    }.mkString(",\n       ")
-    val names = classes.map(_._1)
-    val whens = names.zipWithIndex.map { case (n, i) =>
-      val conds = (s"n_$n > 0" +: names.drop(i + 1).map(o => s"n_$n >= n_$o"))
-        .mkString(" AND ")
-      s"WHEN $conds THEN '$n'"
-    }.mkString("\n         ")
+    val (counts, whens) = scriptCountSql("\n         ")
     s"""WITH m AS (
-      |  SELECT doc_id,
-      |    CASE WHEN doc_id % 5 = 1 THEN translate(text, '$scriptLatinAbc', '$scriptCyrAbc')
-      |         WHEN doc_id % 5 = 2 THEN translate(text, '$scriptLatinAbc', '$scriptGreekAbc')
-      |         WHEN doc_id % 5 = 3 THEN translate(text, 'aeiou', '01234')
-      |         ELSE text END AS t
-      |  FROM documents WHERE text IS NOT NULL
+      |${translitShellSql(mixed = false)}
       |), c AS (
       |  SELECT doc_id, CAST(length(t) AS BIGINT) AS n_chars,
       |       $counts
       |  FROM m
       |)
-      |SELECT doc_id, n_chars, ${names.map(n => s"n_$n").mkString(", ")},
+      |SELECT doc_id, n_chars, ${TextOps.scriptClasses.map(c => s"n_${c._1}").mkString(", ")},
       |       CASE $whens
       |         ELSE 'other' END AS dominant
       |FROM c""".stripMargin
@@ -781,21 +759,7 @@ object TextQueries extends Family {
     // shell so Cyrillic/Greek/digit slices actually exercise the
     // cross-checks; both signals are per-row scans, the only shuffle
     // is the doc-keyed join of the two frames.
-    val mapped =
-      when(col("doc_id") % 5 === 1,
-        translate(col("text"), scriptLatinAbc, scriptCyrAbc))
-        .when(col("doc_id") % 5 === 2,
-          translate(col("text"), scriptLatinAbc, scriptGreekAbc))
-        .when(col("doc_id") % 5 === 3,
-          translate(col("text"), "aeiou", "01234"))
-        // mixed-script slice (vowels+t to Cyrillic): the spam shape
-        // this screen exists for - per-doc script dominance flips
-        // while the language evidence stays mixed, producing REAL
-        // inconsistent rows the oracle must reproduce
-        .when(col("doc_id") % 5 === 4,
-          translate(col("text"), "aeiout", "аеиоут"))
-        .otherwise(col("text"))
-    val base = tbl(s, dir, "documents").withColumn("stext", mapped)
+    val base = tbl(s, dir, "documents").withColumn("stext", translitShell(mixed = true))
     val langs = base.select(col("doc_id"),
       TextOps.langId(col("stext")).as("lang_pred"))
     val scripts = TextOps.scriptProfile(base, "doc_id", "stext")
@@ -811,26 +775,11 @@ object TextQueries extends Family {
     // transliteration shell -> the shared langId CTE chain + the
     // shared script-count chain -> the expected-script map
     // (interpolated from TextOps.langExpectedScript, ONE definition)
-    val classes = TextOps.scriptClasses
-    val counts = classes.map { case (n, pat) =>
-      s"CAST(length(t) - length(regexp_replace(t, '$pat', '', 'g')) AS BIGINT) AS n_$n"
-    }.mkString(",\n       ")
-    val names = classes.map(_._1)
-    val whens = names.zipWithIndex.map { case (n, i) =>
-      val conds = (s"n_$n > 0" +: names.drop(i + 1).map(o => s"n_$n >= n_$o"))
-        .mkString(" AND ")
-      s"WHEN $conds THEN '$n'"
-    }.mkString(" ")
+    val (counts, whens) = scriptCountSql(" ")
     val expWhens = TextOps.langExpectedScript.toSeq.sortBy(_._1)
       .map { case (l, sc) => s"WHEN p.lang_pred = '$l' THEN '$sc'" }.mkString(" ")
     s"""WITH m AS (
-      |  SELECT doc_id,
-      |    CASE WHEN doc_id % 5 = 1 THEN translate(text, '$scriptLatinAbc', '$scriptCyrAbc')
-      |         WHEN doc_id % 5 = 2 THEN translate(text, '$scriptLatinAbc', '$scriptGreekAbc')
-      |         WHEN doc_id % 5 = 3 THEN translate(text, 'aeiou', '01234')
-      |         WHEN doc_id % 5 = 4 THEN translate(text, 'aeiout', 'аеиоут')
-      |         ELSE text END AS t
-      |  FROM documents WHERE text IS NOT NULL
+      |${translitShellSql(mixed = true)}
       |), ${langIdCtes("m", "t")}, sc0 AS (
       |  SELECT doc_id, $counts FROM m
       |), scd AS (
@@ -1602,16 +1551,6 @@ object TextQueries extends Family {
     // survive the head cut. langId + token count fuse into the scan;
     // temperatureMix's stratum frame broadcasts - the corpus never
     // shuffles.
-    val mapped =
-      when(col("doc_id") % 5 === 1,
-        translate(col("text"), scriptLatinAbc, scriptCyrAbc))
-        .when(col("doc_id") % 5 === 2,
-          translate(col("text"), scriptLatinAbc, scriptGreekAbc))
-        .when(col("doc_id") % 5 === 3,
-          translate(col("text"), "aeiou", "01234"))
-        .when(col("doc_id") % 5 === 4,
-          translate(col("text"), "aeiout", "аеиоут"))
-        .otherwise(col("text"))
     // TWO materialization points (the 100-TB discipline for feeding
     // a classifier from a computed column): (1) the transliterated
     // text itself - langId's gram windows reference their input
@@ -1622,7 +1561,7 @@ object TextQueries extends Family {
     // its input on three branches and a classifier must run once
     // per document, not once per consumer.
     val shell = tblS(s, dir, "documents").filter(col("text").isNotNull)
-      .select(col("doc_id"), mapped.as("stext"))
+      .select(col("doc_id"), translitShell(mixed = true).as("stext"))
       .localCheckpoint()
     val docsPre = shell
       .select(col("doc_id"), TextOps.langId(col("stext")).as("lang"),
@@ -1634,13 +1573,7 @@ object TextQueries extends Family {
     // transliteration shell -> the shared langId replay -> the
     // docs_temperature_mix keep-fraction chain over token volumes
     s"""WITH m AS (
-      |  SELECT doc_id,
-      |    CASE WHEN doc_id % 5 = 1 THEN translate(text, '$scriptLatinAbc', '$scriptCyrAbc')
-      |         WHEN doc_id % 5 = 2 THEN translate(text, '$scriptLatinAbc', '$scriptGreekAbc')
-      |         WHEN doc_id % 5 = 3 THEN translate(text, 'aeiou', '01234')
-      |         WHEN doc_id % 5 = 4 THEN translate(text, 'aeiout', 'аеиоут')
-      |         ELSE text END AS t
-      |  FROM documents WHERE text IS NOT NULL
+      |${translitShellSql(mixed = true)}
       |), ${langIdCtes("m", "t")}, base AS (
       |  SELECT m.doc_id, lp.lang_pred AS lang,
       |    CAST(len(list_filter(string_split_regex(lower(trim(m.t)), '\\s+'),
@@ -1657,12 +1590,6 @@ object TextQueries extends Family {
     // PSI compares 42-cell histogram frames, never corpus rows.
     val id = col("doc_id")
     val docs = tbl(s, dir, "documents").filter(col("text").isNotNull)
-    val refMapped =
-      when(id % 5 === 1, translate(col("text"), scriptLatinAbc, scriptCyrAbc))
-        .when(id % 5 === 2, translate(col("text"), scriptLatinAbc, scriptGreekAbc))
-        .when(id % 5 === 3, translate(col("text"), "aeiou", "01234"))
-        .when(id % 5 === 4, translate(col("text"), "aeiout", "аеиоут"))
-        .otherwise(col("text"))
     val candMapped =
       when(id % 7 === 1 || id % 7 === 2,
         translate(col("text"), scriptLatinAbc, scriptCyrAbc))
@@ -1671,7 +1598,7 @@ object TextQueries extends Family {
     // one scan classifies BOTH snapshots (ids offset to keep the
     // union keyed); the tiny (doc_id, bin) frame pins so the two
     // histogram branches don't re-run the scan
-    val scored = docs.select(id.as("doc_id"), refMapped.as("stext"))
+    val scored = docs.select(id.as("doc_id"), translitShell(mixed = true).as("stext"))
       .unionByName(docs.select((id + 1000000L).as("doc_id"),
         candMapped.as("stext")))
       .select(col("doc_id"), TextOps.langBin(col("stext")).as("bin"))
@@ -1688,13 +1615,7 @@ object TextQueries extends Family {
     // lang<->bin mapping is a bijection, so category cells equal the
     // engine's integer-bin cells)
     s"""WITH m AS (
-      |  SELECT doc_id,
-      |    CASE WHEN doc_id % 5 = 1 THEN translate(text, '$scriptLatinAbc', '$scriptCyrAbc')
-      |         WHEN doc_id % 5 = 2 THEN translate(text, '$scriptLatinAbc', '$scriptGreekAbc')
-      |         WHEN doc_id % 5 = 3 THEN translate(text, 'aeiou', '01234')
-      |         WHEN doc_id % 5 = 4 THEN translate(text, 'aeiout', 'аеиоут')
-      |         ELSE text END AS t
-      |  FROM documents WHERE text IS NOT NULL
+      |${translitShellSql(mixed = true)}
       |  UNION ALL
       |  SELECT doc_id + 1000000,
       |    CASE WHEN doc_id % 7 IN (1, 2) THEN translate(text, '$scriptLatinAbc', '$scriptCyrAbc')
@@ -1735,14 +1656,8 @@ object TextQueries extends Family {
     // gopherFilters - no doc-keyed re-join), one 43-key aggregate;
     // exact integer counts, one double division per output row.
     val id = col("doc_id")
-    val mapped =
-      when(id % 5 === 1, translate(col("text"), scriptLatinAbc, scriptCyrAbc))
-        .when(id % 5 === 2, translate(col("text"), scriptLatinAbc, scriptGreekAbc))
-        .when(id % 5 === 3, translate(col("text"), "aeiou", "01234"))
-        .when(id % 5 === 4, translate(col("text"), "aeiout", "аеиоут"))
-        .otherwise(col("text"))
     val shell = tbl(s, dir, "documents").filter(col("text").isNotNull)
-      .select(id, mapped.as("stext"))
+      .select(id, translitShell(mixed = true).as("stext"))
       .withColumn("lang", TextOps.langId(col("stext")))
     TextOps.gopherFilters(shell, "doc_id", "stext", keepCols = Seq("lang"))
       .groupBy(col("lang"))
@@ -1759,13 +1674,7 @@ object TextQueries extends Family {
     // -> per-language exact-count pass rates (one double division
     // per output row)
     s"""WITH m AS (
-      |  SELECT doc_id,
-      |    CASE WHEN doc_id % 5 = 1 THEN translate(text, '$scriptLatinAbc', '$scriptCyrAbc')
-      |         WHEN doc_id % 5 = 2 THEN translate(text, '$scriptLatinAbc', '$scriptGreekAbc')
-      |         WHEN doc_id % 5 = 3 THEN translate(text, 'aeiou', '01234')
-      |         WHEN doc_id % 5 = 4 THEN translate(text, 'aeiout', 'аеиоут')
-      |         ELSE text END AS t
-      |  FROM documents WHERE text IS NOT NULL
+      |${translitShellSql(mixed = true)}
       |), ${langIdCtes("m", "t")}, ${gopherCtes("m", "t")}, j AS (
       |  SELECT lp.lang_pred AS lang, gv.keep, gv.stop_ok, gv.alpha_ok, gv.words_ok
       |  FROM gv JOIN lpred lp USING (doc_id)
@@ -2351,6 +2260,57 @@ object TextQueries extends Family {
       |      AND n_symbols*10 <= n_words AS keep
       |  FROM gfeat
       |)"""
+
+  /** The transliteration shell over `documents.text`: `doc_id % 5`
+    * picks a Cyrillic (1), Greek (2) or digit-vowel (3) slice; `mixed`
+    * adds the vowels+t-to-Cyrillic slice (4) - the spam shape whose
+    * per-doc script dominance flips while the language evidence stays
+    * mixed. The Spark column and the oracle's `m` body
+    * ([[translitShellSql]]) come from the same alphabets.
+    */
+  private def translitShell(mixed: Boolean): Column = {
+    val (id, t) = (col("doc_id"), col("text"))
+    val slices = when(id % 5 === 1, translate(t, scriptLatinAbc, scriptCyrAbc))
+      .when(id % 5 === 2, translate(t, scriptLatinAbc, scriptGreekAbc))
+      .when(id % 5 === 3, translate(t, "aeiou", "01234"))
+    (if (mixed) slices.when(id % 5 === 4, translate(t, "aeiout", "аеиоут")) else slices)
+      .otherwise(t)
+  }
+
+  /** `SELECT doc_id, <shell> AS t FROM documents` - the oracle side of
+    * [[translitShell]]. Not pre-stripMargin'd (the outer templates
+    * strip).
+    */
+  private def translitShellSql(mixed: Boolean): String = {
+    val slices = Seq(
+      s"1 THEN translate(text, '$scriptLatinAbc', '$scriptCyrAbc')",
+      s"2 THEN translate(text, '$scriptLatinAbc', '$scriptGreekAbc')",
+      "3 THEN translate(text, 'aeiou', '01234')") ++
+      (if (mixed) Seq("4 THEN translate(text, 'aeiout', 'аеиоут')") else Nil)
+    slices.map(w => s"WHEN doc_id % 5 = $w").mkString(
+      "  SELECT doc_id,\n  |    CASE ", "\n  |         ",
+      "\n  |         ELSE text END AS t\n  |  FROM documents WHERE text IS NOT NULL")
+  }
+
+  /** The [[TextOps.scriptProfile]] replay over a relation with text
+    * `t`: the per-class range-count columns (`n_<class>`, interpolated
+    * from [[TextOps.scriptClasses]]) and the dominant-class CASE arms,
+    * joined by `whenSep`. Shared by `text_scripts` and
+    * `text_lang_consistency`.
+    */
+  private def scriptCountSql(whenSep: String): (String, String) = {
+    val classes = TextOps.scriptClasses
+    val counts = classes.map { case (n, pat) =>
+      s"CAST(length(t) - length(regexp_replace(t, '$pat', '', 'g')) AS BIGINT) AS n_$n"
+    }.mkString(",\n       ")
+    val names = classes.map(_._1)
+    val whens = names.zipWithIndex.map { case (n, i) =>
+      val conds = (s"n_$n > 0" +: names.drop(i + 1).map(o => s"n_$n >= n_$o"))
+        .mkString(" AND ")
+      s"WHEN $conds THEN '$n'"
+    }.mkString(whenSep)
+    (counts, whens)
+  }
 
   // 26 consecutive CJK Unified Ideographs - inside scriptClasses' cjk
   // range AND DedupOps.noSpaceScriptPattern, for the segmentation shell

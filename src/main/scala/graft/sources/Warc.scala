@@ -2,11 +2,11 @@ package graft.sources
 
 import java.nio.charset.{Charset, StandardCharsets}
 
+import scala.reflect.runtime.universe.TypeTag
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.{functions => F}
-import org.apache.spark.sql.functions.col
 
 /** WARC (Web ARChive, ISO 28500 / WARC-1.1) ingestion - the missing
   * FIRST hop of the web tier: everything downstream of HTML (strip, C4,
@@ -33,6 +33,14 @@ import org.apache.spark.sql.functions.col
   * payload ends that FILE's parse with the records already framed
   * (corrupt crawl segments are routine; one bad tail must not kill
   * the task).
+  *
+  * ONE record framer ([[records]]) serves every entry point: the
+  * stream readers sniff gzip and frame the (inflated) stream; the
+  * whole-blob parses and [[fetchRecords]] inflate first
+  * ([[gunzipAll]]) and frame the plain bytes as a stream whose record
+  * length is capped at the blob's length. Each record type has one
+  * decoder (response -> [[httpPage]], revisit, conversion -> WET doc,
+  * metadata -> WAT entry) shared by the blob and stream paths.
   *
   * Only `response` records carrying an HTTP payload surface as pages
   * (warcinfo/request/metadata/revisit records are framing, not
@@ -110,25 +118,19 @@ object Warc {
     * the first malformed record boundary - never throws on corrupt
     * input.
     */
-  def parseWarcPages(raw: Array[Byte]): Seq[WarcPage] = {
+  def parseWarcPages(raw: Array[Byte]): Seq[WarcPage] = parseBlob(raw)(httpPage)
+
+  /** Frame one whole blob: gzip (single- or multi-member) inflates
+    * first through [[gunzipAll]] - its total cap holds and a corrupt
+    * gzip blob gives Nil - then the plain bytes go through the one
+    * framer with the record length capped at their length.
+    */
+  private def parseBlob[T](raw: Array[Byte])(
+      decode: (Map[String, String], Array[Byte]) => Option[T]): Seq[T] = {
     val bytes = if (isGzip(raw)) gunzipAll(raw).orNull else raw
-    if (bytes == null) return Nil
-    val out = Seq.newBuilder[WarcPage]
-    var i = 0
-    var ok = true
-    while (ok && i < bytes.length) {
-      parseRecord(bytes, i) match {
-        case Some((headers, payloadStart, payloadLen, next)) =>
-          if (headers.getOrElse("warc-type", "") == "response" &&
-            headers.getOrElse("content-type", "").toLowerCase
-              .startsWith("application/http")) {
-            httpPage(headers, bytes, payloadStart, payloadLen).foreach(out += _)
-          }
-          i = next
-        case None => ok = false
-      }
-    }
-    out.result()
+    if (bytes == null) Nil
+    else records(new java.io.ByteArrayInputStream(bytes), bytes.length)
+      .flatMap { case (hs, payload) => decode(hs, payload) }.toList
   }
 
   /** One `revisit` record: a re-fetch whose payload was IDENTICAL to
@@ -153,28 +155,16 @@ object Warc {
     * refuse-don't-crash framing: stops at the first malformed record
     * boundary.
     */
-  def parseWarcRevisits(raw: Array[Byte]): Seq[WarcRevisit] = {
-    val bytes = if (isGzip(raw)) gunzipAll(raw).orNull else raw
-    if (bytes == null) return Nil
-    val out = Seq.newBuilder[WarcRevisit]
-    var i = 0
-    var ok = true
-    while (ok && i < bytes.length) {
-      parseRecord(bytes, i) match {
-        case Some((headers, _, _, next)) =>
-          if (headers.getOrElse("warc-type", "") == "revisit") {
-            out += WarcRevisit(
-              headers.getOrElse("warc-target-uri", ""),
-              headers.getOrElse("warc-date", ""),
-              headers.getOrElse("warc-refers-to", ""),
-              headers.getOrElse("warc-payload-digest", ""))
-          }
-          i = next
-        case None => ok = false
-      }
-    }
-    out.result()
-  }
+  def parseWarcRevisits(raw: Array[Byte]): Seq[WarcRevisit] = parseBlob(raw)(revisit)
+
+  private def revisit(hs: Map[String, String], payload: Array[Byte]): Option[WarcRevisit] =
+    if (hs.getOrElse("warc-type", "") == "revisit")
+      Some(WarcRevisit(
+        hs.getOrElse("warc-target-uri", ""),
+        hs.getOrElse("warc-date", ""),
+        hs.getOrElse("warc-refers-to", ""),
+        hs.getOrElse("warc-payload-digest", "")))
+    else None
 
   // ---------------------------------------------------------------
   // WET (extracted text) - the OTHER CommonCrawl interchange file
@@ -204,23 +194,7 @@ object Warc {
     * the CommonCrawl *.warc.wet.gz layout), in file order. Same
     * refuse-don't-crash framing as [[parseWarcPages]].
     */
-  def parseWetDocs(raw: Array[Byte]): Seq[WetDoc] = {
-    val bytes = if (isGzip(raw)) gunzipAll(raw).orNull else raw
-    if (bytes == null) return Nil
-    val out = Seq.newBuilder[WetDoc]
-    var i = 0
-    var ok = true
-    while (ok && i < bytes.length) {
-      parseRecord(bytes, i) match {
-        case Some((headers, payloadStart, payloadLen, next)) =>
-          wetDoc(headers, java.util.Arrays.copyOfRange(
-            bytes, payloadStart, payloadStart + payloadLen)).foreach(out += _)
-          i = next
-        case None => ok = false
-      }
-    }
-    out.result()
-  }
+  def parseWetDocs(raw: Array[Byte]): Seq[WetDoc] = parseBlob(raw)(wetDoc)
 
   /** Stream one WET file's documents record-at-a-time - the bounded-
     * memory reader, sharing [[parseWarcStream]]'s framer.
@@ -228,9 +202,7 @@ object Warc {
   def parseWetStream(
       in0: java.io.InputStream,
       maxRecordBytes: Int = 1 << 30): Iterator[WetDoc] =
-    streamRecords(in0, maxRecordBytes).flatMap { case (hs, payload) =>
-      wetDoc(hs, payload)
-    }
+    parseStream(in0, maxRecordBytes)(wetDoc)
 
   /** Serialize docs as a spec-shaped WET blob: a `warcinfo` record then
     * one `conversion` record per document (text/plain, UTF-8) - the
@@ -244,47 +216,19 @@ object Warc {
     * *.warc.wet.gz wire layout.
     */
   def writeWetGzBytes(docs: Seq[WetDoc], infoLine: String = "graft-extractor"): Array[Byte] =
-    wetRecordBlocks(docs, infoLine).flatMap { rec =>
-      val bos = new java.io.ByteArrayOutputStream()
-      val gz = new java.util.zip.GZIPOutputStream(bos)
-      gz.write(rec); gz.finish(); gz.close()
-      bos.toByteArray
-    }.toArray
+    wetRecordBlocks(docs, infoLine).flatMap(gzMember).toArray
 
-  private def wetRecordBlocks(docs: Seq[WetDoc], infoLine: String): Seq[Array[Byte]] = {
-    def record(headers: Seq[(String, String)], payload: Array[Byte]): Array[Byte] = {
-      val head = new StringBuilder("WARC/1.1").append(CRLF)
-      headers.foreach { case (k, v) => head.append(k).append(": ").append(v).append(CRLF) }
-      head.append("Content-Length: ").append(payload.length).append(CRLF).append(CRLF)
-      head.toString.getBytes(StandardCharsets.UTF_8) ++ payload ++
-        (CRLF + CRLF).getBytes(StandardCharsets.UTF_8)
-    }
-    val info = record(
-      Seq("WARC-Type" -> "warcinfo", "Content-Type" -> "application/warc-fields"),
-      s"software: $infoLine$CRLF".getBytes(StandardCharsets.UTF_8))
-    info +: docs.map { d =>
-      record(
-        Seq("WARC-Type" -> "conversion",
-          "WARC-Target-URI" -> d.url,
-          "WARC-Date" -> d.fetchTime,
-          "Content-Type" -> "text/plain"),
-        d.text.getBytes(StandardCharsets.UTF_8))
-    }
-  }
+  private def wetRecordBlocks(docs: Seq[WetDoc], infoLine: String): Seq[Array[Byte]] =
+    textRecordBlocks(infoLine, "conversion", "text/plain")(
+      docs.map(d => (d.url, d.fetchTime, d.text)))
 
   /** Explode a binary WET-blob column into document rows beside the
     * blob's id. Output: (idCol, url, fetch_time, text).
     */
-  def wetIngest(df: DataFrame, idCol: String, bytesCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(F.col(idCol).cast("long"), F.col(bytesCol))
-      .as[(Long, Array[Byte])]
-      .flatMap { case (id, bytes) =>
-        parseWetDocs(bytes).map(d => (id, d.url, d.fetchTime, d.text))
-      }
-      .toDF(idCol, "url", "fetch_time", "text")
-  }
+  def wetIngest(df: DataFrame, idCol: String, bytesCol: String): DataFrame =
+    explode(df, idCol, bytesCol, "url", "fetch_time", "text") { (id, bytes) =>
+      parseWetDocs(bytes).map(d => (id, d.url, d.fetchTime, d.text))
+    }
 
   /** Read a directory of .wet / .warc.wet.gz files into document rows:
     * one STREAMING task per file, the same bounded-memory discipline as
@@ -293,31 +237,10 @@ object Warc {
   def readWetFiles(
       spark: SparkSession,
       path: String,
-      maxRecordBytes: Int = 1 << 30): DataFrame = {
-    import spark.implicits._
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = fs.globStatus(new org.apache.hadoop.fs.Path(hPath, "*.wet*"))
-    val paths = if (files == null) Seq.empty[String]
-      else files.toSeq.filter(_.isFile).map(_.getPath.toString).sorted
-    val schema = Seq("path", "url", "fetch_time", "text")
-    if (paths.isEmpty)
-      return spark.emptyDataset[(String, String, String, String)].toDF(schema: _*)
-    spark.createDataset(paths)
-      .repartition(paths.length) // one task per file
-      .flatMap { p =>
-        val fp = new org.apache.hadoop.fs.Path(p)
-        val efs = fp.getFileSystem(new org.apache.hadoop.conf.Configuration())
-        val in = efs.open(fp)
-        Option(org.apache.spark.TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit] { _ =>
-            try in.close() catch { case NonFatal(_) => () }
-          })
-        parseWetStream(in, maxRecordBytes)
-          .map(d => (p, d.url, d.fetchTime, d.text))
-      }
-      .toDF(schema: _*)
-  }
+      maxRecordBytes: Int = 1 << 30): DataFrame =
+    readFiles(spark, path, "*.wet*", "url", "fetch_time", "text") { (p, in) =>
+      parseWetStream(in, maxRecordBytes).map(d => (p, d.url, d.fetchTime, d.text))
+    }
 
   // ---------------------------------------------------------------
   // WAT (metadata JSON) - the THIRD CommonCrawl interchange file
@@ -347,23 +270,7 @@ object Warc {
   /** Parse the `metadata` entries of one WAT blob (plain or gzip), in
     * file order - same refuse-don't-crash framing as the page path.
     */
-  def parseWatEntries(raw: Array[Byte]): Seq[WatEntry] = {
-    val bytes = if (isGzip(raw)) gunzipAll(raw).orNull else raw
-    if (bytes == null) return Nil
-    val out = Seq.newBuilder[WatEntry]
-    var i = 0
-    var ok = true
-    while (ok && i < bytes.length) {
-      parseRecord(bytes, i) match {
-        case Some((headers, payloadStart, payloadLen, next)) =>
-          watEntry(headers, java.util.Arrays.copyOfRange(
-            bytes, payloadStart, payloadStart + payloadLen)).foreach(out += _)
-          i = next
-        case None => ok = false
-      }
-    }
-    out.result()
-  }
+  def parseWatEntries(raw: Array[Byte]): Seq[WatEntry] = parseBlob(raw)(watEntry)
 
   /** Stream one WAT file's entries record-at-a-time (bounded memory,
     * shared framer).
@@ -371,9 +278,7 @@ object Warc {
   def parseWatStream(
       in0: java.io.InputStream,
       maxRecordBytes: Int = 1 << 30): Iterator[WatEntry] =
-    streamRecords(in0, maxRecordBytes).flatMap { case (hs, payload) =>
-      watEntry(hs, payload)
-    }
+    parseStream(in0, maxRecordBytes)(watEntry)
 
   /** Serialize entries as a WAT blob: warcinfo + one `metadata` record
     * per entry (application/json). */
@@ -382,47 +287,19 @@ object Warc {
 
   /** Per-record gzip members - the *.warc.wat.gz wire layout. */
   def writeWatGzBytes(entries: Seq[WatEntry], infoLine: String = "graft-meta"): Array[Byte] =
-    watRecordBlocks(entries, infoLine).flatMap { rec =>
-      val bos = new java.io.ByteArrayOutputStream()
-      val gz = new java.util.zip.GZIPOutputStream(bos)
-      gz.write(rec); gz.finish(); gz.close()
-      bos.toByteArray
-    }.toArray
+    watRecordBlocks(entries, infoLine).flatMap(gzMember).toArray
 
-  private def watRecordBlocks(entries: Seq[WatEntry], infoLine: String): Seq[Array[Byte]] = {
-    def record(headers: Seq[(String, String)], payload: Array[Byte]): Array[Byte] = {
-      val head = new StringBuilder("WARC/1.1").append(CRLF)
-      headers.foreach { case (k, v) => head.append(k).append(": ").append(v).append(CRLF) }
-      head.append("Content-Length: ").append(payload.length).append(CRLF).append(CRLF)
-      head.toString.getBytes(StandardCharsets.UTF_8) ++ payload ++
-        (CRLF + CRLF).getBytes(StandardCharsets.UTF_8)
-    }
-    val info = record(
-      Seq("WARC-Type" -> "warcinfo", "Content-Type" -> "application/warc-fields"),
-      s"software: $infoLine$CRLF".getBytes(StandardCharsets.UTF_8))
-    info +: entries.map { e =>
-      record(
-        Seq("WARC-Type" -> "metadata",
-          "WARC-Target-URI" -> e.url,
-          "WARC-Date" -> e.fetchTime,
-          "Content-Type" -> "application/json"),
-        e.json.getBytes(StandardCharsets.UTF_8))
-    }
-  }
+  private def watRecordBlocks(entries: Seq[WatEntry], infoLine: String): Seq[Array[Byte]] =
+    textRecordBlocks(infoLine, "metadata", "application/json")(
+      entries.map(e => (e.url, e.fetchTime, e.json)))
 
   /** Explode a binary WAT-blob column into entry rows beside the blob's
     * id. Output: (idCol, url, fetch_time, json).
     */
-  def watIngest(df: DataFrame, idCol: String, bytesCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(F.col(idCol).cast("long"), F.col(bytesCol))
-      .as[(Long, Array[Byte])]
-      .flatMap { case (id, bytes) =>
-        parseWatEntries(bytes).map(e => (id, e.url, e.fetchTime, e.json))
-      }
-      .toDF(idCol, "url", "fetch_time", "json")
-  }
+  def watIngest(df: DataFrame, idCol: String, bytesCol: String): DataFrame =
+    explode(df, idCol, bytesCol, "url", "fetch_time", "json") { (id, bytes) =>
+      parseWatEntries(bytes).map(e => (id, e.url, e.fetchTime, e.json))
+    }
 
   /** Read a directory of .wat / .warc.wat.gz files into entry rows: one
     * STREAMING task per file. Output: (path, url, fetch_time, json).
@@ -430,78 +307,10 @@ object Warc {
   def readWatFiles(
       spark: SparkSession,
       path: String,
-      maxRecordBytes: Int = 1 << 30): DataFrame = {
-    import spark.implicits._
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = fs.globStatus(new org.apache.hadoop.fs.Path(hPath, "*.wat*"))
-    val paths = if (files == null) Seq.empty[String]
-      else files.toSeq.filter(_.isFile).map(_.getPath.toString).sorted
-    val schema = Seq("path", "url", "fetch_time", "json")
-    if (paths.isEmpty)
-      return spark.emptyDataset[(String, String, String, String)].toDF(schema: _*)
-    spark.createDataset(paths)
-      .repartition(paths.length) // one task per file
-      .flatMap { p =>
-        val fp = new org.apache.hadoop.fs.Path(p)
-        val efs = fp.getFileSystem(new org.apache.hadoop.conf.Configuration())
-        val in = efs.open(fp)
-        Option(org.apache.spark.TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit] { _ =>
-            try in.close() catch { case NonFatal(_) => () }
-          })
-        parseWatStream(in, maxRecordBytes)
-          .map(e => (p, e.url, e.fetchTime, e.json))
-      }
-      .toDF(schema: _*)
-  }
-
-  /** Parse the CRLF-separated `Name: value` lines after a version line
-    * into lowercased-key headers. None on a line without a colon
-    * (malformed block). Shared by the whole-blob and streaming paths.
-    */
-  private def parseHeaderLines(lines: Array[String]): Option[Map[String, String]] = {
-    val headers = Map.newBuilder[String, String]
-    var li = 1
-    while (li < lines.length) {
-      val ln = lines(li)
-      val c = ln.indexOf(':')
-      if (c <= 0) return None // header without a colon: malformed block
-      headers += (ln.substring(0, c).trim.toLowerCase ->
-        ln.substring(c + 1).trim)
-      li += 1
+      maxRecordBytes: Int = 1 << 30): DataFrame =
+    readFiles(spark, path, "*.wat*", "url", "fetch_time", "json") { (p, in) =>
+      parseWatStream(in, maxRecordBytes).map(e => (p, e.url, e.fetchTime, e.json))
     }
-    Some(headers.result())
-  }
-
-  /** Frame ONE record at `start`: (lowercased headers, payload offset,
-    * payload length, offset of the next record). None on any framing
-    * violation: bad version line, non-CRLF header block, missing or
-    * non-numeric Content-Length, payload or separator running past the
-    * buffer.
-    */
-  private def parseRecord(
-      bytes: Array[Byte],
-      start: Int): Option[(Map[String, String], Int, Int, Int)] = {
-    val headerEnd = indexOfCrlfCrlf(bytes, start)
-    if (headerEnd < 0) return None
-    val head = new String(bytes, start, headerEnd - start, StandardCharsets.UTF_8)
-    val lines = head.split("\r\n", -1)
-    if (lines.isEmpty || !lines(0).startsWith("WARC/1.")) return None
-    val hs = parseHeaderLines(lines) match {
-      case Some(h) => h
-      case None => return None
-    }
-    val len = hs.get("content-length").flatMap(s => s.toIntOption).getOrElse(-1)
-    if (len < 0) return None
-    val payloadStart = headerEnd + 4
-    val sepEnd = payloadStart + len + 4 // payload + CRLF CRLF
-    if (sepEnd > bytes.length) return None // truncated record
-    val p = payloadStart + len
-    if (bytes(p) != '\r' || bytes(p + 1) != '\n' ||
-      bytes(p + 2) != '\r' || bytes(p + 3) != '\n') return None
-    Some((hs, payloadStart, len, sepEnd))
-  }
 
   // ---------------------------------------------------------------
   // charset detection (the HTML5 encoding-sniffing precedence)
@@ -562,9 +371,10 @@ object Warc {
     (StandardCharsets.UTF_8, 0)
   }
 
-  /** Parse an HTTP response payload into a [[WarcPage]]. None when the
-    * payload is not an HTTP response (missing status line or header
-    * terminator) - the record is skipped, not fatal to the file. The
+  /** Decode a `response` record's HTTP payload into a [[WarcPage]].
+    * None for any other record type, and when the payload is not an
+    * HTTP response (missing status line or header terminator) - the
+    * record is skipped, not fatal to the file. The
     * body decodes per [[detectCharset]] with REPLACEMENT on malformed
     * sequences (a mis-declared page yields U+FFFD runs, never a task
     * failure), a leading U+FEFF strips (a UTF-8 BOM declared via
@@ -573,16 +383,16 @@ object Warc {
     */
   private def httpPage(
       warcHeaders: Map[String, String],
-      bytes: Array[Byte],
-      payloadStart: Int,
-      payloadLen: Int): Option[WarcPage] = {
-    val end = payloadStart + payloadLen
-    val bodyAt = indexOfCrlfCrlf(bytes, payloadStart) match {
-      case at if at >= 0 && at + 4 <= end => at + 4
+      bytes: Array[Byte]): Option[WarcPage] = {
+    if (warcHeaders.getOrElse("warc-type", "") != "response" ||
+      !warcHeaders.getOrElse("content-type", "").toLowerCase
+        .startsWith("application/http")) return None
+    val end = bytes.length
+    val bodyAt = indexOfCrlfCrlf(bytes) match {
+      case at if at >= 0 => at + 4
       case _ => return None
     }
-    val head = new String(bytes, payloadStart, bodyAt - 4 - payloadStart,
-      StandardCharsets.UTF_8)
+    val head = new String(bytes, 0, bodyAt - 4, StandardCharsets.UTF_8)
     val lines = head.split("\r\n", -1)
     if (lines.isEmpty || !lines(0).startsWith("HTTP/")) return None
     val statusParts = lines(0).split(" ")
@@ -614,8 +424,8 @@ object Warc {
       charset = cs.name().toLowerCase(java.util.Locale.ROOT)))
   }
 
-  private def indexOfCrlfCrlf(bytes: Array[Byte], from: Int): Int = {
-    var i = from
+  private def indexOfCrlfCrlf(bytes: Array[Byte]): Int = {
+    var i = 0
     val last = bytes.length - 4
     while (i <= last) {
       if (bytes(i) == '\r' && bytes(i + 1) == '\n' &&
@@ -642,23 +452,15 @@ object Warc {
   def parseWarcStream(
       in0: java.io.InputStream,
       maxRecordBytes: Int = 1 << 30): Iterator[WarcPage] =
-    streamRecords(in0, maxRecordBytes).flatMap { case (hs, payload) =>
-      if (hs.getOrElse("warc-type", "") == "response" &&
-        hs.getOrElse("content-type", "").toLowerCase
-          .startsWith("application/http"))
-        httpPage(hs, payload, 0, payload.length)
-      else None
-    }
+    parseStream(in0, maxRecordBytes)(httpPage)
 
-  /** The shared streaming record framer behind [[parseWarcStream]] and
-    * [[parseWetStream]]: (lowercased headers, payload) per record,
-    * bounded memory, refuse-don't-crash (any framing violation,
-    * oversized record, or IO error ends the iteration; never throws).
+  /** Frame one stream: gzip is sniffed off the first two bytes and
+    * inflated member-wise in-stream, then the records go through the
+    * one framer, each capped at `maxRecordBytes`. The caller owns
+    * closing `in0`.
     */
-  private def streamRecords(
-      in0: java.io.InputStream,
-      maxRecordBytes: Int): Iterator[(Map[String, String], Array[Byte])] = {
-    val headerCap = 1 << 20 // a sane WARC header block is < 1 KB
+  private def parseStream[T](in0: java.io.InputStream, maxRecordBytes: Int)(
+      decode: (Map[String, String], Array[Byte]) => Option[T]): Iterator[T] = {
     val buffered = new java.io.BufferedInputStream(in0, 64 * 1024)
     val in: java.io.InputStream =
       try {
@@ -669,64 +471,105 @@ object Warc {
           new java.util.zip.GZIPInputStream(buffered, 64 * 1024)
         else buffered
       } catch { case NonFatal(_) => buffered }
+    records(in, maxRecordBytes).flatMap { case (hs, payload) => decode(hs, payload) }
+  }
 
-    // read exactly n bytes; None on early EOF
+  /** THE record framer behind every parse entry point: (lowercased
+    * headers, payload) per record, in stream order. It frames `in` as
+    * given - callers inflate gzip first - and refuses a record whose
+    * Content-Length exceeds `maxRecordBytes`. Memory is bounded by ONE
+    * record: headers scan a small read window in place, and a
+    * payload's buffer grows as its bytes arrive, so a corrupt
+    * Content-Length costs what the stream holds, not what it declares
+    * (a real record peaks at about twice its size). Refuse-don't-crash:
+    * any framing violation (bad version line, colon-less header line,
+    * missing or non-numeric Content-Length, missing CRLF CRLF
+    * separator), oversized record, truncation, or IO error ends the
+    * iteration with the records already framed; nothing throws.
+    */
+  private def records(
+      in: java.io.InputStream,
+      maxRecordBytes: Int): Iterator[(Map[String, String], Array[Byte])] = {
+    val headerCap = 1 << 20 // a sane WARC header block is < 1 KB
+    // headers scan this window in place, refilling it as they go (a WARC
+    // header block is typically under 1 KB); payload bytes past it read
+    // straight into the payload's own buffer
+    val window = new Array[Byte](1024)
+    var pos = 0 // window(pos until lim) is read but not yet framed
+    var lim = 0
+    def fill(): Boolean = {
+      pos = 0
+      lim = math.max(in.read(window), 0)
+      lim > 0
+    }
+
+    // the header block up to CRLF CRLF (exclusive); None on EOF (clean
+    // at a record boundary, truncated inside a block) or past the cap
+    def readHeaderBlock(): Option[String] = {
+      val out = new java.io.ByteArrayOutputStream(512)
+      var state = 0 // run length of the \r\n\r\n suffix matched so far
+      while (state < 4) {
+        if (pos == lim && !fill()) return None
+        val from = pos
+        while (pos < lim && state < 4) {
+          val b = window(pos)
+          state =
+            if (b == '\r') (if (state == 2) 3 else 1)
+            else if (b == '\n' && (state == 1 || state == 3)) state + 1
+            else 0
+          pos += 1
+        }
+        out.write(window, from, pos - from)
+        if (out.size > headerCap) return None
+      }
+      Some(new String(out.toByteArray, 0, out.size - 4, StandardCharsets.UTF_8))
+    }
+
+    // exactly n bytes, the buffer doubling as they arrive; None on EOF
     def readFully(n: Int): Option[Array[Byte]] = {
-      val buf = new Array[Byte](n)
+      var buf = new Array[Byte](math.min(n, 64 * 1024))
       var off = 0
       while (off < n) {
-        val r = in.read(buf, off, n - off)
+        if (off == buf.length)
+          buf = java.util.Arrays.copyOf(buf, math.min(n.toLong, 2L * off).toInt)
+        val r =
+          if (pos < lim) {
+            val k = math.min(lim - pos, buf.length - off)
+            System.arraycopy(window, pos, buf, off, k)
+            pos += k
+            k
+          } else in.read(buf, off, buf.length - off)
         if (r < 0) return None
         off += r
       }
       Some(buf)
     }
 
-    // accumulate bytes until CRLF CRLF (exclusive); None on EOF-at-start
-    // (clean end of stream), malformed (cap hit), or EOF mid-header
-    def readHeaderBlock(): Option[Array[Byte]] = {
-      val out = new java.io.ByteArrayOutputStream(512)
-      var state = 0 // run length of the \r\n\r\n suffix matched so far
-      var first = in.read()
-      if (first < 0) return None
-      while (first >= 0) {
-        out.write(first)
-        if (out.size > headerCap) return None
-        state = (state, first) match {
-          case (0, '\r') => 1
-          case (1, '\n') => 2
-          case (2, '\r') => 3
-          case (3, '\n') => 4
-          case (_, '\r') => 1
-          case _ => 0
-        }
-        if (state == 4) {
-          val all = out.toByteArray
-          return Some(java.util.Arrays.copyOfRange(all, 0, all.length - 4))
-        }
-        first = in.read()
-      }
-      None // EOF inside a header block: truncated record
-    }
-
     // one record: (headers, payload); None ends the stream
-    def readRecord(): Option[(Map[String, String], Array[Byte])] =
-      readHeaderBlock().flatMap { headBytes =>
-        val head = new String(headBytes, StandardCharsets.UTF_8)
-        val lines = head.split("\r\n", -1)
-        if (lines.isEmpty || !lines(0).startsWith("WARC/1.")) None
-        else parseHeaderLines(lines).flatMap { hs =>
-          val len = hs.get("content-length").flatMap(_.toIntOption).getOrElse(-1)
-          if (len < 0 || len > maxRecordBytes) None // oversized record: refuse
-          else readFully(len).flatMap { payload =>
-            readFully(4).flatMap { sep =>
-              if (sep(0) == '\r' && sep(1) == '\n' &&
-                sep(2) == '\r' && sep(3) == '\n') Some((hs, payload))
-              else None
-            }
-          }
-        }
+    def readRecord(): Option[(Map[String, String], Array[Byte])] = {
+      val lines = readHeaderBlock() match {
+        case Some(head) => head.split("\r\n", -1)
+        case None => return None
       }
+      if (!lines(0).startsWith("WARC/1.")) return None
+      val headers = Map.newBuilder[String, String]
+      var li = 1
+      while (li < lines.length) {
+        val ln = lines(li)
+        val c = ln.indexOf(':')
+        if (c <= 0) return None // header without a colon: malformed block
+        headers += (ln.substring(0, c).trim.toLowerCase -> ln.substring(c + 1).trim)
+        li += 1
+      }
+      val hs = headers.result()
+      val len = hs.get("content-length").flatMap(_.toIntOption).getOrElse(-1)
+      if (len < 0 || len > maxRecordBytes) return None // oversized record: refuse
+      for {
+        payload <- readFully(len)
+        sep <- readFully(4)
+        if sep(0) == '\r' && sep(1) == '\n' && sep(2) == '\r' && sep(3) == '\n'
+      } yield (hs, payload)
+    }
 
     new Iterator[(Map[String, String], Array[Byte])] {
       private var nextRec: (Map[String, String], Array[Byte]) = _
@@ -789,6 +632,37 @@ object Warc {
     bos.toByteArray
   }
 
+  /** One WARC/1.1 record: version line, `headers`, the payload's
+    * Content-Length, blank line, payload, CRLF CRLF separator - every
+    * line CRLF-terminated, the layout [[records]] frames.
+    */
+  private def record(headers: Seq[(String, String)], payload: Array[Byte]): Array[Byte] = {
+    val head = new StringBuilder("WARC/1.1").append(CRLF)
+    headers.foreach { case (k, v) => head.append(k).append(": ").append(v).append(CRLF) }
+    head.append("Content-Length: ").append(payload.length).append(CRLF).append(CRLF)
+    head.toString.getBytes(StandardCharsets.UTF_8) ++ payload ++
+      (CRLF + CRLF).getBytes(StandardCharsets.UTF_8)
+  }
+
+  private def warcinfo(infoLine: String): Array[Byte] =
+    record(
+      Seq("WARC-Type" -> "warcinfo", "Content-Type" -> "application/warc-fields"),
+      s"software: $infoLine$CRLF".getBytes(StandardCharsets.UTF_8))
+
+  /** warcinfo, then one `warcType` record per (url, date, text) with a
+    * UTF-8 `contentType` payload - the WET and WAT layouts.
+    */
+  private def textRecordBlocks(infoLine: String, warcType: String, contentType: String)(
+      docs: Seq[(String, String, String)]): Seq[Array[Byte]] =
+    warcinfo(infoLine) +: docs.map { case (url, date, text) =>
+      record(
+        Seq("WARC-Type" -> warcType,
+          "WARC-Target-URI" -> url,
+          "WARC-Date" -> date,
+          "Content-Type" -> contentType),
+        text.getBytes(StandardCharsets.UTF_8))
+    }
+
   /** CDX coordinates of one response record's own gzip member within
     * a [[writeWarcGzBytesIndexed]] archive: `offset`/`length` delimit
     * the member exactly (seek + read + inflate fetches the record with
@@ -824,18 +698,8 @@ object Warc {
     (out.toByteArray, members.result())
   }
 
-  private def recordBlocks(pages: Seq[WarcPage], infoLine: String): Seq[Array[Byte]] = {
-    def record(headers: Seq[(String, String)], payload: Array[Byte]): Array[Byte] = {
-      val head = new StringBuilder("WARC/1.1").append(CRLF)
-      headers.foreach { case (k, v) => head.append(k).append(": ").append(v).append(CRLF) }
-      head.append("Content-Length: ").append(payload.length).append(CRLF).append(CRLF)
-      head.toString.getBytes(StandardCharsets.UTF_8) ++ payload ++
-        (CRLF + CRLF).getBytes(StandardCharsets.UTF_8)
-    }
-    val info = record(
-      Seq("WARC-Type" -> "warcinfo", "Content-Type" -> "application/warc-fields"),
-      s"software: $infoLine$CRLF".getBytes(StandardCharsets.UTF_8))
-    info +: pages.flatMap { p =>
+  private def recordBlocks(pages: Seq[WarcPage], infoLine: String): Seq[Array[Byte]] =
+    warcinfo(infoLine) +: pages.flatMap { p =>
       val req = record(
         Seq("WARC-Type" -> "request",
           "WARC-Target-URI" -> p.url,
@@ -861,7 +725,6 @@ object Warc {
         httpHead.getBytes(StandardCharsets.UTF_8) ++ body)
       Seq(req, resp)
     }
-  }
 
   /** [[writeWarcBytes]] plus trailing `revisit` records - the
     * deduplicated-recapture layout real crawls ship (the WARC 1.1
@@ -886,24 +749,17 @@ object Warc {
 
   private def revisitRecordBlocks(revisits: Seq[WarcRevisit]): Seq[Array[Byte]] =
     revisits.map { r =>
-      val head = new StringBuilder("WARC/1.1").append(CRLF)
-      Seq(
-        "WARC-Type" -> "revisit",
-        "WARC-Target-URI" -> r.url,
-        "WARC-Date" -> r.fetchTime,
-        "WARC-Profile" ->
-          "http://netpreserve.org/warc/1.1/revisit/identical-payload-digest",
-        "WARC-Refers-To" -> r.refersTo,
-        "WARC-Payload-Digest" -> r.digest,
-        "Content-Type" -> "application/http;msgtype=response"
-      ).foreach { case (k, v) => head.append(k).append(": ").append(v).append(CRLF) }
-      // payload: the revisit's HTTP headers only - the body is elsewhere
-      val payload = s"HTTP/1.1 304 Not Modified$CRLF$CRLF"
-        .getBytes(StandardCharsets.UTF_8)
-      head.append("Content-Length: ").append(payload.length)
-        .append(CRLF).append(CRLF)
-      head.toString.getBytes(StandardCharsets.UTF_8) ++ payload ++
-        (CRLF + CRLF).getBytes(StandardCharsets.UTF_8)
+      record(
+        Seq("WARC-Type" -> "revisit",
+          "WARC-Target-URI" -> r.url,
+          "WARC-Date" -> r.fetchTime,
+          "WARC-Profile" ->
+            "http://netpreserve.org/warc/1.1/revisit/identical-payload-digest",
+          "WARC-Refers-To" -> r.refersTo,
+          "WARC-Payload-Digest" -> r.digest,
+          "Content-Type" -> "application/http;msgtype=response"),
+        // payload: the revisit's HTTP headers only - the body is elsewhere
+        s"HTTP/1.1 304 Not Modified$CRLF$CRLF".getBytes(StandardCharsets.UTF_8))
     }
 
   // ---------------------------------------------------------------
@@ -917,33 +773,35 @@ object Warc {
     * declarative. Output: (idCol, url, fetch_time, status, mime,
     * html, charset).
     */
-  def ingest(df: DataFrame, idCol: String, bytesCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(F.col(idCol).cast("long"), F.col(bytesCol))
-      .as[(Long, Array[Byte])]
-      .flatMap { case (id, bytes) =>
+  def ingest(df: DataFrame, idCol: String, bytesCol: String): DataFrame =
+    explode(df, idCol, bytesCol, "url", "fetch_time", "status", "mime", "html", "charset") {
+      (id, bytes) =>
         parseWarcPages(bytes).map(p =>
           (id, p.url, p.fetchTime, p.status, p.mime, p.html, p.charset))
-      }
-      .toDF(idCol, "url", "fetch_time", "status", "mime", "html", "charset")
-  }
+    }
 
   /** Explode a binary WARC-blob column into REVISIT rows - the
     * capture-history complement of [[ingest]] (same typed-flatMap
     * shape, zero overlap: a record is a response or a revisit, never
     * both). Output: (idCol, url, fetch_time, refers_to, digest).
     */
-  def revisitIngest(df: DataFrame, idCol: String, bytesCol: String): DataFrame = {
+  def revisitIngest(df: DataFrame, idCol: String, bytesCol: String): DataFrame =
+    explode(df, idCol, bytesCol, "url", "fetch_time", "refers_to", "digest") { (id, bytes) =>
+      parseWarcRevisits(bytes).map(r => (id, r.url, r.fetchTime, r.refersTo, r.digest))
+    }
+
+  /** The typed flatMap behind every blob-column explode: `rows` turns
+    * one (id, blob) into output tuples, named `idCol` +: `columns`.
+    */
+  private def explode[R <: Product : TypeTag](
+      df: DataFrame, idCol: String, bytesCol: String, columns: String*)(
+      rows: (Long, Array[Byte]) => Seq[R]): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     df.select(F.col(idCol).cast("long"), F.col(bytesCol))
       .as[(Long, Array[Byte])]
-      .flatMap { case (id, bytes) =>
-        parseWarcRevisits(bytes).map(r =>
-          (id, r.url, r.fetchTime, r.refersTo, r.digest))
-      }
-      .toDF(idCol, "url", "fetch_time", "refers_to", "digest")
+      .flatMap { case (id, bytes) => rows(id, bytes) }
+      .toDF(idCol +: columns: _*)
   }
 
   /** Read a directory of .warc / .warc.gz files into page rows: one
@@ -960,32 +818,44 @@ object Warc {
   def readWarcFiles(
       spark: SparkSession,
       path: String,
-      maxRecordBytes: Int = 1 << 30): DataFrame = {
+      maxRecordBytes: Int = 1 << 30): DataFrame =
+    readFiles(spark, path, "*.warc*",
+      "url", "fetch_time", "status", "mime", "html", "charset") { (p, in) =>
+      parseWarcStream(in, maxRecordBytes)
+        .map(pg => (p, pg.url, pg.fetchTime, pg.status, pg.mime, pg.html, pg.charset))
+    }
+
+  /** The directory reader behind [[readWarcFiles]], [[readWetFiles]] and
+    * [[readWatFiles]]: the files matching `glob` under `path`, sorted,
+    * ONE task per file, each streaming its file through `rows` (path,
+    * stream) into tuples named "path" +: `columns`. No match gives the
+    * empty frame with the same schema.
+    */
+  private def readFiles[R <: Product : TypeTag](
+      spark: SparkSession, path: String, glob: String, columns: String*)(
+      rows: (String, java.io.InputStream) => Iterator[R]): DataFrame = {
     import spark.implicits._
     val hPath = new org.apache.hadoop.fs.Path(path)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = fs.globStatus(new org.apache.hadoop.fs.Path(hPath, "*.warc*"))
+    val files = fs.globStatus(new org.apache.hadoop.fs.Path(hPath, glob))
     val paths = if (files == null) Seq.empty[String]
       else files.toSeq.filter(_.isFile).map(_.getPath.toString).sorted
-    val schema = Seq("path", "url", "fetch_time", "status", "mime", "html", "charset")
-    if (paths.isEmpty)
-      return spark.emptyDataset[(String, String, String, Int, String, String, String)]
-        .toDF(schema: _*)
+    val schema = "path" +: columns
+    if (paths.isEmpty) return spark.emptyDataset[R].toDF(schema: _*)
     spark.createDataset(paths)
       .repartition(paths.length) // one task per file
       .flatMap { p =>
         val fp = new org.apache.hadoop.fs.Path(p)
         val efs = fp.getFileSystem(new org.apache.hadoop.conf.Configuration())
         val in = efs.open(fp)
-        // the page iterator is consumed LAZILY downstream (that is the
+        // the row iterator is consumed LAZILY downstream (that is the
         // bounded-memory point), so the stream closes at task completion,
         // not in a try/finally that would fire before consumption
         Option(org.apache.spark.TaskContext.get()).foreach(
           _.addTaskCompletionListener[Unit] { _ =>
             try in.close() catch { case NonFatal(_) => () }
           })
-        parseWarcStream(in, maxRecordBytes)
-          .map(pg => (p, pg.url, pg.fetchTime, pg.status, pg.mime, pg.html, pg.charset))
+        rows(p, in)
       }
       .toDF(schema: _*)
   }
@@ -1064,16 +934,10 @@ object Warc {
             curIn.readFully(off, buf) // positioned read: no seek state
             val rec = if (isGzip(buf)) gunzipAll(buf, maxRecordBytes).orNull else buf
             if (rec == null) None
-            else parseRecord(rec, 0) match {
-              case Some((hs, ps, pl, _))
-                  if hs.getOrElse("warc-type", "") == "response" &&
-                    hs.getOrElse("content-type", "").toLowerCase
-                      .startsWith("application/http") =>
-                httpPage(hs, rec, ps, pl).map(pg =>
-                  (name, off, pg.url, pg.fetchTime, pg.status, pg.mime,
-                    pg.html, pg.charset))
-              case _ => None
-            }
+            else records(new java.io.ByteArrayInputStream(rec), rec.length).nextOption()
+              .flatMap { case (hs, payload) => httpPage(hs, payload) }
+              .map(pg => (name, off, pg.url, pg.fetchTime, pg.status, pg.mime,
+                pg.html, pg.charset))
           }
         } catch { case NonFatal(_) => closeCur(); None }
       }

@@ -112,24 +112,48 @@ class WarcSpec extends SparkSpec {
     import org.scalacheck.rng.Seed
     val junk = Gen.chooseNum(0, 400).flatMap(n =>
       Gen.listOfN(n, Gen.chooseNum(-128, 127).map(_.toByte)))
-    val real = Warc.writeWarcBytes(pages)
-    val realGz = Warc.writeWarcGzBytes(pages)
+    val revisits = Seq(Warc.WarcRevisit("https://a.example.org/1",
+      "2024-03-01T00:00:00Z", "<urn:uuid:orig-1>", "sha1:AAAA"))
+    val docs = Seq(Warc.WetDoc("https://a.example.org/1", "2024-01-02T03:00:00Z",
+      "extracted text.\nsecond line."))
+    val entries = Seq(Warc.WatEntry("https://a.example.org/1", "2024-01-02T03:00:00Z",
+      """{"Envelope":{"Title":"t"}}"""))
+    // every record type, plain and gzip: responses + revisits, WET, WAT
+    val real = Seq(
+      Warc.writeWarcBytesWithRevisits(pages, revisits), Warc.writeWetBytes(docs),
+      Warc.writeWatBytes(entries))
+    val realGz = Seq(
+      Warc.writeWarcGzBytesWithRevisits(pages, revisits), Warc.writeWetGzBytes(docs),
+      Warc.writeWatGzBytes(entries))
     // three hostile families: pure noise, a real archive with one byte
     // flipped anywhere, and a gzip archive cut anywhere
     val mutated = for {
-      base <- Gen.oneOf(real, realGz)
+      base <- Gen.oneOf(real ++ realGz)
       i <- Gen.chooseNum(0, base.length - 1)
       b <- Gen.chooseNum(-128, 127).map(_.toByte)
     } yield { val c = base.clone(); c(i) = b; c }
-    val truncated = Gen.chooseNum(0, realGz.length - 1)
-      .map(n => java.util.Arrays.copyOfRange(realGz, 0, n))
+    val truncated = for {
+      base <- Gen.oneOf(realGz)
+      n <- Gen.chooseNum(0, base.length - 1)
+    } yield java.util.Arrays.copyOfRange(base, 0, n)
     val anyBytes = Gen.oneOf(junk.map(_.toArray), mutated, truncated)
     val prop = Prop.forAll(anyBytes) { bytes =>
-      Warc.parseWarcPages(bytes) // must return, never throw
-      true
+      // every parse must return, never throw; blob == stream wherever the
+      // blob inflates (a corrupt gzip blob refuses whole, the stream
+      // keeps the members before the damage)
+      val inflates = !Warc.isGzip(bytes) || Warc.gunzipAll(bytes).isDefined
+      def stream = new java.io.ByteArrayInputStream(bytes)
+      def parity[T](blob: Seq[T], streamed: Iterator[T]): Boolean = {
+        val s = streamed.toList
+        if (inflates) blob == s else blob.isEmpty
+      }
+      Warc.parseWarcRevisits(bytes)
+      parity(Warc.parseWarcPages(bytes), Warc.parseWarcStream(stream)) &&
+        parity(Warc.parseWetDocs(bytes), Warc.parseWetStream(stream)) &&
+        parity(Warc.parseWatEntries(bytes), Warc.parseWatStream(stream))
     }
     val res = SCTest.check(SCTest.Parameters.default
-      .withMinSuccessfulTests(200).withInitialSeed(Seed(11L)), prop)
+      .withMinSuccessfulTests(400).withInitialSeed(Seed(11L)), prop)
     assert(res.passed, res.status.toString)
   }
 
@@ -281,6 +305,24 @@ class WarcSpec extends SparkSpec {
     assert(got == local.take(2))
   }
 
+  test("a corrupt Content-Length costs what the stream holds, not what it declares") {
+    // a short tail whose header declares 512 MiB: the records before it
+    // frame, and the framer never allocates the declared length
+    val tail = ("WARC/1.1\r\nWARC-Type: response\r\n" +
+      "Content-Type: application/http;msgtype=response\r\n" +
+      "Content-Length: 536870912\r\n\r\n" + "x" * 200).getBytes(StandardCharsets.UTF_8)
+    val bytes = Warc.writeWarcBytes(pages) ++ tail
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val tid = Thread.currentThread().getId
+    val before = mx.getThreadAllocatedBytes(tid)
+    val streamed = Warc.parseWarcStream(new java.io.ByteArrayInputStream(bytes)).toList
+    val blob = Warc.parseWarcPages(bytes)
+    val allocated = mx.getThreadAllocatedBytes(tid) - before
+    assert(streamed == pages && blob == pages)
+    assert(allocated < 64L * 1024 * 1024, s"allocated $allocated bytes")
+  }
+
   test("property: parseWarcStream never throws on mutated archives") {
     import org.scalacheck.{Gen, Prop, Test => SCTest}
     import org.scalacheck.rng.Seed
@@ -355,6 +397,40 @@ class WarcSpec extends SparkSpec {
     val out = Warc.readWetFiles(spark, dir.toString)
     assert(out.select("url").as[String].collect().sorted.toSeq ==
       docs.map(_.url).sorted)
+    // WAT files beside them: one plain, one gzip, each read by its own glob
+    val entries = Seq(
+      Warc.WatEntry("https://a.example.org/1", "2024-01-02T03:00:00Z", """{"n":1}"""),
+      Warc.WatEntry("https://b.example.org/2", "2024-01-02T03:00:00Z", """{"n":2}"""))
+    java.nio.file.Files.write(dir.resolve("c.wat"), Warc.writeWatBytes(entries.take(1)))
+    java.nio.file.Files.write(dir.resolve("d.warc.wat.gz"),
+      Warc.writeWatGzBytes(entries.drop(1)))
+    val wat = Warc.readWatFiles(spark, dir.toString)
+      .select("url", "fetch_time", "json").as[(String, String, String)].collect()
+    assert(wat.sortBy(_._1).toSeq == entries.map(e => (e.url, e.fetchTime, e.json)))
+    assert(Warc.readWetFiles(spark, dir.toString).count() == docs.length)
+  }
+
+  test("readWarcFiles, readWetFiles, readWatFiles: documented schema on an empty directory") {
+    import org.apache.spark.sql.types._
+    val dir = java.nio.file.Files.createTempDirectory("warcempty")
+    dir.toFile.deleteOnExit()
+    def str(n: String) = StructField(n, StringType, nullable = true)
+    val warc = StructType(Seq(str("path"), str("url"), str("fetch_time"),
+      StructField("status", IntegerType, nullable = false), str("mime"), str("html"),
+      str("charset")))
+    val wet = StructType(Seq("path", "url", "fetch_time", "text").map(str))
+    val wat = StructType(Seq("path", "url", "fetch_time", "json").map(str))
+    val empties = Seq(Warc.readWarcFiles(spark, dir.toString),
+      Warc.readWetFiles(spark, dir.toString), Warc.readWatFiles(spark, dir.toString))
+    assert(empties.map(_.schema) == Seq(warc, wet, wat))
+    assert(empties.map(_.count()) == Seq(0L, 0L, 0L))
+    // a non-empty scan carries the same schema
+    java.nio.file.Files.write(dir.resolve("a.warc"), Warc.writeWarcBytes(pages))
+    java.nio.file.Files.write(dir.resolve("a.wet"), Warc.writeWetBytes(Nil))
+    java.nio.file.Files.write(dir.resolve("a.wat"), Warc.writeWatBytes(Nil))
+    assert(Seq(Warc.readWarcFiles(spark, dir.toString),
+      Warc.readWetFiles(spark, dir.toString),
+      Warc.readWatFiles(spark, dir.toString)).map(_.schema) == Seq(warc, wet, wat))
   }
 
   test("readWarcFiles: one .warc file per task, directory scan roundtrip") {
