@@ -2,9 +2,11 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.graftbridge.Bridge.InputType
+import org.apache.spark.sql.internal.types.{AbstractArrayType, StringTypeWithCollation}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -993,7 +995,7 @@ object ExprKernels {
     * absent, not an error - a Bloom probe with a stale/smaller filter
     * degrades to "not contained" instead of crashing the scan.
     */
-  def bitsetContains(bits: Array[Byte], pos: Long): Boolean =
+  def bitsetContains(pos: Long, bits: Array[Byte]): Boolean =
     pos >= 0 && pos < bits.length.toLong * 8 &&
       (bits((pos >>> 3).toInt) & (1 << (pos & 7).toInt)) != 0
 
@@ -1092,7 +1094,7 @@ object ExprKernels {
         var all = true
         var h = 0
         while (all && h < kHashes) {
-          all = bitsetContains(bits, bloomPos(shBytes, suffixes(h), mBits))
+          all = bitsetContains(bloomPos(shBytes, suffixes(h), mBits), bits)
           h += 1
         }
         if (all) flagged += 1
@@ -1103,24 +1105,92 @@ object ExprKernels {
   }
 }
 
+/** What every native expression shares: it evaluates as ONE static call
+  * `ExprKernels.<kernel>(inputs..., constants...)`. A subclass declares
+  * the kernel name, [[inputTypes]], `dataType`, its [[constants]] and a
+  * one-line `nullSafeEval`; this base derives the rest:
+  *
+  *   - the type check, from `inputTypes` (Catalyst's `ExpectsInputTypes`);
+  *   - null handling: a null input gives null without calling the
+  *     kernel, and a kernel declared [[kernelMayReturnNull]] gives null
+  *     when it returns null (its result is boxed);
+  *   - codegen: the same call as Java source, the constants rendered as
+  *     Java literals (Int, Long, Boolean) or as plan reference objects
+  *     (any other value: rule tables, bitsets, centroid and codebook
+  *     matrices), so the call fuses into whole-stage codegen like any
+  *     built-in function.
+  *
+  * The interpreted eval and the generated code spell the call twice;
+  * `FunctionsSpec` runs every function both ways on the same rows.
+  */
+trait KernelCall extends ExpectsInputTypes {
+  protected def kernel: String
+  protected def constants: Seq[Any] = Nil
+  protected def kernelMayReturnNull: Boolean = false
+
+  protected def callCode(ctx: CodegenContext, ev: ExprCode, inputs: Seq[String]): String = {
+    val args = inputs ++ constants.map {
+      case i: Int     => i.toString
+      case l: Long    => s"${l}L"
+      case b: Boolean => b.toString
+      case o: AnyRef  => ctx.addReferenceObj(kernel + "Const", o, o.getClass.getCanonicalName)
+    }
+    val call = s"graft.functions.ExprKernels.$kernel(${args.mkString(", ")})"
+    if (!kernelMayReturnNull) s"${ev.value} = $call;"
+    else {
+      val r = ctx.freshName(kernel)
+      s"""${CodeGenerator.boxedType(dataType)} $r = $call;
+         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r; }""".stripMargin
+    }
+  }
+}
+
+/** [[KernelCall]] over one input column. Serializable, so that a task's
+  * deserialized plan keeps `kernel`: Java deserialization constructs the
+  * first non-Serializable superclass with no arguments.
+  */
+abstract class UnaryKernel(protected val kernel: String)
+    extends UnaryExpression with KernelCall with Serializable {
+  override def nullable: Boolean = kernelMayReturnNull || child.nullable
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c => callCode(ctx, ev, Seq(c)))
+}
+
+/** [[KernelCall]] over two input columns; Serializable like [[UnaryKernel]]. */
+abstract class BinaryKernel(protected val kernel: String)
+    extends BinaryExpression with KernelCall with Serializable {
+  override def nullable: Boolean = kernelMayReturnNull || left.nullable || right.nullable
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) => callCode(ctx, ev, Seq(a, b)))
+}
+
+/** Input types the kernels accept. */
+private[functions] object KernelTypes {
+  /** Any string type, whatever its collation. */
+  val Str: InputType = StringTypeWithCollation(
+    supportsTrimCollation = true, supportsCaseSpecifier = true, supportsAccentSpecifier = true)
+  /** A float or double vector, elements nullable or not. */
+  val Vector: InputType = Bridge.anyOf(AbstractArrayType(FloatType), AbstractArrayType(DoubleType))
+
+  /** The `isFloat` flag of a vector kernel: array<float>, not array<double>. */
+  def floatElems(dt: DataType): Boolean = dt.asInstanceOf[ArrayType].elementType == FloatType
+  /** The `checkNull` flag of an array kernel: the array type allows null elements. */
+  def nullElems(dt: DataType): Boolean = dt.asInstanceOf[ArrayType].containsNull
+}
+import KernelTypes.{Str, Vector, floatElems, nullElems}
+
 /** `minhash_sig(text)` - array<bigint> MinHash signature. */
 case class MinHashSig(
     child: Expression,
     numHashes: Int = 64,
     shingleLen: Int = 3,
     seed: Int = 42
-) extends UnaryExpression {
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType.isInstanceOf[StringType])
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType}")
+) extends UnaryKernel("minhashSig") {
+  override def inputTypes: Seq[InputType] = Seq(Str)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override protected def constants: Seq[Any] = Seq(numHashes, shingleLen, seed)
   override def nullSafeEval(v: Any): Any =
     ExprKernels.minhashSig(v.asInstanceOf[UTF8String], numHashes, shingleLen, seed)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.ExprKernels.minhashSig($c, $numHashes, $shingleLen, $seed)")
   override protected def withNewChildInternal(c: Expression): MinHashSig = copy(child = c)
   override def prettyName: String = "minhash_sig"
 }
@@ -1128,71 +1198,42 @@ case class MinHashSig(
 /** `sig_agree(a, b)` - fraction of agreeing positions between two
   * array<bigint> MinHash signatures (the Jaccard estimate).
   */
-case class SigAgree(left: Expression, right: Expression) extends BinaryExpression {
-  private def ok(dt: DataType): Boolean = dt match {
-    case ArrayType(LongType, _) => true
-    case _                      => false
-  }
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (ok(left.dataType) && ok(right.dataType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires two array<bigint> arguments, got ${left.dataType}, ${right.dataType}")
+case class SigAgree(left: Expression, right: Expression) extends BinaryKernel("sigAgree") {
+  override def inputTypes: Seq[InputType] =
+    Seq(AbstractArrayType(LongType), AbstractArrayType(LongType))
   override def dataType: DataType = DoubleType
   override def nullSafeEval(a: Any, b: Any): Any =
     ExprKernels.sigAgree(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.ExprKernels.sigAgree($a, $b)")
   override protected def withNewChildrenInternal(l: Expression, r: Expression): SigAgree =
     copy(left = l, right = r)
   override def prettyName: String = "sig_agree"
 }
 
 /** `shingles(text, n)` - distinct word n-shingles as array<string>. */
-case class Shingles(child: Expression, n: Int) extends UnaryExpression {
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType.isInstanceOf[StringType])
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType}")
+case class Shingles(child: Expression, n: Int) extends UnaryKernel("shingles") {
+  override def inputTypes: Seq[InputType] = Seq(Str)
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullSafeEval(v: Any): Any =
-    ExprKernels.shingles(v.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.ExprKernels.shingles($c, $n)")
+  override protected def constants: Seq[Any] = Seq(n)
+  override def nullSafeEval(v: Any): Any = ExprKernels.shingles(v.asInstanceOf[UTF8String], n)
   override protected def withNewChildInternal(c: Expression): Shingles = copy(child = c)
   override def prettyName: String = "shingles"
 }
 
 /** `char_grams(text, n)` - distinct character n-grams as array<string>. */
-case class CharGrams(child: Expression, n: Int) extends UnaryExpression {
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType.isInstanceOf[StringType])
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType}")
+case class CharGrams(child: Expression, n: Int) extends UnaryKernel("charGrams") {
+  override def inputTypes: Seq[InputType] = Seq(Str)
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullSafeEval(v: Any): Any =
-    ExprKernels.charGrams(v.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.ExprKernels.charGrams($c, $n)")
+  override protected def constants: Seq[Any] = Seq(n)
+  override def nullSafeEval(v: Any): Any = ExprKernels.charGrams(v.asInstanceOf[UTF8String], n)
   override protected def withNewChildInternal(c: Expression): CharGrams = copy(child = c)
   override def prettyName: String = "char_grams"
 }
 
 /** `simhash64(text)` - 64-bit SimHash fingerprint. */
-case class SimHash64(child: Expression)
-    extends UnaryExpression {
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType.isInstanceOf[StringType])
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType}")
+case class SimHash64(child: Expression) extends UnaryKernel("simhash") {
+  override def inputTypes: Seq[InputType] = Seq(Str)
   override def dataType: DataType = LongType
-  override def nullSafeEval(v: Any): Any =
-    ExprKernels.simhash(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.ExprKernels.simhash($c)")
+  override def nullSafeEval(v: Any): Any = ExprKernels.simhash(v.asInstanceOf[UTF8String])
   override protected def withNewChildInternal(c: Expression): SimHash64 = copy(child = c)
   override def prettyName: String = "simhash64"
 }
@@ -1203,17 +1244,10 @@ case class SimHash64(child: Expression)
   * for English), while base64 blobs, minified code, and key-mash noise
   * sit well above and single-char runs well below.
   */
-case class CharEntropy(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType.isInstanceOf[StringType])
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType}")
+case class CharEntropy(child: Expression) extends UnaryKernel("charEntropy") {
+  override def inputTypes: Seq[InputType] = Seq(Str)
   override def dataType: DataType = DoubleType
-  override def nullSafeEval(v: Any): Any =
-    ExprKernels.charEntropy(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.ExprKernels.charEntropy($c)")
+  override def nullSafeEval(v: Any): Any = ExprKernels.charEntropy(v.asInstanceOf[UTF8String])
   override protected def withNewChildInternal(c: Expression): CharEntropy = copy(child = c)
   override def prettyName: String = "char_entropy"
 }
@@ -1223,89 +1257,44 @@ case class CharEntropy(child: Expression) extends UnaryExpression {
   * `nfc_normalize`; reference pipelines normalize before tokenizing so
   * "é" composed and "e"+U+0301 decomposed dedup as the same word).
   */
-case class NfcNormalize(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType.isInstanceOf[StringType])
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType}")
+case class NfcNormalize(child: Expression) extends UnaryKernel("nfcNormalize") {
+  override def inputTypes: Seq[InputType] = Seq(Str)
   override def dataType: DataType = child.dataType
-  override def nullSafeEval(v: Any): Any =
-    ExprKernels.nfcNormalize(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.ExprKernels.nfcNormalize($c)")
+  override def nullSafeEval(v: Any): Any = ExprKernels.nfcNormalize(v.asInstanceOf[UTF8String])
   override protected def withNewChildInternal(c: Expression): NfcNormalize = copy(child = c)
   override def prettyName: String = "nfc_normalize"
 }
 
-private[functions] object VecTypes {
-  /** Some(true) = array<float>, Some(false) = array<double>, None = not a
-    * numeric vector type this kernel accepts.
-    */
-  def elemIsFloat(dt: DataType): Option[Boolean] = dt match {
-    case ArrayType(FloatType, _)  => Some(true)
-    case ArrayType(DoubleType, _) => Some(false)
-    case _                        => None
-  }
-}
-
 /** `vec_dot(a, b)` - dot product of two array<float|double> columns in
-  * double. Both sides must have the same element type.
+  * double. Both sides must have the same element type. NULL beyond null
+  * inputs: length mismatch / null elements (see the kernel).
   */
-case class VecDot(left: Expression, right: Expression) extends BinaryExpression {
-  private def isFloat: Boolean = VecTypes.elemIsFloat(left.dataType).get
-  private def checkNull: Boolean =
-    left.dataType.asInstanceOf[ArrayType].containsNull ||
-      right.dataType.asInstanceOf[ArrayType].containsNull
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val ok = (VecTypes.elemIsFloat(left.dataType), VecTypes.elemIsFloat(right.dataType)) match {
-      case (Some(a), Some(b)) => a == b
-      case _                  => false
-    }
-    if (ok) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires two arrays of the same float/double element type, " +
-        s"got ${left.dataType} and ${right.dataType}")
-  }
+case class VecDot(left: Expression, right: Expression) extends BinaryKernel("vecDotBoxed") {
+  // the right side must match the left's element type
+  override def inputTypes: Seq[InputType] = Seq(Vector, left.dataType match {
+    case ArrayType(et @ (FloatType | DoubleType), _) => AbstractArrayType(et)
+    case _                                           => Vector
+  })
   override def dataType: DataType = DoubleType
-  // NULL beyond null inputs: length mismatch / null elements (see kernel)
-  override def nullable: Boolean = true
-  override def nullSafeEval(a: Any, b: Any): Any =
-    ExprKernels.vecDotBoxed(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], isFloat, checkNull)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val tmp = ctx.freshName("vecDot")
-      s"""
-         |java.lang.Double $tmp = graft.functions.ExprKernels.vecDotBoxed($a, $b, $isFloat, $checkNull);
-         |if ($tmp == null) { ${ev.isNull} = true; } else { ${ev.value} = $tmp.doubleValue(); }
-       """.stripMargin
-    })
+  override protected def kernelMayReturnNull: Boolean = true
+  private def checkNull: Boolean = nullElems(left.dataType) || nullElems(right.dataType)
+  override protected def constants: Seq[Any] = Seq(floatElems(left.dataType), checkNull)
+  override def nullSafeEval(a: Any, b: Any): Any = ExprKernels.vecDotBoxed(
+    a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], floatElems(left.dataType), checkNull)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): VecDot =
     copy(left = l, right = r)
   override def prettyName: String = "vec_dot"
 }
 
 /** `vec_norm(a)` - L2 norm of an array<float|double> column in double. */
-case class VecNorm(child: Expression) extends UnaryExpression {
-  private def isFloat: Boolean = VecTypes.elemIsFloat(child.dataType).get
-  private def checkNull: Boolean = child.dataType.asInstanceOf[ArrayType].containsNull
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (VecTypes.elemIsFloat(child.dataType).isDefined)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<float> or array<double>, got ${child.dataType}")
+case class VecNorm(child: Expression) extends UnaryKernel("vecNormBoxed") {
+  override def inputTypes: Seq[InputType] = Seq(Vector)
   override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def nullSafeEval(v: Any): Any =
-    ExprKernels.vecNormBoxed(v.asInstanceOf[ArrayData], isFloat, checkNull)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val tmp = ctx.freshName("vecNorm")
-      s"""
-         |java.lang.Double $tmp = graft.functions.ExprKernels.vecNormBoxed($c, $isFloat, $checkNull);
-         |if ($tmp == null) { ${ev.isNull} = true; } else { ${ev.value} = $tmp.doubleValue(); }
-       """.stripMargin
-    })
+  override protected def kernelMayReturnNull: Boolean = true
+  override protected def constants: Seq[Any] =
+    Seq(floatElems(child.dataType), nullElems(child.dataType))
+  override def nullSafeEval(v: Any): Any = ExprKernels.vecNormBoxed(
+    v.asInstanceOf[ArrayData], floatElems(child.dataType), nullElems(child.dataType))
   override protected def withNewChildInternal(c: Expression): VecNorm = copy(child = c)
   override def prettyName: String = "vec_norm"
 }
@@ -1314,54 +1303,29 @@ case class VecNorm(child: Expression) extends UnaryExpression {
   * `bits` fixed Gaussian hyperplanes, deterministic in (dim, bits, seed).
   */
 case class RhBucket(child: Expression, dim: Int, bits: Int, seed: Long)
-    extends UnaryExpression {
-  private def isFloat: Boolean = VecTypes.elemIsFloat(child.dataType).get
-  private def checkNull: Boolean = child.dataType.asInstanceOf[ArrayType].containsNull
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (VecTypes.elemIsFloat(child.dataType).isDefined)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<float> or array<double>, got ${child.dataType}")
+    extends UnaryKernel("rhBucket") {
+  override def inputTypes: Seq[InputType] = Seq(Vector)
   override def dataType: DataType = LongType
-  override def nullSafeEval(v: Any): Any =
-    ExprKernels.rhBucket(v.asInstanceOf[ArrayData], dim, bits, seed, isFloat, checkNull)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.ExprKernels.rhBucket($c, $dim, $bits, ${seed}L, $isFloat, $checkNull)")
+  override protected def constants: Seq[Any] =
+    Seq(dim, bits, seed, floatElems(child.dataType), nullElems(child.dataType))
+  override def nullSafeEval(v: Any): Any = ExprKernels.rhBucket(v.asInstanceOf[ArrayData],
+    dim, bits, seed, floatElems(child.dataType), nullElems(child.dataType))
   override protected def withNewChildInternal(c: Expression): RhBucket = copy(child = c)
   override def prettyName: String = "rh_bucket"
 }
 
 /** `greedy_pack(sizes)` - greedy first-fit bin index per element for a
   * token-budgeted sequence-packing pass (see ExprKernels.greedyPack).
+  * Accepts containsNull arrays (every parquet/JSON array column defaults
+  * to containsNull=true): a null ELEMENT yields NULL at eval time.
   */
-case class GreedyPack(child: Expression, budget: Int) extends UnaryExpression {
-  // accepts containsNull arrays (every parquet/JSON array column defaults
-  // to containsNull=true) - a null ELEMENT yields NULL at eval time
-  private def checkNull: Boolean = child.dataType match {
-    case ArrayType(_, cn) => cn
-    case _ => false
-  }
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(IntegerType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case dt => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires array<int>, got $dt")
-    }
+case class GreedyPack(child: Expression, budget: Int) extends UnaryKernel("greedyPack") {
+  override def inputTypes: Seq[InputType] = Seq(AbstractArrayType(IntegerType))
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = true
+  override protected def kernelMayReturnNull: Boolean = true
+  override protected def constants: Seq[Any] = Seq(budget, nullElems(child.dataType))
   override def nullSafeEval(v: Any): Any =
-    ExprKernels.greedyPack(v.asInstanceOf[ArrayData], budget, checkNull)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val tmp = ctx.freshName("packed")
-      s"""
-         |org.apache.spark.sql.catalyst.util.ArrayData $tmp =
-         |  graft.functions.ExprKernels.greedyPack($c, $budget, $checkNull);
-         |if ($tmp == null) { ${ev.isNull} = true; } else { ${ev.value} = $tmp; }
-       """.stripMargin
-    })
+    ExprKernels.greedyPack(v.asInstanceOf[ArrayData], budget, nullElems(child.dataType))
   override protected def withNewChildInternal(c: Expression): GreedyPack = copy(child = c)
   override def prettyName: String = "greedy_pack"
 }
@@ -1376,28 +1340,14 @@ case class GreedyPack(child: Expression, budget: Int) extends UnaryExpression {
   * replaces - but the kernel is codegen'd and allocation-free.
   */
 case class NearestLists(child: Expression, cents: Array[Array[Double]], n: Int)
-    extends UnaryExpression {
-  private def isFloat: Boolean = VecTypes.elemIsFloat(child.dataType).get
-  private def checkNull: Boolean = child.dataType.asInstanceOf[ArrayType].containsNull
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (VecTypes.elemIsFloat(child.dataType).isDefined)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<float> or array<double>, got ${child.dataType}")
+    extends UnaryKernel("nearestLists") {
+  override def inputTypes: Seq[InputType] = Seq(Vector)
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = true
-  override def nullSafeEval(v: Any): Any =
-    ExprKernels.nearestLists(v.asInstanceOf[ArrayData], cents, n, isFloat, checkNull)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val m = ctx.addReferenceObj("cents", cents, "double[][]")
-      val tmp = ctx.freshName("nearest")
-      s"""
-         |org.apache.spark.sql.catalyst.util.ArrayData $tmp =
-         |  graft.functions.ExprKernels.nearestLists($c, $m, $n, $isFloat, $checkNull);
-         |if ($tmp == null) { ${ev.isNull} = true; } else { ${ev.value} = $tmp; }
-       """.stripMargin
-    })
+  override protected def kernelMayReturnNull: Boolean = true
+  override protected def constants: Seq[Any] =
+    Seq(cents, n, floatElems(child.dataType), nullElems(child.dataType))
+  override def nullSafeEval(v: Any): Any = ExprKernels.nearestLists(v.asInstanceOf[ArrayData],
+    cents, n, floatElems(child.dataType), nullElems(child.dataType))
   override protected def withNewChildInternal(c: Expression): NearestLists = copy(child = c)
   override def prettyName: String = "nearest_lists"
 }
@@ -1409,17 +1359,11 @@ case class NearestLists(child: Expression, cents: Array[Array[Double]], n: Int)
   * pruning exists for it, so it runs as a scan-side scalar over
   * blocked/bounded candidate pairs rather than an index traversal.
   */
-case class JaroWinkler(left: Expression, right: Expression) extends BinaryExpression {
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (left.dataType.isInstanceOf[StringType] && right.dataType.isInstanceOf[StringType])
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires two string arguments, got ${left.dataType}, ${right.dataType}")
+case class JaroWinkler(left: Expression, right: Expression) extends BinaryKernel("jaroWinkler") {
+  override def inputTypes: Seq[InputType] = Seq(Str, Str)
   override def dataType: DataType = DoubleType
   override def nullSafeEval(a: Any, b: Any): Any =
     ExprKernels.jaroWinkler(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.ExprKernels.jaroWinkler($a, $b)")
   override protected def withNewChildrenInternal(l: Expression, r: Expression): JaroWinkler =
     copy(left = l, right = r)
   override def prettyName: String = "jaro_winkler"
@@ -1429,17 +1373,11 @@ case class JaroWinkler(left: Expression, right: Expression) extends BinaryExpres
   * (see ExprKernels.jwUpper); `jw_upper(a,b) >= t` is the content-based
   * prefilter for JW-thresholded scans.
   */
-case class JwUpper(left: Expression, right: Expression) extends BinaryExpression {
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (left.dataType.isInstanceOf[StringType] && right.dataType.isInstanceOf[StringType])
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires two string arguments, got ${left.dataType}, ${right.dataType}")
+case class JwUpper(left: Expression, right: Expression) extends BinaryKernel("jwUpper") {
+  override def inputTypes: Seq[InputType] = Seq(Str, Str)
   override def dataType: DataType = DoubleType
   override def nullSafeEval(a: Any, b: Any): Any =
     ExprKernels.jwUpper(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.ExprKernels.jwUpper($a, $b)")
   override protected def withNewChildrenInternal(l: Expression, r: Expression): JwUpper =
     copy(left = l, right = r)
   override def prettyName: String = "jw_upper"
@@ -1449,17 +1387,10 @@ case class JwUpper(left: Expression, right: Expression) extends BinaryExpression
   * The merge table is the checked-in public-format merges file (see
   * ExprKernels.bpeRanks); the count a training pipeline budgets by.
   */
-case class BpeCount(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType.isInstanceOf[StringType])
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType}")
+case class BpeCount(child: Expression) extends UnaryKernel("bpeCount") {
+  override def inputTypes: Seq[InputType] = Seq(Str)
   override def dataType: DataType = IntegerType
-  override def nullSafeEval(v: Any): Any =
-    ExprKernels.bpeCount(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.ExprKernels.bpeCount($c)")
+  override def nullSafeEval(v: Any): Any = ExprKernels.bpeCount(v.asInstanceOf[UTF8String])
   override protected def withNewChildInternal(c: Expression): BpeCount = copy(child = c)
   override def prettyName: String = "bpe_count"
 }
@@ -1469,19 +1400,11 @@ case class BpeCount(child: Expression) extends UnaryExpression {
   * literal (see ExprKernels.decodeNumRefs). One codegen kernel call
   * replacing an interpreted HOF refold in the stripHtml chain.
   */
-case class DecodeNumRefs(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType.isInstanceOf[StringType])
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType}")
+case class DecodeNumRefs(child: Expression) extends UnaryKernel("decodeNumRefs") {
+  override def inputTypes: Seq[InputType] = Seq(Str)
   override def dataType: DataType = StringType
-  override def nullSafeEval(v: Any): Any =
-    ExprKernels.decodeNumRefs(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.ExprKernels.decodeNumRefs($c)")
-  override protected def withNewChildInternal(c: Expression): DecodeNumRefs =
-    copy(child = c)
+  override def nullSafeEval(v: Any): Any = ExprKernels.decodeNumRefs(v.asInstanceOf[UTF8String])
+  override protected def withNewChildInternal(c: Expression): DecodeNumRefs = copy(child = c)
   override def prettyName: String = "decode_num_refs"
 }
 
@@ -1503,23 +1426,12 @@ final class PslTable(
   * shells) - O(#rule-group) HashSet probes instead of an interpreted
   * scan of every rule per row.
   */
-case class PslFold(child: Expression, table: PslTable) extends UnaryExpression {
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType.isInstanceOf[StringType])
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string host argument, got ${child.dataType}")
+case class PslFold(child: Expression, table: PslTable) extends UnaryKernel("pslFold") {
+  override def inputTypes: Seq[InputType] = Seq(Str)
   override def dataType: DataType = StringType
-  override def nullable: Boolean = child.nullable
-  override def nullSafeEval(v: Any): Any =
-    ExprKernels.pslFold(v.asInstanceOf[UTF8String], table)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val t = ctx.addReferenceObj("pslTable", table, "graft.functions.PslTable")
-      s"${ev.value} = graft.functions.ExprKernels.pslFold($c, $t);"
-    })
-  override protected def withNewChildInternal(c: Expression): PslFold =
-    copy(child = c)
+  override protected def constants: Seq[Any] = Seq(table)
+  override def nullSafeEval(v: Any): Any = ExprKernels.pslFold(v.asInstanceOf[UTF8String], table)
+  override protected def withNewChildInternal(c: Expression): PslFold = copy(child = c)
   override def prettyName: String = "psl_fold"
 }
 
@@ -1528,21 +1440,14 @@ case class PslFold(child: Expression, table: PslTable) extends UnaryExpression {
   * signal as ONE codegen kernel call, replacing a per-row
   * sort_array + interpreted aggregate() run-length fold.
   */
-case class RepStats(child: Expression, n: Int) extends UnaryExpression {
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType.isInstanceOf[StringType])
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType}")
+case class RepStats(child: Expression, n: Int) extends UnaryKernel("repStats") {
+  override def inputTypes: Seq[InputType] = Seq(Str)
   override def dataType: DataType = StructType(Seq(
     StructField("n_grams", LongType, nullable = false),
     StructField("max_rep", LongType, nullable = false)))
-  override def nullSafeEval(v: Any): Any =
-    ExprKernels.repStats(v.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.ExprKernels.repStats($c, $n)")
-  override protected def withNewChildInternal(c: Expression): RepStats =
-    copy(child = c)
+  override protected def constants: Seq[Any] = Seq(n)
+  override def nullSafeEval(v: Any): Any = ExprKernels.repStats(v.asInstanceOf[UTF8String], n)
+  override protected def withNewChildInternal(c: Expression): RepStats = copy(child = c)
   override def prettyName: String = "rep_stats"
 }
 
@@ -1553,26 +1458,19 @@ case class RepStats(child: Expression, n: Int) extends UnaryExpression {
   * with a per-row O(len) deque scan whose only remaining cost is the
   * same md5-per-shingle the fingerprint definition requires.
   */
-case class WinnowFps(child: Expression, k: Int, w: Int) extends UnaryExpression {
+case class WinnowFps(child: Expression, k: Int, w: Int) extends UnaryKernel("winnowFps") {
   // fail at construction (plan time), not as an executor
   // ArrayIndexOutOfBounds: k <= 0 indexes off(p + k) negative inside the
   // kernel, w <= 0 makes the window deque degenerate
   require(k >= 1 && w >= 1,
     s"winnow_fps needs k >= 1 and w >= 1 (shingle length / window size), got k=$k, w=$w")
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType.isInstanceOf[StringType])
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType}")
+  override def inputTypes: Seq[InputType] = Seq(Str)
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("pos", IntegerType, nullable = false),
     StructField("fp", LongType, nullable = false))), containsNull = false)
-  override def nullSafeEval(v: Any): Any =
-    ExprKernels.winnowFps(v.asInstanceOf[UTF8String], k, w)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.ExprKernels.winnowFps($c, $k, $w)")
-  override protected def withNewChildInternal(c: Expression): WinnowFps =
-    copy(child = c)
+  override protected def constants: Seq[Any] = Seq(k, w)
+  override def nullSafeEval(v: Any): Any = ExprKernels.winnowFps(v.asInstanceOf[UTF8String], k, w)
+  override protected def withNewChildInternal(c: Expression): WinnowFps = copy(child = c)
   override def prettyName: String = "winnow_fps"
 }
 
@@ -1582,19 +1480,11 @@ case class WinnowFps(child: Expression, k: Int, w: Int) extends UnaryExpression 
   * ExprKernels.gpt2Ranks). The budget number a pipeline interoperating
   * with a published tokenizer accounts by.
   */
-case class BpeCountPublic(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType.isInstanceOf[StringType])
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType}")
+case class BpeCountPublic(child: Expression) extends UnaryKernel("bpeCountPublic") {
+  override def inputTypes: Seq[InputType] = Seq(Str)
   override def dataType: DataType = IntegerType
-  override def nullSafeEval(v: Any): Any =
-    ExprKernels.bpeCountPublic(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.ExprKernels.bpeCountPublic($c)")
-  override protected def withNewChildInternal(c: Expression): BpeCountPublic =
-    copy(child = c)
+  override def nullSafeEval(v: Any): Any = ExprKernels.bpeCountPublic(v.asInstanceOf[UTF8String])
+  override protected def withNewChildInternal(c: Expression): BpeCountPublic = copy(child = c)
   override def prettyName: String = "bpe_count_public"
 }
 
@@ -1605,17 +1495,10 @@ case class BpeCountPublic(child: Expression) extends UnaryExpression {
   * HashMap probe per gram, fully codegen'd, no per-row allocation
   * beyond the gram substrings.
   */
-case class LangIdScore(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType.isInstanceOf[StringType])
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType}")
+case class LangIdScore(child: Expression) extends UnaryKernel("langIdScore") {
+  override def inputTypes: Seq[InputType] = Seq(Str)
   override def dataType: DataType = StringType
-  override def nullSafeEval(v: Any): Any =
-    ExprKernels.langIdScore(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.ExprKernels.langIdScore($c)")
+  override def nullSafeEval(v: Any): Any = ExprKernels.langIdScore(v.asInstanceOf[UTF8String])
   override protected def withNewChildInternal(c: Expression): LangIdScore = copy(child = c)
   override def prettyName: String = "lang_id_score"
 }
@@ -1628,22 +1511,12 @@ case class LangIdScore(child: Expression) extends UnaryExpression {
   * shuffle of corpus data.
   */
 case class BitsetContains(child: Expression, bits: Array[Byte])
-    extends UnaryExpression {
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == LongType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a bigint position, got ${child.dataType}")
+    extends UnaryKernel("bitsetContains") {
+  override def inputTypes: Seq[InputType] = Seq(LongType)
   override def dataType: DataType = BooleanType
-  override def nullSafeEval(v: Any): Any =
-    ExprKernels.bitsetContains(bits, v.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val b = ctx.addReferenceObj("bits", bits, "byte[]")
-      s"${ev.value} = graft.functions.ExprKernels.bitsetContains($b, $c);"
-    })
-  override protected def withNewChildInternal(c: Expression): BitsetContains =
-    copy(child = c)
+  override protected def constants: Seq[Any] = Seq(bits)
+  override def nullSafeEval(v: Any): Any = ExprKernels.bitsetContains(v.asInstanceOf[Long], bits)
+  override protected def withNewChildInternal(c: Expression): BitsetContains = copy(child = c)
   override def prettyName: String = "bitset_contains"
 }
 
@@ -1657,25 +1530,12 @@ case class PqEncode(
     child: Expression,
     codebooks: Array[Array[Array[Double]]],
     halfs: Array[Array[Double]]
-) extends UnaryExpression {
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires array<double> (normalize first), got $other")
-    }
+) extends UnaryKernel("pqEncode") {
+  override def inputTypes: Seq[InputType] = Seq(AbstractArrayType(DoubleType))
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = child.nullable
+  override protected def constants: Seq[Any] = Seq(codebooks, halfs)
   override def nullSafeEval(v: Any): Any =
     ExprKernels.pqEncode(v.asInstanceOf[ArrayData], codebooks, halfs)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val cb = ctx.addReferenceObj("codebooks", codebooks, "double[][][]")
-      val hf = ctx.addReferenceObj("halfs", halfs, "double[][]")
-      s"${ev.value} = graft.functions.ExprKernels.pqEncode($c, $cb, $hf);"
-    })
   override protected def withNewChildInternal(c: Expression): PqEncode = copy(child = c)
   override def prettyName: String = "pq_encode"
 }
@@ -1687,31 +1547,17 @@ case class PqEncode(
   * |shingles| x k md5 column trees per row).
   */
 case class BloomFlagCount(child: Expression, bits: Array[Byte], mBits: Int, kHashes: Int)
-    extends UnaryExpression {
+    extends UnaryKernel("bloomFlagCount") {
   // suffix bytes hoisted out of the per-row loop: one allocation per
   // expression instance, shipped to executors as a reference object
   @transient private lazy val suffixes: Array[Array[Byte]] =
     ExprKernels.bloomSuffixes(kHashes)
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(_: StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires array<string>, got $other")
-    }
+  override def inputTypes: Seq[InputType] = Seq(AbstractArrayType(Str))
   override def dataType: DataType = IntegerType
-  override def nullable: Boolean = child.nullable
+  override protected def constants: Seq[Any] = Seq(bits, mBits, suffixes)
   override def nullSafeEval(v: Any): Any =
     ExprKernels.bloomFlagCount(v.asInstanceOf[ArrayData], bits, mBits, suffixes)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val b = ctx.addReferenceObj("bits", bits, "byte[]")
-      val sf = ctx.addReferenceObj("suffixes", suffixes, "byte[][]")
-      s"${ev.value} = graft.functions.ExprKernels.bloomFlagCount($c, $b, $mBits, $sf);"
-    })
-  override protected def withNewChildInternal(c: Expression): BloomFlagCount =
-    copy(child = c)
+  override protected def withNewChildInternal(c: Expression): BloomFlagCount = copy(child = c)
   override def prettyName: String = "bloom_flag_count"
 }
 

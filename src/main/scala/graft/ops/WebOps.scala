@@ -444,15 +444,16 @@ object WebOps {
     val rPath = regexp_extract(r, "^([^?]*)", 1)
     val rQuery = regexp_extract(r, "(\\?.*)$", 1) // "?..." or ""
     val prefix = concat(bScheme, lit("://"), bAuth)
+    // root-relative paths replace the base path, the rest merge onto its
+    // directory; ONE dot-segment chain normalizes either (its 40
+    // regexp_replace calls are most of the generated code)
+    val path = when(r.startsWith("/"), rPath).otherwise(concat(baseDir, rPath))
     when(r === "", bNoFrag)
       .when(r.rlike("^[A-Za-z][A-Za-z0-9+.-]*:"), r)
       .when(!baseOk, lit(null).cast(StringType))
       .when(r.startsWith("//"), concat(bScheme, lit(":"), r))
       .when(r.startsWith("?"), concat(prefix, bPath, r))
-      .when(r.startsWith("/"),
-        concat(prefix, removeDotSegments(rPath), rQuery))
-      .otherwise(
-        concat(prefix, removeDotSegments(concat(baseDir, rPath)), rQuery))
+      .otherwise(concat(prefix, removeDotSegments(path), rQuery))
   }
 
   /** Percent-encoding normalization, RFC 3986 §6.2.2: decode escapes

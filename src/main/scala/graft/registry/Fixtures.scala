@@ -1,6 +1,6 @@
 package graft.registry
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -229,6 +229,38 @@ private[registry] object Fixtures {
   val scriptCyrAbc = "абвгдежзийклмнопрстуфхцчшщ"
 
   val scriptGreekAbc = "αβγδεζηθικλμνξοπρστυφχψωϊϋ"
+
+  /** The transliteration shell over `textCol`: `doc_id % 5` picks a
+    * Cyrillic (1), Greek (2) or digit-vowel (3) slice; `mixed` adds the
+    * vowels+t-to-Cyrillic slice (4) - the spam shape whose per-doc
+    * script dominance flips while the language evidence stays mixed.
+    * The Spark column and the oracle's ([[translitShellSql]]) come from
+    * the same alphabets.
+    */
+  def translitShell(mixed: Boolean, textCol: String = "text"): Column = {
+    val (id, t) = (col("doc_id"), col(textCol))
+    val slices = when(id % 5 === 1, translate(t, scriptLatinAbc, scriptCyrAbc))
+      .when(id % 5 === 2, translate(t, scriptLatinAbc, scriptGreekAbc))
+      .when(id % 5 === 3, translate(t, "aeiou", "01234"))
+    (if (mixed) slices.when(id % 5 === 4, translate(t, "aeiout", "аеиоут")) else slices)
+      .otherwise(t)
+  }
+
+  /** `SELECT doc_id, <shell> AS t FROM <from>` - the oracle side of
+    * [[translitShell]]. Not pre-stripMargin'd (the outer templates
+    * strip).
+    */
+  def translitShellSql(mixed: Boolean, textCol: String = "text",
+      from: String = "documents WHERE text IS NOT NULL"): String = {
+    val slices = Seq(
+      s"1 THEN translate($textCol, '$scriptLatinAbc', '$scriptCyrAbc')",
+      s"2 THEN translate($textCol, '$scriptLatinAbc', '$scriptGreekAbc')",
+      s"3 THEN translate($textCol, 'aeiou', '01234')") ++
+      (if (mixed) Seq(s"4 THEN translate($textCol, 'aeiout', 'аеиоут')") else Nil)
+    slices.map(w => s"WHEN doc_id % 5 = $w").mkString(
+      "  SELECT doc_id,\n  |    CASE ", "\n  |         ",
+      s"\n  |         ELSE $textCol END AS t\n  |  FROM $from")
+  }
 
   /** base/tok/types/tot/xx/wt CTE chain of the NB log-odds weight
     * replay (tokenize + label on the src0-src2 seed, per-class token

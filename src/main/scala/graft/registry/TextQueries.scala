@@ -1,6 +1,6 @@
 package graft.registry
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -2260,37 +2260,6 @@ object TextQueries extends Family {
       |      AND n_symbols*10 <= n_words AS keep
       |  FROM gfeat
       |)"""
-
-  /** The transliteration shell over `documents.text`: `doc_id % 5`
-    * picks a Cyrillic (1), Greek (2) or digit-vowel (3) slice; `mixed`
-    * adds the vowels+t-to-Cyrillic slice (4) - the spam shape whose
-    * per-doc script dominance flips while the language evidence stays
-    * mixed. The Spark column and the oracle's `m` body
-    * ([[translitShellSql]]) come from the same alphabets.
-    */
-  private def translitShell(mixed: Boolean): Column = {
-    val (id, t) = (col("doc_id"), col("text"))
-    val slices = when(id % 5 === 1, translate(t, scriptLatinAbc, scriptCyrAbc))
-      .when(id % 5 === 2, translate(t, scriptLatinAbc, scriptGreekAbc))
-      .when(id % 5 === 3, translate(t, "aeiou", "01234"))
-    (if (mixed) slices.when(id % 5 === 4, translate(t, "aeiout", "аеиоут")) else slices)
-      .otherwise(t)
-  }
-
-  /** `SELECT doc_id, <shell> AS t FROM documents` - the oracle side of
-    * [[translitShell]]. Not pre-stripMargin'd (the outer templates
-    * strip).
-    */
-  private def translitShellSql(mixed: Boolean): String = {
-    val slices = Seq(
-      s"1 THEN translate(text, '$scriptLatinAbc', '$scriptCyrAbc')",
-      s"2 THEN translate(text, '$scriptLatinAbc', '$scriptGreekAbc')",
-      "3 THEN translate(text, 'aeiou', '01234')") ++
-      (if (mixed) Seq("4 THEN translate(text, 'aeiout', 'аеиоут')") else Nil)
-    slices.map(w => s"WHEN doc_id % 5 = $w").mkString(
-      "  SELECT doc_id,\n  |    CASE ", "\n  |         ",
-      "\n  |         ELSE text END AS t\n  |  FROM documents WHERE text IS NOT NULL")
-  }
 
   /** The [[TextOps.scriptProfile]] replay over a relation with text
     * `t`: the per-class range-count columns (`n_<class>`, interpolated

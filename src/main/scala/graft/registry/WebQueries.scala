@@ -1848,20 +1848,11 @@ object WebQueries extends Family {
     val cleaned = TextOps.c4LineFilter(
       survivors.withColumn("ltext", synthLinedCol),
       "doc_id", "ltext", minWords = 3, minLines = 2)
-    val mapped =
-      when(col("doc_id") % 5 === 1,
-        translate(col("clean"), scriptLatinAbc, scriptCyrAbc))
-        .when(col("doc_id") % 5 === 2,
-          translate(col("clean"), scriptLatinAbc, scriptGreekAbc))
-        .when(col("doc_id") % 5 === 3,
-          translate(col("clean"), "aeiou", "01234"))
-        .when(col("doc_id") % 5 === 4,
-          translate(col("clean"), "aeiout", "аеиоут"))
-        .otherwise(col("clean"))
     // one materialization point (the docs_lang_mix discipline): the
     // blocklist + C4 + translit chain must run once, not once per
     // temperatureMix branch
-    val shell = cleaned.select(col("doc_id"), mapped.as("stext"))
+    val shell = cleaned.select(col("doc_id"),
+      translitShell(mixed = true, textCol = "clean").as("stext"))
       .localCheckpoint()
     val docs2 = shell.select(col("doc_id"),
       TextOps.langId(col("stext")).as("lang"),
@@ -1881,13 +1872,7 @@ object WebQueries extends Family {
       |  SELECT doc_id, array_to_string(kept, chr(10)) AS clean
       |  FROM f WHERE len(kept) >= 2
       |), m AS (
-      |  SELECT doc_id,
-      |    CASE WHEN doc_id % 5 = 1 THEN translate(clean, '$scriptLatinAbc', '$scriptCyrAbc')
-      |         WHEN doc_id % 5 = 2 THEN translate(clean, '$scriptLatinAbc', '$scriptGreekAbc')
-      |         WHEN doc_id % 5 = 3 THEN translate(clean, 'aeiou', '01234')
-      |         WHEN doc_id % 5 = 4 THEN translate(clean, 'aeiout', 'аеиоут')
-      |         ELSE clean END AS t
-      |  FROM cleaned
+      |${translitShellSql(mixed = true, textCol = "clean", from = "cleaned")}
       |), ${langIdCtes("m", "t")}, base AS (
       |  SELECT m.doc_id, lp.lang_pred AS lang,
       |    CAST(len(list_filter(string_split_regex(lower(trim(m.t)), '\\s+'),

@@ -681,7 +681,7 @@ class FunctionsSpec extends SparkSpec {
     assert(nl.toSet == Set(Some(false), None))
     // interpreted eval == codegen'd query result
     for (p <- Seq(0L, 5L, 63L, 1023L))
-      assert(ExprKernels.bitsetContains(bits, p) == posSet.contains(p))
+      assert(ExprKernels.bitsetContains(p, bits) == posSet.contains(p))
     // UDAF rejects out-of-range builds (soundness depends on the modulus)
     val ex = intercept[org.apache.spark.SparkException] {
       Seq(m.toLong).toDF("p").as[Long].select(new BitsetAgg(m).toColumn).head()
@@ -769,5 +769,73 @@ class FunctionsSpec extends SparkSpec {
       cases += 1
     }
     assert(cases == 400)
+  }
+
+  test("every native function: interpreted eval == generated code, null row included") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    import org.apache.spark.sql.types._
+    import GraftFunctions._
+    def set(xs: String*) = { val s = new java.util.HashSet[String](); xs.foreach(s.add); s }
+    val psl = new PslTable(Array(1, 2), Array(set("com", "uk"), set("co.uk")),
+      Array(1), Array(set("ck")), Array(2), Array(set("www.ck")))
+    val cents = Array(Array(1.0, 0.0, 0.0, 0.0), Array(0.0, 1.0, 0.0, 0.0), Array(0.5, 0.5, 0.5, 0.5))
+    val codebooks = Array.tabulate(2, 3, 2)((m, c, i) => ((m + 1) * (c - 1) + i) * 0.25)
+    val halfs = codebooks.map(_.map(cw => cw.map(x => x * x).sum / 2))
+    val bits = Array.tabulate[Byte](64)(i => (i * 37).toByte)
+    val schema = StructType(Seq(
+      StructField("id", IntegerType), StructField("a", StringType), StructField("b", StringType),
+      StructField("host", StringType), StructField("fa", ArrayType(FloatType)),
+      StructField("fb", ArrayType(FloatType)), StructField("da", ArrayType(DoubleType)),
+      StructField("db", ArrayType(DoubleType)), StructField("sizes", ArrayType(IntegerType)),
+      StructField("pos", LongType), StructField("shs", ArrayType(StringType))))
+    val rows = java.util.Arrays.asList(
+      Row(1, "the quick brown fox jumps over the lazy dog, the quick brown fox",
+        "the quick brown fax caf\u0065\u0301 &#233;&#x1F600;", "www.example.co.uk",
+        Seq(1.0f, 2.0f, -3.5f, 0.5f), Seq(0.5f, -1.0f, 2.0f, 1.0f), Seq(0.5, -0.5, 0.5, 0.5),
+        Seq(0.1, 0.2, 0.3, 0.4), Seq(3, 3, 3, 6), 5L, Seq("the quick", "quick brown", "lone")),
+      // null elements and mismatched lengths: the kernels that return null
+      Row(2, "Hallo Welt, wie geht es dir heute?", "", "sub.www.ck",
+        Seq(1.0f, null, 3.0f), Seq(1.0f, 1.0f), Seq(0.25, null, 0.5, 0.5),
+        Seq(1.0, 2.0), Seq(2, null), 300L, Seq(null, "lone")),
+      Row.fromSeq(3 +: Seq.fill(10)(null)))
+    // the shuffle keeps the projection out of the optimizer's
+    // local-relation folding, so it runs in the executed plan
+    val df = spark.createDataFrame(rows, schema).repartition(2)
+    val fns = Seq(
+      minhash_sig($"a"), sig_agree(minhash_sig($"a"), minhash_sig($"b")), shingles($"a", 2),
+      char_grams($"b", 3), simhash64($"a"), char_entropy($"b"), nfc_normalize($"b"),
+      vec_dot($"fa", $"fb"), vec_dot($"da", $"db"), vec_norm($"fa"), vec_norm($"da"),
+      rh_bucket($"da", 4, 5, 7L), nearest_lists($"da", cents, 2), greedy_pack($"sizes", 5),
+      jaro_winkler($"a", $"b"), jw_upper($"a", $"b"), bpe_count(lower($"a")),
+      lang_id_score($"a"), bpe_count_public($"b"), decode_num_refs($"b"), rep_stats($"a", 2),
+      winnow_fps($"a", 3, 2), psl_fold($"host", psl), bitset_contains($"pos", bits),
+      bloom_flag_count($"shs", bits, 512, 3), pq_encode($"da", codebooks, halfs),
+      // the type check accepts every string collation
+      simhash64(collate($"a", "UTF8_LCASE_RTRIM")))
+    def query = df.select($"id" +: fns.zipWithIndex.map { case (f, i) => f.as(s"f$i") }: _*)
+    val outputs = query.queryExecution.analyzed.expressions.tail.map(_.children.head)
+    val covered = outputs.flatMap(_.collect { case k: KernelCall => k.prettyName }).toSet
+    assert(covered == (GraftFunctions.sqlFunctions.map(_._1) ++ Seq("nearest_lists", "psl_fold",
+      "bitset_contains", "bloom_flag_count", "pq_encode", "rep_stats")).toSet)
+    assert(covered.size == 24)
+    def run(codegen: Boolean): Seq[Row] = withConf(
+        "spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.codegen.wholeStage" -> codegen.toString,
+        "spark.sql.codegen.factoryMode" -> (if (codegen) "CODEGEN_ONLY" else "NO_CODEGEN"),
+        "spark.sql.codegen.fallback" -> "false") {
+      val r = query
+      assert(r.queryExecution.executedPlan.find(_.isInstanceOf[WholeStageCodegenExec])
+        .isDefined == codegen)
+      r.collect().sortBy(_.getInt(0)).toSeq
+    }
+    val (generated, interpreted) = (run(codegen = true), run(codegen = false))
+    for ((f, i) <- outputs.map(_.sql).zipWithIndex) {
+      assert(generated.map(_.get(i + 1)) == interpreted.map(_.get(i + 1)), f)
+      assert(generated(2).isNullAt(i + 1), s"$f of the null row")
+      assert(!generated(0).isNullAt(i + 1), s"$f of the first row")
+    }
+    // row 2 reaches the kernels' own null results
+    for (i <- Seq(7, 8, 9, 10, 12, 13)) assert(generated(1).isNullAt(i + 1), outputs(i).sql)
   }
 }
