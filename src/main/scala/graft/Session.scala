@@ -20,10 +20,12 @@ object Session {
       .getOrElse(Runtime.getRuntime.availableProcessors)
 
   /** The deployment defaults at `cores`:
-    *   - shuffle partitions = cores;
-    *   - AQE coalescing never goes below one task per core
-    *     (`minPartitionNum` = cores; r17): a compute-bound stage coalesced
-    *     to fewer tasks leaves cores idle;
+    *   - shuffle partitions = cores. AQE coalescing aims at one task per
+    *     core with no setting of its own: under
+    *     `coalescePartitions.parallelismFirst` (default true) its minimum
+    *     partition count is the default parallelism, `cores` in
+    *     `local[cores]` (a stage whose tasks would each read less than
+    *     `minPartitionSize`, 1 MB, still coalesces below it);
     *   - `bypassMergeThreshold` = 1, i.e. always the sort shuffle writer
     *     (r18): the bypass-merge writer opens one file per reduce
     *     partition per map task, so every small shuffle at R = cores cost
@@ -35,7 +37,6 @@ object Session {
     */
   def defaults(cores: Int): Seq[(String, String)] = Seq(
     "spark.sql.shuffle.partitions" -> cores.toString,
-    "spark.sql.adaptive.coalescePartitions.minPartitionNum" -> cores.toString,
     "spark.shuffle.sort.bypassMergeThreshold" -> "1",
     "spark.sql.session.timeZone" -> "UTC",
     "spark.ui.enabled" -> "false")

@@ -492,26 +492,15 @@ object DedupOps {
       maxBucketSize: Long = Long.MaxValue
   ): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    val r = numHashes / bands
     val sigs0 = minhashSignatures(df, idCol, textCol, numHashes, shingleLen)
     // with the skew cap active the signatures feed three consumers (hot
     // count + both join sides): checkpoint the COMPACT per-doc signatures
     // (1 row/doc) rather than the bands-times-exploded table downstream -
     // banding from cached signatures is a cheap slice+explode
     val sigs = if (maxBucketSize == Long.MaxValue) sigs0 else sigs0.localCheckpoint()
-    // bucket key per band: the signature SLICE itself (r longs). Raw
-    // slices instead of a hash of the slice keeps the whole banding
-    // stage in builtin codegen'd expressions (no UDF) and makes the
-    // bucket key reproducible by the independent DuckDB oracle; the
-    // r*8-byte key is slightly wider on the shuffle than an 8-byte hash,
-    // which the narrow candidate rows can afford.
-    val bandStructs = (0 until bands).map { b =>
-      struct(lit(b).as("band"), slice(col("signature"), b * r + 1, r).as("bucket"))
-    }
-    val bandedAll = sigs
-      .select(col("id"), col("signature"), explode(array(bandStructs: _*)).as("bk"))
-      .select(col("id"), col("signature"),
-        col("bk.band").as("band"), col("bk.bucket").as("bucket"))
+    // the signature rides along each band row: the pair estimate below
+    // reads it on both join sides
+    val bandedAll = bandSignatures(sigs, numHashes, bands, "signature")
     // skew guard for the self-join: a bucket with B members yields
     // O(B^2) candidate pairs, and oversized buckets at corpus scale are
     // degenerate (boilerplate/empty-ish documents) with near-zero
@@ -1092,22 +1081,29 @@ object DedupOps {
     LshIndex(sigs, banded, numHashes, bands, shingleLen, seed)
   }
 
-  /** Explode a compact signature table (id, signature) into band
-    * membership rows (id, band, bucket): bucket = the signature SLICE
-    * for that band, the [[minhashLshPairs]] keying kept engine-
-    * replayable. Shared by [[lshBuild]], [[lshProbe]], and the
-    * streaming maintenance (which bands already-checkpointed
-    * signatures rather than re-running the kernel).
+  /** Explode a compact signature table (id, signature, ...) into band
+    * membership rows (id, carried..., band, bucket), where `carried`
+    * names further columns of `sigs` kept on every band row. The bucket
+    * key per band is the signature SLICE itself (r longs): raw slices
+    * instead of a hash of the slice keep the whole banding stage in
+    * builtin codegen'd expressions (no UDF) and make the bucket key
+    * reproducible by the independent DuckDB oracle; the r*8-byte key is
+    * slightly wider on the shuffle than an 8-byte hash, which the narrow
+    * candidate rows can afford. Shared by [[minhashLshPairs]],
+    * [[lshBuild]], [[lshProbe]], and the streaming maintenance (which
+    * bands already-checkpointed signatures rather than re-running the
+    * kernel).
     */
-  def bandSignatures(sigs: DataFrame, numHashes: Int, bands: Int): DataFrame = {
+  def bandSignatures(sigs: DataFrame, numHashes: Int, bands: Int, carried: String*): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val r = numHashes / bands
     val bandStructs = (0 until bands).map { b =>
       struct(lit(b).as("band"), slice(F.col("signature"), b * r + 1, r).as("bucket"))
     }
+    val kept = ("id" +: carried).map(F.col)
     sigs
-      .select(F.col("id"), explode(array(bandStructs: _*)).as("bk"))
-      .select(F.col("id"), F.col("bk.band").as("band"), F.col("bk.bucket").as("bucket"))
+      .select(kept :+ explode(array(bandStructs: _*)).as("bk"): _*)
+      .select(kept ++ Seq(F.col("bk.band").as("band"), F.col("bk.bucket").as("bucket")): _*)
   }
 
   /** Directory-partition key of a band bucket: hash the whole (band,
@@ -1176,17 +1172,11 @@ object DedupOps {
       threshold: Double = 0.5,
       nBuckets: Option[Int] = None
   ): DataFrame = {
-    val r = index.numHashes / index.bands
     val nsigs = minhashSignatures(newDf, idCol, textCol,
       index.numHashes, index.shingleLen, index.seed)
-    val bandStructs = (0 until index.bands).map { b =>
-      struct(lit(b).as("band"), slice(F.col("signature"), b * r + 1, r).as("bucket"))
-    }
-    val probeBase = nsigs
+    val probeBase = bandSignatures(nsigs, index.numHashes, index.bands, "signature")
       .select(F.col("id").as("new_id"), F.col("signature").as("new_sig"),
-        explode(array(bandStructs: _*)).as("bk"))
-      .select(F.col("new_id"), F.col("new_sig"),
-        F.col("bk.band").as("band"), F.col("bk.bucket").as("bucket"))
+        F.col("band"), F.col("bucket"))
     val probe = nBuckets match {
       case Some(n) => probeBase.withColumn("pb", lshPartition(n))
       case None => probeBase

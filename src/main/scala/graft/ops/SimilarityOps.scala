@@ -8,14 +8,23 @@ import org.apache.spark.sql.types._
 
 /** Similarity search over an embedding column (`array<float>`).
   *
-  * Two paths, mirroring the exact-vs-sketch split of DedupOps:
-  *   - [[bruteTopK]]: exact cosine top-k - broadcast the (small) query
-  *     set, one pass over the corpus, per-query top-k via window rank.
-  *     All arithmetic in `functions.aggregate`/`zip_with` expressions
-  *     (whole-stage codegen, computed in double).
-  *   - [[lshTopK]]: random-hyperplane LSH - bucket by sign pattern,
-  *     search only the query's bucket (optionally multi-probe). The
+  * Every vector top-k here has two steps (REPOSE's split, PAPERS.md):
+  * a candidate join that prunes the (query, neighbor) pairs, then one
+  * exact local top-k over the survivors, [[topKByCosine]]. The entry
+  * points differ only in the candidate join and its exclusion
+  * predicate:
+  *   - [[bruteTopK]] / [[hardNegatives]]: every corpus vector against
+  *     the broadcast query set (exact).
+  *   - [[lshTopK]] / [[hardNegativesApprox]]: random-hyperplane LSH -
+  *     the query's bucket (optionally multi-probe) by equi-join. The
   *     100 TB path: candidate set per query shrinks by ~2^bits.
+  *   - [[ivfQuery]]: the `nProbe` nearest inverted lists.
+  *   - [[pqQuery]]: the top `rerank` by product-quantized ADC score.
+  *
+  * The top-k contract the DuckDB oracles replay: exact cosine
+  * `dot(qv, cv) / (qn * cn)` in double (native codegen kernels), ties
+  * by `neighbor_id` ascending, `rank` an int, `cosine_sim` rounded to
+  * 6 dp.
   */
 object SimilarityOps {
 
@@ -32,6 +41,43 @@ object SimilarityOps {
   def dot(a: Column, b: Column): Column = graft.functions.GraftFunctions.vec_dot(a, b)
 
   def norm(a: Column): Column = graft.functions.GraftFunctions.vec_norm(a)
+
+  /** The candidate side of every vector top-k:
+    * `(neighbor_id, carried..., cv, cn)`. The norm is attached per
+    * VECTOR (once), not per pair, so the pair stage computes only the
+    * dot product - the same expression tree per value as [[cosine]].
+    * A column derived from the vector (`bucket`, `list_id`) follows as
+    * a `withColumn` over `cv`, which the optimizer folds into this one
+    * projection.
+    */
+  private def vectors(df: DataFrame, id: String, vec: String, carried: Column*): DataFrame =
+    df.select((F.col(id).as("neighbor_id") +: carried) ++
+      Seq(F.col(vec).as("cv"), norm(F.col(vec)).as("cn")): _*)
+
+  /** The exact local top-k every vector top-k ends in. `candidates`
+    * carries `key`, `neighbor_id`, the query vector and norm (`qv`,
+    * `qn`) and the neighbor's (`cv`, `cn`); the output is
+    * `(key, neighbor_id, carried..., rank, cosine_sim)`: per `key`, the
+    * `k` best by (cosine desc, neighbor_id asc), `rank` an int and the
+    * cosine rounded to 6 dp.
+    */
+  private def topKByCosine(
+      candidates: DataFrame,
+      key: String,
+      k: Int,
+      carried: String*
+  ): DataFrame = {
+    val w = Window
+      .partitionBy(key)
+      .orderBy(F.col("cosine_sim").desc, F.col("neighbor_id").asc)
+    candidates
+      .withColumn("cosine_sim", dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")))
+      .withColumn("rank", row_number().over(w))
+      .filter(F.col("rank") <= k)
+      .select(Seq(F.col(key), F.col("neighbor_id")) ++ carried.map(F.col) ++ Seq(
+        F.col("rank").cast(IntegerType).as("rank"),
+        round(F.col("cosine_sim"), 6).as("cosine_sim")): _*)
+  }
 
   /** Random-projection dimensionality reduction (Johnson-Lindenstrauss):
     * project `vecCol` (length `dim`) onto `outDim` fixed Gaussian
@@ -59,8 +105,8 @@ object SimilarityOps {
   /** Exact top-k nearest neighbours by cosine for each query vector.
     *
     * `queries` is expected to be small (it is broadcast); the corpus side
-    * streams. Ties broken by corpus id for determinism. Output:
-    * (query_id, neighbor_id, rank, cosine_sim).
+    * streams, every corpus vector a candidate except the query itself.
+    * Output: (query_id, neighbor_id, rank, cosine_sim).
     */
   def bruteTopK(
       corpus: DataFrame,
@@ -71,29 +117,12 @@ object SimilarityOps {
       queryVec: String,
       k: Int
   ): DataFrame = {
-    // norms are attached per VECTOR (once), not per pair: the pair stage
-    // then computes only the dot product. Same expression tree per value,
-    // so the result is bit-identical to cosine().
     val q = broadcast(
       queries.select(F.col(queryId).as("query_id"), F.col(queryVec).as("qv"),
         norm(F.col(queryVec)).as("qn")))
-    val scored = OpsUtil.spread(corpus)
-      .select(F.col(corpusId).as("neighbor_id"), F.col(corpusVec).as("cv"),
-        norm(F.col(corpusVec)).as("cn"))
+    val cand = vectors(OpsUtil.spread(corpus), corpusId, corpusVec)
       .join(q, F.col("query_id") =!= F.col("neighbor_id")) // self excluded
-      .withColumn("cosine_sim", dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")))
-    val w = Window
-      .partitionBy("query_id")
-      .orderBy(F.col("cosine_sim").desc, F.col("neighbor_id").asc)
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(F.col("rank") <= k)
-      .select(
-        F.col("query_id"),
-        F.col("neighbor_id"),
-        F.col("rank").cast(IntegerType).as("rank"),
-        round(F.col("cosine_sim"), 6).as("cosine_sim")
-      )
+    topKByCosine(cand, "query_id", k)
   }
 
   /** Hard-negative mining for contrastive/retrieval training: per
@@ -102,17 +131,15 @@ object SimilarityOps {
     * that actually move a bi-encoder (random negatives are too easy;
     * same-label neighbors are positives, not negatives).
     *
-    * Same scale shape as [[bruteTopK]]: anchors broadcast with
-    * pre-attached norms, the corpus streams through one scored pass
-    * (label inequality rides the broadcast join condition - the
-    * corpus-side scan stays shuffle-free), per-anchor top-k by window.
-    * At corpus scale, swap the candidate pass for [[lshTopK]] /
-    * [[ivfTopK]] buckets and keep the label filter - mining is
-    * recall-tolerant by definition (a missed hard negative is just a
+    * The candidates of [[bruteTopK]] with label inequality in place of
+    * the self-exclusion (it rides the broadcast join condition - the
+    * corpus-side scan stays shuffle-free). At corpus scale,
+    * [[hardNegativesApprox]] takes the LSH candidates instead - mining
+    * is recall-tolerant by definition (a missed hard negative is just a
     * slightly easier one).
     *
     * Output: (anchor_id, neighbor_id, neighbor_label, rank,
-    * cosine_sim), deterministic ties (sim desc, neighbor asc).
+    * cosine_sim).
     */
   def hardNegatives(
       corpus: DataFrame,
@@ -126,34 +153,20 @@ object SimilarityOps {
     val q = broadcast(
       anchors.select(F.col(idCol).as("anchor_id"), F.col(vecCol).as("qv"),
         F.col(labelCol).as("anchor_label"), norm(F.col(vecCol)).as("qn")))
-    val scored = OpsUtil.spread(corpus)
-      .select(F.col(idCol).as("neighbor_id"), F.col(labelCol).as("neighbor_label"),
-        F.col(vecCol).as("cv"), norm(F.col(vecCol)).as("cn"))
+    val cand = vectors(OpsUtil.spread(corpus), idCol, vecCol,
+        F.col(labelCol).as("neighbor_label"))
       .join(q, F.col("anchor_label") =!= F.col("neighbor_label"))
-      .withColumn("cosine_sim", dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")))
-    val w = Window
-      .partitionBy("anchor_id")
-      .orderBy(F.col("cosine_sim").desc, F.col("neighbor_id").asc)
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(F.col("rank") <= k)
-      .select(
-        F.col("anchor_id"),
-        F.col("neighbor_id"),
-        F.col("neighbor_label"),
-        F.col("rank").cast(IntegerType).as("rank"),
-        round(F.col("cosine_sim"), 6).as("cosine_sim"))
+    topKByCosine(cand, "anchor_id", k, "neighbor_label")
   }
 
-  /** The corpus-scale path of [[hardNegatives]]: candidates come from
-    * the anchor's LSH bucket(s) instead of the full corpus - the
-    * label-inequality filter and deterministic top-k re-rank are
-    * identical, only the candidate pass changes (hash-bucket equi-join,
-    * no broadcast nested loop over everything). Mining is
-    * recall-tolerant by definition - a missed hard negative is a
-    * slightly easier one - so the LSH recall/bits trade (multi-probe
-    * recovers across-one-hyperplane misses) applies unchanged;
-    * OpsSpec pins recall against the exact miner.
+  /** The corpus-scale path of [[hardNegatives]]: the candidates of
+    * [[lshTopK]] (the anchor's LSH bucket(s), a hash-bucket equi-join,
+    * no broadcast nested loop over everything) with the same
+    * label-inequality filter. Mining is recall-tolerant by definition -
+    * a missed hard negative is a slightly easier one - so the LSH
+    * recall/bits trade (multi-probe recovers across-one-hyperplane
+    * misses) applies unchanged; OpsSpec pins recall against the exact
+    * miner.
     *
     * Output schema matches [[hardNegatives]].
     */
@@ -170,40 +183,20 @@ object SimilarityOps {
       multiProbe: Boolean = true
   ): DataFrame = {
     require(k >= 1, s"k must be positive, got $k")
-    val cb = OpsUtil.spread(corpus).select(
-      F.col(idCol).as("neighbor_id"),
-      F.col(labelCol).as("neighbor_label"),
-      F.col(vecCol).as("cv"),
-      norm(F.col(vecCol)).as("cn"),
-      lshBucket(F.col(vecCol), dim, bits, seed).as("bucket"))
-    val exact = lshBucket(F.col(vecCol), dim, bits, seed)
-    val probeBuckets =
-      if (!multiProbe) array(exact)
-      else array(exact +: (0 until bits).map(i => exact.bitwiseXOR(lit(1L << i))): _*)
+    val cb = vectors(OpsUtil.spread(corpus), idCol, vecCol, F.col(labelCol).as("neighbor_label"))
+      .withColumn("bucket", lshBucket(F.col("cv"), dim, bits, seed))
     val qb = broadcast(anchors.select(
       F.col(idCol).as("anchor_id"),
       F.col(labelCol).as("anchor_label"),
       F.col(vecCol).as("qv"),
       norm(F.col(vecCol)).as("qn"),
-      explode(probeBuckets).as("bucket")))
+      explode(lshProbes(F.col(vecCol), dim, bits, seed, multiProbe)).as("bucket")))
     val joined = cb
       .join(qb, Seq("bucket"))
       .filter(F.col("anchor_label") =!= F.col("neighbor_label"))
     val cand =
       if (multiProbe) joined.dropDuplicates("anchor_id", "neighbor_id") else joined
-    val w = Window
-      .partitionBy("anchor_id")
-      .orderBy(F.col("cosine_sim").desc, F.col("neighbor_id").asc)
-    cand
-      .withColumn("cosine_sim", dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")))
-      .withColumn("rank", row_number().over(w))
-      .filter(F.col("rank") <= k)
-      .select(
-        F.col("anchor_id"),
-        F.col("neighbor_id"),
-        F.col("neighbor_label"),
-        F.col("rank").cast(IntegerType).as("rank"),
-        round(F.col("cosine_sim"), 6).as("cosine_sim"))
+    topKByCosine(cand, "anchor_id", k, "neighbor_label")
   }
 
   /** Sign-pattern bucket id from `bits` fixed random hyperplanes
@@ -213,6 +206,16 @@ object SimilarityOps {
     */
   def lshBucket(vec: Column, dim: Int, bits: Int, seed: Long): Column =
     graft.functions.GraftFunctions.rh_bucket(vec, dim, bits, seed)
+
+  /** The buckets a query vector probes: its own [[lshBucket]], plus
+    * under `multiProbe` every Hamming-1 neighbor bucket (bits + 1
+    * probes).
+    */
+  private def lshProbes(vec: Column, dim: Int, bits: Int, seed: Long, multiProbe: Boolean): Column = {
+    val exact = lshBucket(vec, dim, bits, seed)
+    if (!multiProbe) array(exact)
+    else array(exact +: (0 until bits).map(i => exact.bitwiseXOR(lit(1L << i))): _*)
+  }
 
   /** Approximate top-k: candidates restricted to the query's LSH bucket
     * (equi-join on bucket id - no cross join). Recall grows with fewer
@@ -237,20 +240,13 @@ object SimilarityOps {
       seed: Long = 42L,
       multiProbe: Boolean = false
   ): DataFrame = {
-    val cb = OpsUtil.spread(corpus).select(
-      F.col(corpusId).as("neighbor_id"),
-      F.col(corpusVec).as("cv"),
-      norm(F.col(corpusVec)).as("cn"),
-      lshBucket(F.col(corpusVec), dim, bits, seed).as("bucket"))
-    val exact = lshBucket(F.col(queryVec), dim, bits, seed)
-    val probeBuckets =
-      if (!multiProbe) array(exact)
-      else array(exact +: (0 until bits).map(i => exact.bitwiseXOR(lit(1L << i))): _*)
+    val cb = vectors(OpsUtil.spread(corpus), corpusId, corpusVec)
+      .withColumn("bucket", lshBucket(F.col("cv"), dim, bits, seed))
     val qb = broadcast(queries.select(
       F.col(queryId).as("query_id"),
       F.col(queryVec).as("qv"),
       norm(F.col(queryVec)).as("qn"),
-      explode(probeBuckets).as("bucket")))
+      explode(lshProbes(F.col(queryVec), dim, bits, seed, multiProbe)).as("bucket")))
     val joined = cb
       .join(qb, Seq("bucket"))
       .filter(F.col("query_id") =!= F.col("neighbor_id"))
@@ -258,20 +254,7 @@ object SimilarityOps {
     // of one query (single-probe pairs are unique - skip the shuffle)
     val cand =
       if (multiProbe) joined.dropDuplicates("query_id", "neighbor_id") else joined
-    val scored = cand
-      .withColumn("cosine_sim", dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")))
-    val w = Window
-      .partitionBy("query_id")
-      .orderBy(F.col("cosine_sim").desc, F.col("neighbor_id").asc)
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(F.col("rank") <= k)
-      .select(
-        F.col("query_id"),
-        F.col("neighbor_id"),
-        F.col("rank").cast(IntegerType).as("rank"),
-        round(F.col("cosine_sim"), 6).as("cosine_sim")
-      )
+    topKByCosine(cand, "query_id", k)
   }
 
   /** An IVF index: L2-normalized centroids (list id = array position)
@@ -396,16 +379,11 @@ object SimilarityOps {
       vecCol: String,
       centroids: Array[Array[Double]]
   ): DataFrame =
-    df.select(
-      F.col(idCol).as("neighbor_id"),
-      F.col(vecCol).as("cv"),
-      norm(F.col(vecCol)).as("cn"),
-      element_at(
-        graft.functions.GraftFunctions.nearest_lists(F.col(vecCol), centroids, 1),
-        1).as("list_id"))
+    vectors(df, idCol, vecCol).withColumn("list_id",
+      element_at(graft.functions.GraftFunctions.nearest_lists(F.col("cv"), centroids, 1), 1))
 
-  /** Query an IVF index: probe the `nProbe` lists nearest to each query
-    * vector, exact cosine re-rank inside the probed lists. Pure plan
+  /** Query an IVF index: the candidates are the `nProbe` lists nearest
+    * to each query vector, ranked by [[topKByCosine]]. Pure plan
     * construction - launches NO jobs itself (pinned by OpsSpec), so a
     * built/read index amortizes over any number of query batches;
     * `nProbe` trades recall for candidate count without rebuilding.
@@ -425,22 +403,10 @@ object SimilarityOps {
       explode(
         graft.functions.GraftFunctions.nearest_lists(F.col(queryVec), index.centroids, nProbe)
       ).as("list_id")))
-    val scored = index.lists
+    val cand = index.lists
       .join(qb, Seq("list_id"))
       .filter(F.col("query_id") =!= F.col("neighbor_id"))
-      .withColumn("cosine_sim", dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")))
-    val w = Window
-      .partitionBy("query_id")
-      .orderBy(F.col("cosine_sim").desc, F.col("neighbor_id").asc)
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(F.col("rank") <= k)
-      .select(
-        F.col("query_id"),
-        F.col("neighbor_id"),
-        F.col("rank").cast(IntegerType).as("rank"),
-        round(F.col("cosine_sim"), 6).as("cosine_sim")
-      )
+    topKByCosine(cand, "query_id", k)
   }
 
   /** Persist an IVF index: centroids as one small parquet
@@ -511,10 +477,10 @@ object SimilarityOps {
     * lookup table (broadcast with the query batch); per corpus row the
     * approximate score is a FIXED-ORDER fold of `numSub` table lookups
     * - deterministic double summation, never an aggregation-order
-    * dependent SUM. Top `rerank` candidates per query by (adc desc, id)
-    * are re-ranked by exact cosine, so the output is exact similarity
-    * over an approximate candidate set - recall is spec-measured vs
-    * brute force.
+    * dependent SUM. The top `rerank` candidates per query by
+    * (adc desc, id) go to [[topKByCosine]], so the output is exact
+    * similarity over an approximate candidate set - recall is
+    * spec-measured vs brute force.
     *
     * Lifecycle: [[pqBuild]] -> [[pqWrite]] / [[pqRead]] -> [[pqQuery]];
     * [[pqTopK]] is the one-shot build+query composition.
@@ -591,7 +557,7 @@ object SimilarityOps {
 
   /** Query a built/persisted PQ index: per-query ADC lookup tables
     * (broadcast with the query batch), FIXED-order fold over subspaces,
-    * exact-cosine re-rank of the top `rerank` candidates. Pure plan
+    * the top `rerank` candidates to [[topKByCosine]]. Pure plan
     * construction - zero jobs until an action (spec-pinned), so a read
     * index serves query batches with no corpus re-encode.
     */
@@ -621,18 +587,12 @@ object SimilarityOps {
       (acc, m) => acc + element_at(F.col("lutarr"),
         (m * numCodes + element_at(F.col("codes"), m + 1) + 1).cast(IntegerType)))
     val wAdc = Window.partitionBy("query_id").orderBy(F.col("adc").desc, F.col("neighbor_id").asc)
-    val wExact = Window.partitionBy("query_id").orderBy(F.col("sim").desc, F.col("neighbor_id").asc)
-    index.codes
+    val cand = index.codes
       .join(q, F.col("query_id") =!= F.col("neighbor_id"))
       .withColumn("adc", adcCol)
       .withColumn("rn", row_number().over(wAdc))
       .filter(F.col("rn") <= rerank)
-      .withColumn("sim", dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")))
-      .withColumn("rank", row_number().over(wExact))
-      .filter(F.col("rank") <= k)
-      .select(F.col("query_id"), F.col("neighbor_id"),
-        F.col("rank").cast(IntegerType).as("rank"),
-        round(F.col("sim"), 6).as("cosine_sim"))
+    topKByCosine(cand, "query_id", k)
   }
 
   /** Persist a PQ index: codebooks (with halfs) as one small parquet,

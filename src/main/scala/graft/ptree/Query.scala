@@ -303,13 +303,31 @@ object Query {
       visitCounter: Option[org.apache.spark.util.LongAccumulator] = None,
       cellCounter: Option[org.apache.spark.util.LongAccumulator] = None
   ): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(childrenIndex(trie).flat)
-    queryStrings(queries, col)
+    val strings = queryStrings(queries, col)
       // spread the query set over every core: the input's file partitioning
       // (often 1 block) would otherwise serialize the whole batch
-      .repartition(spark.sparkContext.defaultParallelism)
+      .repartition(queries.sparkSession.sparkContext.defaultParallelism)
+    searchBroadcast(strings, childrenIndex(trie), maxDist, visitCounter, cellCounter)
+  }
+
+  /** The broadcast search step of [[queryBroadcast]] and
+    * `StreamOps.streamFuzzyMatch`: `index`'s arrays are broadcast once,
+    * each partition of `strings` (one `query_string` column) compiles
+    * them into a [[TrieIndex]] and searches every string in it. The
+    * optional accumulators sum the kernel's [[SearchStats]]. Output:
+    * (query_string, node, final_distance, n_occurrences).
+    */
+  private[graft] def searchBroadcast(
+      strings: DataFrame,
+      index: TrieIndex,
+      maxDist: Int,
+      visitCounter: Option[org.apache.spark.util.LongAccumulator] = None,
+      cellCounter: Option[org.apache.spark.util.LongAccumulator] = None
+  ): DataFrame = {
+    val spark = strings.sparkSession
+    import spark.implicits._
+    val bc = spark.sparkContext.broadcast(index.flat)
+    strings
       .as[String]
       .mapPartitions { it =>
         val idx = new TrieIndex(bc.value)

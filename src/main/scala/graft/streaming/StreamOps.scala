@@ -1006,18 +1006,9 @@ object StreamOps {
       trieIndex: Map[Long, Array[graft.ptree.PTNode]],
       maxDist: Int
   ): DataFrame = {
-    val spark = queryStream.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(graft.ptree.TrieIndex.of(trieIndex).flat)
-    graft.ptree.Query.queryStrings(queryStream, queryCol)
-      .as[String]
-      .mapPartitions { it =>
-        val idx = new graft.ptree.TrieIndex(bc.value)
-        it.flatMap { q =>
-          graft.ptree.Kernels.searchIndex(idx, q, maxDist)._1.map { case (w, d, _) => (q, w, d) }
-        }
-      }
-      .toDF("query_string", "node", "final_distance")
+    graft.ptree.Query.searchBroadcast(graft.ptree.Query.queryStrings(queryStream, queryCol),
+        graft.ptree.TrieIndex.of(trieIndex), maxDist)
+      .drop("n_occurrences")
   }
 
   /** Streaming recent-history buffer for EWMA scoring: per key, hold the

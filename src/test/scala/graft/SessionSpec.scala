@@ -4,6 +4,8 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.functions.col
+
 class SessionSpec extends SparkSpec {
 
   test("graft.Session is the only place a SparkSession is built") {
@@ -26,13 +28,18 @@ class SessionSpec extends SparkSpec {
     val conf = spark.sparkContext.getConf
     assert(spark.sparkContext.master == "local[4]")
     assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
-    assert(spark.conf.get("spark.sql.adaptive.coalescePartitions.minPartitionNum") == "4")
     assert(conf.get("spark.shuffle.sort.bypassMergeThreshold") == "1")
     assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
     assert(conf.get("spark.ui.enabled") == "false")
     val at8 = Session.defaults(8).toMap
     assert(at8("spark.sql.shuffle.partitions") == "8")
-    assert(at8("spark.sql.adaptive.coalescePartitions.minPartitionNum") == "8")
+    // AQE coalescing keeps one post-shuffle task per core. The 1 MB
+    // minimum partition size would fold this small shuffle into one task
+    // whatever the floor, so it is lowered to make the floor visible.
+    withConf("spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1b") {
+      val agg = spark.range(0, 20000, 1, 8).groupBy(col("id") % 1000).count()
+      assert(agg.rdd.getNumPartitions == 4)
+    }
   }
 
   test("SPARK_GRAFT_CONF parsing: key=value pairs, malformed entries raise") {

@@ -3925,6 +3925,73 @@ class OpsSpec extends SparkSpec {
     assert(recall >= 0.6, s"approx recall $recall vs exact miner")
   }
 
+  test("every vector top-k ranks by one contract: exact cosine, ties by id, int rank, 6 dp") {
+    val rnd = new scala.util.Random(53)
+    val dim = 8
+    val base = Array.fill(dim)(rnd.nextGaussian().toFloat)
+    // power-of-two scales are exact in float and double, so these copies
+    // tie EXACTLY on cosine against any query; label 3 is no anchor's
+    val tied = Seq(5L -> 0.5f, 12L -> 2f, 21L -> 4f, 30L -> 8f).toMap
+    val rows = (0L until 40L).map { id =>
+      val v =
+        if (tied.contains(id)) base.map(_ * tied(id))
+        else if (id == 0L) base
+        else if (id == 1L) base.map(_ + 0.01f * rnd.nextGaussian().toFloat)
+        else Array.fill(dim)(rnd.nextGaussian().toFloat)
+      (id, v, if (tied.contains(id)) 3 else (id % 3).toInt)
+    }
+    val df = rows.toDF("id", "v", "lab")
+    val queries = df.filter($"id" < 3)
+    val k = 5
+    def cos(a: Array[Float], b: Array[Float]): Double = {
+      var d = 0.0; var na = 0.0; var nb = 0.0
+      for (i <- a.indices) {
+        d += a(i).toDouble * b(i).toDouble
+        na += a(i).toDouble * a(i).toDouble
+        nb += b(i).toDouble * b(i).toDouble
+      }
+      d / (math.sqrt(na) * math.sqrt(nb))
+    }
+    def round6(x: Double) = BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    // every candidate path made exhaustive: one LSH bucket (bits = 0) or
+    // both probed (bits = 1, multi-probe), every IVF list probed, every
+    // corpus row re-ranked after PQ's ADC stage
+    val ivf = SimilarityOps.ivfBuild(df, "id", "v", nCentroids = 4, lloydIters = 0)
+    val pq = SimilarityOps.pqBuild(df, "id", "v", numSub = 2, numCodes = 4)
+    val cases = Seq(
+      ("bruteTopK", false, SimilarityOps.bruteTopK(df, "id", "v", queries, "id", "v", k)),
+      ("lshTopK", false, SimilarityOps.lshTopK(df, "id", "v", queries, "id", "v", k, dim, bits = 0)),
+      ("lshTopK multi-probe", false, SimilarityOps.lshTopK(df, "id", "v", queries, "id", "v", k, dim,
+        bits = 1, multiProbe = true)),
+      ("ivfQuery", false, SimilarityOps.ivfQuery(ivf, queries, "id", "v", k, nProbe = 4)),
+      ("pqQuery", false, SimilarityOps.pqQuery(pq, queries, "id", "v", k, rerank = rows.size)),
+      ("hardNegatives", true, SimilarityOps.hardNegatives(df, "id", "v", "lab", queries, k)),
+      ("hardNegativesApprox", true, SimilarityOps.hardNegativesApprox(df, "id", "v", "lab",
+        queries, k, dim, bits = 1)))
+    val label = rows.map(r => r._1 -> r._3).toMap
+    for ((name, byLabel, out) <- cases) {
+      assert(out.schema("rank").dataType == org.apache.spark.sql.types.IntegerType, name)
+      val collected = out.collect()
+      val got = collected.map(r => (r.getLong(0), r.getLong(1),
+        r.getInt(r.fieldIndex("rank")), r.getDouble(r.fieldIndex("cosine_sim"))))
+      if (byLabel)
+        assert(collected.forall(r => r.getInt(2) == label(r.getLong(1))), name)
+      for (q <- rows.filter(_._1 < 3)) {
+        val mine = got.filter(_._1 == q._1).sortBy(_._3).map(g => (g._2, g._3, g._4)).toSeq
+        val excluded = (c: (Long, Array[Float], Int)) => if (byLabel) c._3 == q._3 else c._1 == q._1
+        val expected = rows.filterNot(excluded)
+          .map(c => (c._1, cos(q._2, c._2)))
+          .sortBy { case (id, s) => (-s, id) }
+          .take(k).zipWithIndex
+          .map { case ((id, s), i) => (id, i + 1, round6(s)) }
+        assert(mine == expected, s"$name, query ${q._1}")
+      }
+      // the planted ties lead query 0's list, in ascending id
+      assert(got.filter(_._1 == 0L).sortBy(_._3).take(4).map(_._2).toSeq == tied.keys.toSeq.sorted,
+        name)
+    }
+  }
+
   test("lengthBucketedBatches: contiguous length runs, exact sizes, waste below a shuffled cut") {
     val rnd = new scala.util.Random(41)
     val docs = Seq.tabulate(100)(i => (i.toLong, 10L + rnd.nextInt(500))).toDF("id", "len")
